@@ -164,10 +164,12 @@ BENCH_QUERIES = [
 # sf0.1.
 
 
-def check_regressions(times: dict, sf, record_path: str | None = None,
+def check_regressions(times: dict, sf, cpus, record_path: str | None = None,
                       factor: float = 2.0, allowance: float = 1.0) -> dict:
     """Per-query regression budget vs the committed record
-    (bench_record.json).  The budget base is ``budget_queries`` (the
+    (bench_record.json) of the same ``sf`` and ``cpus``: a record
+    taken at another core count says nothing about this host's wall
+    times.  The budget base is ``budget_queries`` (the
     record run's MEDIAN-of-3 — robust for the high-variance LSH
     shuffle queries whose best pass is unrepresentative), falling back
     to ``queries`` (min-of-3).  A query flags when measured >
@@ -186,7 +188,8 @@ def check_regressions(times: dict, sf, record_path: str | None = None,
             record = json.load(fh)
     except (OSError, ValueError):
         return regressions
-    if str(record.get("sf")) != str(sf):
+    if (str(record.get("sf")) != str(sf)
+            or str(record.get("cpus")) != str(cpus)):
         return regressions
     base = {**record.get("queries", {}),
             **record.get("budget_queries", {})}
@@ -337,7 +340,7 @@ def main():
     except Exception as e:  # pragma: no cover
         streaming = {"error": str(e)[:200]}
 
-    regressions = check_regressions(times, sf)
+    regressions = check_regressions(times, sf, cpus)
 
     try:
         load1, load5, _ = os.getloadavg()

@@ -17,8 +17,9 @@
 - embedding_pairs      — cosine near-dup over an embedding column; exact
   for bounded inputs, hyperplane-LSH bucketing as the scale path.
 - connected_components — resolve pairwise near-dup output into clusters
-  (iterative min-label propagation with lineage truncation); the step
-  that turns "pairs" into "keep one document per duplicate group".
+  (one Arrow task for small edge lists, iterative min-label propagation
+  with lineage truncation above that); the step that turns "pairs" into
+  "keep one document per duplicate group".
 
 Every function is deterministic (md5-derived hashing, fixed coefficient
 tables) so the DuckDB oracle replays the identical computation.
@@ -26,10 +27,15 @@ tables) so the DuckDB oracle replays the identical computation.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType, StructField, StructType
 
 from pincette_json_streams_spark.functions.caching import tracked_persist
+from pincette_json_streams_spark.functions.graph import (
+    checkpoint_edges,
+    edge_arrays,
+)
 from pincette_json_streams_spark.functions.text import (
     fingerprint,
     normalize_text,
@@ -1253,6 +1259,59 @@ def embedding_pairs(
     ).filter(F.col("cosine") >= threshold)
 
 
+def _cc_kernel(batches):
+    """Min-label components of the task's whole (a, b) edge list, in
+    numpy: ids become sorted ``np.unique`` indices, so the minimum
+    index is the minimum id.  Each round hooks every root onto the
+    smallest root across its edges (``np.minimum.at``), then pointer
+    jumping flattens every chain to its root; a root that is a local
+    minimum absorbs its neighbours, so the root count at least halves
+    per round (O(log n) rounds).  At the fixpoint every node points at
+    its component's minimum id."""
+    import numpy as np
+    import pyarrow as pa
+
+    cols = edge_arrays(batches, "a", "b")
+    if not cols:
+        return
+    a, b = cols
+    ids, idx = np.unique(np.concatenate([a, b]), return_inverse=True)
+    ai, bi = idx[:len(a)], idx[len(a):]
+    comp = np.arange(len(ids))
+    while True:
+        ca, cb = comp[ai], comp[bi]
+        if (ca == cb).all():
+            break
+        np.minimum.at(comp, np.maximum(ca, cb), np.minimum(ca, cb))
+        while True:
+            jumped = comp[comp]
+            if (jumped == comp).all():
+                break
+            comp = jumped
+    yield pa.RecordBatch.from_arrays(
+        [pa.array(ids), pa.array(ids[comp])], names=["id", "cluster_id"])
+
+
+def _cc_checkpoint(pairs, nodes, id_a, id_b):
+    """Checkpoint the edge list of both component functions through
+    :func:`~pincette_json_streams_spark.functions.graph.checkpoint_edges`:
+    the (a, b) pairs plus one self-loop per ``nodes`` id (a self-loop
+    names a node without linking it), both ends cast to the type the
+    union of every id column resolves to.  Returns ``(checkpoint,
+    local)``; ``local`` is the single-task result for a small edge list
+    of integral ids, else None."""
+    e = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
+    if nodes is not None:
+        c = F.col(nodes.columns[0])
+        e = e.union(nodes.select(c.alias("a"), c.alias("b")))
+    t = e.select("a").union(e.select("b")).schema[0].dataType
+    e = e.select(F.col("a").cast(t), F.col("b").cast(t))
+    ckpt, _, local = checkpoint_edges(
+        e, _cc_kernel if isinstance(t, IntegralType) else None,
+        StructType([StructField("id", t), StructField("cluster_id", t)]))
+    return ckpt, local
+
+
 def connected_components(
     pairs: DataFrame,
     nodes: DataFrame | None = None,
@@ -1267,29 +1326,36 @@ def connected_components(
     `nodes` (one column named `id_a`'s type) optionally supplies the full
     id universe so edge-free documents appear as singleton clusters.
 
-    Scale shape: iterative min-label propagation.  Each round is one
-    equi-join (labels onto edge endpoints) + one map-side-combining min
-    aggregation; `localCheckpoint` truncates lineage so the plan does not
-    grow with iterations, and the convergence probe reuses the
-    checkpointed result.  Rounds needed = graph diameter, which for
-    near-dup clusters (dense blobs produced by LSH band collisions) is
-    small — single digits in practice.  For adversarial long-chain
-    graphs at extreme scale, alternate label propagation with graph
-    contraction (large-star/small-star, Kiveris et al. "Connected
-    Components in MapReduce and Beyond") to get O(log n) rounds; the
-    per-round plan here is the same building block."""
-    e = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
+    Scale shape: ONE eager job checkpoints the edge list (pairs plus a
+    self-loop per `nodes` id) and observes its row count.  At most
+    ``graph.SMALL_GRAPH_ROWS`` rows of integral ids finish in one Arrow
+    task over that checkpoint: numpy min-label union with pointer
+    jumping, O(log n) rounds inside the task, no per-round jobs and no
+    label rows through the driver.  That is one job at call time,
+    against one per propagation round on the distributed path.
+
+    Above the threshold, iterative min-label propagation runs from the
+    same checkpoint.  Each round is one equi-join (labels onto edge
+    endpoints) + one map-side-combining min aggregation;
+    `localCheckpoint` truncates lineage so the plan does not grow with
+    iterations, and the convergence probe rides the round's own job.
+    Rounds needed = graph diameter, which for near-dup clusters (dense
+    blobs produced by LSH band collisions) is small — single digits in
+    practice.  `max_iters` bounds these distributed rounds only (the
+    single-task kernel always runs to its fixpoint): a graph whose
+    diameter exceeds it raises ``ValueError`` rather than return labels
+    that break the min-id contract; :func:`connected_components_star`
+    (large-star/small-star, Kiveris et al., SoCC'14) needs only
+    O(log n) rounds there."""
+    e, local = _cc_checkpoint(pairs, nodes, id_a, id_b)
+    if local is not None:
+        return local
     sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
     # id universe first (before dropping self-loops, which still name a node)
-    labels = sym.select(F.col("a").alias("id")).distinct()
+    labels = sym.select(F.col("a").alias("id")).distinct() \
+        .withColumn("comp", F.col("id"))
     sym = sym.filter(F.col("a") != F.col("b")).distinct()
     sym = sym.localCheckpoint(eager=False)
-    if nodes is not None:
-        ids = nodes.select(F.col(nodes.columns[0]).alias("id")).distinct()
-        labels = labels.unionByName(ids).distinct()
-    labels = labels.withColumn("comp", F.col("id"))
-
-    from pyspark.sql import Observation
 
     for _ in range(max_iters):
         msgs = (
@@ -1317,6 +1383,11 @@ def connected_components(
         labels = new
         if not obs.get.get("changed"):
             break
+    else:
+        raise ValueError(
+            f"connected_components: labels still changing after "
+            f"max_iters={max_iters} rounds (the graph's diameter is "
+            "larger); raise max_iters or use connected_components_star")
     return labels.select("id", F.col("comp").alias("cluster_id"))
 
 
@@ -1333,20 +1404,23 @@ def connected_components_star(
     O(diameter), so it's the variant to reach for when clusters can
     chain (e.g. transitive near-dup bridges across a crawl).
 
-    Each round is two join+min-aggregate steps over the shrinking edge
-    set; edges converge to stars centered at each component's minimum
-    id.  `localCheckpoint` truncates lineage per round; the fixpoint
-    probe (any node whose parent changed?) runs on the checkpointed
-    result."""
-    e = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
+    A small edge list takes the same single-task path as
+    :func:`connected_components`, from the same one-job checkpoint.
+    Above the threshold each round is two join+min-aggregate steps over
+    the shrinking edge set; edges converge to stars centered at each
+    component's minimum id.  `localCheckpoint` truncates lineage per
+    round; the fixpoint probe (any node whose parent changed?) runs on
+    the checkpointed result.  Running out of `max_iters` before the
+    probe settles raises ``ValueError``, as in
+    :func:`connected_components`."""
+    e, local = _cc_checkpoint(pairs, nodes, id_a, id_b)
+    if local is not None:
+        return local
     universe = (
-        e.select("a").union(e.select(F.col("b").alias("a")))
-        .withColumnsRenamed({"a": "id"}).distinct()
+        e.select(F.col("a").alias("id"))
+        .union(e.select(F.col("b").alias("id"))).distinct()
+        .localCheckpoint(eager=False)
     )
-    if nodes is not None:
-        ids = nodes.select(F.col(nodes.columns[0]).alias("id")).distinct()
-        universe = universe.unionByName(ids).distinct()
-    universe = universe.localCheckpoint(eager=False)
     edges = (
         e.filter(F.col("a") != F.col("b")).distinct()
         .localCheckpoint(eager=True)
@@ -1402,6 +1476,10 @@ def connected_components_star(
             prev = cur
             if moved == 0:
                 break
+    else:
+        raise ValueError(
+            f"connected_components_star: parents still moving after "
+            f"max_iters={max_iters} rounds; raise max_iters")
     # at the star fixpoint every member points at the component min, and
     # the min's own parent is the second-smallest member — least(id, p)
     # is therefore the root for both

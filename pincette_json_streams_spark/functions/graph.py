@@ -1,7 +1,9 @@
 """Graph analytics over edge lists — the plan-shape rules of the
 connected-components family (functions/dedup.py) applied to ranking:
 bounded fixed-point iterations, no per-iteration driver round-trips,
-every iterate exactly reproducible by a SQL oracle.
+every iterate exactly reproducible by a SQL oracle.  Small edge lists
+skip the iterations' jobs altogether: :func:`checkpoint_edges` is the
+shared step that finishes them in one Arrow task.
 
 PageRank here is ALL-INTEGER: rank mass is carried in integer units of
 1e-12 of the total, contributions use integer division, and damping is
@@ -19,7 +21,98 @@ the task brief adds on top of reference parity.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from functools import reduce
+from operator import or_
+from typing import Callable, Iterator
+
+from pyspark.sql import Column, DataFrame, Observation, functions as F
+from pyspark.sql.types import StructType
+
+# Edge lists of at most this many rows finish in ONE Arrow task (F1
+# Query's centralized execution mode, VLDB'18): ~4M int64 pairs plus
+# the kernel's index arrays is ~200 MB of numpy in one Python worker.
+# Above it the distributed loops run.
+SMALL_GRAPH_ROWS = 4_000_000
+
+
+def checkpoint_edges(
+    edges: DataFrame,
+    kernel: Callable[[Iterator], Iterator] | None,
+    schema: StructType | str,
+    **observed: Column,
+) -> tuple[DataFrame, dict, DataFrame | None]:
+    """The one fast-path-plus-fallback step of the iterative graph
+    functions.
+
+    Checkpoints ``edges`` once, eagerly.  An ``observe()`` on that one
+    job counts its rows and its rows with a null column, and evaluates
+    the named ``observed`` aggregates.  Returns ``(checkpoint, stats,
+    local)``.  ``local`` is ``checkpoint.coalesce(1).mapInArrow(kernel,
+    schema)`` when a kernel is given and the edge list is null-free
+    and at most :data:`SMALL_GRAPH_ROWS` rows: the whole graph is
+    solved in one executor task, with no per-round jobs and no result
+    rows through the driver (a lazy checkpoint of that task's output
+    serves every later reference).  Otherwise ``local`` is None and the
+    caller runs its distributed loop from ``checkpoint``."""
+    obs = Observation()
+    has_null = reduce(or_, [F.col(c).isNull() for c in edges.columns])
+    ckpt = edges.observe(
+        obs, F.count(F.lit(1)).alias("rows"),
+        F.count_if(has_null).alias("nulls"),
+        *[agg.alias(name) for name, agg in observed.items()],
+    ).localCheckpoint(eager=True)
+    stats = obs.get
+    small = (kernel is not None and not stats["nulls"]
+             and stats["rows"] <= SMALL_GRAPH_ROWS)
+    local = (ckpt.coalesce(1).mapInArrow(kernel, schema)
+             .localCheckpoint(eager=False) if small else None)
+    return ckpt, stats, local
+
+
+def edge_arrays(batches: Iterator, *names: str) -> list:
+    """The named columns of a kernel's whole Arrow input as numpy
+    arrays (empty list when the input has no rows)."""
+    import pyarrow as pa
+
+    batches = [b for b in batches if b.num_rows]
+    if not batches:
+        return []
+    table = pa.Table.from_batches(batches)
+    return [table.column(n).to_numpy() for n in names]
+
+
+def _pagerank_kernel(iters: int, total: int, damping_pct: int):
+    """:func:`pagerank`'s recurrence in numpy over int64, for one task
+    holding the whole edge list: node ids become ``np.unique`` indices,
+    contributions accumulate with ``np.add.at``, and every division is
+    the same floor division as the distributed loop's ``div``."""
+
+    def kernel(batches: Iterator) -> Iterator:
+        import numpy as np
+        import pyarrow as pa
+
+        cols = edge_arrays(batches, "src", "dst")
+        if not cols:
+            return
+        src, dst = cols
+        nodes, idx = np.unique(np.concatenate([src, dst]),
+                               return_inverse=True)
+        n = len(nodes)
+        s, d = idx[:len(src)], idx[len(src):]
+        deg = np.bincount(s, minlength=n)
+        dangling, out_deg = deg == 0, deg[s]
+        base = ((100 - damping_pct) * total) // (100 * n)
+        rank = np.full(n, total // n, dtype=np.int64)
+        for _ in range(iters):
+            share = int(rank[dangling].sum()) // n
+            inm = np.zeros(n, dtype=np.int64)
+            np.add.at(inm, d, rank[s] // out_deg)
+            rank = base + (damping_pct * (inm + share)) // 100
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(nodes, pa.int64()), pa.array(rank, pa.int64())],
+            names=["node", "rank"])
+
+    return kernel
 
 
 def pagerank(
@@ -43,64 +136,75 @@ def pagerank(
     both the out-degree and the contribution sum (multigraph
     convention).
 
-    Scale shape: ONE count() action up front for N (a bounded scalar);
-    each iteration is one shuffle (groupBy dst) plus a broadcast-sized
-    1-row join for the dangling mass — the dangling sum rides a lazy
-    1-row filter of the SAME per-iteration aggregate, NOT a
-    per-iteration collect (the lesson of connected_components'
-    observe() fix, VERDICT r4).  The loop unrolls into a single DAG;
-    ``iters`` is small and fixed, which is also what makes the
-    SQL-oracle replay possible.
+    Scale shape: ONE eager job checkpoints the cast edge list and, in
+    the same pass, observes its row count and minimum id (the
+    negative-id check below runs at call time, not at first action).
+    An edge list of at most ``SMALL_GRAPH_ROWS`` rows then finishes in
+    one Arrow task over that checkpoint (:func:`checkpoint_edges`):
+    the whole recurrence runs in numpy int64 inside the task, with the
+    same floor divisions, so the ranks are identical to the
+    distributed loop's and no rank row reaches the driver.  That is one
+    job at call time plus one task at the caller's action, against
+    ~35 jobs for the loop on a small graph.
+
+    Above the threshold the distributed loop runs from the same
+    checkpoint: one more job counts the vertices (N), then each
+    iteration is one shuffle (groupBy dst) plus a broadcast-sized 1-row
+    join for the dangling mass.  The dangling sum rides a lazy 1-row
+    filter of the SAME per-iteration aggregate, NOT a per-iteration
+    collect.  The loop unrolls into a single DAG; ``iters`` is small
+    and fixed, which is also what makes the SQL-oracle replay
+    possible.
 
     The dangling mass is folded INTO the contribution aggregate via a
     static sentinel out-edge (dangling node -> node -1 with out-degree
     1, so the sentinel bucket collects the full dangling rank): the
-    previous shape referenced the rank state TWICE per iteration (once
-    for the dangling scalar, once for the contribution join), doubling
-    the unrolled DAG every iteration — 8 copies of the edge derivation
-    at iters=3, measured ~28 AQE stage-jobs per run.  With the
-    sentinel, rank state is referenced exactly once per iteration and
-    both consumers (per-node in-mass, dangling scalar) are filters over
-    one aggregate, which exchange reuse dedupes.  Node ids must
-    therefore be non-negative (the usual id contract here).
+    rank state is referenced exactly once per iteration and both
+    consumers (per-node in-mass, dangling scalar) are filters over one
+    aggregate, which exchange reuse dedupes.  Node ids must therefore
+    be non-negative (the usual id contract here, enforced on both
+    paths).
 
     Returns (node, rank) with rank in integer units of total.
     """
+    e = edges.select(F.col(src).cast("long").alias("src"),
+                     F.col(dst).cast("long").alias("dst"))
+    # numpy int64 wraps where Spark's ANSI long arithmetic raises: the
+    # kernel takes only totals whose largest product, d * (in + share)
+    # <= 100 * total, fits
+    kernel = (_pagerank_kernel(iters, total, damping_pct)
+              if 100 * total < 2 ** 63 else None)
+    e, stats, local = checkpoint_edges(
+        e, kernel, "node long, rank long",
+        min_id=F.least(F.min("src"), F.min("dst")))
+    if stats["rows"] == 0:
+        return e.select(F.col("src").alias("node"),
+                        F.lit(0).cast("long").alias("rank"))
+    # the dangling-mass sentinel is node -1, so a real node -1 would
+    # silently merge its in-mass with the dangling mass
+    if stats["min_id"] is not None and stats["min_id"] < 0:
+        raise ValueError(
+            "pagerank requires non-negative node ids (the dangling-"
+            f"mass sentinel is node -1; got min id {stats['min_id']}) "
+            "— remap ids before ranking")
+    if local is not None:
+        return local
     # NOTE on materialization: .persist() here was tried and REVERTED
     # twice — an InMemoryRelation blocks AQE's broadcast-join
     # conversion for every downstream reference (measured 2x slower at
-    # bench scale, 9-11 s vs ~5 s).  LAZY localCheckpoint (eager=False)
-    # is different: it cuts the lineage so the multiply-referenced
-    # frames (the augmented edge list, 3x; the per-iteration rank
-    # state, 2x each) evaluate ONCE instead of exponentially, while
-    # the explicit F.broadcast hints keep the join strategy independent
-    # of AQE statistics.  Measured at sf0.1: 5.9 s lazy-recompute ->
-    # 2.9 s with lazy checkpoints (the unrolled plan had 240 duplicate
-    # file scans before).  At cluster scale the same shape holds —
-    # checkpoint the edge derivation once, iterate over it.
-    e = edges.select(F.col(src).cast("long").alias("src"),
-                     F.col(dst).cast("long").alias("dst"))
+    # bench scale).  LAZY localCheckpoint (eager=False) cuts the
+    # lineage so the multiply-referenced frames (the augmented edge
+    # list, the per-iteration rank state) evaluate ONCE instead of
+    # exponentially, while the explicit F.broadcast hints keep the
+    # join strategy independent of AQE statistics.
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionAll(e.select(F.col("dst").alias("node")))
         .distinct()
         .localCheckpoint(eager=False)
     )
+    n = nodes.count()
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("__deg"))
-    # one action yields both the vertex count AND the id floor: the
-    # dangling-mass sentinel is node -1, so a real node -1 would
-    # silently merge its in-mass with the dangling mass — enforce the
-    # non-negative-id contract where we already pay for a job
-    stats = nodes.agg(F.count(F.lit(1)).alias("__n"),
-                      F.min("node").alias("__mn")).first()
-    n, min_id = stats["__n"], stats["__mn"]
-    if n == 0:
-        return nodes.withColumn("rank", F.lit(0).cast("long"))
-    if min_id is not None and min_id < 0:
-        raise ValueError(
-            "pagerank requires non-negative node ids (the dangling-"
-            f"mass sentinel is node -1; got min id {min_id}) — remap "
-            "ids before ranking")
     base = ((100 - damping_pct) * total) // (100 * n)
     # static augmented edge list: real edges carry their src degree;
     # every dangling node gets ONE sentinel edge (deg 1) to node -1

@@ -45,3 +45,11 @@ def people(spark):
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def distributed_graphs(monkeypatch):
+    """Force the iterative graph functions onto their distributed loops:
+    with a threshold of 0 rows no non-empty edge list counts as small."""
+    from pincette_json_streams_spark.functions import graph
+    monkeypatch.setattr(graph, "SMALL_GRAPH_ROWS", 0)

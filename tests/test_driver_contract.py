@@ -183,20 +183,22 @@ class TestBenchRegressionBudget:
 
         rec = tmp_path / "bench_record.json"
         rec.write_text(_json.dumps(
-            {"sf": 0.1, "queries": {"q1": 1.0, "q2": 0.5},
+            {"sf": 0.1, "cpus": 32, "queries": {"q1": 1.0, "q2": 0.5},
              "budget_queries": {"q2": 2.0}}))
         # over budget (2x base + 1s) flagged with [measured, base];
         # budget_queries (median) overrides queries (min) as the base
         out = bench.check_regressions(
-            {"q1": 3.5, "q2": 4.9, "q3": 9.9}, 0.1, str(rec))
+            {"q1": 3.5, "q2": 4.9, "q3": 9.9}, 0.1, 32, str(rec))
         assert out == {"q1": [3.5, 1.0]}
         assert bench.check_regressions(
-            {"q2": 5.1}, 0.1, str(rec)) == {"q2": [5.1, 2.0]}
+            {"q2": 5.1}, 0.1, "32", str(rec)) == {"q2": [5.1, 2.0]}
         # different sf: budget doesn't apply
-        assert bench.check_regressions({"q1": 9}, 0.01, str(rec)) == {}
+        assert bench.check_regressions({"q1": 9}, 0.01, 32, str(rec)) == {}
+        # different core count: a local[32] record budgets no local[4] run
+        assert bench.check_regressions({"q1": 9}, 0.1, 4, str(rec)) == {}
         # missing record: silent no-op (fresh clones)
         assert bench.check_regressions(
-            {"q1": 9}, 0.1, str(tmp_path / "nope.json")) == {}
+            {"q1": 9}, 0.1, 32, str(tmp_path / "nope.json")) == {}
 
 
 class TestMediaSynthCodecCoupling:

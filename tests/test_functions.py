@@ -818,6 +818,99 @@ class TestDedup:
         assert (0, 1) in pairs
 
 
+@pytest.mark.usefixtures("distributed_graphs")
+class TestConnectedComponentsDistributed:
+    """The component tests of TestDedup again, forced onto the
+    distributed loops (the default threshold sends them to the
+    single-task kernel)."""
+
+    test_connected_components = TestDedup.test_connected_components
+    test_connected_components_matches_union_find = \
+        TestDedup.test_connected_components_matches_union_find
+    test_star_collapses_chain_in_log_rounds = \
+        TestDedup.test_star_collapses_chain_in_log_rounds
+
+    def test_exhausted_max_iters_raises(self, spark):
+        """A 9-node path needs 8 propagation rounds: with max_iters=3
+        the labels used to come back unconverged (4 -> 1, 8 -> 5)."""
+        from pincette_json_streams_spark.functions.dedup import (
+            connected_components, connected_components_star,
+        )
+        pairs = spark.createDataFrame(
+            [(i, i + 1) for i in range(8)], "id_a long, id_b long")
+        with pytest.raises(ValueError, match="max_iters"):
+            connected_components(pairs, max_iters=3)
+        with pytest.raises(ValueError, match="max_iters"):
+            connected_components_star(pairs, max_iters=1)
+
+
+class TestSmallGraphSingleTask:
+    """Below ``graph.SMALL_GRAPH_ROWS`` the iterative graph functions
+    checkpoint the edge list in one job and finish in one Arrow task."""
+
+    @staticmethod
+    def _jobs_during(spark, build):
+        # job ids are monotonic: max-id deltas survive the UI store
+        # evicting old jobs in a long shared session
+        tracker = spark.sparkContext.statusTracker()
+        before = max(tracker.getJobIdsForGroup(None) or [0])
+        build()
+        return max(tracker.getJobIdsForGroup(None) or [0]) - before
+
+    def test_one_job_at_call_time(self, spark):
+        from pincette_json_streams_spark.functions.dedup import (
+            connected_components, connected_components_star,
+        )
+        from pincette_json_streams_spark.functions.graph import pagerank
+        pairs = spark.createDataFrame(
+            [(i, i + 1) for i in range(8)], "id_a long, id_b long")
+        nodes = spark.createDataFrame(
+            [(i,) for i in range(12)], "doc_id long")
+        edges = spark.createDataFrame(TestPageRank.EDGES,
+                                      "src long, dst long")
+        for build in (lambda: connected_components(pairs, nodes),
+                      lambda: connected_components_star(pairs, nodes),
+                      lambda: pagerank(edges, iters=6)):
+            assert self._jobs_during(spark, build) <= 1
+        # one task finishes a path that plain propagation would need
+        # 8 rounds for, whatever max_iters bounds the distributed loop
+        got = {r["id"]: r["cluster_id"] for r in connected_components(
+            pairs, nodes, max_iters=3).collect()}
+        assert got == {i: 0 if i <= 8 else i for i in range(12)}
+
+    def test_id_types_kept(self, spark):
+        """The kernel returns the id type the union of the id columns
+        resolves to; non-integral ids keep to the distributed loop."""
+        from pincette_json_streams_spark.functions.dedup import (
+            connected_components,
+        )
+        pairs = spark.createDataFrame([(1, 2), (5, 6)],
+                                      "id_a int, id_b int")
+        assert connected_components(pairs).schema.simpleString() == \
+            "struct<id:int,cluster_id:int>"
+        nodes = spark.createDataFrame([(9,)], "doc_id long")
+        got = connected_components(pairs, nodes)
+        assert got.schema.simpleString() == \
+            "struct<id:bigint,cluster_id:bigint>"
+        assert sorted(map(tuple, got.collect())) == \
+            [(1, 1), (2, 1), (5, 5), (6, 5), (9, 9)]
+        words = spark.createDataFrame([("y", "x")], "id_a string, id_b string")
+        assert sorted(map(tuple, connected_components(words).collect())) \
+            == [("x", "x"), ("y", "x")]
+
+    def test_null_ids_keep_to_the_distributed_loop(self, spark):
+        """A null endpoint has no numpy index: the edge list goes to
+        the distributed loop, where the null names its own label."""
+        from pincette_json_streams_spark.functions.dedup import (
+            connected_components,
+        )
+        pairs = spark.createDataFrame([(1, None), (2, 3)],
+                                      "id_a long, id_b long")
+        got = {r["id"]: r["cluster_id"]
+               for r in connected_components(pairs).collect()}
+        assert got == {None: None, 1: 1, 2: 2, 3: 2}
+
+
 class TestSimilarity:
     def test_brute_force_topk(self, spark):
         from pincette_json_streams_spark.functions.similarity import (
@@ -4543,6 +4636,11 @@ class TestPageRank:
             .executedPlan().toString()
         assert "Scan ExistingRDD" in plan or "LogicalRDD" in plan \
             or "Join" in plan
+
+
+@pytest.mark.usefixtures("distributed_graphs")
+class TestPageRankDistributed(TestPageRank):
+    """Every TestPageRank test again, forced onto the distributed loop."""
 
 
 class TestTheilSen:

@@ -44,14 +44,23 @@ class TestPageRankProperty:
                  for v in nodes}
         return r
 
-    @SPARKY
-    @given(edges_strategy, st.integers(1, 3))
-    def test_matches_mirror(self, spark, edges, iters):
+    def _check(self, spark, edges, iters):
         from pincette_json_streams_spark.functions.graph import pagerank
         df = spark.createDataFrame(edges, "src long, dst long")
         got = {r["node"]: r["rank"]
                for r in pagerank(df, iters=iters).collect()}
         assert got == self._mirror(edges, iters)
+
+    @SPARKY
+    @given(edges_strategy, st.integers(1, 3))
+    def test_matches_mirror(self, spark, edges, iters):
+        self._check(spark, edges, iters)
+
+    @SPARKY
+    @given(edges_strategy, st.integers(1, 3))
+    def test_matches_mirror_distributed(self, spark, distributed_graphs,
+                                        edges, iters):
+        self._check(spark, edges, iters)
 
 
 class TestTrianglesProperty:
