@@ -169,66 +169,19 @@ def _hash_str_py(s: str) -> int:
     ) % _P
 
 
-def _shingle_sig_vec(num_hashes: int, k: int):
-    """Fused shingle -> md5-hash -> MinHash signature as ONE Arrow-batched
-    pandas UDF: text -> struct(sh: distinct hashed shingles, sig).
+def _shingle_band_vec(num_hashes: int, k: int, bands: int):
+    """Fused shingle -> md5-hash -> MinHash signature -> banded LSH keys
+    as ONE Arrow-batched pandas UDF: text -> struct(gid, sh: distinct
+    hashed shingles, bandkeys), so the whole signature side of
+    ``minhash_lsh_pairs`` is one narrow Arrow pass and the Spark plan
+    carries no signature column and no md5/concat/slice codegen units.
 
     Catalyst evaluates higher-order-function lambdas *interpreted*, per
     element: the Column pipeline (substring-per-position, md5-per-shingle,
     num_hashes min-passes) measured 22.7 s for 5k docs at sf0.1.  The same
     computation — hashlib over *distinct* shingles, one numpy broadcast for
     the signature — runs in under 2 s, and each Arrow batch is independent
-    so it scales per-partition at 100 TB.  Results are bit-identical to
-    ``shingles``+``_hash_str``+``_min_under_perms`` (verified in tests)."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-
-    coeffs = _coeffs(num_hashes)
-
-    def f(texts):
-        import hashlib
-
-        import numpy as np
-        import pandas as pd
-
-        A = np.array([a for a, _ in coeffs], dtype=np.int64)[:, None]
-        B = np.array([b for _, b in coeffs], dtype=np.int64)[:, None]
-        gids, shs, sigs = [], [], []
-        for s in texts:
-            if s is None:
-                gids.append(None)
-                shs.append(None)
-                sigs.append(None)
-                continue
-            norm = _normalize_py(s)
-            n = max(len(norm) - (k - 1), 1)
-            # dict preserves first-occurrence order = array_distinct
-            distinct = dict.fromkeys(norm[i:i + k] for i in range(n))
-            h = list(dict.fromkeys(_hash_str_py(x) for x in distinct))
-            shs.append(h)
-            hv = np.array(h, dtype=np.int64)[None, :]
-            sigs.append(((A * hv + B) % _P).min(axis=1).tolist()
-                        if hv.size else [_P] * num_hashes)
-            # the shingle-set digest is internal (cluster-compression
-            # key), so it's computed here rather than as an
-            # md5(to_json(...)) Column — that expression was the widest
-            # codegen unit in the plan
-            gids.append(hashlib.md5(
-                ",".join(map(str, h)).encode()).hexdigest())
-        return pd.DataFrame({"gid": gids, "sh": shs, "sig": sigs})
-
-    # explicit functionType: `from __future__ import annotations` turns
-    # hints into strings pandas_udf's inference can't resolve
-    return pandas_udf(
-        f, "struct<gid: string, sh: array<bigint>, sig: array<bigint>>",
-        PandasUDFType.SCALAR,
-    )
-
-
-def _shingle_band_vec(num_hashes: int, k: int, bands: int):
-    """Like ``_shingle_sig_vec`` but also emits the banded LSH keys, so
-    the whole signature side of ``minhash_lsh_pairs`` is one narrow Arrow
-    pass and the Spark plan carries only (gid, sh, bandkeys) — no
-    signature column, no md5/concat/slice codegen units."""
+    so it scales per partition."""
     from pyspark.sql.functions import PandasUDFType, pandas_udf
 
     coeffs = _coeffs(num_hashes)
@@ -559,7 +512,7 @@ def simhash(text: Column, bits: int = 64) -> Column:
 
 def _simhash_vec(bits: int):
     """Fused normalize -> word-hash -> majority-bit-vote SimHash as one
-    Arrow-batched pandas UDF (same rationale as ``_shingle_sig_vec``: the
+    Arrow-batched pandas UDF (same rationale as ``_shingle_band_vec``: the
     interpreted Column pipeline pays bits x 2 passes over the hash array
     per row).  Bit-identical to ``_simhash_from_hashes`` over
     ``_hash_str``-hashed distinct words."""

@@ -696,7 +696,7 @@ def bloom_prefilter(
     Plan shape: the position table is folded into a REAL bitmap
     (mbits/64 uint64 words) that rides to every executor in the Arrow
     kernel's closure (the broadcast-variable pattern of _assign_udf /
-    _shingle_sig_vec) — the probe is then a PURE MAP: one md5 per row,
+    _shingle_band_vec) — the probe is then a PURE MAP: one md5 per row,
     k integer double-hash probes against the in-memory bitmap, zero
     joins, zero shuffles, zero re-evaluations of the build side.  This
     mirrors what Spark's own runtime bloom filters

@@ -637,64 +637,6 @@ def ewma_halflife(
     )
 
 
-def _theil_sen_arrow(base, group_col: str, max_points: int):
-    """Arrow kernel for :func:`theil_sen_slopes` (``impl="arrow"``):
-    ONE shuffle (groupBy g) and a vectorized numpy slope matrix per
-    group — the capped quadratic (max_points^2/2 pairs) is microseconds
-    in a triu-indexed array where the self-join pays two exchanges and
-    a join for the same arithmetic.
-
-    Engine-exactness is preserved op for op: int64 subtractions, ONE
-    IEEE float64 division per pair, ascending double sort, lower
-    median at rank (n+1) div 2, floor(slope + 0.5) — the identical
-    value path as the column plan and the SQL oracle (asserted equal
-    row-for-row at sf0.01 and sf0.1).
-
-    Measured honestly (interleaved, real top-k consumer, sf0.1,
-    local[32]): column min 2.17 s / arrow min 2.93 s at max_points=64,
-    column 2.21 / arrow 2.63 at 256 — the Python-worker launch and
-    Arrow transfer of the point set outweigh the join savings on this
-    data, so COLUMN STAYS THE DEFAULT.  The kernel earns its keep when
-    the per-group quadratic actually dominates: caps in the thousands,
-    or wide groups where the self-join's shuffle doubles the point
-    set; it is also the shape a cluster deployment would tune first
-    (one exchange, CPU-local numpy)."""
-    import pandas as pd
-
-    gt = base.schema["g"].dataType.simpleString()
-    out_schema = (f"`{group_col}` {gt}, n_points bigint, "
-                  "n_pairs bigint, slope_e6 bigint")
-
-    def fn(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        import numpy as np
-
-        pdf = pdf.sort_values(["t", "id"], kind="stable") \
-            .head(max_points)
-        t = pdf["t"].to_numpy(dtype=np.int64)
-        v = pdf["v"].to_numpy(dtype=np.int64)
-        n = len(t)
-        i, j = np.triu_indices(n, k=1)
-        keep = t[i] != t[j]
-        if not keep.any():
-            return pd.DataFrame(
-                {group_col: pdf["g"].iloc[:0], "n_points": [],
-                 "n_pairs": [], "slope_e6": []})
-        i, j = i[keep], j[keep]
-        slopes = (v[j] - v[i]).astype(np.float64) \
-            / (t[j] - t[i]).astype(np.float64)
-        slopes.sort()
-        pn = len(slopes)
-        med = slopes[(pn + 1) // 2 - 1]
-        return pd.DataFrame({
-            group_col: [pdf["g"].iloc[0]],
-            "n_points": [n],
-            "n_pairs": [pn],
-            "slope_e6": [int(np.floor(med + 0.5))],
-        })
-
-    return base.groupBy("g").applyInPandas(fn, schema=out_schema)
-
-
 def theil_sen_slopes(
     df: DataFrame,
     ts_col: str = "ts_nanos",
@@ -703,7 +645,6 @@ def theil_sen_slopes(
     id_col: str = "event_id",
     max_points: int = 64,
     scale: int = 10 ** 6,
-    impl: str = "column",
 ) -> DataFrame:
     """Theil-Sen robust trend per group: the MEDIAN of all pairwise
     slopes — up to ~29% corrupt points cannot flip the trend estimate
@@ -726,15 +667,17 @@ def theil_sen_slopes(
         values, so it is ALREADY in 1e-6 value-units per second — the
         output just rounds it half-up to an integer.
 
-    Round-9 measurement lesson (scripts/ab_theil2.py): a bare
-    ``.count()`` on this aggregate lets Catalyst PRUNE the
-    collect_list/array_sort work, so any A/B that counts the unsorted
-    aggregate measures a skeleton plan — time the full consumer (the
-    top-k wrapper or ``.collect()``).  Honest wrapped interleaved
-    timings at sf0.1: round-8 generator shape 3.6-4.4 s (its 0.7 s
-    record was the pruned skeleton), round-7 struct-sort self-join
+    Measurement lesson: a bare ``.count()`` on this aggregate lets
+    Catalyst PRUNE the collect_list/array_sort work, so any A/B that
+    counts the unsorted aggregate measures a skeleton plan — time the
+    full consumer (the top-k wrapper or ``.collect()``).  Honest
+    wrapped interleaved timings at sf0.1: a generator shape 3.6-4.4 s
+    (its 0.7 s record was the pruned skeleton), a struct-sort self-join
     1.8-3.1 s, this shape (self-join pairs + plain-double median)
-    1.25-1.66 s.
+    1.25-1.66 s.  A one-shuffle ``applyInPandas`` numpy kernel measured
+    slower still (2.93 s against 2.17 s at max_points=64, local[32]):
+    the Python-worker launch and Arrow transfer outweigh the join it
+    saves.
 
     Returns (group, n_points, n_pairs, slope_e6)."""
     from pyspark.sql.window import Window
@@ -746,8 +689,6 @@ def theil_sen_slopes(
         F.floor(vd * scale + F.lit(0.5)).cast("bigint").alias("v"),
         F.col(id_col).alias("id"),
     )
-    if impl == "arrow":
-        return _theil_sen_arrow(base, group_col, max_points)
     w = Window.partitionBy("g").orderBy("t", "id")
     # pts feeds both pair sides; the lazy lineage cut materializes the
     # cap-bounded frame once instead of running the window sort twice

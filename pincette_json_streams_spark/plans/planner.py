@@ -56,6 +56,8 @@ class Application:
             self.pctx.app_name = spec.get("application")
         self.streams: dict[str, DataFrame] = {}
         self.sinks: dict[str, DataFrame] = {}
+        # the purpose streams of the aggregate parts (also in ``streams``)
+        self.aggregates: dict[str, DataFrame] = {}
         self._compile()
 
     # -- sources -----------------------------------------------------------
@@ -87,20 +89,20 @@ class Application:
         pending = parts
         # parts can reference later parts by stream name: fixpoint ordering
         for _ in range(len(parts) + 1):
-            still: list[dict] = []
+            still: list[tuple[dict, SpecError]] = []
             for part in pending:
                 try:
                     self._compile_part(part)
-                except SpecError:
-                    still.append(part)
+                except SpecError as e:
+                    still.append((part, e))
             if not still:
                 break
             if len(still) == len(pending):
                 raise SpecError(
-                    f"unresolvable part references: "
-                    f"{[p.get('name') for p in still]}"
+                    "unresolvable part references: " + "; ".join(
+                        f"{p.get('name')!r}: {e}" for p, e in still)
                 )
-            pending = still
+            pending = [p for p, _ in still]
 
     def _compile_part(self, part: dict) -> None:
         t = part["type"]
@@ -114,11 +116,11 @@ class Application:
             out = self._compile_join(part)
         elif t == "aggregate":
             from pincette_json_streams_spark.streaming.aggregate import (
-                compile_aggregate_batch,
+                compile_aggregate,
             )
-            outs = compile_aggregate_batch(part, self)
-            for purpose, df in outs.items():
-                self.streams[f"{purpose}"] = df
+            outs = compile_aggregate(part, self)
+            self.aggregates.update(outs)
+            self.streams.update(outs)
             return
         else:
             raise SpecError(f"unknown part type {t}")

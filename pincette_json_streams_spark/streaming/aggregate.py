@@ -5,14 +5,20 @@ Commands keyed by ``_id`` fold through a reducer into aggregate state;
 each accepted command emits ``aggregate``, ``command``, ``event``,
 ``event-full`` and ``reply`` streams.
 
-Spark mapping:
-  - batch (this module): ``applyInPandas`` over ``_id`` groups — the fold
-    is per-key sequential by definition (the reference serializes commands
-    per aggregate instance through Kafka key partitioning), so grouped
-    Pandas execution is the faithful distributed analogue: parallel across
-    keys, ordered within a key.
-  - streaming: ``transformWithStateInPandas`` keyed the same way
-    (pincette_json_streams_spark.streaming.runtime — later round).
+Spark mapping — one compiler, ``compile_aggregate``, for both modes; a
+query gives the same outputs in batch and streaming:
+  - batch: ``applyInPandas`` over key groups — the fold is per-key
+    sequential by definition (the reference serializes commands per
+    aggregate instance through Kafka key partitioning), so grouped Pandas
+    execution is the faithful distributed analogue: parallel across keys,
+    ordered within a key.
+  - streaming: ``applyInPandasWithState`` keyed the same way, with the
+    instance's latest aggregate as checkpointed state
+    (``streaming.runtime.streaming_aggregate``).
+
+Commands fold in ``orderBy`` order when the part names that field, ties
+broken by arrival, else in arrival order (``compile_aggregate`` has the
+per-mode detail).
 
 Reducers: built-ins ``put``/``delete``/``patch`` (docs/state.md:95),
 pipeline reducers (a Mongo pipeline over ``{command, state}`` documents)
@@ -21,7 +27,8 @@ and JQ/JSLT script reducers through the embedded interpreters
 preferred reducer form, docs/index.md:11).
 
 Command admission, in reference order (docs/state.md:53-232):
-``preprocessor`` pipelines (part-level then per-command), the ``_seq``
+``preprocessor`` pipelines (part-level then per-command, compiled as
+DataFrame pipelines ahead of the fold), then per command the ``_seq``
 optimistic lock (mismatch -> command ignored), the ``_acl`` role check
 against ``_jwt.roles`` (``write`` fallback, ``sub == "system"`` bypass;
 denial -> reply with ``_error``), then the per-command validator
@@ -39,7 +46,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-__all__ = ["compile_aggregate_batch", "reduce_commands", "acl_allows"]
+__all__ = ["compile_aggregate", "reduce_commands", "acl_allows"]
 
 
 def acl_allows(state: dict | None, cmd: dict) -> bool:
@@ -104,16 +111,15 @@ def reduce_commands(
     agg_type: str,
     now_millis: int = 0,
     validators: dict[str, dict] | None = None,
-    preprocessors: dict[str, list] | None = None,
-    part_preprocessor: list | None = None,
     resolver: Any = None,
     lenient: bool = False,
 ) -> list[dict]:
     """Fold `commands` (ordered) into `state`; emit output records tagged
     with a `purpose` in {aggregate, event, event-full, reply, command}.
 
-    Admission order per command: preprocessors -> ``_seq`` lock -> ACL ->
-    validator -> reducer (module docstring has the spec references).
+    Admission order per command: ``_seq`` lock -> ACL -> validator ->
+    reducer (module docstring has the spec references); the
+    preprocessors ran ahead of the fold, as DataFrame pipelines.
 
     ``resolver`` (href -> state dict or None) enables jes href
     resolution around the validator+reducer, mirroring the reference's
@@ -122,9 +128,6 @@ def reduce_commands(
     no-ops — used by the phase-1 resolution-source fold, where reducers
     that need resolution would otherwise crash on unexpanded links."""
     from pincette_json_streams_spark.operators.validator import validate_doc
-    from pincette_json_streams_spark.streaming.reducers import (
-        run_pipeline_doc,
-    )
 
     out: list[dict] = []
     seq = (state or {}).get("_seq", -1)
@@ -132,17 +135,7 @@ def reduce_commands(
 
     for cmd in commands:
         out.append({"purpose": "command", "doc": cmd})
-        if part_preprocessor:
-            cmd = run_pipeline_doc(part_preprocessor, cmd)
-            if cmd is None:
-                continue
         command = cmd.get("_command")
-        pre = (preprocessors or {}).get(command)
-        if pre:
-            cmd = run_pipeline_doc(pre, cmd)
-            if cmd is None:
-                continue
-            command = cmd.get("_command")
         # optimistic lock (docs/state.md:72): a command carrying _seq must
         # match the instance's sequence, else it is ignored outright
         if cmd.get("_seq") is not None and cmd["_seq"] != seq:
@@ -313,14 +306,48 @@ def attach_resolved_maps(
     return ordered.join(resolved, "__key", "left")
 
 
-def compile_aggregate_batch(part: dict, app) -> dict[str, DataFrame]:
-    """Batch-mode aggregate: fold the `<app>-<type>-command` source per key.
+PURPOSES = ("aggregate", "command", "event", "event-full", "reply")
+FOLD_SCHEMA = "purpose string, value string, _id string"
+
+
+def fold_frame(recs: list[dict]):
+    """``reduce_commands`` records -> the fold's output rows."""
+    import pandas as pd
+
+    return pd.DataFrame({
+        "purpose": [r["purpose"] for r in recs],
+        "value": [json.dumps(r["doc"]) for r in recs],
+        "_id": [r["doc"].get("_id") for r in recs],
+    }, columns=["purpose", "value", "_id"])
+
+
+def compile_aggregate(part: dict, app) -> dict[str, DataFrame]:
+    """Compile an aggregate part over the `<app>-<type>-command` source,
+    batch or streaming alike.
 
     Returns one DataFrame per purpose stream, named
     `<app>-<type>-{aggregate,command,event,event-full,reply}`
     (docs/state.md:97-127).  Values are JSON strings (the schemaless
     message payload); downstream pipelines parse what they need.
+
+    Both modes share everything but the fold operator (``applyInPandas``
+    in batch, ``streaming.runtime.streaming_aggregate`` on a stream) and
+    the arrival-order key.  Commands fold per key in ``orderBy`` order
+    when the part names that field, ties broken by arrival; without it,
+    in arrival order.  Batch numbers arrivals with
+    ``monotonically_increasing_id`` before the preprocessors, whose
+    stages may shuffle.  Spark rejects that function on streams: there
+    ``_arrival_stream`` numbers them the same way when the part has a
+    preprocessor, and otherwise the fold keeps the order in which rows
+    reach the key's group (the sort is stable).  On a stream ``orderBy``
+    orders the commands of one micro-batch; a command never folds ahead
+    of one from an earlier micro-batch.
     """
+    from pincette_json_streams_spark.operators.stages import (
+        compile_pipeline,
+    )
+    from pincette_json_streams_spark.plans.spec import SpecError
+
     app_name = part.get("application") or app.spec["application"]
     agg_type = part.get("aggregateType", part.get("name"))
     full = f"{app_name}-{agg_type}" if "-" not in agg_type else agg_type
@@ -328,6 +355,20 @@ def compile_aggregate_batch(part: dict, app) -> dict[str, DataFrame]:
     source = app.catalog.get(cmd_topic)
     if source is None:
         raise KeyError(f"aggregate command topic {cmd_topic!r} not in catalog")
+    streaming = source.isStreaming
+
+    # jes href resolution (streaming/hrefs.py): batch joins against a
+    # phase-1 fold below; a stream cannot chain that ahead of the
+    # stateful fold and reads each link through ``pctx.href_lookup``
+    # instead (providing the lookup opts a streaming part in)
+    resolve_hrefs = bool(part.get("resolveHrefs")) or bool(
+        getattr(app.pctx, "resolve_hrefs", False)
+    )
+    href_lookup = getattr(app.pctx, "href_lookup", None)
+    if streaming and resolve_hrefs and href_lookup is None:
+        raise SpecError(
+            f"aggregate part {part.get('name', agg_type)!r} resolves hrefs "
+            "on a stream: set PipelineContext.href_lookup")
 
     reducer = None
     validators: dict = {}
@@ -348,9 +389,6 @@ def compile_aggregate_batch(part: dict, app) -> dict[str, DataFrame]:
                     validators[cname] = cspec["validator"]
                 if isinstance(cspec.get("preprocessor"), list):
                     preprocessors[cname] = cspec["preprocessor"]
-    # arrival order is assigned BEFORE the preprocessor: its stages (e.g.
-    # app8's $deduplicate) shuffle, and the fold must still replay
-    # commands in command-topic order
     # reference trace subparts `<part>.command.<command>`
     # (docs/telemetry.md metrics-attribute table): correlated commands
     # trace with their command name before entering the fold
@@ -365,74 +403,34 @@ def compile_aggregate_batch(part: dict, app) -> dict[str, DataFrame]:
                 F.lit(f"{pname}.command."),
                 F.coalesce(F.col("_command").cast("string"),
                            F.lit("unknown"))))
-    source = source.withColumn(
-        "__order", F.monotonically_increasing_id()
-    )
+    # arrival is numbered ahead of the preprocessors, whose stages may
+    # shuffle; on a stream without them, rows reach the fold's groups in
+    # arrival order and need no number
+    numbered = not streaming or bool(part.get("preprocessor")
+                                     or preprocessors)
+    if not streaming:
+        source = source.withColumn(
+            "__arrival", F.monotonically_increasing_id()
+        )
+    elif numbered:
+        source = _arrival_stream(source)
     # the part-level preprocessor sits between the command topic and the
     # reducer (docs/state.md:53) — a full pipeline on the command STREAM,
     # so stateful stages like app8's $deduplicate preprocessor work.
-    # Per-command preprocessors stay row-level inside the fold.
-    part_pre = part.get("preprocessor")
-    if part_pre:
-        from pincette_json_streams_spark.operators.stages import (
-            compile_pipeline,
+    # Per-command preprocessors likewise run as pipelines over the subset
+    # with that command name (app35's put-deduplicate).  A command they
+    # drop never reaches the fold, so it is not echoed as a command.
+    if part.get("preprocessor"):
+        source = compile_pipeline(source, part["preprocessor"], app.pctx)
+    for cname, pp in preprocessors.items():
+        sub = compile_pipeline(
+            source.filter(F.col("_command") == cname), pp, app.pctx
         )
-        source = compile_pipeline(source, part_pre, app.pctx)
-        part_pre = None
-    # per-command preprocessors likewise run as DataFrame pipelines over
-    # the subset with that command name (app35's put-deduplicate), so
-    # stateful stages work; arrival order survives through __order
-    if preprocessors:
-        from pincette_json_streams_spark.operators.stages import (
-            compile_pipeline,
-        )
-        for cname, pp in preprocessors.items():
-            sub = compile_pipeline(
-                source.filter(F.col("_command") == cname), pp, app.pctx
-            )
-            source = source.filter(
-                (F.col("_command") != cname)
-                | F.col("_command").isNull()
-            ).unionByName(sub, allowMissingColumns=True)
-        preprocessors = {}
+        source = source.filter(
+            (F.col("_command") != cname) | F.col("_command").isNull()
+        ).unionByName(sub, allowMissingColumns=True)
+
     unique = part.get("uniqueExpression")
-
-    def make_fold(with_resolver: bool, lenient: bool):
-        def fold(key, pdf):
-            import pandas as pd
-
-            pdf = pdf.sort_values("__order")
-            cmds = [json.loads(r) for r in pdf["__json"]]
-            if unique is not None and cmds:
-                # instances converge on the business key; the instance
-                # _id is the first command's (docs/state.md:176-197)
-                first_id = cmds[0].get("_id")
-                cmds = [{**c, "_id": first_id} for c in cmds]
-            resolver = None
-            if with_resolver:
-                raw = next(
-                    (v for v in pdf["__resolved"] if isinstance(v, str)),
-                    None,
-                )
-                if raw:
-                    states = {h: json.loads(s)
-                              for h, s in json.loads(raw).items()}
-                    resolver = states.get
-            recs = reduce_commands(
-                None, cmds, reducer, full,
-                validators=validators, preprocessors=preprocessors,
-                part_preprocessor=part_pre,
-                resolver=resolver, lenient=lenient,
-            )
-            return pd.DataFrame(
-                {
-                    "purpose": [r["purpose"] for r in recs],
-                    "value": [json.dumps(r["doc"]) for r in recs],
-                    "_id": [r["doc"].get("_id") for r in recs],
-                }
-            )
-        return fold
-
     if unique is not None:
         # re-key on the unique expression (the reference's `unique` topic:
         # one shuffle on the business key, docs/state.md:124)
@@ -445,46 +443,111 @@ def compile_aggregate_batch(part: dict, app) -> dict[str, DataFrame]:
         ))
     else:
         key_col = F.col("_id").cast("string")
-    payload = [c for c in source.columns if c != "__order"]
-    ordered = source.select(
+    order = {}
+    if part.get("orderBy"):
+        order["__order"] = F.col(part["orderBy"])
+    if numbered:
+        order["__arrival"] = F.col("__arrival")
+    order_cols = list(order)
+    payload = [c for c in source.columns if c != "__arrival"]
+    keyed = source.select(
         key_col.alias("__key"),
         F.to_json(F.struct(*payload)).alias("__json"),
-        "__order",
+        *[c.alias(name) for name, c in order.items()],
     )
-    out_schema = "purpose string, value string, _id string"
 
-    # jes href resolution (streaming/hrefs.py): opt-in because it costs a
-    # second fold — the resolution SOURCE is the phase-1 (lenient,
-    # resolution-free) fold of the same commands, so everything stays a
-    # join: extract hrefs of this aggregate type from the command JSON,
-    # equi-join them against the phase-1 final states, and ship each
-    # key's resolved map into the phase-2 fold as a column.  No driver
-    # collect at any size.
-    resolve_hrefs = bool(part.get("resolveHrefs")) or bool(
-        getattr(app.pctx, "resolve_hrefs", False)
-    )
-    if resolve_hrefs:
-        phase1 = ordered.groupBy("__key").applyInPandas(
-            make_fold(False, True), schema=out_schema
+    def fold(state, pdf, resolver=None, lenient=False) -> list[dict]:
+        if order_cols:
+            pdf = pdf.sort_values(order_cols, kind="stable")
+        cmds = [json.loads(r) for r in pdf["__json"]]
+        if unique is not None and cmds:
+            # instances converge on the business key; the instance _id is
+            # the first command's (docs/state.md:176-197)
+            inst = (state or {}).get("_id") or cmds[0].get("_id")
+            cmds = [{**c, "_id": inst} for c in cmds]
+        return reduce_commands(
+            state, cmds, reducer, full, validators=validators,
+            resolver=resolver, lenient=lenient,
         )
-        seq = F.get_json_object("value", "$._seq").cast("long")
-        w = Window.partitionBy("_id").orderBy(F.desc("__seq"))
-        finals = (
-            phase1.filter(F.col("purpose") == "aggregate")
-            .withColumn("__seq", seq)
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .select(F.col("_id").alias("__rid"),
-                    F.col("value").alias("__state"))
-        )
-        ordered = attach_resolved_maps(ordered, finals, full)
 
-    folded = ordered.groupBy("__key").applyInPandas(
-        make_fold(resolve_hrefs, False), schema=out_schema
-    )
-    out: dict[str, DataFrame] = {}
-    for purpose in ("aggregate", "command", "event", "event-full", "reply"):
-        out[f"{full}-{purpose}"] = folded.filter(
+    if streaming:
+        from pincette_json_streams_spark.streaming import runtime
+
+        folded = runtime.streaming_aggregate(
+            keyed, lambda state, pdf: fold(state, pdf, href_lookup)
+        )
+    else:
+        folded = _batch_fold(keyed, fold, full, resolve_hrefs)
+    return {
+        f"{full}-{purpose}": folded.filter(
             F.col("purpose") == purpose
         ).select("_id", "value")
-    return out
+        for purpose in PURPOSES
+    }
+
+
+def _arrival_stream(df: DataFrame) -> DataFrame:
+    """``df`` plus ``__arrival``, numbered as
+    ``monotonically_increasing_id`` numbers a batch frame (partition id
+    in the upper 31 bits, row position below), which Spark rejects on
+    streams.  Numbers restart with every micro-batch; the fold's state
+    already orders one micro-batch after the previous one."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    def stamp(batches):
+        import numpy as np
+        import pyarrow as pa
+        from pyspark import TaskContext
+
+        n = TaskContext.get().partitionId() << 33
+        for b in batches:
+            ids = pa.array(np.arange(n, n + b.num_rows, dtype=np.int64))
+            n += b.num_rows
+            yield pa.RecordBatch.from_arrays(
+                [*b.columns, ids], names=[*b.schema.names, "__arrival"])
+
+    return df.mapInArrow(stamp, StructType(
+        [*df.schema.fields, StructField("__arrival", LongType(), False)]))
+
+
+def _batch_fold(keyed: DataFrame, fold, full: str,
+                resolve_hrefs: bool) -> DataFrame:
+    """``applyInPandas`` over the ``__key`` groups of ``keyed``.
+
+    With ``resolve_hrefs`` it costs a second fold: the resolution SOURCE
+    is the phase-1 (lenient, resolution-free) fold of the same commands,
+    so everything stays a join — extract hrefs of this aggregate type
+    from the command JSON, equi-join them against the phase-1 final
+    states, and ship each key's resolved map into the phase-2 fold as a
+    column.  No driver collect at any size."""
+    if not resolve_hrefs:
+        return keyed.groupBy("__key").applyInPandas(
+            lambda pdf: fold_frame(fold(None, pdf)), schema=FOLD_SCHEMA
+        )
+    phase1 = keyed.groupBy("__key").applyInPandas(
+        lambda pdf: fold_frame(fold(None, pdf, lenient=True)),
+        schema=FOLD_SCHEMA,
+    )
+    seq = F.get_json_object("value", "$._seq").cast("long")
+    w = Window.partitionBy("_id").orderBy(F.desc("__seq"))
+    finals = (
+        phase1.filter(F.col("purpose") == "aggregate")
+        .withColumn("__seq", seq)
+        .withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .select(F.col("_id").alias("__rid"),
+                F.col("value").alias("__state"))
+    )
+
+    def resolved_fold(pdf):
+        raw = next(
+            (v for v in pdf["__resolved"] if isinstance(v, str)), None
+        )
+        resolver = None
+        if raw:
+            states = {h: json.loads(s) for h, s in json.loads(raw).items()}
+            resolver = states.get
+        return fold_frame(fold(None, pdf, resolver))
+
+    return attach_resolved_maps(keyed, finals, full).groupBy(
+        "__key").applyInPandas(resolved_fold, schema=FOLD_SCHEMA)

@@ -17,10 +17,14 @@ Delivery: at-least-once with checkpointing, matching the reference's
 contract (docs/index.md:3).  Kafka offsets ⇄ checkpoint state; the
 reference's resume tokens (App.java:1056-1081) ⇄ checkpoint metadata.
 
-Aggregate parts run ``applyInPandasWithState`` keyed by ``_id``: the
-reference serializes commands per aggregate instance via Kafka key
-partitioning (docs/state.md:114-127); grouped state processing is the
-faithful distributed analogue (parallel across keys, ordered within one).
+Aggregate parts compile through the same compiler as in batch
+(``streaming.aggregate.compile_aggregate``); only the fold operator
+differs: ``streaming_aggregate`` runs it as ``applyInPandasWithState``
+keyed by instance.  The reference serializes commands per aggregate
+instance via Kafka key partitioning (docs/state.md:114-127); grouped
+state processing is the faithful distributed analogue (parallel across
+keys, ordered within one).  ``StreamingApp`` exposes each aggregate
+part's five purpose streams as sinks.
 """
 
 from __future__ import annotations
@@ -31,10 +35,7 @@ from typing import Callable, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pincette_json_streams_spark.operators.stages import (
-    PipelineContext,
-    compile_pipeline,
-)
+from pincette_json_streams_spark.operators.stages import PipelineContext
 
 __all__ = [
     "kafka_source", "kafka_sink", "kafka_client_options",
@@ -333,99 +334,39 @@ def redelivery_sink(
 # --------------------------------------------------------------------------
 
 def streaming_aggregate(
-    commands: DataFrame,
-    agg_type: str,
-    reducer_spec: Optional[dict] = None,
-    order_col: Optional[str] = None,
-    script_imports: Optional[dict] = None,
-    unique_expression=None,
-    part_preprocessor: Optional[list] = None,
-    href_lookup: Optional[Callable[[str], Optional[dict]]] = None,
+    keyed: DataFrame,
+    fold: Callable[[Optional[dict], "pandas.DataFrame"], list[dict]],
 ) -> DataFrame:
-    """Event-sourcing aggregate over a streaming command source.
+    """The stateful fold of a streaming aggregate part.
 
-    ``applyInPandasWithState`` keyed by ``_id``; state carries the latest
-    aggregate JSON.  Emits one row per output message with a ``purpose``
-    discriminator (aggregate/command/event/event-full/reply) — fan out to
-    per-purpose sinks by filtering, exactly like the reference's five
-    output streams (docs/state.md:97-127).
-
-    ``href_lookup`` (href path -> state dict or None) enables jes href
-    resolution around the validator+reducer (streaming/hrefs.py) — an
-    executor-side point read, the same shape as the reference's async
-    Mongo reads per command (the batch fold's join-based resolution
-    can't chain ahead of a stateful operator in streaming).  Back it
-    with a ChangeLogCollection snapshot reader or any KV accessor."""
+    ``keyed`` carries one row per command: the instance key ``__key``,
+    the command JSON and its order columns
+    (``streaming.aggregate.compile_aggregate`` builds it, with ``fold``).
+    ``applyInPandasWithState`` groups by ``__key``; the state carries the
+    instance's latest aggregate JSON, and ``fold(state, pdf)`` returns
+    the ``reduce_commands`` records for a micro-batch's rows of one key.
+    Emits one row per output message with a ``purpose`` discriminator,
+    which the compiler fans out to the five purpose streams."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     from pincette_json_streams_spark.streaming.aggregate import (
-        reduce_commands,
+        FOLD_SCHEMA, fold_frame,
     )
 
-    reducer = None
-    validators: dict = {}
-    preprocessors: dict = {}
-    if reducer_spec:
-        from pincette_json_streams_spark.streaming.reducers import (
-            pipeline_reducer,
-        )
-        reducer = pipeline_reducer(reducer_spec, script_imports)
-        for cname, cspec in reducer_spec.items():
-            if isinstance(cspec, dict):
-                if isinstance(cspec.get("validator"), dict):
-                    validators[cname] = cspec["validator"]
-                if isinstance(cspec.get("preprocessor"), list):
-                    preprocessors[cname] = cspec["preprocessor"]
-
-    cols = commands.columns
-    if unique_expression is not None:
-        # re-key on the business key — the streaming analogue of the
-        # reference's `unique` topic (docs/state.md:124,176-197)
-        from pincette_json_streams_spark.operators.context import ctx_for
-        from pincette_json_streams_spark.operators.expressions import (
-            compile_expr,
-        )
-        key_col = F.to_json(F.struct(
-            compile_expr(unique_expression, ctx_for(commands)).alias("__u")
-        ))
-    else:
-        key_col = F.col("_id").cast("string")
-    src = commands.select(
-        key_col.alias("__key"),
-        F.to_json(F.struct(*[F.col(c) for c in cols])).alias("__json"),
-        (F.col(order_col) if order_col else F.lit(0)).alias("__order"),
-    )
-
-    def fold(key, pdf_iter, state):
+    def stateful(key, pdf_iter, state):
         import pandas as pd
 
         cur = json.loads(state.get[0]) if state.exists else None
-        out_rows = []
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values("__order")
-            cmds = [json.loads(r) for r in pdf["__json"]]
-            if unique_expression is not None and cmds:
-                inst = (cur or {}).get("_id") or cmds[0].get("_id")
-                cmds = [{**c, "_id": inst} for c in cmds]
-            recs = reduce_commands(
-                cur, cmds, reducer, agg_type,
-                validators=validators, preprocessors=preprocessors,
-                part_preprocessor=part_preprocessor,
-                resolver=href_lookup,
-            )
-            for r in recs:
-                out_rows.append(
-                    (r["purpose"], json.dumps(r["doc"]),
-                     r["doc"].get("_id"))
-                )
-                if r["purpose"] == "aggregate":
-                    cur = r["doc"]
+        recs = fold(cur, pd.concat(list(pdf_iter), ignore_index=True))
+        for r in recs:
+            if r["purpose"] == "aggregate":
+                cur = r["doc"]
         state.update((json.dumps(cur or {}),))
-        yield pd.DataFrame(out_rows, columns=["purpose", "value", "_id"])
+        yield fold_frame(recs)
 
-    return src.groupBy("__key").applyInPandasWithState(
-        fold,
-        outputStructType="purpose string, value string, _id string",
+    return keyed.groupBy("__key").applyInPandasWithState(
+        stateful,
+        outputStructType=FOLD_SCHEMA,
         stateStructType="state string",
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
@@ -456,41 +397,12 @@ class StreamingApp:
 
         self.spark = spark
         self.pctx = pctx or PipelineContext(catalog=dict(catalog))
-        # planner compiles identically on streaming DataFrames: stages are
-        # mode-agnostic; aggregate parts are swapped for the stateful op
-        spec = dict(spec)
-        agg_parts = [p for p in spec.get("parts", [])
-                     if p.get("type") == "aggregate"]
-        spec["parts"] = [p for p in spec["parts"]
-                         if p.get("type") != "aggregate"]
-        self.aggregates: dict[str, DataFrame] = {}
-        for part in agg_parts:
-            app_name = spec.get("application", "app")
-            agg_type = part.get("aggregateType", part.get("name"))
-            full = f"{app_name}-{agg_type}" if "-" not in agg_type \
-                else agg_type
-            source = catalog[f"{full}-command"]
-            folded = streaming_aggregate(
-                source, full, part.get("commands"),
-                order_col=part.get("orderBy"),
-                script_imports=part.get("scriptImports"),
-                # providing a lookup IS the streaming opt-in for jes
-                # href resolution (batch uses resolveHrefs + join)
-                href_lookup=getattr(self.pctx, "href_lookup", None),
-            )
-            for purpose in ("aggregate", "command", "event", "event-full",
-                            "reply"):
-                self.aggregates[f"{full}-{purpose}"] = folded.filter(
-                    F.col("purpose") == purpose
-                ).select("_id", "value")
-        if spec["parts"]:
-            self.app = Application(spec, catalog, self.pctx)
-            self.sinks = dict(self.app.run_batch())
-            self.streams = dict(self.app.streams)
-        else:
-            self.app, self.sinks, self.streams = None, {}, {}
-        self.sinks.update(self.aggregates)
-        self.streams.update(self.aggregates)
+        # the planner compiles identically on streaming DataFrames; an
+        # aggregate part's five purpose streams are sinks of their own
+        self.app = Application(spec, catalog, self.pctx)
+        self.sinks = dict(self.app.run_batch())
+        self.sinks.update(self.app.aggregates)
+        self.streams = dict(self.app.streams)
 
     def start(
         self,

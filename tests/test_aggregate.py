@@ -5,10 +5,7 @@ import json
 
 import pytest
 
-from pincette_json_streams_spark.streaming.aggregate import (
-    compile_aggregate_batch,
-    reduce_commands,
-)
+from pincette_json_streams_spark.streaming.aggregate import reduce_commands
 from pincette_json_streams_spark.plans.planner import Application
 
 # commands need a principal: no _jwt -> 403 Forbidden (app8 3_error fixture)
@@ -177,23 +174,6 @@ class TestAdmission:
         aggs = [r["doc"] for r in out if r["purpose"] == "aggregate"]
         assert [a["v"] for a in aggs] == [10, 20]
 
-    def test_preprocessor_transforms_and_drops(self):
-        out = reduce_commands(
-            None,
-            [{**JWT, "_id": "a1", "_command": "put", "v": 1, "drop": True},
-             {**JWT, "_id": "a1", "_command": "put", "v": 2}],
-            None, "t",
-            part_preprocessor=[
-                {"$match": {"drop": {"$exists": False}}},
-                {"$set": {"v2": {"$multiply": ["$v", 10]}}},
-            ],
-        )
-        aggs = [r["doc"] for r in out if r["purpose"] == "aggregate"]
-        assert len(aggs) == 1
-        assert aggs[0]["v"] == 2 and aggs[0]["v2"] == 20
-        # dropped command still echoes on the command stream
-        assert [r["purpose"] for r in out].count("command") == 2
-
     def test_jslt_script_reducer(self):
         from pincette_json_streams_spark.streaming.reducers import (
             pipeline_reducer,
@@ -316,24 +296,29 @@ class TestApp8Golden:
     def form(self, request):
         return request.param
 
+    FLOW = [
+        # (_id, _corr, _command, value or None)
+        ("c1", "k0", "put", 0),
+        ("c1", "k1", "plus", None),
+        ("c1", "k1", "plus", None),   # duplicate -> preprocessor drop
+        ("c1", "k2", "plus", None),
+        ("c1", "k3", "minus", None),
+        ("c1", "k4", "put", 5),       # INIT violation -> reply error
+        ("c1", "k5", "plus", 7),      # OPERATOR violation
+        ("c2", "k6", "put", 0),
+    ]
+    FLOW_SCHEMA = ("_id string, _corr string, _command string, value int, "
+                   "_type string, _jwt map<string,string>")
+
+    @classmethod
+    def flow_rows(cls):
+        return [(i, c, cmd, v, "plusminus-counter", {"sub": "system"})
+                for i, c, cmd, v in cls.FLOW]
+
     def test_plusminus_counter_flow(self, spark, form):
         t = "plusminus-counter"
-        rows = [
-            # (_id, _corr, _command, value or None)
-            ("c1", "k0", "put", 0),
-            ("c1", "k1", "plus", None),
-            ("c1", "k1", "plus", None),   # duplicate -> preprocessor drop
-            ("c1", "k2", "plus", None),
-            ("c1", "k3", "minus", None),
-            ("c1", "k4", "put", 5),       # INIT violation -> reply error
-            ("c1", "k5", "plus", 7),      # OPERATOR violation
-            ("c2", "k6", "put", 0),
-        ]
         commands = spark.createDataFrame(
-            [(i, c, cmd, v, t, {"sub": "system"})
-             for i, c, cmd, v in rows],
-            "_id string, _corr string, _command string, value int, "
-            "_type string, _jwt map<string,string>",
+            self.flow_rows(), self.FLOW_SCHEMA
         ).coalesce(1)  # keep command order deterministic for the fold
         app = Application(self._spec(form), {f"{t}-command": commands})
 
@@ -503,3 +488,114 @@ class TestHrefs:
         # add saw link.value = 4 through the href; stored link stays bare
         assert final_b2["value"] == 4
         assert final_b2["link"] == {"href": "/shop/acct/a1"}
+
+
+class TestBatchStreamingParity:
+    """Differential: the same spec over the same rows gives the same
+    aggregate-part outputs through ``Application`` (batch) and
+    ``StreamingApp`` (file stream, ``availableNow``)."""
+
+    PUTS = [("a1", "put", "u1", k, 99 - k, {"sub": "system"})
+            for k in range(100)]
+    PUT_SCHEMA = ("_id string, _command string, user string, v int, "
+                  "seq_in int, _jwt map<string,string>")
+
+    @staticmethod
+    def _run_both(spark, tmp_path, spec, rows, schema):
+        """-> (batch, streaming) outputs: {stream name: sorted values}."""
+        from pincette_json_streams_spark.streaming.runtime import (
+            StreamingApp, file_stream_catalog,
+        )
+
+        agg_type = spec["parts"][0]["aggregateType"]
+        full = agg_type if "-" in agg_type \
+            else f"{spec['application']}-{agg_type}"
+        topic = f"{full}-command"
+        d = str(tmp_path / "commands")
+        # one file, so arrival order is the row order in both modes
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(d)
+
+        batch = Application(spec, {topic: spark.read.parquet(d)})
+        app = StreamingApp(spark, spec, file_stream_catalog(
+            spark, {topic: d}, {topic: schema}))
+        assert set(app.sinks) == set(batch.aggregates)
+        run = tmp_path.name.replace("-", "_")
+
+        def memory(name, df):
+            return (df.writeStream.format("memory")
+                    .queryName(f"{run}_{name.replace('-', '_')}")
+                    .option("checkpointLocation",
+                            str(tmp_path / "ckpt" / name)))
+
+        app.run_until_drained(memory)
+
+        def values(df):
+            return sorted(r["value"] for r in df.collect())
+
+        return ({n: values(df) for n, df in batch.aggregates.items()},
+                {n: values(spark.table(f"{run}_{n.replace('-', '_')}"))
+                 for n in app.sinks})
+
+    def _assert_same(self, spark, tmp_path, spec, rows, schema):
+        want, got = self._run_both(spark, tmp_path, spec, rows, schema)
+        assert got == want
+        return want
+
+    @pytest.mark.parametrize("form", list(TestApp8Golden.REDUCER_FORMS))
+    def test_app8_forms_with_deduplicate(self, spark, tmp_path, form):
+        out = self._assert_same(
+            spark, tmp_path, TestApp8Golden()._spec(form),
+            TestApp8Golden.flow_rows(), TestApp8Golden.FLOW_SCHEMA)
+        # the duplicate k1 plus never reaches the fold, so it is not
+        # echoed on the command stream either
+        corrs = [json.loads(v)["_corr"]
+                 for v in out["plusminus-counter-command"]]
+        assert sorted(corrs) == ["k0", "k1", "k2", "k3", "k4", "k5", "k6"]
+
+    def test_unique_expression(self, spark, tmp_path):
+        spec = {"application": "shop", "parts": [
+            {"type": "aggregate", "aggregateType": "acct",
+             "uniqueExpression": "$user"}]}
+        rows = [("c1", "put", "alice", 1, 0, {"sub": "system"}),
+                ("c2", "put", "alice", 2, 1, {"sub": "system"}),
+                ("c3", "put", "bob", 7, 2, {"sub": "system"})]
+        out = self._assert_same(spark, tmp_path, spec, rows,
+                                self.PUT_SCHEMA)
+        ids = {json.loads(v)["user"]: json.loads(v)["_id"]
+               for v in out["shop-acct-aggregate"]}
+        assert ids == {"alice": "c1", "bob": "c3"}
+
+    def test_part_preprocessor(self, spark, tmp_path):
+        spec = {"application": "shop", "parts": [
+            {"type": "aggregate", "aggregateType": "acct",
+             "preprocessor": [{"$match": {"v": {"$lt": 10}}}]}]}
+        out = self._assert_same(spark, tmp_path, spec, self.PUTS,
+                                self.PUT_SCHEMA)
+        assert len(out["shop-acct-aggregate"]) == 10
+        assert len(out["shop-acct-command"]) == 10
+
+    def test_arrival_order_without_order_by(self, spark, tmp_path):
+        """100 puts on one instance, no ``orderBy``: both modes fold in
+        arrival order and end at the last command's state."""
+        spec = {"application": "shop", "parts": [
+            {"type": "aggregate", "aggregateType": "acct"}]}
+        out = self._assert_same(spark, tmp_path, spec, self.PUTS,
+                                self.PUT_SCHEMA)
+        states = sorted((json.loads(v) for v in out["shop-acct-aggregate"]),
+                        key=lambda d: d["_seq"])
+        assert [d["v"] for d in states] == list(range(100))
+
+    def test_order_by(self, spark, tmp_path):
+        """``orderBy`` wins over arrival in both modes; equal order values
+        keep their arrival order."""
+        spec = {"application": "shop", "parts": [
+            {"type": "aggregate", "aggregateType": "acct",
+             "orderBy": "seq_in"}]}
+        rows = [("a1", "put", "u1", k, (99 - k) // 2, {"sub": "system"})
+                for k in range(100)]
+        out = self._assert_same(spark, tmp_path, spec, rows,
+                                self.PUT_SCHEMA)
+        states = sorted((json.loads(v) for v in out["shop-acct-aggregate"]),
+                        key=lambda d: d["_seq"])
+        assert [d["v"] for d in states[:4]] == [98, 99, 96, 97]
+        assert states[-1]["v"] == 1

@@ -4688,28 +4688,6 @@ class TestTheilSen:
         assert capped == []  # both kept points share the second -> no
         # valid pair -> no median row for the group
 
-    def test_arrow_impl_matches_column_impl(self, spark):
-        """impl='arrow' (one-shuffle numpy kernel) must be row-for-row
-        identical to the default column plan — same int64 subtractions,
-        same IEEE division, same lower median — on data exercising
-        every edge: outliers, equal-time pairs, capped groups, and a
-        group with no valid pairs."""
-        from pincette_json_streams_spark.functions.timeseries import (
-            theil_sen_slopes,
-        )
-        rows = [(1, t * 10 ** 9, t, 2.0 * t) for t in range(1, 8)]
-        rows += [(1, 9 * 10 ** 9, 9, -1000.0)]
-        rows += [(2, 5 * 10 ** 8, 1, 1.0), (2, 6 * 10 ** 8, 2, 9.0),
-                 (2, 2 * 10 ** 9, 3, 3.0)]
-        rows += [(3, 10 ** 9, 1, 4.0), (3, 10 ** 9 + 5, 2, 7.0)]
-        for mp in (2, 3, 64):
-            df = self._df(spark, rows)
-            a = sorted(map(tuple, theil_sen_slopes(
-                df, max_points=mp).collect()))
-            b = sorted(map(tuple, theil_sen_slopes(
-                df, max_points=mp, impl="arrow").collect()))
-            assert a == b, (mp, a, b)
-
 
 class TestCollocations:
     """NPMI collocation mining (functions/text.py)."""

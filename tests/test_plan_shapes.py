@@ -480,9 +480,10 @@ class TestRound7PlanShapes:
         assert "CartesianProduct" not in plan
 
     def test_theil_sen_single_join_double_median(self, spark):
-        """Round-9 shape (scripts/ab_theil2.py, honest WRAPPED timings
-        after the round-8 'join-free is faster' A/B turned out to be
-        measuring a column-pruned skeleton): ONE pair self-join over
+        """Round-9 shape (honest WRAPPED timings, recorded in the
+        ``theil_sen_slopes`` docstring, after the round-8 'join-free is
+        faster' A/B turned out to be measuring a column-pruned
+        skeleton): ONE pair self-join over
         the checkpointed capped points, and the median aggregation
         collects PLAIN DOUBLES — no struct sort (its comparator does
         not codegen), no posexplode/explode generator cascade."""

@@ -605,6 +605,38 @@ class TestStreamingAggregate:
         assert final["v"] == 42  # 1 + linked value 41
         assert final["link"] == {"href": "/shop/acct/a1"}  # unresolved
 
+    def test_resolve_hrefs_without_lookup_raises(self, spark, tmp_path):
+        """A stream cannot run batch's join-based href resolution; without
+        a ``href_lookup`` the part fails at compile instead of folding
+        unresolved links."""
+        from pincette_json_streams_spark.plans.spec import SpecError
+
+        d = str(tmp_path / "cmds-nolookup")
+        schema = "_id string, _command string, v int"
+        spark.createDataFrame([("a1", "put", 1)], schema).write.parquet(d)
+        catalog = file_stream_catalog(
+            spark, {"shop-acct-command": d}, {"shop-acct-command": schema})
+        with pytest.raises(SpecError, match="href_lookup"):
+            StreamingApp(spark, {"application": "shop", "parts": [
+                {"type": "aggregate", "aggregateType": "acct",
+                 "resolveHrefs": True}]}, catalog)
+
+    def test_unsupported_preprocessor_raises(self, spark, tmp_path):
+        """A preprocessor stage Spark cannot run ahead of the stateful
+        fold fails the query start; it is never skipped."""
+        from pyspark.errors import AnalysisException
+
+        d = str(tmp_path / "cmds-sort")
+        schema = "_id string, _command string, v int"
+        spark.createDataFrame([("a1", "put", 1)], schema).write.parquet(d)
+        catalog = file_stream_catalog(
+            spark, {"shop-acct-command": d}, {"shop-acct-command": schema})
+        app = StreamingApp(spark, {"application": "shop", "parts": [
+            {"type": "aggregate", "aggregateType": "acct",
+             "preprocessor": [{"$sort": {"v": 1}}]}]}, catalog)
+        with pytest.raises(AnalysisException):
+            app.run_until_drained(memory_sink(tmp_path))
+
     def test_state_survives_batches(self, spark, tmp_path):
         """Second availableNow run resumes from checkpointed state: _seq
         continues, no replay of already-processed commands."""
