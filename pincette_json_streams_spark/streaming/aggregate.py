@@ -16,9 +16,9 @@ query gives the same outputs in batch and streaming:
     instance's latest aggregate as checkpointed state
     (``streaming.runtime.streaming_aggregate``).
 
-Commands fold in ``orderBy`` order when the part names that field, ties
-broken by arrival, else in arrival order (``compile_aggregate`` has the
-per-mode detail).
+Commands fold per key in arrival order, the same in both modes: by
+source file, then row (``_with_arrival``); a stream folds each
+micro-batch after the previous one.
 
 Reducers: built-ins ``put``/``delete``/``patch`` (docs/state.md:95),
 pipeline reducers (a Mongo pipeline over ``{command, state}`` documents)
@@ -40,6 +40,7 @@ keeps the ``_id`` of the first command per key (docs/state.md:176-197).
 from __future__ import annotations
 
 import json
+import warnings
 from typing import Any
 
 from pyspark.sql import DataFrame
@@ -331,17 +332,13 @@ def compile_aggregate(part: dict, app) -> dict[str, DataFrame]:
     message payload); downstream pipelines parse what they need.
 
     Both modes share everything but the fold operator (``applyInPandas``
-    in batch, ``streaming.runtime.streaming_aggregate`` on a stream) and
-    the arrival-order key.  Commands fold per key in ``orderBy`` order
-    when the part names that field, ties broken by arrival; without it,
-    in arrival order.  Batch numbers arrivals with
-    ``monotonically_increasing_id`` before the preprocessors, whose
-    stages may shuffle.  Spark rejects that function on streams: there
-    ``_arrival_stream`` numbers them the same way when the part has a
-    preprocessor, and otherwise the fold keeps the order in which rows
-    reach the key's group (the sort is stable).  On a stream ``orderBy``
-    orders the commands of one micro-batch; a command never folds ahead
-    of one from an earlier micro-batch.
+    in batch, ``streaming.runtime.streaming_aggregate`` on a stream).
+    Commands fold per key in arrival order (``_with_arrival``), numbered
+    ahead of the preprocessors, whose stages may shuffle.  There is no
+    order key: a stream cannot fold a command ahead of one from an
+    earlier micro-batch, so a key that batch sorts the whole input by
+    would make the two modes disagree.  A part's ``orderBy`` is ignored
+    with a warning.
     """
     from pincette_json_streams_spark.operators.stages import (
         compile_pipeline,
@@ -389,6 +386,14 @@ def compile_aggregate(part: dict, app) -> dict[str, DataFrame]:
                     validators[cname] = cspec["validator"]
                 if isinstance(cspec.get("preprocessor"), list):
                     preprocessors[cname] = cspec["preprocessor"]
+    if part.get("orderBy"):
+        warnings.warn(
+            f"aggregate part {part.get('name', agg_type)!r}: orderBy is "
+            "ignored, commands fold in arrival order", stacklevel=2)
+    # arrival is numbered ahead of the preprocessors, whose stages may
+    # shuffle, and before any other operator: file metadata resolves only
+    # on the scan
+    source, order_cols = _with_arrival(source)
     # reference trace subparts `<part>.command.<command>`
     # (docs/telemetry.md metrics-attribute table): correlated commands
     # trace with their command name before entering the fold
@@ -403,17 +408,6 @@ def compile_aggregate(part: dict, app) -> dict[str, DataFrame]:
                 F.lit(f"{pname}.command."),
                 F.coalesce(F.col("_command").cast("string"),
                            F.lit("unknown"))))
-    # arrival is numbered ahead of the preprocessors, whose stages may
-    # shuffle; on a stream without them, rows reach the fold's groups in
-    # arrival order and need no number
-    numbered = not streaming or bool(part.get("preprocessor")
-                                     or preprocessors)
-    if not streaming:
-        source = source.withColumn(
-            "__arrival", F.monotonically_increasing_id()
-        )
-    elif numbered:
-        source = _arrival_stream(source)
     # the part-level preprocessor sits between the command topic and the
     # reducer (docs/state.md:53) — a full pipeline on the command STREAM,
     # so stateful stages like app8's $deduplicate preprocessor work.
@@ -443,23 +437,20 @@ def compile_aggregate(part: dict, app) -> dict[str, DataFrame]:
         ))
     else:
         key_col = F.col("_id").cast("string")
-    order = {}
-    if part.get("orderBy"):
-        order["__order"] = F.col(part["orderBy"])
-    if numbered:
-        order["__arrival"] = F.col("__arrival")
-    order_cols = list(order)
-    payload = [c for c in source.columns if c != "__arrival"]
+    payload = [c for c in source.columns if c not in order_cols]
     keyed = source.select(
         key_col.alias("__key"),
         F.to_json(F.struct(*payload)).alias("__json"),
-        *[c.alias(name) for name, c in order.items()],
+        *order_cols,
     )
 
     def fold(state, pdf, resolver=None, lenient=False) -> list[dict]:
-        if order_cols:
-            pdf = pdf.sort_values(order_cols, kind="stable")
-        cmds = [json.loads(r) for r in pdf["__json"]]
+        # a stream calls this once per key and micro-batch, mostly on a
+        # few rows: on two rows, sorting tuples takes ~15 us and pandas'
+        # multi-column sort_values ~560 us (4-core x86 VM)
+        rows = sorted(zip(*(pdf[c].tolist() for c in order_cols),
+                          pdf["__json"].tolist()))
+        cmds = [json.loads(r[-1]) for r in rows]
         if unique is not None and cmds:
             # instances converge on the business key; the instance _id is
             # the first command's (docs/state.md:176-197)
@@ -486,13 +477,38 @@ def compile_aggregate(part: dict, app) -> dict[str, DataFrame]:
     }
 
 
-def _arrival_stream(df: DataFrame) -> DataFrame:
-    """``df`` plus ``__arrival``, numbered as
-    ``monotonically_increasing_id`` numbers a batch frame (partition id
-    in the upper 31 bits, row position below), which Spark rejects on
-    streams.  Numbers restart with every micro-batch; the fold's state
-    already orders one micro-batch after the previous one."""
+def _with_arrival(df: DataFrame) -> tuple[DataFrame, list[str]]:
+    """``df`` plus the columns that order its rows by arrival, and their
+    names, in the same way in batch and on a stream.
+
+    A file source orders by file first — modification time, then path:
+    the order in which a file stream admits files — because Spark's scan
+    reads files by size, not arrival.  Within a parquet file, rows order
+    by the scan's own ``row_index``.  Other sources, and other file
+    formats within a block, order by position: ``__arrival`` is then
+    numbered as ``monotonically_increasing_id`` numbers a batch frame
+    (partition id in the upper 31 bits, row position below), which Spark
+    rejects on streams.  On a stream the numbers restart with every
+    micro-batch; the fold's state already orders one micro-batch after
+    the previous one."""
     from pyspark.sql.types import LongType, StructField, StructType
+
+    meta = df._jdf.queryExecution().analyzed().metadataOutput()
+    fields = [list(meta.apply(i).dataType().fieldNames())
+              for i in range(meta.size())
+              if meta.apply(i).name() == "_metadata"]
+    cols = {}
+    if fields:
+        cols = {
+            "__arrival_time": F.unix_micros(
+                F.col("_metadata.file_modification_time")),
+            "__arrival_file": F.col("_metadata.file_path"),
+        }
+        if "row_index" in fields[0]:
+            cols["__arrival"] = F.col("_metadata.row_index")
+            return df.withColumns(cols), list(cols)
+        cols["__arrival_block"] = F.col("_metadata.file_block_start")
+        df = df.withColumns(cols)
 
     def stamp(batches):
         import numpy as np
@@ -507,7 +523,8 @@ def _arrival_stream(df: DataFrame) -> DataFrame:
                 [*b.columns, ids], names=[*b.schema.names, "__arrival"])
 
     return df.mapInArrow(stamp, StructType(
-        [*df.schema.fields, StructField("__arrival", LongType(), False)]))
+        [*df.schema.fields, StructField("__arrival", LongType(), False)]
+    )), [*cols, "__arrival"]
 
 
 def _batch_fold(keyed: DataFrame, fold, full: str,

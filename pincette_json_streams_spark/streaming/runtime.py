@@ -340,7 +340,7 @@ def streaming_aggregate(
     """The stateful fold of a streaming aggregate part.
 
     ``keyed`` carries one row per command: the instance key ``__key``,
-    the command JSON and its order columns
+    the command JSON and its arrival columns
     (``streaming.aggregate.compile_aggregate`` builds it, with ``fold``).
     ``applyInPandasWithState`` groups by ``__key``; the state carries the
     instance's latest aggregate JSON, and ``fold(state, pdf)`` returns

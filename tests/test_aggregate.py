@@ -501,10 +501,14 @@ class TestBatchStreamingParity:
                   "seq_in int, _jwt map<string,string>")
 
     @staticmethod
-    def _run_both(spark, tmp_path, spec, rows, schema):
-        """-> (batch, streaming) outputs: {stream name: sorted values}."""
+    def _run_both(spark, tmp_path, spec, rows, schema, files=None,
+                  fmt="parquet"):
+        """-> (batch, streaming) outputs: {stream name: sorted values}.
+
+        ``rows`` go to one ``fmt`` file; ``files`` (lists of rows) instead
+        go to one file each, written in list order."""
         from pincette_json_streams_spark.streaming.runtime import (
-            StreamingApp, file_stream_catalog,
+            StreamingApp,
         )
 
         agg_type = spec["parts"][0]["aggregateType"]
@@ -512,12 +516,14 @@ class TestBatchStreamingParity:
             else f"{spec['application']}-{agg_type}"
         topic = f"{full}-command"
         d = str(tmp_path / "commands")
-        # one file, so arrival order is the row order in both modes
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(d)
+        for part in files or [rows]:
+            spark.createDataFrame(part, schema).coalesce(1).write.mode(
+                "append").format(fmt).save(d)
 
-        batch = Application(spec, {topic: spark.read.parquet(d)})
-        app = StreamingApp(spark, spec, file_stream_catalog(
-            spark, {topic: d}, {topic: schema}))
+        batch = Application(spec, {
+            topic: spark.read.schema(schema).format(fmt).load(d)})
+        app = StreamingApp(spark, spec, {
+            topic: spark.readStream.schema(schema).format(fmt).load(d)})
         assert set(app.sinks) == set(batch.aggregates)
         run = tmp_path.name.replace("-", "_")
 
@@ -536,8 +542,10 @@ class TestBatchStreamingParity:
                 {n: values(spark.table(f"{run}_{n.replace('-', '_')}"))
                  for n in app.sinks})
 
-    def _assert_same(self, spark, tmp_path, spec, rows, schema):
-        want, got = self._run_both(spark, tmp_path, spec, rows, schema)
+    def _assert_same(self, spark, tmp_path, spec, rows, schema,
+                     files=None, fmt="parquet"):
+        want, got = self._run_both(spark, tmp_path, spec, rows, schema,
+                                   files, fmt)
         assert got == want
         return want
 
@@ -585,17 +593,65 @@ class TestBatchStreamingParity:
                         key=lambda d: d["_seq"])
         assert [d["v"] for d in states] == list(range(100))
 
-    def test_order_by(self, spark, tmp_path):
-        """``orderBy`` wins over arrival in both modes; equal order values
-        keep their arrival order."""
+    def test_order_by_is_ignored(self, spark, tmp_path):
+        """``orderBy`` does not reorder: a stream cannot fold a command
+        ahead of one from an earlier micro-batch, so both modes fold in
+        arrival order, and the part compiles with a warning."""
         spec = {"application": "shop", "parts": [
             {"type": "aggregate", "aggregateType": "acct",
              "orderBy": "seq_in"}]}
-        rows = [("a1", "put", "u1", k, (99 - k) // 2, {"sub": "system"})
-                for k in range(100)]
-        out = self._assert_same(spark, tmp_path, spec, rows,
-                                self.PUT_SCHEMA)
+        with pytest.warns(UserWarning, match="orderBy"):
+            out = self._assert_same(spark, tmp_path, spec, self.PUTS,
+                                    self.PUT_SCHEMA)
         states = sorted((json.loads(v) for v in out["shop-acct-aggregate"]),
                         key=lambda d: d["_seq"])
-        assert [d["v"] for d in states[:4]] == [98, 99, 96, 97]
-        assert states[-1]["v"] == 1
+        assert [d["v"] for d in states] == list(range(100))
+
+    @pytest.mark.parametrize("fmt", ["parquet", "json"])
+    def test_arrival_order_across_files(self, spark, tmp_path, fmt):
+        """Files fold in the order they were written, whatever order the
+        scan reads them in (by size, largest first).  Parquet rows order
+        by the scan's row index, other formats by an Arrow stamp."""
+        spec = {"application": "shop", "parts": [
+            {"type": "aggregate", "aggregateType": "acct"}]}
+        first = [("a1", "put", "u1", 0, 0, {"sub": "system"})]
+        second = [(f"b{k}", "put", "u2", k, 0, {"sub": "system"})
+                  for k in range(50)] + [
+            ("a1", "put", "u1", 1, 0, {"sub": "system"})]
+        out = self._assert_same(spark, tmp_path, spec, None,
+                                self.PUT_SCHEMA, files=[first, second],
+                                fmt=fmt)
+        a1 = sorted((json.loads(v) for v in out["shop-acct-aggregate"]
+                     if json.loads(v)["_id"] == "a1"),
+                    key=lambda d: d["_seq"])
+        assert [d["v"] for d in a1] == [0, 1]
+
+    def test_preprocessors_rewrite_and_drop(self, spark, tmp_path):
+        """A part-level ``$set`` and a per-command ``$set`` reach the
+        reducer's state; a per-command ``$match`` drops its command,
+        which is then neither folded nor echoed."""
+        spec = {"application": "shop", "parts": [
+            {"type": "aggregate", "aggregateType": "acct",
+             "preprocessor": [{"$set": {"tag": "pp"}}],
+             "commands": {
+                 "put": {"preprocessor": [
+                     {"$set": {"v10": {"$multiply": ["$v", 10]}}}]},
+                 "zap": {"preprocessor": [{"$match": {"v": {"$lt": 0}}}],
+                         "reducer": [{"$replaceWith": "$state"},
+                                     {"$set": {"zapped": True}}]},
+             }}]}
+        rows = [("a1", "put", "u1", 1, 0, {"sub": "system"}),
+                ("a1", "zap", "u1", 2, 0, {"sub": "system"}),
+                ("a2", "put", "u2", 3, 0, {"sub": "system"}),
+                ("a1", "put", "u1", 4, 0, {"sub": "system"})]
+        out = self._assert_same(spark, tmp_path, spec, rows,
+                                self.PUT_SCHEMA)
+        states = sorted(((d["_id"], d["v"], d["v10"], d["tag"],
+                          d.get("zapped"))
+                         for d in map(json.loads,
+                                      out["shop-acct-aggregate"])))
+        assert states == [("a1", 1, 10, "pp", None),
+                          ("a1", 4, 40, "pp", None),
+                          ("a2", 3, 30, "pp", None)]
+        assert sorted(json.loads(v)["_command"]
+                      for v in out["shop-acct-command"]) == ["put"] * 3

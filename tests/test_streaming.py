@@ -523,15 +523,14 @@ class TestStreamingAggregate:
              ("a2", "put", 5, 2, {"sub": "system"}),
              ("a1", "put", 20, 3, {"sub": "system"})],
             "_id string, _command string, v int, seq_in int, _jwt map<string,string>",
-        ).write.parquet(d)
+        ).coalesce(1).write.parquet(d)
         catalog = file_stream_catalog(
             spark, {"shop-cart-command": d},
             {"shop-cart-command":
              "_id string, _command string, v int, seq_in int, _jwt map<string,string>"})
         app = StreamingApp(spark, {
             "application": "shop", "parts": [
-                {"type": "aggregate", "aggregateType": "cart",
-                 "orderBy": "seq_in"},
+                {"type": "aggregate", "aggregateType": "cart"},
             ],
         }, catalog)
         assert set(app.sinks) == {
@@ -570,7 +569,7 @@ class TestStreamingAggregate:
             F.when(F.col("_command") == "put",
                    F.named_struct(F.lit("href"),
                                   F.lit("/shop/acct/a1"))),
-        ).write.parquet(d)
+        ).coalesce(1).write.parquet(d)
 
         schema = ("_id string, _command string, v int, "
                   "link struct<href:string>, seq_in int, "
@@ -585,7 +584,6 @@ class TestStreamingAggregate:
         app = StreamingApp(spark, {
             "application": "shop", "parts": [
                 {"type": "aggregate", "aggregateType": "acct",
-                 "orderBy": "seq_in",
                  "commands": {
                      "put": {},
                      "add": {"reducer": [
@@ -657,8 +655,7 @@ class TestStreamingAggregate:
                  "_id string, _command string, v int, seq_in int, _jwt map<string,string>"})
             app = StreamingApp(spark, {
                 "application": "inc", "parts": [
-                    {"type": "aggregate", "aggregateType": "acc",
-                     "orderBy": "seq_in"},
+                    {"type": "aggregate", "aggregateType": "acc"},
                 ],
             }, catalog)
 
