@@ -35,6 +35,7 @@ from __future__ import annotations
 
 from typing import Iterable, Optional
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -206,16 +207,12 @@ def bpe_encode(
     DISTINCT word in a batch is merged once regardless of how often it
     repeats — the zipfian repetition that makes caching pay is exactly
     what corpora look like."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
     from pincette_json_streams_spark.functions.text import _BPE_RE
 
     ranks = {tuple(p): i for i, p in enumerate(merges)}
 
-    # explicit SCALAR type: `from __future__ import annotations` turns
-    # hints into strings pandas_udf's inference can't resolve
-    def enc(texts):
-        import pandas as pd
-
+    def enc(texts: pd.Series) -> pd.Series:
         cache: dict[str, list] = {}
 
         def one(t):
@@ -234,5 +231,5 @@ def bpe_encode(
 
         return pd.Series([one(t) for t in texts])
 
-    enc_udf = pandas_udf(enc, "array<string>", PandasUDFType.SCALAR)
+    enc_udf = pandas_udf(enc, "array<string>")
     return df.withColumn(out_col, enc_udf(F.col(text_col)))

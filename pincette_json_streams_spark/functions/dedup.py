@@ -3,23 +3,34 @@
 
 - exact_dedup          — hash-groupBy on a normalized fingerprint; one
   shuffle on a short key, map-side combine.
-- minhash_signature /
-  minhash_lsh_pairs    — shingle -> MinHash -> banded LSH.  Signatures are
-  computed scan-side (pure Column math, no UDF); candidate generation is an
-  equi-join on (band, band-hash) buckets, so cost scales with bucket
-  collisions, never O(n^2).  Verification computes true Jaccard only for
-  candidates.
-- simhash              — 64-bit SimHash over word tokens, pure Column
-  bit-arithmetic; near-dup = small Hamming distance, found via LSH on bit
-  bands of the signature.
-- ngram_jaccard_pairs  — word-ngram inverted-index join (classic
-  candidate-pair generation); exact Jaccard on pairs sharing >= 1 ngram.
+- minhash_lsh_pairs    — shingle -> MinHash -> banded LSH, with an exact
+  Jaccard verify on the candidates only.  The signature side is one fused
+  Arrow pass per row (``_shingle_band_vec``); candidate generation is an
+  equi-join on band keys, so cost scales with bucket collisions, never
+  O(n^2).  ``minhash_index``/``incremental_dedup`` reuse the same pass
+  for a growing corpus.
+- simhash_pairs        — 60-bit SimHash over word tokens (one Arrow pass),
+  near-dup = small Hamming distance, candidates via LSH on bit bands.
+- ngram_jaccard_pairs /
+  containment_pairs    — word-ngram inverted-index join; exact Jaccard or
+  containment on the group pairs sharing >= 1 n-gram, with an optional
+  document-frequency cap as the skew guard.
+- prefix_filter_pairs  — exact Jaccard join with PPJoin prefix filtering.
 - embedding_pairs      — cosine near-dup over an embedding column; exact
   for bounded inputs, hyperplane-LSH bucketing as the scale path.
+- verify_pairs_editdist — exact edit-distance precision stage for any
+  candidate pair stream.
 - connected_components — resolve pairwise near-dup output into clusters
   (one Arrow task for small edge lists, iterative min-label propagation
   with lineage truncation above that); the step that turns "pairs" into
   "keep one document per duplicate group".
+
+The four text pair functions share one cluster-compression skeleton:
+``_digest_groups`` groups documents by a digest of their set (every pair
+inside a group is an exact duplicate), the function pairs the distinct
+groups, and ``_expand_pairs`` turns the verified group pairs back into
+document pairs plus the within-group pairs.  A document whose text is
+NULL has a NULL digest and pairs with nothing.
 
 Every function is deterministic (md5-derived hashing, fixed coefficient
 tables) so the DuckDB oracle replays the identical computation.
@@ -27,6 +38,7 @@ tables) so the DuckDB oracle replays the identical computation.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegralType, StructField, StructType
@@ -37,17 +49,16 @@ from pincette_json_streams_spark.functions.graph import (
     edge_arrays,
 )
 from pincette_json_streams_spark.functions.text import (
+    _sorted_pairs,
     fingerprint,
     normalize_text,
-    shingles,
 )
 
 __all__ = [
     "connected_components", "connected_components_star", "exact_dedup",
-    "minhash_signature", "minhash_lsh_pairs", "simhash", "simhash_pairs",
-    "ngram_jaccard_pairs", "embedding_cosine", "cosine_vec",
-    "embedding_pairs", "hyperplane_bucket", "minhash_index",
-    "incremental_dedup", "verify_pairs_editdist",
+    "minhash_lsh_pairs", "simhash_pairs", "ngram_jaccard_pairs",
+    "embedding_cosine", "cosine_vec", "embedding_pairs", "hyperplane_bucket",
+    "minhash_index", "incremental_dedup", "verify_pairs_editdist",
 ]
 
 # Universal-hash family h_i(x) = (a_i * x + b_i) mod p over the Mersenne
@@ -124,31 +135,65 @@ def exact_dedup(
     )
 
 
-def _min_under_perms(hashed: Column, num_hashes: int) -> Column:
-    """MinHash signature from a *materialized* hashed-shingle column.
+def _digest_groups(base: DataFrame, key: str, *cols: str) -> DataFrame:
+    """Cluster compression, first half: one row per distinct ``key`` (a
+    digest of the document's set) with ``first`` of each of ``cols`` and
+    the sorted member ``ids``.
 
-    ``hashed`` must be a plain column reference (not an inline expression):
-    each of the ``num_hashes`` mins references it, and CollapseProject
-    would otherwise duplicate the md5 pipeline per permutation —
-    num_hashes× the scan cost."""
-    def perm(a, b):
-        return lambda h: (a * h + b) % F.lit(_P)
+    Training corpora carry large exact-duplicate clusters; comparing
+    their members pairwise is the classic LSH blowup.  Every pair inside
+    a group is an exact duplicate, so the quadratic candidate join runs
+    over *distinct sets* only.  The digest, not the ~300-element array,
+    is the shuffle key (measured ~10x cheaper).  The groups feed both
+    sides of the candidate join and the within-group expansion, so they
+    are persisted (tracked for ``release_caches``).
 
-    return F.array(*[
-        F.array_min(F.transform(hashed, perm(a, b)))
-        for a, b in _coeffs(num_hashes)
-    ])
+    The NULL key (NULL text) is no group: documents without text pair
+    with nothing, the NULL semantics of an equi-join and of the SQL
+    oracle (as in ``text.winnow_pairs``).  It is dropped above the
+    cache, not below the aggregation: there Catalyst would push the
+    filter under the kernel's projection and run the Arrow UDF twice,
+    once for the filter before ``_spread``'s exchange."""
+    return tracked_persist(
+        base.groupBy(key)
+        .agg(*[F.first(c).alias(c) for c in cols],
+             F.sort_array(F.collect_list("id")).alias("ids"))
+    ).filter(F.col(key).isNotNull())
 
 
-def minhash_signature(
-    text: Column, num_hashes: int = 32, k: int = 9
-) -> Column:
-    """MinHash signature (array<bigint>) over char-k-shingles.  NOTE: for
-    hot paths prefer the two-step used by ``minhash_lsh_pairs`` (hash
-    shingles into a real column first); as a single inline expression the
-    optimizer re-derives the shingle hashes once per permutation."""
-    return _min_under_perms(F.transform(shingles(text, k), _hash_str),
-                            num_hashes)
+def _expand_pairs(
+    verified: DataFrame,
+    groups: DataFrame,
+    cross_out: list,
+    within_out: list,
+) -> DataFrame:
+    """Cluster compression, second half: group pairs back to document
+    pairs ``(id_a, id_b, ...)`` with ``id_a < id_b``.
+
+    ``verified`` holds one row per qualifying group pair: ``ids_a``,
+    ``ids_b`` and the columns ``cross_out`` reads.  Every member pair
+    across the two groups becomes a row; ``ia``/``ib`` name its members
+    from ``ids_a``/``ids_b``.  ``groups`` holds one row per digest
+    group: ``ids`` and the columns ``within_out`` reads.  Every member
+    pair inside a group of two or more becomes a row."""
+    carry = [c for c in verified.columns if c not in ("ids_a", "ids_b")]
+    cross = (
+        verified
+        .select(F.explode("ids_a").alias("ia"), "ids_b", *carry)
+        .select("ia", F.explode("ids_b").alias("ib"), *carry)
+        .select(F.least("ia", "ib").alias("id_a"),
+                F.greatest("ia", "ib").alias("id_b"), *cross_out)
+    )
+    keep = [c for c in groups.columns if c != "ids"]
+    within = (
+        groups.filter(F.size("ids") > 1)
+        .select(F.explode("ids").alias("ia"), F.col("ids"), *keep)
+        .select("ia", F.explode("ids").alias("ib"), *keep)
+        .filter(F.col("ia") < F.col("ib"))
+        .select(F.col("ia").alias("id_a"), F.col("ib").alias("id_b"),
+                *within_out)
+    )
+    return cross.unionByName(within)
 
 
 def _normalize_py(s: str) -> str:
@@ -182,16 +227,15 @@ def _shingle_band_vec(num_hashes: int, k: int, bands: int):
     computation — hashlib over *distinct* shingles, one numpy broadcast for
     the signature — runs in under 2 s, and each Arrow batch is independent
     so it scales per partition."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
     coeffs = _coeffs(num_hashes)
     rows = num_hashes // bands
 
-    def f(texts):
+    def f(texts: pd.Series) -> pd.DataFrame:
         import hashlib
 
         import numpy as np
-        import pandas as pd
 
         A = np.array([a for a, _ in coeffs], dtype=np.int64)[:, None]
         B = np.array([b for _, b in coeffs], dtype=np.int64)[:, None]
@@ -231,9 +275,7 @@ def _shingle_band_vec(num_hashes: int, k: int, bands: int):
         return pd.DataFrame({"gid": gids, "sh": shs, "bks": bkss})
 
     return pandas_udf(
-        f, "struct<gid: string, sh: array<bigint>, bks: array<bigint>>",
-        PandasUDFType.SCALAR,
-    )
+        f, "struct<gid: string, sh: array<bigint>, bks: array<bigint>>")
 
 
 def minhash_lsh_pairs(
@@ -284,22 +326,8 @@ def minhash_lsh_pairs(
                 F.col("ss.sh").alias("sh"), F.col("ss.bks").alias("bks"))
     )
 
-    # Cluster compression: training corpora carry large exact-duplicate
-    # clusters; comparing their members pairwise is the classic LSH
-    # blowup.  Group docs by shingle-SET digest first — within a group
-    # every pair has Jaccard exactly 1, and the quadratic candidate join
-    # runs over *distinct sets* only.  The digest, not the ~300-element
-    # array, is the shuffle key (measured ~10x cheaper).
-    groups = (
-        base.groupBy("gid")
-        .agg(
-            F.first("sh").alias("sh"), F.first("bks").alias("bks"),
-            F.sort_array(F.collect_list("id")).alias("ids"),
-        )
-    )
-    # three consumers (both sides of the LSH self-join + the within-group
-    # expansion) would each recompute the whole signature pipeline
-    groups = tracked_persist(groups)
+    # cluster compression: the LSH self-join pairs distinct shingle sets
+    groups = _digest_groups(base, "gid", "sh", "bks")
 
     # Bands carry ONLY the group digest: exploding (and then shuffling)
     # the shingle arrays band-times would multiply the join payload ~300x.
@@ -351,22 +379,9 @@ def minhash_lsh_pairs(
             .withColumn("jaccard", F.lit(1.0))
         )
         return cross.unionByName(within)
-    cross = (
-        verified
-        .select(F.explode("ids_a").alias("ia"), "ids_b", "jaccard")
-        .select("ia", F.explode("ids_b").alias("ib"), "jaccard")
-        .select(F.least("ia", "ib").alias("id_a"),
-                F.greatest("ia", "ib").alias("id_b"), "jaccard")
-    )
-    within = (
-        groups.filter(F.size("ids") > 1)
-        .select(F.explode("ids").alias("ia"), F.col("ids"))
-        .select("ia", F.explode("ids").alias("ib"))
-        .filter(F.col("ia") < F.col("ib"))
-        .select(F.col("ia").alias("id_a"), F.col("ib").alias("id_b"),
-                F.lit(1.0).alias("jaccard"))
-    )
-    return cross.unionByName(within)
+    return _expand_pairs(verified.select("ids_a", "ids_b", "jaccard"),
+                         groups.select("ids"), ["jaccard"],
+                         [F.lit(1.0).alias("jaccard")])
 
 
 def minhash_index(
@@ -482,45 +497,17 @@ def incremental_dedup(
 # SimHash
 # --------------------------------------------------------------------------
 
-def _simhash_from_hashes(hashes: Column, bits: int) -> Column:
-    """SimHash signature from a *materialized* token-hash column: bit b of
-    the signature is the majority vote of the tokens' hash bit b.  Like
-    ``_min_under_perms``, ``hashes`` must be a plain column reference —
-    the ``bits``×2 passes below are cheap bit-ops, but would each drag a
-    full md5 pipeline along if the optimizer inlined the hash expression."""
-    def bit_test(b):
-        return lambda h: F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1
-
-    acc = []
-    for b in range(bits):
-        ones = F.size(F.filter(hashes, bit_test(b)))
-        bit = (ones * 2 > F.size(hashes)).cast("bigint")
-        acc.append(F.shiftleft(bit, b))
-    out = acc[0]
-    for a in acc[1:]:
-        out = out.bitwiseOR(a)
-    return out
-
-
-def simhash(text: Column, bits: int = 64) -> Column:
-    """SimHash over word tokens, as one inline expression.  For hot paths
-    prefer the two-step in ``simhash_pairs`` (materialize token hashes
-    first)."""
-    words = F.array_distinct(F.split(normalize_text(text), " "))
-    return _simhash_from_hashes(F.transform(words, _hash_str), bits)
-
-
 def _simhash_vec(bits: int):
     """Fused normalize -> word-hash -> majority-bit-vote SimHash as one
-    Arrow-batched pandas UDF (same rationale as ``_shingle_band_vec``: the
-    interpreted Column pipeline pays bits x 2 passes over the hash array
-    per row).  Bit-identical to ``_simhash_from_hashes`` over
-    ``_hash_str``-hashed distinct words."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    Arrow-batched pandas UDF: bit b of the signature is set when more
+    than half of the document's distinct words have bit b set in their
+    ``_hash_str`` hash.  The interpreted Column pipeline paid bits x 2
+    passes over the hash array per row (same rationale as
+    ``_shingle_band_vec``)."""
+    from pyspark.sql.functions import pandas_udf
 
-    def f(texts):
+    def f(texts: pd.Series) -> pd.Series:
         import numpy as np
-        import pandas as pd
 
         shifts = np.arange(bits, dtype=np.int64)
         out = []
@@ -537,7 +524,7 @@ def _simhash_vec(bits: int):
             out.append(int(sig))
         return pd.Series(out)
 
-    return pandas_udf(f, "bigint", PandasUDFType.SCALAR)
+    return pandas_udf(f, "bigint")
 
 
 def simhash_pairs(
@@ -559,12 +546,9 @@ def simhash_pairs(
             _simhash_vec(bits)(F.col(text_col)).alias("sig"),
         )
     )
-    # cluster compression (see minhash_lsh_pairs): docs sharing a
-    # signature pair at Hamming 0 without any join — the LSH self-join
-    # runs over distinct signatures only
-    groups = tracked_persist(base.groupBy("sig").agg(
-        F.sort_array(F.collect_list("id")).alias("ids")
-    ))
+    # cluster compression: docs sharing a signature pair at Hamming 0
+    # without any join — the LSH self-join runs over distinct signatures
+    groups = _digest_groups(base, "sig")
     banded = groups.select(
         "sig", "ids",
         F.explode(
@@ -596,23 +580,13 @@ def simhash_pairs(
         .dropDuplicates(["sig_a", "sig_b"])
     )
     ham = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
-    cross = (
+    verified = (
         cand.withColumn("hamming", ham)
         .filter(F.col("hamming") <= max_hamming)
-        .select(F.explode("ids_a").alias("ia"), "ids_b", "hamming")
-        .select("ia", F.explode("ids_b").alias("ib"), "hamming")
-        .select(F.least("ia", "ib").alias("id_a"),
-                F.greatest("ia", "ib").alias("id_b"), "hamming")
+        .select("ids_a", "ids_b", "hamming")
     )
-    within = (
-        groups.filter(F.size("ids") > 1)
-        .select(F.explode("ids").alias("ia"), F.col("ids"))
-        .select("ia", F.explode("ids").alias("ib"))
-        .filter(F.col("ia") < F.col("ib"))
-        .select(F.col("ia").alias("id_a"), F.col("ib").alias("id_b"),
-                F.lit(0).cast("int").alias("hamming"))
-    )
-    return cross.unionByName(within)
+    return _expand_pairs(verified, groups.select("ids"), ["hamming"],
+                         [F.lit(0).cast("int").alias("hamming")])
 
 
 # --------------------------------------------------------------------------
@@ -647,11 +621,10 @@ def _word_ngrams_hashed_vec(n: int):
     could split two equal sets met in different orders)."""
     import hashlib
 
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-    def f(texts):
+    def f(texts: pd.Series) -> pd.DataFrame:
         import numpy as np
-        import pandas as pd
 
         md5 = hashlib.md5
         wcache: dict = {}
@@ -707,102 +680,50 @@ def _word_ngrams_hashed_vec(n: int):
                 np.asarray(ng, np.int64).tobytes()).hexdigest())
         return pd.DataFrame({"gid": gids, "ng": ngs})
 
-    return pandas_udf(f, "struct<gid: string, ng: array<bigint>>",
-                      PandasUDFType.SCALAR)
+    return pandas_udf(f, "struct<gid: string, ng: array<bigint>>")
 
 
-def _capped_shared_and_sizes(groups, df_cap: int):
-    """df-capped inter/size frames for the n-gram posting family.
-
-    Grams whose *distinct-set* document frequency exceeds ``df_cap``
-    are corpus stopwords: dropped from the postings AND from the set
-    sizes, so the similarity downstream is the exact Jaccard /
-    containment over the capped gram universe.  (df counts distinct
-    n-gram SETS, post cluster-compression — that is the posting-list
-    length that drives the join blow-up; a gram carried by 10^6
-    verbatim copies of one page has df 1 here.)
-
-    Scale shape (the winnow_pairs lesson, cf. text.py span postings):
-    instead of self-joining the postings on the gram — where one
-    boilerplate shingle shared by 10^6 sets makes that key's pair
-    output quadratic — group ONCE on the gram, keep only posting
-    lists of length <= df_cap, and expand the i<j pairs in-array.
-    Pair output is bounded by df_cap^2 per gram by construction, and
-    the heavy grams never leave the first hash-agg.
-
-    Returns (shared, sizes): shared = (gid_a, gid_b, inter) counting
-    co-occurring SURVIVING grams; sizes = (gid, sz) counting surviving
-    grams per set (df-1 grams count toward sz even though they can
-    never produce a pair; a set whose every gram is capped drops out
-    of sizes — and of the candidate stream — entirely)."""
-    gl = tracked_persist((
-        groups.select("gid", F.explode("ng").alias("g"))
-        .groupBy("g")
-        .agg(F.sort_array(F.collect_list("gid")).alias("gids"))
-        .filter(F.size("gids") <= F.lit(int(df_cap)))
-    ))
-    sizes = (
-        gl.select(F.explode("gids").alias("gid"))
-        .groupBy("gid")
-        .agg(F.count(F.lit(1)).alias("sz"))
-    )
-    # gids is sorted, so (gids[i], gids[j]) with i<j is exactly the
-    # l.gid < r.gid self-join output for this gram
-    pairs = F.flatten(F.transform(
-        F.sequence(F.lit(1), F.size("gids") - 1),
-        lambda i: F.transform(
-            F.slice(F.col("gids"), i + 1, F.size("gids")),
-            lambda j: F.struct(
-                F.element_at(F.col("gids"), i.cast("int")).alias("a"),
-                j.alias("b"),
-            ),
-        ),
-    ))
-    shared = (
-        gl.filter(F.size("gids") >= 2)
-        .select(F.explode(pairs).alias("p"))
-        .groupBy(F.col("p.a").alias("gid_a"), F.col("p.b").alias("gid_b"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    return shared, sizes
-
-
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    threshold: float = 0.2,
-    df_cap: int | None = None,
-) -> DataFrame:
-    """Exact Jaccard over word n-gram sets for every pair sharing at least
-    one n-gram.  Inverted-index join over *distinct n-gram sets* (cluster
-    compression, see minhash_lsh_pairs) — exact-duplicate clusters pair at
-    Jaccard 1 without touching the quadratic join.
-
-    ``df_cap``: when set, grams whose distinct-set document frequency
-    exceeds the cap are treated as corpus stopwords — dropped from the
-    postings and from the set sizes, so the reported value is the exact
-    Jaccard over the CAPPED gram universe (the text.py:1180 span-posting
-    pattern).  This is the 100 TB skew guard: without it one boilerplate
-    shingle shared by 10^6 distinct sets makes that posting key's pair
-    expansion quadratic.  Capping changes the measure — recall effect:
-    pairs similar ONLY through boilerplate grams vanish (usually the
-    point), and borderline pairs shift by at most the capped grams'
-    share of their union.  Verbatim-identical documents (same set
-    digest) still pair at Jaccard 1.0 regardless of the cap."""
+def _ngram_groups(df: DataFrame, text_col: str, id_col: str,
+                  n: int) -> DataFrame:
+    """(gid, ng, ids) per distinct word-n-gram set: one Arrow pass
+    (``_word_ngrams_hashed_vec``, which also computes the md5 digest)
+    and the digest grouping."""
     base = _spread(df, by=id_col).select(
         F.col(id_col).alias("id"),
         _word_ngrams_hashed_vec(n)(F.col(text_col)).alias("ss"),
     ).select("id", F.col("ss.gid").alias("gid"), F.col("ss.ng").alias("ng"))
-    # md5-digest group key (see minhash_lsh_pairs: array keys shuffle 10x
-    # slower than digest strings; digest computed in the Arrow pass)
-    groups = tracked_persist(
-        base.groupBy("gid")
-        .agg(F.first("ng").alias("ng"),
-             F.sort_array(F.collect_list("id")).alias("ids"))
-    )
+    return _digest_groups(base, "gid", "ng")
 
+
+def _ngram_group_pairs(
+    groups: DataFrame, df_cap: int | None
+) -> tuple[DataFrame, DataFrame]:
+    """The posting step of the n-gram family: every pair of digest
+    groups sharing at least one gram, with the shared-gram count and
+    both set sizes.
+
+    Uncapped, the gram postings self-join (``l.gid < r.gid``) and one
+    hash-agg counts the shared grams per group pair.
+
+    With ``df_cap``, grams whose *distinct-set* document frequency
+    exceeds the cap are corpus stopwords: dropped from the postings AND
+    from the set sizes, so the similarity downstream is exact over the
+    capped gram universe.  (df counts distinct n-gram SETS, post
+    cluster-compression — that is the posting-list length that drives
+    the join blow-up; a gram carried by 10^6 verbatim copies of one
+    page has df 1 here.)  Instead of self-joining the postings on the
+    gram — where one boilerplate shingle shared by 10^6 sets makes that
+    key's pair output quadratic — group ONCE on the gram, keep only
+    posting lists of length <= df_cap, and expand the i<j pairs
+    in-array (the winnow_pairs shape).  Pair output is bounded by
+    df_cap^2 per gram by construction, and the heavy grams never leave
+    the first hash-agg.
+
+    Returns (pairs, sets): pairs = (gid_a, gid_b, inter, ids_a, sz_a,
+    ids_b, sz_b) with gid_a < gid_b; sets = (gid, ids, sz) per group, sz
+    counting surviving grams (df-1 grams count even though they can
+    never produce a pair; a group whose every gram is capped has sz 0
+    and appears in no group pair)."""
     if df_cap is None:
         posting = groups.select("gid", F.explode("ng").alias("g"))
         l, r = posting.alias("l"), posting.alias("r")
@@ -815,37 +736,79 @@ def ngram_jaccard_pairs(
         )
         sets = groups.select("gid", "ids", F.size("ng").alias("sz"))
     else:
-        shared, sizes = _capped_shared_and_sizes(groups, df_cap)
-        sets = groups.select("gid", "ids").join(sizes, "gid")
-    cross = (
-        shared.join(
-            sets.select(F.col("gid").alias("gid_a"),
-                        F.col("ids").alias("ids_a"),
-                        F.col("sz").alias("sz_a")), "gid_a")
-        .join(
-            sets.select(F.col("gid").alias("gid_b"),
-                        F.col("ids").alias("ids_b"),
-                        F.col("sz").alias("sz_b")), "gid_b")
-        .withColumn(
+        gl = tracked_persist((
+            groups.select("gid", F.explode("ng").alias("g"))
+            .groupBy("g")
+            .agg(F.sort_array(F.collect_list("gid")).alias("gids"))
+            .filter(F.size("gids") <= F.lit(int(df_cap)))
+        ))
+        sizes = (
+            gl.select(F.explode("gids").alias("gid"))
+            .groupBy("gid")
+            .agg(F.count(F.lit(1)).alias("sz"))
+        )
+        shared = (
+            gl.filter(F.size("gids") >= 2)
+            .select(F.explode(_sorted_pairs("gids")).alias("p"))
+            .groupBy(F.col("p.a").alias("gid_a"),
+                     F.col("p.b").alias("gid_b"))
+            .agg(F.count(F.lit(1)).alias("inter"))
+        )
+        sets = (
+            groups.select("gid", "ids")
+            .join(sizes, "gid", "left")
+            .select("gid", "ids", F.coalesce("sz", F.lit(0)).alias("sz"))
+        )
+    pairs = shared.join(
+        sets.select(F.col("gid").alias("gid_a"),
+                    F.col("ids").alias("ids_a"),
+                    F.col("sz").alias("sz_a")), "gid_a"
+    ).join(
+        sets.select(F.col("gid").alias("gid_b"),
+                    F.col("ids").alias("ids_b"),
+                    F.col("sz").alias("sz_b")), "gid_b"
+    )
+    return pairs, sets
+
+
+def ngram_jaccard_pairs(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    n: int = 3,
+    threshold: float = 0.2,
+    df_cap: int | None = None,
+) -> DataFrame:
+    """Exact Jaccard over word n-gram sets for every pair sharing at least
+    one n-gram.  Inverted-index join over *distinct n-gram sets* (cluster
+    compression, see ``_digest_groups``) — exact-duplicate clusters pair
+    at Jaccard 1 without touching the quadratic join.
+
+    ``df_cap``: when set, grams whose distinct-set document frequency
+    exceeds the cap are treated as corpus stopwords — dropped from the
+    postings and from the set sizes, so the reported value is the exact
+    Jaccard over the CAPPED gram universe (the ``text.winnow_pairs``
+    span-posting pattern).  This is the 100 TB skew guard: without it
+    one boilerplate shingle shared by 10^6 distinct sets makes that
+    posting key's pair expansion quadratic.  Capping changes the
+    measure — recall effect: pairs similar ONLY through boilerplate
+    grams vanish (usually the point), and borderline pairs shift by at
+    most the capped grams' share of their union.  Verbatim-identical
+    documents (same set digest) still pair at Jaccard 1.0 regardless of
+    the cap."""
+    groups = _ngram_groups(df, text_col, id_col, n)
+    pairs, _ = _ngram_group_pairs(groups, df_cap)
+    verified = (
+        pairs.withColumn(
             "jaccard",
             F.round(F.col("inter")
                     / (F.col("sz_a") + F.col("sz_b") - F.col("inter")), 6),
         )
         .filter(F.col("jaccard") >= threshold)
-        .select(F.explode("ids_a").alias("ia"), "ids_b", "jaccard")
-        .select("ia", F.explode("ids_b").alias("ib"), "jaccard")
-        .select(F.least("ia", "ib").alias("id_a"),
-                F.greatest("ia", "ib").alias("id_b"), "jaccard")
+        .select("ids_a", "ids_b", "jaccard")
     )
-    within = (
-        groups.filter(F.size("ids") > 1)
-        .select(F.explode("ids").alias("ia"), F.col("ids"))
-        .select("ia", F.explode("ids").alias("ib"))
-        .filter(F.col("ia") < F.col("ib"))
-        .select(F.col("ia").alias("id_a"), F.col("ib").alias("id_b"),
-                F.lit(1.0).alias("jaccard"))
-    )
-    return cross.unionByName(within)
+    return _expand_pairs(verified, groups.select("ids"), ["jaccard"],
+                         [F.lit(1.0).alias("jaccard")])
 
 
 def containment_pairs(
@@ -854,7 +817,6 @@ def containment_pairs(
     id_col: str = "doc_id",
     n: int = 3,
     threshold_pct: int = 80,
-    prefix_filter: bool = False,
     df_cap: int | None = None,
 ) -> DataFrame:
     """Exact n-gram CONTAINMENT join: pairs where the smaller document's
@@ -870,166 +832,52 @@ def containment_pairs(
     region (Broder's "containment" from the original resemblance paper,
     SEQUENCES 1997).
 
-    Default scale shape (same as the Jaccard join): distinct n-gram
-    SETS pair via the inverted-index equi-join (cluster compression —
-    exact duplicates never touch the quadratic), one hash-agg counts
-    shared grams per set pair, and the containment test is an integer
+    Scale shape (same as the Jaccard join): distinct n-gram SETS pair
+    via the inverted-index equi-join (cluster compression — exact
+    duplicates never touch the quadratic), one hash-agg counts shared
+    grams per set pair, and the containment test is an integer
     cross-multiplication — ``inter * 1e6 div min(sz) >= pct * 1e4`` —
-    replayable bit-for-bit in ANSI SQL.
+    replayable bit-for-bit in ANSI SQL.  (MinHash banding is
+    deliberately NOT offered as the index here: signature agreement
+    tracks Jaccard, which is ~0 on exactly the quote-in-page pairs this
+    operator exists to find.)
 
-    ``prefix_filter=True`` switches candidate generation to the
-    ASYMMETRIC prefix filter (the containment counterpart of PPJoin's;
-    cf. ProbeCount/DivideSkip, Li et al. ICDE 2008): sets order
-    rare-first, each probes only its ``sz - ceil(t*sz) + 1`` rarest
-    grams against the FULL postings of larger sets; pigeonhole on the
-    SMALL side guarantees zero false negatives, and an exact
-    array_intersect verifies.  Measured at sf0.1 (5k docs, pct=50):
-    the simple count-agg wins — 0.7-1.7 s vs 3.0-4.3 s — because the
-    global-frequency pass + verify join cost more than the candidates
-    they save; the prefix path is for corpora where posting lists of
-    COMMON grams dominate (the 100 TB regime), where probing only
-    rare prefixes is the difference between a bounded join and a
-    quadratic one.  Both paths return identical rows (locked in
-    tests).  (MinHash banding is deliberately NOT offered as the
-    index here: signature agreement tracks Jaccard, which is ~0 on
-    exactly the quote-in-page pairs this operator exists to find.)
-
-    ``df_cap`` (default path only; mutually exclusive with
-    ``prefix_filter``): the same distinct-set document-frequency cap
-    as :func:`ngram_jaccard_pairs` — grams above the cap become
-    corpus stopwords, candidate generation switches to the bounded
-    in-array posting expansion (pair output <= df_cap^2 per gram),
-    and containment is exact over the CAPPED gram universe with
-    capped sizes reported.  Recall effect: a quote whose every gram
-    is boilerplate (df > cap) no longer registers as contained —
-    which for web-crawl boilerplate is the intent.  Verbatim-identical
-    documents still pair at cont_e6 = 1e6 regardless of the cap.
+    ``df_cap``: the same distinct-set document-frequency cap as
+    :func:`ngram_jaccard_pairs` — grams above the cap become corpus
+    stopwords, candidate generation switches to the bounded in-array
+    posting expansion (pair output <= df_cap^2 per gram), and
+    containment is exact over the CAPPED gram universe with capped
+    sizes reported.  Recall effect: a quote whose every gram is
+    boilerplate (df > cap) no longer registers as contained — which for
+    web-crawl boilerplate is the intent.  Verbatim-identical documents
+    still pair at cont_e6 = 1e6 regardless of the cap (a group whose
+    every gram is capped reports sz 0).
 
     Returns (id_a, id_b, sz_a, sz_b, cont_e6) with id_a < id_b and
     sizes in set-gram units aligned to their ids."""
-    if prefix_filter and df_cap is not None:
-        raise ValueError(
-            "containment_pairs: prefix_filter and df_cap are distinct "
-            "candidate-generation strategies; pick one")
     thr_e6 = threshold_pct * 10_000
-    base = _spread(df, by=id_col).select(
-        F.col(id_col).alias("id"),
-        _word_ngrams_hashed_vec(n)(F.col(text_col)).alias("ss"),
-    ).select("id", F.col("ss.gid").alias("gid"), F.col("ss.ng").alias("ng"))
-    groups = tracked_persist(
-        base.groupBy("gid")
-        .agg(F.first("ng").alias("ng"),
-             F.sort_array(F.collect_list("id")).alias("ids"))
-    )
-
-    if prefix_filter:
-        ex = groups.select("gid", F.explode("ng").alias("g"))
-        freq = ex.groupBy("g").agg(F.count(F.lit(1)).alias("c"))
-        ordered = (
-            ex.join(freq, "g")
-            .groupBy("gid")
-            .agg(F.transform(
-                F.array_sort(F.collect_list(F.struct("c", "g"))),
-                lambda s: s["g"]).alias("arr"))
-            .withColumn("sz", F.size("arr"))
-        )
-        # required shared grams tau = ceil(pct*sz/100); prefix = the
-        # sz - tau + 1 rarest (pct=0 -> tau=0 -> the whole set,
-        # degrading gracefully to the full join)
-        probe = ordered.withColumn(
-            "p",
-            F.expr(f"sz - (({threshold_pct} * sz + 99) div 100) + 1")
-        ).select("gid", "sz",
-                 F.explode(F.expr("slice(arr, 1, int(p))")).alias("g"))
-        full = ordered.select("gid", "sz", F.explode("arr").alias("g"))
-        a, b = probe.alias("a"), full.alias("b")
-        cand = (
-            # canonical direction: the probe (prefix) side is the
-            # SMALLER set; equal sizes break by gid
-            a.join(b, (F.col("a.g") == F.col("b.g"))
-                   & ((F.col("a.sz") < F.col("b.sz"))
-                      | ((F.col("a.sz") == F.col("b.sz"))
-                         & (F.col("a.gid") < F.col("b.gid")))))
-            .select(F.col("a.gid").alias("gid_a"),
-                    F.col("b.gid").alias("gid_b"))
-            .dropDuplicates(["gid_a", "gid_b"])
-        )
-        sets = ordered.join(groups.select("gid", "ids"), "gid")
-        shared = (
-            cand.join(
-                sets.select(F.col("gid").alias("gid_a"),
-                            F.col("arr").alias("arr_a")), "gid_a")
-            .join(
-                sets.select(F.col("gid").alias("gid_b"),
-                            F.col("arr").alias("arr_b")), "gid_b")
-            .select("gid_a", "gid_b",
-                    F.size(F.array_intersect("arr_a", "arr_b"))
-                    .cast("bigint").alias("inter"))
-        )
-    elif df_cap is not None:
-        shared, _cap_sizes = _capped_shared_and_sizes(groups, df_cap)
-    else:
-        posting = groups.select("gid", F.explode("ng").alias("g"))
-        l, r = posting.alias("l"), posting.alias("r")
-        shared = (
-            l.join(r, (F.col("l.g") == F.col("r.g"))
-                   & (F.col("l.gid") < F.col("r.gid")))
-            .groupBy(F.col("l.gid").alias("gid_a"),
-                     F.col("r.gid").alias("gid_b"))
-            .agg(F.count(F.lit(1)).alias("inter"))
-        )
-    if df_cap is not None:
-        # capped sizes travel into the output; a set whose every gram
-        # is capped keeps sz 0 (it can only appear in `within`)
-        sets2 = (
-            groups.select("gid", "ids")
-            .join(_cap_sizes, "gid", "left")
-            .select("gid", "ids",
-                    F.coalesce("sz", F.lit(0)).alias("sz"))
-        )
-    else:
-        sets2 = groups.select("gid", "ids", F.size("ng").alias("sz"))
-    cross = (
-        shared.join(
-            sets2.select(F.col("gid").alias("gid_a"),
-                         F.col("ids").alias("ids_a"),
-                         F.col("sz").alias("g_sz_a")), "gid_a")
-        .join(
-            sets2.select(F.col("gid").alias("gid_b"),
-                         F.col("ids").alias("ids_b"),
-                         F.col("sz").alias("g_sz_b")), "gid_b")
-        .withColumn(
+    groups = _ngram_groups(df, text_col, id_col, n)
+    pairs, sets = _ngram_group_pairs(groups, df_cap)
+    verified = (
+        pairs.withColumn(
             "cont_e6",
-            F.expr("(inter * 1000000L) div least(g_sz_a, g_sz_b)"))
+            F.expr("(inter * 1000000L) div least(sz_a, sz_b)"))
         .filter(F.col("cont_e6") >= thr_e6)
-        .select(F.explode("ids_a").alias("ia"), "ids_b",
-                "g_sz_a", "g_sz_b", "cont_e6")
-        .select("ia", F.explode("ids_b").alias("ib"),
-                "g_sz_a", "g_sz_b", "cont_e6")
-        # sizes travel WITH their ids through the least/greatest swap
-        .select(
-            F.least("ia", "ib").alias("id_a"),
-            F.greatest("ia", "ib").alias("id_b"),
-            F.when(F.col("ia") <= F.col("ib"), F.col("g_sz_a"))
-            .otherwise(F.col("g_sz_b")).cast("long").alias("sz_a"),
-            F.when(F.col("ia") <= F.col("ib"), F.col("g_sz_b"))
-            .otherwise(F.col("g_sz_a")).cast("long").alias("sz_b"),
-            "cont_e6",
-        )
+        .select("ids_a", "ids_b", "sz_a", "sz_b", "cont_e6")
     )
-    within = (
-        # read sizes from sets2 so df_cap mode reports CAPPED sizes
-        # consistently (uncapped: sets2.sz == size(ng), same plan)
-        sets2.filter(F.size("ids") > 1)
-        .select(F.explode("ids").alias("ia"), F.col("ids"), "sz")
-        .select("ia", F.explode("ids").alias("ib"), "sz")
-        .filter(F.col("ia") < F.col("ib"))
-        .select(F.col("ia").alias("id_a"), F.col("ib").alias("id_b"),
-                F.col("sz").cast("long").alias("sz_a"),
-                F.col("sz").cast("long").alias("sz_b"),
-                F.lit(1_000_000).cast("long").alias("cont_e6"))
+    # sizes travel WITH their ids through the least/greatest swap
+    a_first = F.col("ia") <= F.col("ib")
+    return _expand_pairs(
+        verified, sets.select("ids", "sz"),
+        [F.when(a_first, F.col("sz_a")).otherwise(F.col("sz_b"))
+         .cast("long").alias("sz_a"),
+         F.when(a_first, F.col("sz_b")).otherwise(F.col("sz_a"))
+         .cast("long").alias("sz_b"),
+         "cont_e6"],
+        [F.col("sz").cast("long").alias("sz_a"),
+         F.col("sz").cast("long").alias("sz_b"),
+         F.lit(1_000_000).cast("long").alias("cont_e6")],
     )
-    return cross.unionByName(within)
 
 
 # --------------------------------------------------------------------------
@@ -1051,9 +899,8 @@ def embedding_cosine(a: Column, b: Column) -> Column:
     return dot / (na * nb)
 
 
-def _cosine_kernel(va, vb):
+def _cosine_kernel(va: pd.Series, vb: pd.Series) -> pd.Series:
     import numpy as np
-    import pandas as pd
 
     if len(va) == 0:
         return pd.Series([], dtype="float64")
@@ -1086,10 +933,9 @@ def cosine_vec(a: Column, b: Column) -> Column:
     The UDF object is created at CALL time — a module-level
     ``@pandas_udf`` would run on worker re-import, where no
     SparkSession exists."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-    return pandas_udf(_cosine_kernel, "double",
-                      PandasUDFType.SCALAR)(a, b)
+    return pandas_udf(_cosine_kernel, "double")(a, b)
 
 
 def _sign_matrix(planes: int, dim: int):
@@ -1131,18 +977,17 @@ def hyperplane_bucket(vec: Column, planes: int = 8) -> Column:
     at scale the ANN search shuffles once on bucket id.  One Arrow batch
     kernel (numpy matmul against the cached sign matrix) — the Column-HOF
     formulation costs 8x64 interpreted md5 evals per row."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-    def bucket(v):
+    def bucket(v: pd.Series) -> pd.Series:
         import numpy as np
-        import pandas as pd
 
         if len(v) == 0:
             return pd.Series([], dtype="int64")
         V = np.array(v.tolist(), dtype=np.float64)
         return pd.Series(_bucket_of(V, planes))
 
-    return pandas_udf(bucket, "long", PandasUDFType.SCALAR)(vec)
+    return pandas_udf(bucket, "long")(vec)
 
 
 def embedding_pairs(
@@ -1566,8 +1411,6 @@ def prefix_filter_pairs(
     uniformly high (measured ~0.5-0.8 across ALL pairs of the test
     corpus), which would defeat both the threshold and the prefix
     pruning; shingles keep only genuinely overlapping text similar."""
-    from pincette_json_streams_spark.functions.text import normalize_text
-
     words = F.filter(F.split(normalize_text(F.col(text_col)), " "),
                      lambda x: x != "")
     toks = _spread(df, by=id_col).select(

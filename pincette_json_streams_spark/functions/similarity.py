@@ -1040,7 +1040,7 @@ def pca_project(
     preservation under the orthonormal basis — are checked against an
     external engine)."""
     import numpy as np
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
     mean, comps, ev, _ = (components if components is not None
                           else pca_components(df, k, vec_col))
@@ -1050,9 +1050,8 @@ def pca_project(
     mean = np.asarray(mean, dtype=np.float64)
     P = np.asarray(P, dtype=np.float64)
 
-    def proj(v):
+    def proj(v: pd.Series) -> pd.Series:
         import numpy as np
-        import pandas as pd
 
         out = []
         for x in v:
@@ -1065,7 +1064,7 @@ def pca_project(
                 out.append(y.tolist())
         return pd.Series(out)
 
-    proj_udf = pandas_udf(proj, "array<double>", PandasUDFType.SCALAR)
+    proj_udf = pandas_udf(proj, "array<double>")
     return df.withColumn(out_col, proj_udf(F.col(vec_col)))
 
 

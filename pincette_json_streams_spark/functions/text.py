@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import re
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -1039,13 +1040,12 @@ def _winnow_fp_vec(k: int, window: int):
     the scan at 100 TB.  Hash math is bit-identical to the Column form
     (md5 -> first 15 hex digits -> base-16 bigint), verified in
     ``tests/test_functions.py::TestWinnowing``."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-    def f(texts):
+    def f(texts: pd.Series) -> pd.Series:
         import hashlib
 
         import numpy as np
-        import pandas as pd
         from numpy.lib.stride_tricks import sliding_window_view
 
         from .dedup import _normalize_py
@@ -1078,9 +1078,7 @@ def _winnow_fp_vec(k: int, window: int):
             out.append(list(dict.fromkeys(mins.tolist())))
         return pd.Series(out)
 
-    # explicit functionType: `from __future__ import annotations` turns
-    # hints into strings pandas_udf's inference can't resolve
-    return pandas_udf(f, "array<bigint>", PandasUDFType.SCALAR)
+    return pandas_udf(f, "array<bigint>")
 
 
 def winnow_fingerprints(
@@ -1101,9 +1099,8 @@ def winnow_fingerprints(
     One Arrow-vectorized pass per row (``_winnow_fp_vec``) — NO
     shuffle: at 100 TB the fingerprint pass is a map-only stage fused
     into the scan.  Hashes use md5 -> 15 hex digits -> bigint so a SQL
-    oracle replays them exactly (the pure-Column equivalent is kept as
-    ``_winnow_fingerprints_columns`` and locked bit-identical in
-    tests).
+    oracle replays them exactly (a pure-Column reference lives in
+    ``tests/test_functions.py`` and locks the kernel bit-identical).
 
     Returns one row per (id, fp) — a document's distinct fingerprint
     set, exploded."""
@@ -1116,49 +1113,22 @@ def winnow_fingerprints(
     )
 
 
-def _winnow_fingerprints_columns(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 8,
-    window: int = 4,
-) -> DataFrame:
-    """Pure native-Column winnowing (sequence/transform/slice/array_min)
-    — the reference semantics the Arrow kernel must match bit-for-bit.
-    Kept for the equivalence test; the hot path is the Arrow kernel
-    (HOF lambdas evaluate interpreted per element, ~6x slower)."""
-    # Every intermediate is BOUND AS A LAMBDA VARIABLE (bind_once): the
-    # naive nesting re-ran the normalization regex and the whole md5
-    # gram array for every window position — O(len^2) per document and
-    # unrunnable at sf0.01.  Bound, the sliding-window min is
-    # O(len * window).
-    def _windows(hs):
-        nw = F.greatest(F.size(hs) - F.lit(window - 1), F.lit(1))
-        return F.transform(
-            F.sequence(F.lit(1), nw),
-            lambda j: F.array_min(F.slice(hs, j, window)),
-        )
-
-    def _hashes(nm):
-        ng = F.greatest(F.length(nm) - F.lit(k - 1), F.lit(1))
-        return F.transform(
-            F.sequence(F.lit(1), ng),
-            lambda i: F.conv(
-                F.md5(nm.substr(i.cast("int"), F.lit(k).cast("int")))
-                .substr(1, 15),
-                16, 10,
-            ).cast("bigint"),
-        )
-
-    fps = F.array_distinct(
-        bind_once(
-            normalize_text(F.col(text_col)),
-            lambda nm: bind_once(_hashes(nm), _windows),
-        )
-    )
-    return df.select(
-        F.col(id_col).alias("id"), F.explode(fps).alias("fp")
-    )
+def _sorted_pairs(col: str) -> Column:
+    """Every ``(arr[i], arr[j])`` with i < j of a sorted, distinct array
+    column holding at least two elements, as array<struct<a, b>>: the
+    ``a < b`` self-join output of one posting list, expanded in-array
+    so no join runs."""
+    arr = F.col(col)
+    return F.flatten(F.transform(
+        F.sequence(F.lit(1), F.size(arr) - 1),
+        lambda i: F.transform(
+            F.slice(arr, i + 1, F.size(arr)),
+            lambda j: F.struct(
+                F.element_at(arr, i.cast("int")).alias("a"),
+                j.alias("b"),
+            ),
+        ),
+    ))
 
 
 def winnow_pairs(
@@ -1200,20 +1170,9 @@ def winnow_pairs(
              .alias("ids"))
         .filter((F.size("ids") >= 2) & (F.size("ids") <= max_df))
     )
-    # ids is sorted + distinct per fp, so (ids[i], ids[j]) with i<j is
-    # exactly the a.id < b.id join output
-    pairs = F.flatten(F.transform(
-        F.sequence(F.lit(1), F.size("ids") - 1),
-        lambda i: F.transform(
-            F.slice(F.col("ids"), i + 1, F.size("ids")),
-            lambda j: F.struct(
-                F.element_at(F.col("ids"), i.cast("int")).alias("a"),
-                j.alias("b"),
-            ),
-        ),
-    ))
     return (
-        lists.select(F.explode(pairs).alias("p"))
+        # ids is sorted + distinct per fp
+        lists.select(F.explode(_sorted_pairs("ids")).alias("p"))
         .groupBy(
             F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b")
         )

@@ -647,19 +647,6 @@ class TestDedup:
                  for r in containment_pairs(
                      df, n=3, threshold_pct=40).collect()}
         assert got40 == expect
-        # the prefix-filter path (the 100 TB candidate strategy) must
-        # return IDENTICAL rows — zero false negatives by pigeonhole
-        for pct in (40, 90):
-            d_ = {(r["id_a"], r["id_b"]): (r["sz_a"], r["sz_b"],
-                                           r["cont_e6"])
-                  for r in containment_pairs(
-                      df, n=3, threshold_pct=pct).collect()}
-            p_ = {(r["id_a"], r["id_b"]): (r["sz_a"], r["sz_b"],
-                                           r["cont_e6"])
-                  for r in containment_pairs(
-                      df, n=3, threshold_pct=pct,
-                      prefix_filter=True).collect()}
-            assert d_ == p_, pct
 
     def test_ngram_df_cap(self, spark):
         """The 100 TB skew guard: grams above the distinct-set df cap
@@ -668,8 +655,7 @@ class TestDedup:
         semantics on a skewed fixture (one boilerplate shingle in
         half the docs) where genuine near-dups SURVIVE the cap while
         boilerplate-only pairs vanish, (c) verbatim duplicates pair
-        at 1.0 / 1e6 regardless of the cap, (d) the knob is mutually
-        exclusive with prefix_filter."""
+        at 1.0 / 1e6 regardless of the cap."""
         import re
         from collections import Counter
 
@@ -742,10 +728,6 @@ class TestDedup:
         assert (10, 11) not in got_j and (10, 11) not in got_c
         assert got_c[(1, 3)][2] == 1_000_000
 
-        # (d) mutual exclusion with the prefix-filter strategy
-        with pytest.raises(ValueError):
-            containment_pairs(df, prefix_filter=True, df_cap=5)
-
     def test_connected_components(self, spark):
         from pincette_json_streams_spark.functions.dedup import (
             connected_components,
@@ -816,6 +798,30 @@ class TestDedup:
         pairs = {(r["id_a"], r["id_b"])
                  for r in simhash_pairs(docs, max_hamming=8).collect()}
         assert (0, 1) in pairs
+
+    @pytest.mark.parametrize("fn, kw", [
+        ("minhash_lsh_pairs", {}),
+        ("minhash_lsh_pairs", {"edges": "star"}),
+        ("ngram_jaccard_pairs", {}),
+        ("ngram_jaccard_pairs", {"df_cap": 5}),
+        ("simhash_pairs", {}),
+        ("containment_pairs", {}),
+        ("containment_pairs", {"df_cap": 5}),
+    ], ids=["minhash", "minhash_star", "ngram", "ngram_capped",
+            "simhash", "containment", "containment_capped"])
+    def test_null_text_pairs_with_nothing(self, spark, fn, kw):
+        """Documents whose text is NULL have a NULL set digest; they
+        form no duplicate group, so two of them never pair (equi-join
+        NULL semantics, as the SQL oracle and winnow_pairs)."""
+        from pincette_json_streams_spark.functions import dedup
+
+        text = "the quick brown fox jumps over the lazy dog again"
+        df = spark.createDataFrame(
+            [(1, text), (2, None), (3, None), (4, text)],
+            "doc_id long, text string")
+        got = {(r["id_a"], r["id_b"])
+               for r in getattr(dedup, fn)(df, **kw).collect()}
+        assert got == {(1, 4)}
 
 
 @pytest.mark.usefixtures("distributed_graphs")
@@ -4036,6 +4042,50 @@ class TestLeakageFreeSplit:
         assert splits <= {"train", "test"}
 
 
+def _winnow_fingerprints_columns(df, text_col="text", id_col="doc_id",
+                                 k=8, window=4):
+    """Pure native-Column winnowing (sequence/transform/slice/array_min)
+    — the reference semantics the Arrow kernel must match bit-for-bit
+    (HOF lambdas evaluate interpreted per element, ~6x slower than the
+    kernel)."""
+    from pincette_json_streams_spark.functions.text import (
+        bind_once, normalize_text,
+    )
+
+    # Every intermediate is BOUND AS A LAMBDA VARIABLE (bind_once): the
+    # naive nesting re-ran the normalization regex and the whole md5
+    # gram array for every window position — O(len^2) per document and
+    # unrunnable at sf0.01.  Bound, the sliding-window min is
+    # O(len * window).
+    def _windows(hs):
+        nw = F.greatest(F.size(hs) - F.lit(window - 1), F.lit(1))
+        return F.transform(
+            F.sequence(F.lit(1), nw),
+            lambda j: F.array_min(F.slice(hs, j, window)),
+        )
+
+    def _hashes(nm):
+        ng = F.greatest(F.length(nm) - F.lit(k - 1), F.lit(1))
+        return F.transform(
+            F.sequence(F.lit(1), ng),
+            lambda i: F.conv(
+                F.md5(nm.substr(i.cast("int"), F.lit(k).cast("int")))
+                .substr(1, 15),
+                16, 10,
+            ).cast("bigint"),
+        )
+
+    fps = F.array_distinct(
+        bind_once(
+            normalize_text(F.col(text_col)),
+            lambda nm: bind_once(_hashes(nm), _windows),
+        )
+    )
+    return df.select(
+        F.col(id_col).alias("id"), F.explode(fps).alias("fp")
+    )
+
+
 class TestWinnowing:
     """Winnowing fingerprints (Schleimer et al. SIGMOD 2003 — MOSS)."""
 
@@ -4144,7 +4194,6 @@ class TestWinnowing:
         md5->15-hex->bigint math exactly — the SQL oracle depends on
         it."""
         from pincette_json_streams_spark.functions.text import (
-            _winnow_fingerprints_columns,
             winnow_fingerprints,
         )
         rows = [

@@ -1,0 +1,29 @@
+"""Package-wide checks: every public name a module exports resolves, and
+the pandas UDFs use one idiom (typed ``pandas_udf``)."""
+
+import importlib
+import pathlib
+import pkgutil
+
+import pincette_json_streams_spark as pkg
+
+ROOT = pathlib.Path(pkg.__file__).parent
+
+
+def test_every_all_entry_resolves():
+    missing = []
+    for info in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + "."):
+        mod = importlib.import_module(info.name)
+        missing += [f"{info.name}.{name}"
+                    for name in getattr(mod, "__all__", ())
+                    if not hasattr(mod, name)]
+    assert missing == []
+
+
+def test_no_deprecated_pandas_udf_type():
+    # PandasUDFType is deprecated: each use warns, and under
+    # `from __future__ import annotations` the typed form needs pandas
+    # imported at module level so its hints resolve
+    offenders = [str(p.relative_to(ROOT)) for p in sorted(ROOT.rglob("*.py"))
+                 if "PandasUDFType" in p.read_text(encoding="utf-8")]
+    assert offenders == []
