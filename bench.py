@@ -14,6 +14,8 @@ import os
 import sys
 import time
 
+import pandas as pd
+
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 # the heavier, scale-relevant subset: full-table aggregations, joins,
@@ -237,14 +239,13 @@ def main():
     # pandas imports otherwise stampede into the first pandas-UDF query)
     # and let codegen JIT — so timings reflect steady-state plan cost.
     from pyspark.sql import functions as F
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-    def _wf(s):
+    @pandas_udf("double")
+    def warm(s: pd.Series) -> pd.Series:
         import numpy as np
-        import pandas as pd
         return pd.Series(np.ones(len(s)))
 
-    warm = pandas_udf(_wf, "double", PandasUDFType.SCALAR)
     (spark.range(0, 10000)
      .repartition(int(cpus))
      .select(warm(F.col("id").cast("string")).alias("x"))

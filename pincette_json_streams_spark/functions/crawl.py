@@ -6,7 +6,7 @@ records, keep the HTTP responses, and strip boilerplate from the HTML
 so only the main content reaches the dedup / quality / language
 stages downstream.
 
-Both operators are per-row Arrow ``mapInPandas`` passes — zero
+Both operators are per-row Arrow passes (:func:`.rows.map_rows`) — zero
 shuffle; archive bytes never leave the executor that read them.  At
 100 TB parallelism comes from the file grain: WARC snapshots ship as
 ~1 GB compressed segments, millions of them, so one file per task
@@ -41,10 +41,11 @@ import gzip
 import io
 import re
 from html.parser import HTMLParser
-from typing import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pincette_json_streams_spark.functions.rows import map_rows
 
 __all__ = ["html_extract", "warc_records", "extract_main_text",
            "decode_html_bytes", "sitemap_urls", "parse_sitemap"]
@@ -374,30 +375,19 @@ def html_extract(
     from pyspark.sql import types as T
 
     is_binary = isinstance(df.schema[html_col].dataType, T.BinaryType)
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + f", {title_col} string, {text_col} string, {blocks_col} bigint"
 
-    def run(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            if is_binary:
-                cts = (pdf[content_type_col] if content_type_col
-                       else [None] * len(pdf))
-                pages = [decode_html_bytes(h, ct)
-                         for h, ct in zip(pdf[html_col], cts)]
-            else:
-                pages = pdf[html_col]
-            cols = [
-                extract_main_text(h, min_block_chars, max_link_density)
-                for h in pages
-            ]
-            pdf[title_col] = [c[0] for c in cols]
-            pdf[text_col] = [c[1] for c in cols]
-            pdf[blocks_col] = [c[2] for c in cols]
-            pdf[blocks_col] = pdf[blocks_col].astype("object")
-            yield pdf
+    def kernel(htmls, cts=None):
+        if is_binary:
+            htmls = [decode_html_bytes(h, ct)
+                     for h, ct in zip(htmls, cts or [None] * len(htmls))]
+        return zip(*(extract_main_text(h, min_block_chars,
+                                       max_link_density) for h in htmls))
 
-    return df.mapInPandas(run, schema=out_schema)
+    inputs = [html_col] + ([content_type_col]
+                           if is_binary and content_type_col else [])
+    return map_rows(df, kernel, inputs, [
+        (title_col, "string"), (text_col, "string"),
+        (blocks_col, "bigint")])
 
 
 def _parse_warc(buf: bytes) -> list:
@@ -461,10 +451,41 @@ def _parse_warc(buf: bytes) -> list:
     return out
 
 
-_WARC_FIELDS = ("warc_type string, record_id string, target_uri string,"
-                " warc_date string, content_type string,"
-                " http_status bigint, http_content_type string,"
-                " payload binary")
+_WARC_FIELDS = [
+    ("warc_type", "string"), ("record_id", "string"),
+    ("target_uri", "string"), ("warc_date", "string"),
+    ("content_type", "string"), ("http_status", "bigint"),
+    ("http_content_type", "string"), ("payload", "binary"),
+]
+
+
+def _demux(df: DataFrame, data_col: str, keep_cols: list | None,
+           parse, fields: list) -> DataFrame:
+    """Flat-map shared by the archive demuxes: one output row per
+    record ``parse`` finds in each non-NULL ``data_col`` document,
+    gzip payloads (all members) inflated first; an undecodable gzip
+    yields no rows.  ``keep_cols`` (default: every input column but
+    ``data_col``) pass through onto each record row."""
+    def kernel(docs):
+        idx: list = []
+        cols: list = [[] for _ in fields]
+        for i, raw in enumerate(docs):
+            if raw is None:
+                continue
+            if isinstance(raw, bytes) and raw[:2] == b"\x1f\x8b":
+                try:  # all members: per-record OR whole-file gzip
+                    raw = gzip.decompress(raw)
+                except Exception:
+                    continue
+            found = parse(raw)
+            idx.extend([i] * len(found))
+            for col, vals in zip(cols, zip(*found)):
+                col.extend(vals)
+        return [idx, *cols]
+
+    keep = [c for c in (keep_cols if keep_cols is not None
+                        else df.columns) if c != data_col]
+    return map_rows(df, kernel, [data_col], fields, keep=keep)
 
 
 def warc_records(
@@ -482,60 +503,7 @@ def warc_records(
     flat-map over Arrow batches, zero shuffle; one ~1 GB segment per
     task is the Common Crawl grain.
     """
-    passthrough = [c for c in (keep_cols if keep_cols is not None
-                               else df.columns) if c != data_col]
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in df.schema.fields if f.name in passthrough
-    )
-    out_schema = (out_schema + ", " if out_schema else "") + _WARC_FIELDS
-
-    # Arrow-native flat-map (r13): the output rows are assembled as
-    # COLUMNS — passthrough values replicate via one take() over an
-    # int32 source-row index (zero per-row Python), the record fields
-    # land in per-column lists and become pa arrays directly.  The
-    # previous shape paid pandas row machinery twice per record
-    # (iterrows Series construction + pd.DataFrame(list-of-tuples)
-    # transpose + a per-cell bytes->bytearray map).
-    rec_names = ["warc_type", "record_id", "target_uri", "warc_date",
-                 "content_type", "http_status", "http_content_type",
-                 "payload"]
-
-    def run(batches: Iterator) -> Iterator:
-        import pyarrow as pa
-
-        rec_types = [pa.string(), pa.string(), pa.string(), pa.string(),
-                     pa.string(), pa.int64(), pa.string(), pa.binary()]
-        for batch in batches:
-            data = batch.column(
-                batch.schema.get_field_index(data_col)).to_pylist()
-            idx: list = []
-            rec_cols: list = [[] for _ in rec_names]
-            for i, raw in enumerate(data):
-                if raw is None:
-                    continue
-                raw = bytes(raw)
-                if raw[:2] == b"\x1f\x8b":
-                    try:  # all members: per-record OR whole-file gzip
-                        raw = gzip.decompress(raw)
-                    except Exception:
-                        continue
-                recs = _parse_warc(raw)
-                if not recs:
-                    continue
-                idx.extend([i] * len(recs))
-                for col, vals in zip(rec_cols, zip(*recs)):
-                    col.extend(vals)
-            take = pa.array(idx, type=pa.int32())
-            arrays = [
-                batch.column(batch.schema.get_field_index(c)).take(take)
-                for c in passthrough
-            ] + [pa.array(c, type=t)
-                 for c, t in zip(rec_cols, rec_types)]
-            yield pa.RecordBatch.from_arrays(
-                arrays, names=passthrough + rec_names)
-
-    return df.mapInArrow(run, schema=out_schema)
+    return _demux(df, data_col, keep_cols, _parse_warc, _WARC_FIELDS)
 
 
 def gzip_members(records: list) -> bytes:
@@ -595,8 +563,10 @@ def parse_sitemap(xml_text: str) -> list:
     return out
 
 
-_SITEMAP_FIELDS = ("kind string, loc string, lastmod string,"
-                   " changefreq string, priority double")
+_SITEMAP_FIELDS = [
+    ("kind", "string"), ("loc", "string"), ("lastmod", "string"),
+    ("changefreq", "string"), ("priority", "double"),
+]
 
 
 def sitemap_urls(
@@ -610,52 +580,9 @@ def sitemap_urls(
     flat-map like :func:`warc_records`: zero shuffle, streaming-legal,
     file-grain parallelism.  ``kind`` distinguishes leaf URLs from
     index entries (feed the latter back to the fetcher)."""
-    passthrough = [c for c in (keep_cols if keep_cols is not None
-                               else df.columns) if c != xml_col]
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in df.schema.fields if f.name in passthrough
-    )
-    out_schema = (out_schema + ", " if out_schema else "") \
-        + _SITEMAP_FIELDS
+    def parse(raw):
+        if isinstance(raw, bytes):
+            raw = raw.decode("utf-8", "replace")
+        return parse_sitemap(raw)
 
-    # same Arrow-native columnar assembly as warc_records (r13)
-    rec_names = ["kind", "loc", "lastmod", "changefreq", "priority"]
-
-    def run(batches: Iterator) -> Iterator:
-        import pyarrow as pa
-
-        rec_types = [pa.string(), pa.string(), pa.string(),
-                     pa.string(), pa.float64()]
-        for batch in batches:
-            data = batch.column(
-                batch.schema.get_field_index(xml_col)).to_pylist()
-            idx: list = []
-            rec_cols: list = [[] for _ in rec_names]
-            for i, raw in enumerate(data):
-                if raw is None:
-                    continue
-                if isinstance(raw, (bytes, bytearray)):
-                    raw = bytes(raw)
-                    if raw[:2] == b"\x1f\x8b":
-                        try:
-                            raw = gzip.decompress(raw)
-                        except Exception:
-                            continue
-                    raw = raw.decode("utf-8", "replace")
-                recs = parse_sitemap(raw)
-                if not recs:
-                    continue
-                idx.extend([i] * len(recs))
-                for col, vals in zip(rec_cols, zip(*recs)):
-                    col.extend(vals)
-            take = pa.array(idx, type=pa.int32())
-            arrays = [
-                batch.column(batch.schema.get_field_index(c)).take(take)
-                for c in passthrough
-            ] + [pa.array(c, type=t)
-                 for c, t in zip(rec_cols, rec_types)]
-            yield pa.RecordBatch.from_arrays(
-                arrays, names=passthrough + rec_names)
-
-    return df.mapInArrow(run, schema=out_schema)
+    return _demux(df, xml_col, keep_cols, parse, _SITEMAP_FIELDS)

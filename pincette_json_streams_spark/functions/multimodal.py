@@ -20,7 +20,7 @@ Three tiers of honesty about what runs in this codec-free runtime:
   stub.  The learned feature extractor (`decode_features`) remains a
   deterministic fake (it needs model weights); swap `_decode_stub`
   for a real extractor without touching the plumbing — schema, Arrow
-  batch shape, ``mapInPandas`` signatures and partition sizing are
+  batch shape, :func:`.rows.map_rows` kernels and partition sizing are
   production-real.
 
 Scale design: media bytes stay in the executor (never collect), batches
@@ -30,12 +30,11 @@ content-hash so one oversized asset can't skew a partition.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pincette_json_streams_spark.functions.caching import tracked_persist
+from pincette_json_streams_spark.functions.rows import map_rows
 
 __all__ = [
     "MEDIA_SCHEMA", "attach_media_metadata", "audio_fingerprint",
@@ -187,21 +186,14 @@ def probe_media(
 ) -> DataFrame:
     """Adds ``out_col`` struct(format, width, height, sample_rate,
     channels, duration_ms) parsed from container headers — real metadata
-    with zero codec dependencies.  Arrow-batched `mapInPandas`; bytes
-    never leave the executor."""
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + (f", {out_col} struct<format:string,width:int,height:int,"
-         "sample_rate:int,channels:int,duration_ms:bigint>")
+    with zero codec dependencies.  Arrow-batched (:func:`.rows.map_rows`);
+    bytes never leave the executor."""
+    def kernel(media):
+        return [[_probe_bytes(b) for b in media]]
 
-    def run(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            pdf[out_col] = pdf[media_col].map(
-                lambda b: _probe_bytes(bytes(b) if b is not None else None)
-            )
-            yield pdf
-
-    return df.mapInPandas(run, schema=out_schema)
+    return map_rows(df, kernel, [media_col], [(
+        out_col, "struct<format:string,width:int,height:int,"
+        "sample_rate:int,channels:int,duration_ms:bigint>")])
 
 
 _AUDIO_FIELDS = ("sample_rate", "channels", "n_samples", "duration_ms",
@@ -326,24 +318,15 @@ def decode_audio(
 ) -> DataFrame:
     """REAL audio decode for PCM WAV payloads: per-row
     struct(sample_rate, channels, n_samples, duration_ms, rms, peak,
-    waveform array<float>).  Arrow-batched ``mapInPandas``; bytes never
-    leave the executor; unsupported formats yield NULL fields rather
-    than failing the batch."""
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + (f", {out_col} struct<sample_rate:int,channels:int,"
-         "n_samples:bigint,duration_ms:bigint,rms:double,peak:double,"
-         "waveform:array<float>>")
+    waveform array<float>).  Arrow-batched (:func:`.rows.map_rows`);
+    bytes never leave the executor; unsupported formats yield NULL
+    fields rather than failing the batch."""
+    def kernel(media):
+        return [[_decode_wav(b, waveform_bins) for b in media]]
 
-    def run(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            pdf[out_col] = pdf[media_col].map(
-                lambda b: _decode_wav(
-                    bytes(b) if b is not None else None, waveform_bins)
-            )
-            yield pdf
-
-    return df.mapInPandas(run, schema=out_schema)
+    return map_rows(df, kernel, [media_col], [(
+        out_col, "struct<sample_rate:int,channels:int,n_samples:bigint,"
+        "duration_ms:bigint,rms:double,peak:double,waveform:array<float>>")])
 
 
 # Audio perceptual fingerprint: 16 frames x 64 samples, dyadic-lag
@@ -496,24 +479,14 @@ def audio_fingerprint(
     src = df.withColumn(
         "__wav", F.unbase64(F.col(media_col))) if base64 else df
     wav_col = "__wav" if base64 else media_col
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + f", {out_col} bigint"
 
-    def run(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            samples = [
-                _wav_mono16(bytes(b) if b is not None else None)
-                for b in pdf[wav_col]
-            ]
-            fps = _audio_fp_batch([x for x in samples if x is not None])
-            it = iter(fps)
-            pdf[out_col] = [None if x is None else next(it)
-                            for x in samples]
-            pdf[out_col] = pdf[out_col].astype("object")
-            yield pdf.drop(columns=["__wav"]) if base64 else pdf
+    def kernel(wavs):
+        samples = [_wav_mono16(b) for b in wavs]
+        it = iter(_audio_fp_batch([x for x in samples if x is not None]))
+        return [[None if x is None else next(it) for x in samples]]
 
-    return src.mapInPandas(run, schema=out_schema)
+    return map_rows(src, kernel, [wav_col], [(out_col, "bigint")],
+                    keep=df.columns)
 
 
 # one fingerprint window = the full HK geometry (16 frames x 64
@@ -565,31 +538,23 @@ def audio_fingerprint_windows(
     src = df.withColumn(
         "__wav", F.unbase64(F.col(media_col))) if base64 else df
     wav_col = "__wav" if base64 else media_col
-    id_type = dict(df.dtypes)[id_col]
-    out_schema = f"{id_col} {id_type}, window_idx int, {out_col} bigint"
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def kernel(wavs):
+        index, idxs, windows = [], [], []
+        for i, b in enumerate(wavs):
+            x = _wav_mono16(b)
+            if x is None:
+                continue
+            n_win = max(1, 1 + (len(x) - _AFP_WINDOW) // hop)
+            for j in range(n_win):
+                index.append(i)
+                idxs.append(j)
+                windows.append(x[j * hop:j * hop + _AFP_WINDOW])
+        return [index, idxs, _audio_fp_batch(windows)]
 
-        for pdf in batches:
-            ids, idxs, fps = [], [], []
-            for rid, b in zip(pdf[id_col], pdf[wav_col]):
-                x = _wav_mono16(bytes(b) if b is not None else None)
-                if x is None:
-                    continue
-                n_win = max(1, 1 + (len(x) - _AFP_WINDOW) // hop)
-                for j in range(n_win):
-                    ids.append(rid)
-                    idxs.append(j)
-                    fps.append(x[j * hop:j * hop + _AFP_WINDOW])
-            fps = _audio_fp_batch(fps)
-            yield pd.DataFrame({
-                id_col: pd.Series(ids, dtype="object"),
-                "window_idx": pd.Series(idxs, dtype="int32"),
-                out_col: pd.Series(fps, dtype="object"),
-            })
-
-    return src.mapInPandas(run, schema=out_schema)
+    return map_rows(src, kernel, [wav_col],
+                    [("window_idx", "int"), (out_col, "bigint")],
+                    keep=[id_col])
 
 
 def audio_near_pairs(
@@ -1382,22 +1347,14 @@ def decode_image(
     """REAL image decode for PNG (8-bit, non-interlaced), uncompressed
     BMP and GIF: struct(format, width, height, channels,
     mean_rgb array<double>, luma_hist array<double>).  Arrow-batched
-    ``mapInPandas``; unsupported formats yield NULL fields instead of
-    failing the batch."""
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + (f", {out_col} struct<format:string,width:int,height:int,"
-         "channels:int,mean_rgb:array<double>,luma_hist:array<double>>")
+    (:func:`.rows.map_rows`); unsupported formats yield NULL fields
+    instead of failing the batch."""
+    def kernel(media):
+        return [[_decode_image(b, hist_bins) for b in media]]
 
-    def run(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            pdf[out_col] = pdf[media_col].map(
-                lambda b: _decode_image(
-                    bytes(b) if b is not None else None, hist_bins)
-            )
-            yield pdf
-
-    return df.mapInPandas(run, schema=out_schema)
+    return map_rows(df, kernel, [media_col], [(
+        out_col, "struct<format:string,width:int,height:int,channels:int,"
+        "mean_rgb:array<double>,luma_hist:array<double>>")])
 
 
 def _int_luma(px) -> "object":
@@ -1485,26 +1442,20 @@ def resize_image(
     hamming_lsh_topk's byte-band pattern applies unchanged to one
     64-bit lane).
 
-    Arrow-batched ``mapInPandas``; undecodable payloads yield NULL
-    fields instead of failing the batch (same contract as
+    Arrow-batched (:func:`.rows.map_rows`); undecodable payloads yield
+    NULL fields instead of failing the batch (same contract as
     decode_image)."""
     if width * height > 64:
         raise ValueError(
             f"resize_image: dhash needs width*height <= 64 bits, got "
             f"{width}x{height}")
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + (f", {out_col} struct<format:string,grid_w:int,grid_h:int,"
-         "pixels:array<int>,dhash:bigint>")
 
-    def run(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            pdf[out_col] = pdf[media_col].map(
-                lambda b: _resize_and_dhash(
-                    bytes(b) if b is not None else None, width, height))
-            yield pdf
+    def kernel(media):
+        return [[_resize_and_dhash(b, width, height) for b in media]]
 
-    return df.mapInPandas(run, schema=out_schema)
+    return map_rows(df, kernel, [media_col], [(
+        out_col, "struct<format:string,grid_w:int,grid_h:int,"
+        "pixels:array<int>,dhash:bigint>")])
 
 
 def _decode_stub(payload: bytes) -> list[float]:
@@ -1538,25 +1489,19 @@ def decode_features(
     df: DataFrame, media_col: str = "media", out_col: str = "features",
     extractor=None,
 ) -> DataFrame:
-    """mapInPandas decode: Arrow-batched, zero driver involvement.
+    """Feature decode: Arrow-batched (:func:`.rows.map_rows`), zero
+    driver involvement.
 
     ``extractor(data: bytes) -> list[float]`` is the plug point for a
     production learned feature extractor (model weights live executor-
     side in the closure); the default is the deterministic byte-
     statistics stub `_decode_stub`."""
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + f", {out_col} array<float>"
     fx = extractor if extractor is not None else _decode_stub
 
-    def run(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            pdf[out_col] = pdf[media_col].map(
-                lambda b: fx(bytes(b)) if b is not None else None
-            )
-            yield pdf
+    def kernel(media):
+        return [[fx(b) if b is not None else None for b in media]]
 
-    return df.mapInPandas(run, schema=out_schema)
+    return map_rows(df, kernel, [media_col], [(out_col, "array<float>")])
 
 
 # --------------------------------------------------------------------------
@@ -1687,50 +1632,45 @@ def sample_frames(
     codec the payload falls back to the clearly-fake byte-slice stub —
     the schema, Arrow batching and partition behavior are identical
     either way."""
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + f", {out_col} array<struct<idx:int,frame:binary>>"
     # snapshot: module globals re-import EMPTY on executors, so the
     # registered callables must ride the closure by value
     codecs = list(_CODEC_REGISTRY.values())
 
-    def run(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            def frames_of(b):
-                if b is None:
-                    return None
-                data = bytes(b)
-                real = _avi_mjpeg_frames(data)
-                if real is None:
-                    real = _gif_frames(data)
-                if real is None:
-                    for probe, fr in codecs:
-                        if probe(data):
-                            real = fr(data)
-                            break
-                if real is not None:
-                    if not real:
-                        return []
-                    step = max(len(real) / float(n_frames), 1.0)
-                    picked = []
-                    seen = set()
-                    for j in range(min(n_frames, len(real))):
-                        k = min(int(j * step), len(real) - 1)
-                        if k not in seen:
-                            seen.add(k)
-                            picked.append(
-                                {"idx": k, "frame": real[k]})
-                    return picked
-                # STUB fallback for codec formats: byte slices
-                step = max(len(data) // n_frames, 1)
-                return [
-                    {"idx": i, "frame": data[o:o + step]}
-                    for i, o in enumerate(range(0, len(data), step))
-                ][:n_frames]
-            pdf[out_col] = pdf[media_col].map(frames_of)
-            yield pdf
+    def frames_of(data):
+        if data is None:
+            return None
+        real = _avi_mjpeg_frames(data)
+        if real is None:
+            real = _gif_frames(data)
+        if real is None:
+            for probe, fr in codecs:
+                if probe(data):
+                    real = fr(data)
+                    break
+        if real is not None:
+            if not real:
+                return []
+            step = max(len(real) / float(n_frames), 1.0)
+            picked = []
+            seen = set()
+            for j in range(min(n_frames, len(real))):
+                k = min(int(j * step), len(real) - 1)
+                if k not in seen:
+                    seen.add(k)
+                    picked.append({"idx": k, "frame": real[k]})
+            return picked
+        # STUB fallback for codec formats: byte slices
+        step = max(len(data) // n_frames, 1)
+        return [
+            {"idx": i, "frame": data[o:o + step]}
+            for i, o in enumerate(range(0, len(data), step))
+        ][:n_frames]
 
-    return df.mapInPandas(run, schema=out_schema)
+    def kernel(media):
+        return [[frames_of(b) for b in media]]
+
+    return map_rows(df, kernel, [media_col],
+                    [(out_col, "array<struct<idx:int,frame:binary>>")])
 
 
 # Deterministic 256-entry gear table for content-defined chunking:
@@ -1785,51 +1725,32 @@ def cdc_chunks(
     different files hash to identical chunks.
 
     -> one row per chunk: (id, chunk_idx, offset, length, chunk_hash
-    = md5 hex).  Arrow-batched mapInPandas: bytes never leave the
-    executor, only offsets + digests come out — at 100 TB the output
-    is the dedup index, ~32 bytes per ~1 KiB chunk, and downstream
+    = md5 hex).  Arrow-batched (:func:`.rows.map_rows`): bytes never
+    leave the executor, only offsets + digests come out — at 100 TB the
+    output is the dedup index, ~32 bytes per ~1 KiB chunk, and downstream
     exact dedup is a hash groupBy like `fingerprint`."""
-    import hashlib  # noqa: F401 (executor-side import in the closure)
+    import hashlib
 
     table = _gear_table()
+
+    def kernel(blobs):
+        rows = []
+        for i, data in enumerate(blobs):
+            if data is None:
+                continue
+            last = 0
+            for j, end in enumerate(_cdc_boundaries(
+                    data, min_size, avg_size, max_size, table)):
+                rows.append((i, j, last, end - last,
+                             hashlib.md5(data[last:end]).hexdigest()))
+                last = end
+        return zip(*rows)
+
     # the id column keeps ITS OWN type (string URIs are as common as
     # integer ids for blob keys)
-    id_type = dict(df.dtypes)[id_col]
-    out_schema = (
-        f"{id_col} {id_type}, chunk_idx int, offset long, length long, "
-        "chunk_hash string"
-    )
-
-    def run(batches: Iterator) -> Iterator:
-        import hashlib
-
-        import pandas as pd
-
-        for pdf in batches:
-            ids, idxs, offs, lens, hashes = [], [], [], [], []
-            for rid, b in zip(pdf[id_col], pdf[data_col]):
-                if b is None:
-                    continue
-                data = bytes(b)
-                last = 0
-                for j, end in enumerate(_cdc_boundaries(
-                        data, min_size, avg_size, max_size, table)):
-                    ids.append(rid)
-                    idxs.append(j)
-                    offs.append(last)
-                    lens.append(end - last)
-                    hashes.append(
-                        hashlib.md5(data[last:end]).hexdigest())
-                    last = end
-            yield pd.DataFrame({
-                id_col: pd.Series(ids, dtype="object"),
-                "chunk_idx": pd.Series(idxs, dtype="int32"),
-                "offset": pd.Series(offs, dtype="int64"),
-                "length": pd.Series(lens, dtype="int64"),
-                "chunk_hash": pd.Series(hashes, dtype="object"),
-            })
-
-    return df.select(id_col, data_col).mapInPandas(run, out_schema)
+    return map_rows(df.select(id_col, data_col), kernel, [data_col], [
+        ("chunk_idx", "int"), ("offset", "bigint"), ("length", "bigint"),
+        ("chunk_hash", "string")], keep=[id_col])
 
 
 def video_fingerprint(
@@ -1863,46 +1784,36 @@ def video_fingerprint(
     dhash bigint; dhash NULL when a real container's frame fails to
     decode)."""
     codecs = list(_CODEC_REGISTRY.values())
-    id_type = dict(df.dtypes)[id_col]
-    out_schema = f"{id_col} {id_type}, frame_idx int, dhash bigint"
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            ids, idxs, hashes = [], [], []
-            for rid, b in zip(pdf[id_col], pdf[media_col]):
-                if b is None:
+    def kernel(media):
+        rows = []
+        for i, data in enumerate(media):
+            if data is None:
+                continue
+            real = _avi_mjpeg_frames(data)
+            if real is None:
+                real = _gif_frames(data)
+            if real is None:
+                for probe, fr in codecs:
+                    if probe(data):
+                        real = fr(data)
+                        break
+            if not real:
+                continue
+            step = max(len(real) / float(n_frames), 1.0)
+            seen = set()
+            for j in range(min(n_frames, len(real))):
+                k = min(int(j * step), len(real) - 1)
+                if k in seen:
                     continue
-                data = bytes(b)
-                real = _avi_mjpeg_frames(data)
-                if real is None:
-                    real = _gif_frames(data)
-                if real is None:
-                    for probe, fr in codecs:
-                        if probe(data):
-                            real = fr(data)
-                            break
-                if not real:
-                    continue
-                step = max(len(real) / float(n_frames), 1.0)
-                seen = set()
-                for j in range(min(n_frames, len(real))):
-                    k = min(int(j * step), len(real) - 1)
-                    if k in seen:
-                        continue
-                    seen.add(k)
-                    d = _resize_and_dhash(real[k], width, height)
-                    ids.append(rid)
-                    idxs.append(k)
-                    hashes.append(d["dhash"])
-            yield pd.DataFrame({
-                id_col: pd.Series(ids, dtype="object"),
-                "frame_idx": pd.Series(idxs, dtype="int32"),
-                "dhash": pd.Series(hashes, dtype="object"),
-            })
+                seen.add(k)
+                d = _resize_and_dhash(real[k], width, height)
+                rows.append((i, k, d["dhash"]))
+        return zip(*rows)
 
-    return df.mapInPandas(run, schema=out_schema)
+    return map_rows(df, kernel, [media_col],
+                    [("frame_idx", "int"), ("dhash", "bigint")],
+                    keep=[id_col])
 
 
 def video_near_pairs(

@@ -31,10 +31,11 @@ the RFC default.
 from __future__ import annotations
 
 import re
-from typing import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pincette_json_streams_spark.functions.rows import map_rows
 
 __all__ = ["robots_rules", "url_allowed", "parse_robots",
            "pattern_to_regex", "robots_allowed_mirror"]
@@ -83,8 +84,10 @@ def parse_robots(text: str) -> list:
     return rules
 
 
-_RULES_SCHEMA = ("host string, agent string, allow boolean,"
-                 " pattern string, regex string, pattern_len int")
+_RULES_FIELDS = [
+    ("host", "string"), ("agent", "string"), ("allow", "boolean"),
+    ("pattern", "string"), ("regex", "string"), ("pattern_len", "int"),
+]
 
 
 def robots_rules(
@@ -97,21 +100,15 @@ def robots_rules(
     shuffle; the output is a few rows per host — the broadcastable
     side of the crawl-frontier join."""
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def kernel(hosts, texts):
+        rows = [(i, host, agent, allow, pattern, pattern_to_regex(pattern),
+                 len(pattern.encode("utf-8")))
+                for i, (host, text) in enumerate(zip(hosts, texts))
+                for agent, allow, pattern in parse_robots(text)]
+        return zip(*rows)
 
-        for pdf in batches:
-            rows = []
-            for host, text in zip(pdf[host_col], pdf[robots_col]):
-                for agent, allow, pattern in parse_robots(text):
-                    rows.append((host, agent, allow, pattern,
-                                 pattern_to_regex(pattern),
-                                 len(pattern.encode("utf-8"))))
-            yield pd.DataFrame(rows, columns=[
-                "host", "agent", "allow", "pattern", "regex",
-                "pattern_len"])
-
-    return df.mapInPandas(run, schema=_RULES_SCHEMA)
+    return map_rows(df, kernel, [host_col, robots_col], _RULES_FIELDS,
+                    keep=[])
 
 
 def _url_parts(url):

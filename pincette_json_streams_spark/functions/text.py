@@ -18,6 +18,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pincette_json_streams_spark.functions.rows import map_rows
+
 __all__ = [
     "ws_token_count", "bpe_token_count", "quality_features",
     "quality_score", "lang_id", "fingerprint", "shingles", "word_ngrams",
@@ -195,35 +197,22 @@ def with_text_features(
     df: DataFrame, text_col: str = "text", out: str = "__tf"
 ) -> DataFrame:
     """Attach a struct column ``out`` with all integer text signals plus
-    the language guess, computed in a single Arrow ``mapInPandas`` pass.
+    the language guess, computed in a single Arrow pass
+    (:func:`.rows.map_rows`).
 
     Repartitions to total cores first: small parquet arrives as one input
     split and this is the CPU-heavy step of any text pipeline."""
-    import pandas as pd
-
-    spark = df.sparkSession
-    cols = df.columns
-    schema_str = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + f", {out} struct<{_TF_SCHEMA}>"
     stop_set = frozenset(STOPWORDS)
     markers = tuple(
         (lang, frozenset(ms)) for lang, ms in LANG_MARKERS.items()
     )
 
-    def run(batches):
-        for pdf in batches:
-            feats = [
-                _feature_tuple(t, stop_set, markers)
-                for t in pdf[text_col]
-            ]
-            pdf[out] = [
-                dict(zip(_TF_FIELDS + ["lang"], f)) for f in feats
-            ]
-            yield pdf
+    def kernel(texts):
+        return [[_feature_tuple(t, stop_set, markers) for t in texts]]
 
-    spread = df.repartition(spark.sparkContext.defaultParallelism)
-    return spread.mapInPandas(run, schema=schema_str)
+    spread = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+    return map_rows(spread, kernel, [text_col],
+                    [(out, f"struct<{_TF_SCHEMA}>")])
 
 
 def quality_score_from(tf: Column, n_chars: Column) -> Column:
@@ -390,28 +379,20 @@ def with_repetition_features(
     """Attach per-document repetition signals (the Gopher-style quality
     heuristics): most-frequent-word count, most-frequent-2-gram count,
     occurrences covered by duplicated 5-grams, and word-distribution
-    entropy.  One Arrow ``mapInPandas`` pass with per-doc counters —
-    O(len) per document, where the equivalent higher-order-function
-    formulation (count of every distinct word via ``filter``) is O(len²).
+    entropy.  One Arrow pass (:func:`.rows.map_rows`) with per-doc
+    counters — O(len) per document, where the equivalent
+    higher-order-function formulation (count of every distinct word via
+    ``filter``) is O(len²).
 
     Same word split as ``with_text_features`` (ASCII trim + lower +
     ``\\s+``), so a SQL oracle replays it via
     ``string_split_regex(lower(trim(text, ' ')), '\\s+')``."""
-    spark = df.sparkSession
-    schema_str = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + f", {out} struct<{_REP_SCHEMA}>"
-    fields = _REP_FIELDS + ["word_entropy"]
+    def kernel(texts):
+        return [[_rep_tuple(t) for t in texts]]
 
-    def run(batches):
-        for pdf in batches:
-            pdf[out] = [
-                dict(zip(fields, _rep_tuple(t))) for t in pdf[text_col]
-            ]
-            yield pdf
-
-    spread = df.repartition(spark.sparkContext.defaultParallelism)
-    return spread.mapInPandas(run, schema=schema_str)
+    spread = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+    return map_rows(spread, kernel, [text_col],
+                    [(out, f"struct<{_REP_SCHEMA}>")])
 
 
 def benchmark_overlap(

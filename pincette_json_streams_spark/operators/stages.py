@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.errors import AnalysisException
 
+from pincette_json_streams_spark.functions.rows import map_rows
 from pincette_json_streams_spark.operators.context import Ctx, ctx_for
 from pincette_json_streams_spark.operators.expressions import (
     UnsupportedExpression,
@@ -617,25 +618,31 @@ def _stage_per(df, spec, pctx):
     array in `as`.  Distributed semantics: batches form per partition (the
     reference batches per consumer thread, so per-partition batching is the
     faithful scale-out analogue — no global ordering exists either way)."""
+    from pyspark.sql.types import ArrayType, StructField, StructType
+
     amount = spec.get("amount", 500)
     as_field = spec.get("as", "messages")
+    out_type = ArrayType(df.schema)
 
     def batch(it):
-        import pandas as pd
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        arrow_type = to_arrow_type(out_type)
         buf: list[dict] = []
-        for pdf in it:
-            for rec in pdf.to_dict("records"):
+        for rb in it:
+            for rec in rb.to_pylist():
                 buf.append(rec)
                 if len(buf) >= amount:
-                    yield pd.DataFrame({as_field: [buf]})
+                    yield pa.RecordBatch.from_arrays(
+                        [pa.array([buf], arrow_type)], [as_field])
                     buf = []
         if buf:
-            yield pd.DataFrame({as_field: [buf]})
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([buf], arrow_type)], [as_field])
 
-    inner = ", ".join(f"{f.name}: {f.dataType.simpleString()}"
-                      for f in df.schema.fields)
-    out_schema = f"{as_field} array<struct<{inner}>>"
-    return df.mapInPandas(batch, schema=out_schema)
+    return df.mapInArrow(
+        batch, StructType([StructField(as_field, out_type)]))
 
 
 # --------------------------------------------------------------------------
@@ -1121,61 +1128,56 @@ def _stage_graph_lookup(df, spec, pctx):
 
 def _stage_redact(df, spec, pctx):
     """Recursive keep/prune via $$DESCEND/$$PRUNE/$$KEEP.  Compiled as an
-    Arrow ``mapInPandas`` JSON transform (no native recursive struct op
-    exists); the decision expression runs through the full row
+    Arrow JSON transform (:func:`.rows.map_rows`; no native recursive
+    struct op exists); the decision expression runs through the full row
     interpreter (streaming/reducers.eval_expr) at every document level —
     unsupported operators raise instead of silently evaluating as
     literals.  Rows whose top-level decision is $$PRUNE are dropped."""
     from pincette_json_streams_spark.streaming.reducers import eval_expr
 
-    spec_json = json.dumps(spec)
     cols = df.columns
     schema_dt = df.select(F.struct(*cols).alias("s")).schema["s"].dataType
+    markers = {"DESCEND": "$$DESCEND", "PRUNE": "$$PRUNE",
+               "KEEP": "$$KEEP"}
 
-    def run(batches):
-        import pandas as pd
-
-        expr = json.loads(spec_json)
-        markers = {"DESCEND": "$$DESCEND", "PRUNE": "$$PRUNE",
-                   "KEEP": "$$KEEP"}
-
-        def walk(node):
-            decision = eval_expr(expr, node, markers)
-            if decision == "$$PRUNE":
-                return None
-            if decision == "$$KEEP":
-                return node
-            # $$DESCEND: keep this level, recurse into subdocuments
-            if isinstance(node, dict):
-                out = {}
-                for k, v in node.items():
-                    if isinstance(v, dict):
-                        r = walk(v)
-                        if r is not None:
-                            out[k] = r
-                    elif isinstance(v, list):
-                        out[k] = [
-                            w for w in (
-                                walk(x) if isinstance(x, dict) else x
-                                for x in v
-                            ) if w is not None
-                        ]
-                    else:
-                        out[k] = v
-                return out
+    def walk(node):
+        decision = eval_expr(spec, node, markers)
+        if decision == "$$PRUNE":
+            return None
+        if decision == "$$KEEP":
             return node
+        # $$DESCEND: keep this level, recurse into subdocuments
+        if isinstance(node, dict):
+            out = {}
+            for k, v in node.items():
+                if isinstance(v, dict):
+                    r = walk(v)
+                    if r is not None:
+                        out[k] = r
+                elif isinstance(v, list):
+                    out[k] = [
+                        w for w in (
+                            walk(x) if isinstance(x, dict) else x
+                            for x in v
+                        ) if w is not None
+                    ]
+                else:
+                    out[k] = v
+            return out
+        return node
 
-        for pdf in batches:
-            vals = []
-            for js in pdf["__json"]:
-                r = walk(json.loads(js))
-                if r is not None:
-                    vals.append(json.dumps(r))
-            yield pd.DataFrame({"__js": vals})
+    def kernel(docs):
+        rows = []
+        for i, js in enumerate(docs):
+            r = walk(json.loads(js))
+            if r is not None:
+                rows.append((i, json.dumps(r)))
+        return zip(*rows)
 
     prepared = df.select(F.to_json(F.struct(*cols)).alias("__json"))
     return (
-        prepared.mapInPandas(run, schema="__js string")
+        map_rows(prepared, kernel, ["__json"], [("__js", "string")],
+                 keep=[])
         .select(F.from_json("__js", schema_dt).alias("__root"))
         .select("__root.*")
     )
@@ -1200,35 +1202,37 @@ def _stage_script(df, spec, pctx, language):
     from pincette_json_streams_spark.plugins import JSLT_FUNCTION_EXTENSIONS
     jslt_ext = dict(JSLT_FUNCTION_EXTENSIONS)
 
-    def run(batches):
-        import pandas as pd
+    compiled: list = []  # once per task: each task unpickles its own
 
+    def compile_script():
         if language == "jq":
             from pincette_json_streams_spark.functions.jq_subset import (
-                compile_jq as compile_script,
+                compile_jq,
             )
-            fn = compile_script(script)
-        else:
-            from pincette_json_streams_spark.functions.jslt_subset import (
-                compile_jslt,
-            )
-            one = compile_jslt(script, extensions=jslt_ext)
-            fn = lambda doc: [one(doc)]  # noqa: E731
-        for pdf in batches:
-            out_vals, out_ids = [], []
-            for js in pdf["__json"]:
-                for result in fn(json.loads(js)):
-                    out_vals.append(json.dumps(result))
-                    out_ids.append(
-                        str(result.get("_id"))
-                        if isinstance(result, dict)
-                        and result.get("_id") is not None else None)
-            yield pd.DataFrame({"_id": out_ids, "value": out_vals})
+            return compile_jq(script)
+        from pincette_json_streams_spark.functions.jslt_subset import (
+            compile_jslt,
+        )
+        one = compile_jslt(script, extensions=jslt_ext)
+        return lambda doc: [one(doc)]
+
+    def kernel(docs):
+        if not compiled:
+            compiled.append(compile_script())
+        rows = []
+        for i, js in enumerate(docs):
+            for result in compiled[0](json.loads(js)):
+                rid = result.get("_id") if isinstance(result, dict) \
+                    else None
+                rows.append((i, None if rid is None else str(rid),
+                             json.dumps(result)))
+        return zip(*rows)
 
     src = df.select(
         F.to_json(F.struct(*[F.col(c) for c in cols])).alias("__json")
     )
-    out = src.mapInPandas(run, schema="_id string, value string")
+    out = map_rows(src, kernel, ["__json"],
+                   [("_id", "string"), ("value", "string")], keep=[])
     if schema:
         # typed form: exactly the declared columns (declare _id in the
         # schema to keep the re-keyed message id)
@@ -1500,19 +1504,15 @@ def _stage_lag(df, spec, pctx):
         # no admin client in this runtime: documented no-op
         return df
 
-    schema_str = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + f", `{as_field}` string"
+    snap: list = []  # once per task: each task unpickles its own
 
-    def attach(batches):
-        import json as _json
+    def kernel(rows):
+        if not snap:
+            snap.append(json.dumps(provider()))
+        return [[snap[0]] * len(rows)]
 
-        snap = _json.dumps(provider())
-        for pdf in batches:
-            pdf[as_field] = snap
-            yield pdf
-
-    return df.mapInPandas(attach, schema=schema_str)
+    # the kernel reads one column only for the batch's row count
+    return map_rows(df, kernel, df.columns[:1], [(as_field, "string")])
 
 
 def _stage_throttle(df, spec, pctx):
@@ -1540,22 +1540,19 @@ def _stage_throttle(df, spec, pctx):
     )
     df = df.repartition(parallelism)
     per_part = max(rate / parallelism, 1e-9)
-    schema_str = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
-    )
 
     def pace(batches):
         import time as _time
 
-        for pdf in batches:
+        for batch in batches:
             t0 = _time.time()
-            yield pdf
-            budget = len(pdf) / per_part
+            yield batch
+            budget = batch.num_rows / per_part
             elapsed = _time.time() - t0
             if budget > elapsed:
                 _time.sleep(min(budget - elapsed, 30.0))
 
-    return df.mapInPandas(pace, schema=schema_str)
+    return df.mapInArrow(pace, df.schema)
 
 
 def _stage_chunk_ext(df, spec, pctx):

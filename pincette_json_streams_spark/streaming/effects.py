@@ -8,8 +8,8 @@ inside its reactive pipeline.  Spark-first design:
 
 - Expressions (url, body, headers, topic, bucket, key, claims) compile to
   native Columns *first* — only the I/O call itself runs in Python, via
-  ``mapInPandas`` (Arrow batches, zero driver involvement, scales with
-  partitions).
+  :func:`~pincette_json_streams_spark.functions.rows.map_rows` (Arrow
+  batches, zero driver involvement, scales with partitions).
 - Transports are injectable: ``HttpTransport`` (default urllib) and
   ``ObjectStore`` (default local-filesystem fake with s3:// URL shape;
   swap in a boto3-backed store in production).  Tests run fully offline.
@@ -35,6 +35,7 @@ from typing import Any, Callable, Iterator, Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pincette_json_streams_spark.functions.rows import map_rows
 from pincette_json_streams_spark.operators.context import ctx_for
 from pincette_json_streams_spark.operators.expressions import compile_expr
 
@@ -192,25 +193,6 @@ class LocalObjectStore:
 _HTTP_ERROR_T = "struct<statusCode:int,body:string>"
 
 
-def _schema_ddl(df: DataFrame, extra: str = ""):
-    """Output schema for a mapInPandas effect stage: the input schema
-    plus optional ``extra`` DDL-declared fields.
-
-    Returns a real StructType, NOT a DDL string: simpleString() does
-    not quote NESTED field names, so a document with hyphenated or
-    case-variant keys inside a struct (e.g. the reference
-    s3attachments corpus message, whose attachment structs carry
-    `Content-Type`/`content-Type`/`content-type`) would produce an
-    unparseable DDL."""
-    from pyspark.sql.types import StructType
-
-    schema = StructType(list(df.schema.fields))
-    if extra:
-        for f in StructType.fromDDL(extra).fields:
-            schema = schema.add(f)
-    return schema
-
-
 def _expr_json(spec_val: Any, df: DataFrame) -> Column:
     """Compile an expression and serialize its value to a JSON string
     (payloads cross into Python as JSON text)."""
@@ -233,7 +215,6 @@ def stage_http(df: DataFrame, spec: dict, pctx) -> DataFrame:
     transport = _transport_with_ssl(transport, spec.get("sslContext"))
     as_field = spec.get("as")
     unwind = bool(spec.get("unwind", False))
-    in_cols = list(df.columns)
 
     prepared = df.withColumns({
         "__url": compile_expr(spec["url"], ctx_for(df)).cast("string"),
@@ -244,53 +225,42 @@ def stage_http(df: DataFrame, spec: dict, pctx) -> DataFrame:
         if "body" in spec else F.lit(None).cast("string"),
     })
 
-    extra = f"httpError {_HTTP_ERROR_T}"
-    if as_field:
-        extra = f"`{as_field}` string, " + extra
-    out_schema = _schema_ddl(df, extra)
+    def call(method, url, headers_js, body_js):
+        """(payload, httpError) of one request."""
+        body_v = _unwrap(body_js)
+        body = None if body_v is None else (
+            body_v if isinstance(body_v, str) else json.dumps(body_v)
+        )
+        try:
+            resp = transport(method, url, _unwrap(headers_js) or {}, body)
+        except Exception as e:  # transport failure -> httpError
+            return None, {"statusCode": -1, "body": str(e)}
+        if resp.status >= 400:
+            return None, {"statusCode": resp.status, "body": resp.body}
+        return resp.body, None
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            out_rows = []
-            for rec in pdf.to_dict("records"):
-                headers = _unwrap(rec.pop("__headers")) or {}
-                body_v = _unwrap(rec.pop("__body"))
-                url = rec.pop("__url")
-                method = rec.pop("__method")
-                body = None if body_v is None else (
-                    body_v if isinstance(body_v, str) else json.dumps(body_v)
-                )
+    def kernel(methods, urls, headers, bodies):
+        rows = []
+        for i, args in enumerate(zip(methods, urls, headers, bodies)):
+            payload, err = call(*args)
+            if not as_field:
+                rows.append((i, err))
+            elif unwind and err is None:
                 try:
-                    resp = transport(method, url, headers, body)
-                    err = None if resp.status < 400 else {
-                        "statusCode": resp.status, "body": resp.body}
-                except Exception as e:  # transport failure -> httpError
-                    resp, err = None, {"statusCode": -1, "body": str(e)}
-                base = dict(rec)
-                base["httpError"] = err
-                if not as_field:
-                    out_rows.append(base)
-                    continue
-                payload = resp.body if resp is not None and err is None \
-                    else None
-                if unwind and err is None:
-                    try:
-                        arr = json.loads(payload) if payload else []
-                    except Exception:
-                        arr = []
-                    for entry in arr if isinstance(arr, list) else [arr]:
-                        r = dict(base)
-                        r[as_field] = json.dumps(entry)
-                        out_rows.append(r)
-                else:
-                    base[as_field] = payload
-                    out_rows.append(base)
-            cols = in_cols + ([as_field] if as_field else []) + ["httpError"]
-            yield pd.DataFrame(out_rows, columns=cols)
+                    arr = json.loads(payload) if payload else []
+                except Exception:
+                    arr = []
+                for entry in arr if isinstance(arr, list) else [arr]:
+                    rows.append((i, json.dumps(entry), err))
+            else:
+                rows.append((i, payload, err))
+        return zip(*rows)
 
-    return prepared.mapInPandas(run, schema=out_schema)
+    outputs = ([(as_field, "string")] if as_field else []) \
+        + [("httpError", _HTTP_ERROR_T)]
+    return map_rows(prepared, kernel,
+                    ["__method", "__url", "__headers", "__body"],
+                    outputs, keep=df.columns)
 
 
 # --------------------------------------------------------------------------
@@ -368,27 +338,19 @@ def stage_sign_jwt(df: DataFrame, spec: dict, pctx) -> DataFrame:
         "__kid": kid_col,
         "__pk": pk_col,
     })
-    in_cols = list(df.columns)
-    out_schema = _schema_ddl(df, f"`{as_field}` string")
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def sign(std_js, custom_js, kid, pk):
+        std = json.loads(std_js or "{}")
+        std.pop("__none", None)
+        claims = {**(_unwrap(custom_js) or {}), **std}
+        return _sign_rs256(pk, claims, ttl, kid)
 
-        for pdf in batches:
-            out = []
-            for rec in pdf.to_dict("records"):
-                std = json.loads(rec.pop("__claims_std") or "{}")
-                std.pop("__none", None)
-                cust = _unwrap(rec.pop("__claims_custom")) or {}
-                claims = {**cust, **std}
-                kid = rec.pop("__kid")
-                pk = rec.pop("__pk")
-                r = dict(rec)
-                r[as_field] = _sign_rs256(pk, claims, ttl, kid)
-                out.append(r)
-            yield pd.DataFrame(out, columns=in_cols + [as_field])
+    def kernel(*cols):
+        return [[sign(*args) for args in zip(*cols)]]
 
-    return prepared.mapInPandas(run, schema=out_schema)
+    return map_rows(prepared, kernel,
+                    ["__claims_std", "__claims_custom", "__kid", "__pk"],
+                    [(as_field, "string")], keep=df.columns)
 
 
 # --------------------------------------------------------------------------
@@ -466,33 +428,25 @@ def stage_log(df: DataFrame, spec: dict, pctx) -> DataFrame:
         "__log_msg": msg, "__log_level": level,
         "__log_attrs": attrs, "__log_trace": trace,
     })
-    in_cols = list(df.columns)
-    out_schema = _schema_ddl(df)
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def kernel(msgs, levels, attrs, traces):
+        for msg_js, lvl, attrs_js, tid in zip(msgs, levels, attrs, traces):
+            v = _unwrap(msg_js)
+            a = _unwrap(attrs_js)
+            emitter({
+                "logger": app,
+                "level": lvl or "INFO",
+                "message": v if isinstance(v, str)
+                else json.dumps(v, default=str),
+                "attributes": a if isinstance(a, dict) else {},
+                "trace_id": tid or None,
+                "span_id": tid[:16] if tid else None,
+            })
+        return []
 
-        for pdf in batches:
-            for rec in pdf.to_dict("records"):
-                v = _unwrap(rec["__log_msg"])
-                message = v if isinstance(v, str) \
-                    else json.dumps(v, default=str)
-                a = _unwrap(rec["__log_attrs"])
-                tid = rec["__log_trace"]
-                tid = tid if isinstance(tid, str) and tid else None
-                lvl = rec["__log_level"]
-                emitter({
-                    "logger": app,
-                    "level": lvl if isinstance(lvl, str) and lvl
-                    else "INFO",
-                    "message": message,
-                    "attributes": a if isinstance(a, dict) else {},
-                    "trace_id": tid,
-                    "span_id": tid[:16] if tid else None,
-                })
-            yield pdf[in_cols]
-
-    return prepared.mapInPandas(run, schema=out_schema)
+    return map_rows(prepared, kernel,
+                    ["__log_msg", "__log_level", "__log_attrs",
+                     "__log_trace"], [], keep=df.columns)
 
 
 # --------------------------------------------------------------------------
@@ -506,7 +460,7 @@ def stage_probe(df: DataFrame, spec: dict, pctx) -> DataFrame:
     The reference counts per pipeline instance and tells consumers to
     re-aggregate by (name, minute) because each instance only sees its
     partitions — so per-TASK counting is exactly the documented
-    contract, not an approximation.  Executor-side mapInPandas counts
+    contract, not an approximation.  Executor-side mapInArrow counts
     each Arrow batch into a minute bucket and flushes the records at
     task end through the injectable ``pctx.probe_producer(record)``
     (production: a Kafka producer to `topic`; default: the $log
@@ -533,21 +487,19 @@ def stage_probe(df: DataFrame, spec: dict, pctx) -> DataFrame:
                 "trace_id": None, "span_id": None,
             })
 
-    schema_str = _schema_ddl(df)
-
     def count_batches(batches: Iterator) -> Iterator:
         import time as _time
 
         counts: dict[int, int] = {}
-        for pdf in batches:
+        for batch in batches:
             minute = int(_time.time()) // 60 * 60
-            counts[minute] = counts.get(minute, 0) + len(pdf)
-            yield pdf
+            counts[minute] = counts.get(minute, 0) + batch.num_rows
+            yield batch
         for minute, n in sorted(counts.items()):
             producer({"name": name, "minute": minute, "count": n,
                       "topic": topic})
 
-    return df.mapInPandas(count_batches, schema=schema_str)
+    return df.mapInArrow(count_batches, df.schema)
 
 
 # --------------------------------------------------------------------------
@@ -566,10 +518,10 @@ def emit_event_traces(df: DataFrame, part_name: str, pctx,
     component of a distributed trace keeps or drops the same traces
     (docs/configuration.md traceSamplePercentage note).
 
-    Spark-first: a pass-through ``mapInPandas`` over the part output —
-    the record build + produce runs executor-side in Arrow batches,
-    exactly like $log/$probe; zero effect on the plan when no producer
-    is configured.  ``name_expr`` optionally computes the subpart name
+    Spark-first: a pass-through :func:`.rows.map_rows` over the part
+    output — the record build + produce runs executor-side in Arrow
+    batches, exactly like $log/$probe; zero effect on the plan when no
+    producer is configured.  ``name_expr`` optionally computes the subpart name
     PER ROW (aggregate parts trace as ``<part>.command.<command>``,
     docs/telemetry.md metrics-attribute table).  ``part`` is the BARE
     part name for ``attributes.part`` (the reference's field table
@@ -585,7 +537,6 @@ def emit_event_traces(df: DataFrame, part_name: str, pctx,
     app = getattr(pctx, "app_name", None) or "pincette-json-streams-spark"
     version = getattr(pctx, "app_version", None)
     bare_part = part if part is not None else part_name.split(".", 1)[0]
-    in_cols = list(df.columns)
     from pyspark.sql.types import StructType
 
     jwt_t = df.schema["_jwt"].dataType if "_jwt" in df.columns else None
@@ -599,38 +550,32 @@ def emit_event_traces(df: DataFrame, part_name: str, pctx,
         "__tr_name": (name_expr if name_expr is not None
                       else F.lit(part_name)).cast("string"),
     })
-    schema_str = _schema_ddl(df)
 
-    def run(batches: Iterator) -> Iterator:
+    def kernel(corrs, subs, names):
         import time as _time
 
         from pincette_json_streams_spark.streaming.otlp import (
             event_trace_record,
         )
 
-        for pdf in batches:
-            for corr, sub, nm in zip(pdf["__tr_corr"], pdf["__tr_sub"],
-                                     pdf["__tr_name"]):
-                if not isinstance(corr, str):
-                    continue  # null/NaN: uncorrelated message
-                sub = sub if isinstance(sub, str) else None
-                nm = nm if isinstance(nm, str) else part_name
-                if pct < 100 and int(hashlib.md5(
-                        str(corr).encode()).hexdigest()[:8],
-                        16) % 100 >= pct:
-                    continue
-                rec = event_trace_record(
-                    {"_corr": corr,
-                     "_jwt": {"sub": sub} if sub else None},
-                    application=app, part=bare_part,
-                    name=nm, version=version,
-                    timestamp_nanos=_time.time_ns(),
-                )
-                if rec is not None:
-                    producer(rec)
-            yield pdf[in_cols]
+        for corr, sub, nm in zip(corrs, subs, names):
+            if corr is None:
+                continue  # uncorrelated message
+            if pct < 100 and int(hashlib.md5(
+                    corr.encode()).hexdigest()[:8], 16) % 100 >= pct:
+                continue
+            rec = event_trace_record(
+                {"_corr": corr, "_jwt": {"sub": sub} if sub else None},
+                application=app, part=bare_part,
+                name=part_name if nm is None else nm, version=version,
+                timestamp_nanos=_time.time_ns(),
+            )
+            if rec is not None:
+                producer(rec)
+        return []
 
-    return prepared.mapInPandas(run, schema=schema_str)
+    return map_rows(prepared, kernel, ["__tr_corr", "__tr_sub", "__tr_name"],
+                    [], keep=df.columns)
 
 
 # --------------------------------------------------------------------------
@@ -774,37 +719,33 @@ def stage_s3_csv(df: DataFrame, spec: dict, pctx) -> DataFrame:
         etag_col.alias("__etag"),
     )
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            for rec in pdf.to_dict("records"):
-                data = store.read(rec["__bucket"], rec["__key"]).decode()
-                lines = [ln for ln in data.splitlines() if ln]
-                if not lines:
+    def kernel(buckets, keys, etags):
+        idx, vals = [], []
+        for i, (bucket, key, etag) in enumerate(zip(buckets, keys, etags)):
+            data = store.read(bucket, key).decode()
+            lines = [ln for ln in data.splitlines() if ln]
+            if not lines:
+                continue
+            rkey = "/".join((bucket, key, etag or ""))
+            last = resume_store.get(rkey) \
+                if resume_store is not None else None
+            start = (last + 1) if last is not None else 0
+            fields = lines[0].split(sep)
+            for n, ln in enumerate(lines[1:]):
+                if n < start:
                     continue
-                rkey = "/".join((rec["__bucket"], rec["__key"],
-                                 rec["__etag"] or ""))
-                last = resume_store.get(rkey) \
-                    if resume_store is not None else None
-                start = (last + 1) if last is not None else 0
-                fields = lines[0].split(sep)
-                vals = []
-                for n, ln in enumerate(lines[1:]):
-                    if n < start:
-                        continue
-                    vals.append(json.dumps({
-                        f: _infer(v) for f, v in
-                        zip(fields, ln.split(sep))
-                    }))
-                    if resume_store is not None and (n + 1) % 1000 == 0:
-                        resume_store.put(rkey, n)
-                if resume_store is not None and len(lines) > 1:
-                    resume_store.put(rkey, len(lines) - 2)
-                if vals:
-                    yield pd.DataFrame({"value": vals})
+                idx.append(i)
+                vals.append(json.dumps({
+                    f: _infer(v) for f, v in zip(fields, ln.split(sep))
+                }))
+                if resume_store is not None and (n + 1) % 1000 == 0:
+                    resume_store.put(rkey, n)
+            if resume_store is not None and len(lines) > 1:
+                resume_store.put(rkey, len(lines) - 2)
+        return [idx, vals]
 
-    return prepared.mapInPandas(run, schema="value string")
+    return map_rows(prepared, kernel, ["__bucket", "__key", "__etag"],
+                    [("value", "string")], keep=[])
 
 
 def stage_s3_out(df: DataFrame, spec: dict, pctx) -> DataFrame:
@@ -813,7 +754,6 @@ def stage_s3_out(df: DataFrame, spec: dict, pctx) -> DataFrame:
     if store is None:
         raise ValueError("$s3Out needs pctx.object_store")
     ctx = ctx_for(df)
-    in_cols = list(df.columns)
     # accept both documented spellings ($bucket/$key appear in the docs
     # example, bucket/key in the prose)
     b_spec = spec.get("bucket", spec.get("$bucket"))
@@ -824,14 +764,13 @@ def stage_s3_out(df: DataFrame, spec: dict, pctx) -> DataFrame:
         "__doc": F.to_json(F.struct(*[F.col(c) for c in df.columns])),
     })
 
-    def run(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            for rec in pdf.to_dict("records"):
-                store.write(rec["__bucket"], rec["__key"],
-                            rec["__doc"].encode())
-            yield pdf[in_cols]
+    def kernel(buckets, keys, docs):
+        for bucket, key, doc in zip(buckets, keys, docs):
+            store.write(bucket, key, doc.encode())
+        return []
 
-    return prepared.mapInPandas(run, schema=_schema_ddl(df))
+    return map_rows(prepared, kernel, ["__bucket", "__key", "__doc"], [],
+                    keep=df.columns)
 
 
 def stage_s3_transfer(df: DataFrame, spec: dict, pctx) -> DataFrame:
@@ -844,7 +783,6 @@ def stage_s3_transfer(df: DataFrame, spec: dict, pctx) -> DataFrame:
         raise ValueError("$s3Transfer needs pctx.object_store")
     as_field = spec["as"]
     ctx = ctx_for(df)
-    in_cols = list(df.columns)
     prepared = df.withColumns({
         "__url": compile_expr(spec["url"], ctx).cast("string"),
         "__bucket": compile_expr(spec["bucket"], ctx).cast("string"),
@@ -852,37 +790,25 @@ def stage_s3_transfer(df: DataFrame, spec: dict, pctx) -> DataFrame:
         "__headers": _expr_json(spec["headers"], df)
         if "headers" in spec else F.lit(None).cast("string"),
     })
-    out_schema = _schema_ddl(
-        df, f"`{as_field}` string, httpError {_HTTP_ERROR_T}")
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def transfer(url, bucket, key, headers_js):
+        """(object URL, httpError) of one GET + PUT."""
+        try:
+            resp = transport("GET", url, _unwrap(headers_js) or {}, None)
+            if resp.status >= 400:
+                return None, {"statusCode": resp.status, "body": resp.body}
+            store.write(bucket, key, (resp.body or "").encode())
+            return store.url(bucket, key), None
+        except Exception as e:
+            return None, {"statusCode": -1, "body": str(e)}
 
-        for pdf in batches:
-            out = []
-            for rec in pdf.to_dict("records"):
-                headers = _unwrap(rec.pop("__headers")) or {}
-                url, bucket, key = (rec.pop("__url"), rec.pop("__bucket"),
-                                    rec.pop("__key"))
-                r = dict(rec)
-                try:
-                    resp = transport("GET", url, headers, None)
-                    if resp.status < 400:
-                        store.write(bucket, key, (resp.body or "").encode())
-                        r[as_field] = store.url(bucket, key)
-                        r["httpError"] = None
-                    else:
-                        r[as_field] = None
-                        r["httpError"] = {"statusCode": resp.status,
-                                          "body": resp.body}
-                except Exception as e:
-                    r[as_field] = None
-                    r["httpError"] = {"statusCode": -1, "body": str(e)}
-                out.append(r)
-            yield pd.DataFrame(out, columns=in_cols + [as_field,
-                                                       "httpError"])
+    def kernel(*cols):
+        return zip(*(transfer(*args) for args in zip(*cols)))
 
-    return prepared.mapInPandas(run, schema=out_schema)
+    return map_rows(prepared, kernel,
+                    ["__url", "__bucket", "__key", "__headers"],
+                    [(as_field, "string"), ("httpError", _HTTP_ERROR_T)],
+                    keep=df.columns)
 
 
 def stage_s3_attachments(df: DataFrame, spec: dict, pctx) -> DataFrame:
@@ -894,53 +820,46 @@ def stage_s3_attachments(df: DataFrame, spec: dict, pctx) -> DataFrame:
     if store is None:
         raise ValueError("$s3Attachments needs pctx.object_store")
     ctx = ctx_for(df)
-    in_cols = list(df.columns)
     prepared = df.withColumns({
         "__url": compile_expr(spec["url"], ctx).cast("string"),
         "__atts": _expr_json(spec["attachments"], df),
         "__headers": _expr_json(spec["headers"], df)
         if "headers" in spec else F.lit(None).cast("string"),
     })
-    out_schema = _schema_ddl(df, f"httpError {_HTTP_ERROR_T}")
+    boundary = "pjs-boundary"
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def post(url, atts_js, headers_js):
+        """httpError of one multipart POST (None on success)."""
+        atts = _unwrap(atts_js) or []
+        headers = _unwrap(headers_js) or {}
+        parts = []
+        try:
+            for att in atts:
+                data = store.read(att["bucket"], att["key"])
+                mime_headers = {
+                    k: v for k, v in att.items()
+                    if k not in ("bucket", "key")
+                }
+                mime_headers["Content-Length"] = str(len(data))
+                mime_headers["Content-Transfer-Encoding"] = "binary"
+                head = "".join(f"{k}: {v}\r\n"
+                               for k, v in mime_headers.items())
+                parts.append(
+                    f"--{boundary}\r\n{head}\r\n".encode() + data
+                    + b"\r\n")
+            body = b"".join(parts) + f"--{boundary}--\r\n".encode()
+            headers.setdefault(
+                "Content-Type", f"multipart/mixed; boundary={boundary}")
+            # hand the transport raw bytes — binary attachments
+            # must not pass through a str encode/decode cycle
+            resp = transport("POST", url, headers, body)
+            return None if resp.status < 400 else {
+                "statusCode": resp.status, "body": resp.body}
+        except Exception as e:
+            return {"statusCode": -1, "body": str(e)}
 
-        boundary = "pjs-boundary"
-        for pdf in batches:
-            out = []
-            for rec in pdf.to_dict("records"):
-                atts = _unwrap(rec.pop("__atts")) or []
-                headers = _unwrap(rec.pop("__headers")) or {}
-                url = rec.pop("__url")
-                parts = []
-                r = dict(rec)
-                try:
-                    for att in atts:
-                        data = store.read(att["bucket"], att["key"])
-                        mime_headers = {
-                            k: v for k, v in att.items()
-                            if k not in ("bucket", "key")
-                        }
-                        mime_headers["Content-Length"] = str(len(data))
-                        mime_headers["Content-Transfer-Encoding"] = "binary"
-                        head = "".join(f"{k}: {v}\r\n"
-                                       for k, v in mime_headers.items())
-                        parts.append(
-                            f"--{boundary}\r\n{head}\r\n".encode() + data
-                            + b"\r\n")
-                    body = b"".join(parts) + f"--{boundary}--\r\n".encode()
-                    headers.setdefault(
-                        "Content-Type",
-                        f"multipart/mixed; boundary={boundary}")
-                    # hand the transport raw bytes — binary attachments
-                    # must not pass through a str encode/decode cycle
-                    resp = transport("POST", url, headers, body)
-                    r["httpError"] = None if resp.status < 400 else {
-                        "statusCode": resp.status, "body": resp.body}
-                except Exception as e:
-                    r["httpError"] = {"statusCode": -1, "body": str(e)}
-                out.append(r)
-            yield pd.DataFrame(out, columns=in_cols + ["httpError"])
+    def kernel(*cols):
+        return [[post(*args) for args in zip(*cols)]]
 
-    return prepared.mapInPandas(run, schema=out_schema)
+    return map_rows(prepared, kernel, ["__url", "__atts", "__headers"],
+                    [("httpError", _HTTP_ERROR_T)], keep=df.columns)

@@ -1,5 +1,6 @@
-"""Package-wide checks: every public name a module exports resolves, and
-the pandas UDFs use one idiom (typed ``pandas_udf``)."""
+"""Package-wide checks: every public name a module exports resolves, the
+pandas UDFs use one idiom (typed ``pandas_udf``), and per-row Python maps
+use one helper (``map_rows``)."""
 
 import importlib
 import pathlib
@@ -27,3 +28,11 @@ def test_no_deprecated_pandas_udf_type():
     offenders = [str(p.relative_to(ROOT)) for p in sorted(ROOT.rglob("*.py"))
                  if "PandasUDFType" in p.read_text(encoding="utf-8")]
     assert offenders == []
+
+
+def test_per_row_maps_go_through_map_rows():
+    # one Python-kernel idiom for per-row maps (functions/rows.map_rows);
+    # similarity's per-partition partial sums are not a per-row map
+    offenders = [str(p.relative_to(ROOT)) for p in sorted(ROOT.rglob("*.py"))
+                 if ".mapInPandas(" in p.read_text(encoding="utf-8")]
+    assert offenders == ["functions/similarity.py"]

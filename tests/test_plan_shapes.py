@@ -474,7 +474,7 @@ class TestRound7PlanShapes:
         union-of-four-legs re-derivation, and no checkpoint barrier
         (ExistingRDD) is needed to get there."""
         plan = _plan(spark, "curation_funnel")
-        assert plan.count("MapInPandas") == 2, plan.count("MapInPandas")
+        assert plan.count("MapInArrow") == 2, plan.count("MapInArrow")
         assert "Union" not in plan
         assert "ExistingRDD" not in plan
         assert "CartesianProduct" not in plan
@@ -642,7 +642,7 @@ class TestRound11PlanShapes:
         assert re.search(r"id#\d+L? < id_r#\d+", plan)
         # the fingerprint map appears once per join side (re-read),
         # never once per band
-        n_maps = len(re.findall(r"^\(\d+\) MapInPandas", plan,
+        n_maps = len(re.findall(r"^\(\d+\) MapInArrow", plan,
                                 re.MULTILINE))
         assert 1 <= n_maps <= 2, n_maps
         # integer ids pack to a LONG key: the delimited string path
@@ -677,13 +677,11 @@ class TestRound12PlanShapes:
         exchanges = re.findall(r"^\(\d+\) Exchange", plan,
                                re.MULTILINE)
         assert len(exchanges) == 1, plan[:2000]
-        # r13: the demux is an Arrow-native flat-map (MapInArrow),
-        # the extraction stays MapInPandas — still exactly two
+        # the demux and the extraction are Arrow maps — exactly two
         # Python maps above the one test-assembly exchange
-        maps = len(re.findall(r"^\(\d+\) MapIn(?:Pandas|Arrow)", plan,
+        maps = len(re.findall(r"^\(\d+\) MapInArrow", plan,
                               re.MULTILINE))
         assert maps == 2, maps
-        assert re.search(r"^\(\d+\) MapInArrow", plan, re.MULTILINE)
 
     def test_sitemap_urls_flatmap_shape(self, spark):
         """The sitemap demux itself is a stateless Arrow flat-map:
@@ -708,13 +706,13 @@ class TestRound12PlanShapes:
         (a few rows per host) BROADCASTS onto the URL stream — no
         shuffle of the frontier, no cartesian, and the match itself
         is native regexp_like + max_by (no Python in the decision
-        path: exactly one MapInPandas, the robots PARSE)."""
+        path: exactly one MapInArrow, the robots PARSE)."""
         import re
 
         plan = _plan(spark, "robots_filter")
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoop" not in plan
         assert re.search(r"BroadcastHashJoin", plan)
-        maps = len(re.findall(r"^\(\d+\) MapInPandas", plan,
+        maps = len(re.findall(r"^\(\d+\) MapInArrow", plan,
                               re.MULTILINE))
         assert maps == 1, maps
