@@ -440,6 +440,13 @@ def incremental_dedup(
     new_sig = minhash_index(new_docs, text_col, id_col,
                             num_hashes, bands, k)
     if {"sh", "bks"}.issubset(set(index.columns)):
+        bks = index.schema["bks"].dataType.simpleString()
+        if bks != "array<bigint>":
+            raise ValueError(
+                f"dedup index column bks is {bks}, "
+                "not array<bigint>: an index persisted before band keys "
+                "became 64-bit hashes matches nothing; rebuild it with "
+                "minhash_index")
         idx_sig = index.select(
             F.col("id") if "id" in index.columns
             else F.col(id_col).alias("id"), "sh", "bks")
@@ -609,8 +616,9 @@ def _word_ngrams_hashed_vec(n: int):
     per-byte cost IS the 100 TB cost; the r12 profile measured the
     string-building + per-gram md5 version at 2.4 MB/s single-thread,
     70% in gram-string assembly and one md5 call per gram): hash each
-    DISTINCT WORD once (md5 top-64, memoized across the task — corpus
-    vocabulary is orders of magnitude smaller than the gram stream),
+    DISTINCT WORD once per Arrow batch (md5 top-64, memoized in a
+    dictionary rebuilt for every batch — a batch's vocabulary is much
+    smaller than its gram stream),
     then combine the n word hashes per gram with a vectorized
     multiply-xor polynomial + splitmix64 finalizer in numpy and dedup
     with np.unique.  No gram strings are ever built.  ~4x the

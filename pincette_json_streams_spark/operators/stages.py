@@ -1271,10 +1271,6 @@ def _stage_trace(df, spec, pctx):
     return df
 
 
-def _stage_noop(df, spec, pctx):
-    return df
-
-
 def _stage_probe(df, spec, pctx):
     # $probe (docs:413-466): per-minute throughput counters produced to
     # a topic (streaming/effects.py stage_probe); the topic-less form

@@ -4,55 +4,9 @@ Graphviz topology graphs from an application spec."""
 
 from __future__ import annotations
 
-import json
-from typing import Any
+from pincette_json_streams_spark.plans.spec import validate_application
 
 __all__ = ["to_markdown", "to_dot"]
-
-_SOURCES = ("fromTopic", "fromStream", "fromCollection")
-
-
-def _part_sources(part: dict) -> list[tuple[str, str]]:
-    """-> [(kind, name)] of everything the part consumes."""
-    out = []
-    for key in _SOURCES:
-        if key in part:
-            out.append((key, part[key]))
-    for key, single in (("fromTopics", "fromTopic"),
-                        ("fromStreams", "fromStream"),
-                        ("fromCollections", "fromCollection")):
-        for name in part.get(key, []):
-            out.append((single, name))
-    for side in ("left", "right"):
-        s = part.get(side)
-        if isinstance(s, dict):
-            for key in _SOURCES:
-                if key in s:
-                    out.append((key, s[key]))
-    if part.get("type") == "aggregate":
-        out.append(("fromTopic", f"{_agg_name(part)}-command"))
-    return out
-
-
-def _part_sinks(part: dict) -> list[tuple[str, str]]:
-    out = []
-    if "toTopic" in part:
-        out.append(("toTopic", part["toTopic"]))
-    if "toCollection" in part:
-        out.append(("toCollection", part["toCollection"]))
-    if part.get("type") == "aggregate":
-        base = _agg_name(part)
-        for purpose in ("aggregate", "event", "reply"):
-            out.append(("toTopic", f"{base}-{purpose}"))
-    return out
-
-
-def _agg_name(part: dict) -> str:
-    return part.get("aggregateType", part.get("name", "aggregate"))
-
-
-def _part_name(part: dict) -> str:
-    return part.get("name") or _agg_name(part)
 
 
 def to_markdown(spec: dict) -> str:
@@ -67,17 +21,18 @@ def to_markdown(spec: dict) -> str:
     lines.append("\n## Parts\n")
     lines.append("| name | type | consumes | produces |")
     lines.append("|---|---|---|---|")
-    for part in spec.get("parts", []):
-        consumes = ", ".join(f"`{n}`" for _, n in _part_sources(part))
-        produces = ", ".join(f"`{n}`" for _, n in _part_sinks(part))
+    topology = validate_application(spec)
+    for w in topology:
+        consumes = ", ".join(f"`{n}`" for _, n in w.reads)
+        produces = ", ".join(f"`{n}`" for _, n in w.sinks)
         lines.append(
-            f"| {_part_name(part)} | {part.get('type')} "
+            f"| {w.name} | {w.part['type']} "
             f"| {consumes or '—'} | {produces or '—'} |"
         )
-    for part in spec.get("parts", []):
-        pipeline = part.get("pipeline")
+    for w in topology:
+        pipeline = w.part.get("pipeline")
         if pipeline:
-            lines.append(f"\n### {_part_name(part)}\n")
+            lines.append(f"\n### {w.name}\n")
             stages = [next(iter(s)) if isinstance(s, dict) else str(s)
                       for s in pipeline]
             lines.append("Pipeline: " + " → ".join(
@@ -95,24 +50,23 @@ def to_dot(spec: dict) -> str:
         node = f"ext_{n}"
         if node not in seen_ext:
             seen_ext.add(node)
-            shape = "cylinder" if "Collection" in kind else "cds"
+            shape = "cylinder" if kind == "collection" else "cds"
             lines.append(f'  "{node}" [label="{n}", shape={shape}];')
         return node
 
-    for part in spec.get("parts", []):
-        pname = _part_name(part)
+    topology = validate_application(spec)
+    producer = {s: w.name for w in topology for s in w.streams}
+    for w in topology:
         lines.append(
-            f'  "part_{pname}" [label="{pname}\\n({part.get("type")})", '
+            f'  "part_{w.name}" [label="{w.name}\\n({w.part["type"]})", '
             f"shape=box];"
         )
-    for part in spec.get("parts", []):
-        pname = f"part_{_part_name(part)}"
-        for kind, n in _part_sources(part):
-            if kind == "fromStream":
-                lines.append(f'  "part_{n}" -> "{pname}";')
-            else:
-                lines.append(f'  "{ext(kind, n)}" -> "{pname}";')
-        for kind, n in _part_sinks(part):
-            lines.append(f'  "{pname}" -> "{ext(kind, n)}";')
+    for w in topology:
+        node = f"part_{w.name}"
+        for kind, n in w.reads:
+            src = f"part_{producer[n]}" if kind == "stream" else ext(kind, n)
+            lines.append(f'  "{src}" -> "{node}";')
+        for kind, n in w.sinks:
+            lines.append(f'  "{node}" -> "{ext(kind, n)}";')
     lines.append("}")
     return "\n".join(lines) + "\n"

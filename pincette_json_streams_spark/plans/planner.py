@@ -3,7 +3,11 @@
 The reference interprets the spec per message with a reactive-streams
 Processor chain (App.java:758-791 — SURVEY.md §3.2).  Here each part
 compiles to a DataFrame lineage over a *source catalog*; Catalyst owns the
-physical plan.  The same compiled parts run:
+physical plan.  What each part reads and writes is decided once, by
+`plans.spec.validate_application`, which returns the parts in dependency
+order; each part compiles exactly once, in that order, so a part may name
+a later part's stream.  The same compiled parts and the same sink set
+(`run_batch`) run:
 
   - batch  — catalog maps topic/collection names to static DataFrames
     (parquet/Delta); `run_batch` returns the sink outputs.  This is the
@@ -20,7 +24,8 @@ bounded data joins exactly; streaming adds watermarks per the window.
 
 from __future__ import annotations
 
-from typing import Any, Optional
+from functools import reduce
+from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -33,6 +38,7 @@ from pincette_json_streams_spark.operators.stages import (
 )
 from pincette_json_streams_spark.plans.spec import (
     SpecError,
+    Wiring,
     validate_application,
 )
 
@@ -48,7 +54,9 @@ class Application:
         catalog: dict[str, DataFrame],
         pctx: Optional[PipelineContext] = None,
     ):
-        validate_application(spec)  # Validate.java runs on every load
+        # Validate.java runs on every load; the wiring lists every part
+        # after the producers of the streams it reads
+        self.topology: list[Wiring] = validate_application(spec)
         self.spec = spec
         self.catalog = dict(catalog)
         self.pctx = pctx or PipelineContext(catalog=self.catalog)
@@ -56,97 +64,62 @@ class Application:
             self.pctx.app_name = spec.get("application")
         self.streams: dict[str, DataFrame] = {}
         self.sinks: dict[str, DataFrame] = {}
-        # the purpose streams of the aggregate parts (also in ``streams``)
-        self.aggregates: dict[str, DataFrame] = {}
-        self._compile()
+        for wiring in self.topology:
+            self._compile_part(wiring)
 
-    # -- sources -----------------------------------------------------------
-    def _source(self, part: dict) -> DataFrame:
-        if "fromTopic" in part:
-            return self._topic(part["fromTopic"])
-        if "fromCollection" in part:
-            df = self._topic(part["fromCollection"])
-            # collection sources make _id the message key as a string
-            # (docs/streams.md supported-fields table)
-            if "_id" in df.columns:
-                df = df.withColumn("_id", F.col("_id").cast("string"))
-            return df
-        if "fromStream" in part:
-            name = part["fromStream"]
-            if name not in self.streams:
-                raise SpecError(f"stream {name!r} not yet compiled")
+    def _read(self, kind: str, name: str) -> DataFrame:
+        if kind == "stream":
             return self.streams[name]
-        raise SpecError(f"part has no source: {part}")
-
-    def _topic(self, name: str) -> DataFrame:
         if name not in self.catalog:
             raise SpecError(f"source {name!r} not in catalog")
-        return self.catalog[name]
+        df = self.catalog[name]
+        if kind == "collection" and "_id" in df.columns:
+            # collection sources make _id the message key as a string
+            # (docs/streams.md supported-fields table)
+            df = df.withColumn("_id", F.col("_id").cast("string"))
+        return df
 
     # -- compilation ---------------------------------------------------------
-    def _compile(self) -> None:
-        parts = list(self.spec["parts"])
-        pending = parts
-        # parts can reference later parts by stream name: fixpoint ordering
-        for _ in range(len(parts) + 1):
-            still: list[tuple[dict, SpecError]] = []
-            for part in pending:
-                try:
-                    self._compile_part(part)
-                except SpecError as e:
-                    still.append((part, e))
-            if not still:
-                break
-            if len(still) == len(pending):
-                raise SpecError(
-                    "unresolvable part references: " + "; ".join(
-                        f"{p.get('name')!r}: {e}" for p, e in still)
-                )
-            pending = [p for p, _ in still]
-
-    def _compile_part(self, part: dict) -> None:
-        t = part["type"]
-        if t == "stream":
-            out = compile_pipeline(
-                self._source(part), part.get("pipeline", []), self.pctx
-            )
-        elif t == "merge":
-            out = self._compile_merge(part)
-        elif t == "join":
-            out = self._compile_join(part)
-        elif t == "aggregate":
+    def _compile_part(self, wiring: Wiring) -> None:
+        part, t = wiring.part, wiring.part["type"]
+        sources = [self._read(kind, name) for kind, name in wiring.reads]
+        if t == "aggregate":
             from pincette_json_streams_spark.streaming.aggregate import (
                 compile_aggregate,
             )
-            outs = compile_aggregate(part, self)
-            self.aggregates.update(outs)
-            self.streams.update(outs)
-            return
+            outs = compile_aggregate(wiring, sources[0], self.pctx)
         else:
-            raise SpecError(f"unknown part type {t}")
-        name = part["name"]
-        # tracesTopic behavior (docs/telemetry.md:54): a configured
-        # trace producer gets one event trace per correlated message
-        # at the part output, with the reference's subpart naming
-        # (`<part>.out` for streams, `<part>.merged` for merges;
-        # join inputs are traced inside _compile_join as
-        # `<part>.left.in`/`<part>.right.in`).  Aggregate parts emit
-        # their own event stream and are not wrapped here.
-        from pincette_json_streams_spark.streaming.effects import (
-            emit_event_traces,
-        )
-        if t in ("stream", "merge"):
-            suffix = ".out" if t == "stream" else ".merged"
-            out = emit_event_traces(out, f"{name}{suffix}", self.pctx,
-                                    part=name)
-        self.streams[name] = out
-        if "toTopic" in part:
-            df = out
-            if part.get("toString"):
+            if t == "stream":
+                out = compile_pipeline(
+                    sources[0], part.get("pipeline", []), self.pctx)
+            elif t == "merge":
+                out = reduce(lambda a, b: a.unionByName(
+                    b, allowMissingColumns=True), sources)
+            else:
+                out = self._compile_join(wiring.name, part, *sources)
+            # tracesTopic behavior (docs/telemetry.md:54): a configured
+            # trace producer gets one event trace per correlated message
+            # at the part output, with the reference's subpart naming
+            # (`<part>.out` for streams, `<part>.merged` for merges;
+            # join inputs are traced inside _compile_join as
+            # `<part>.left.in`/`<part>.right.in`).  Aggregate parts emit
+            # their own event stream and are not wrapped here.
+            if t in ("stream", "merge"):
+                from pincette_json_streams_spark.streaming.effects import (
+                    emit_event_traces,
+                )
+                suffix = ".out" if t == "stream" else ".merged"
+                out = emit_event_traces(out, f"{wiring.name}{suffix}",
+                                        self.pctx, part=wiring.name)
+            outs = {wiring.name: out}
+        self.streams.update(outs)
+        for kind, name in wiring.sinks:
+            # an aggregate sinks each purpose stream under its own name;
+            # any other part sinks its one output stream
+            df = outs[name] if name in outs else outs[wiring.name]
+            if kind == "topic" and part.get("toString"):
                 df = df.select(F.to_json(F.struct("*")).alias("value"))
-            self._add_sink(part["toTopic"], df)
-        if "toCollection" in part:
-            self._add_sink(part["toCollection"], out)
+            self._add_sink(name, df)
 
     def _add_sink(self, name: str, df: DataFrame) -> None:
         # several parts may produce to the same topic (reference app3:
@@ -155,41 +128,19 @@ class Application:
         self.sinks[name] = df if prev is None else \
             prev.unionByName(df, allowMissingColumns=True)
 
-    def _compile_merge(self, part: dict) -> DataFrame:
-        sources: list[DataFrame] = []
-        for key, single in (
-            ("fromTopics", "fromTopic"),
-            ("fromStreams", "fromStream"),
-            ("fromCollections", "fromCollection"),
-        ):
-            for name in part.get(key, []):
-                sources.append(self._source({single: name, "type": "stream"}))
-        if not sources:
-            raise SpecError(
-                f"merge part {part.get('name')!r} has no sources "
-                "(fromTopics/fromStreams/fromCollections)"
-            )
-        out = sources[0]
-        for s in sources[1:]:
-            out = out.unionByName(s, allowMissingColumns=True)
-        return out
-
-    def _compile_join(self, part: dict) -> DataFrame:
-        left_spec, right_spec = part["left"], part["right"]
-        left = self._source(left_spec)
-        right = self._source(right_spec)
+    def _compile_join(self, pname: str, part: dict, left: DataFrame,
+                      right: DataFrame) -> DataFrame:
         # reference trace subparts <part>.left.in / <part>.right.in
         # (docs/telemetry.md metrics-attribute table)
         from pincette_json_streams_spark.streaming.effects import (
             emit_event_traces,
         )
-        pname = part.get("name", "join")
         left = emit_event_traces(left, f"{pname}.left.in", self.pctx,
                                  part=pname)
         right = emit_event_traces(right, f"{pname}.right.in", self.pctx,
                                   part=pname)
-        lkey = compile_expr(left_spec["on"], ctx_for(left))
-        rkey = compile_expr(right_spec["on"], ctx_for(right))
+        lkey = compile_expr(part["left"]["on"], ctx_for(left))
+        rkey = compile_expr(part["right"]["on"], ctx_for(right))
         window_ms = part.get("window")
         streaming = left.isStreaming or right.isStreaming
         l = left.select(
@@ -249,8 +200,10 @@ class Application:
         return self.streams[name]
 
     def run_batch(self) -> dict[str, DataFrame]:
-        """-> {sink name: DataFrame} for toTopic/toCollection sinks, plus
-        $out/$merge targets captured during stage compilation."""
+        """-> {sink name: DataFrame}: every part's sinks (toTopic,
+        toCollection and an aggregate's five purpose streams) plus the
+        $out/$merge targets captured during stage compilation.  A stream
+        runs the same set (``streaming.runtime.StreamingApp``)."""
         out = dict(self.pctx.outputs)
         out.update(self.sinks)
         return out

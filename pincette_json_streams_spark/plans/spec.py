@@ -14,13 +14,14 @@ from __future__ import annotations
 import json
 import os
 import re
+from dataclasses import dataclass
 from pathlib import Path
 from typing import Any
 
 import yaml
 
 __all__ = ["load_application", "load_applications", "substitute_parameters",
-           "validate_application", "SpecError"]
+           "validate_application", "SpecError", "Wiring", "PURPOSES"]
 
 
 class SpecError(ValueError):
@@ -270,65 +271,133 @@ def _inline_reducer_scripts(spec: dict, base: Path) -> None:
 
 
 # --------------------------------------------------------------------------
-# validation (Validate.java:141-289)
+# validation and wiring (Validate.java:141-289; App.java:532-549)
 # --------------------------------------------------------------------------
 
 _PART_TYPES = {"stream", "merge", "join", "aggregate"}
-_SOURCES = ("fromTopic", "fromStream", "fromCollection")
+# the part-wiring keys, by the kind of thing they name; no other module
+# reads them
+_FROM = {"topic": "fromTopic", "stream": "fromStream",
+         "collection": "fromCollection"}
+_FROM_LIST = {"topic": "fromTopics", "stream": "fromStreams",
+              "collection": "fromCollections"}
+_TO = {"topic": "toTopic", "collection": "toCollection"}
+# an aggregate part's purpose streams (docs/state.md:97-127)
+PURPOSES = ("aggregate", "command", "event", "event-full", "reply")
 
 
-def validate_application(app: dict) -> None:
+@dataclass(frozen=True)
+class Wiring:
+    """What one part reads and writes.
+
+    ``reads`` are (kind, name) pairs, kind one of topic/stream/collection,
+    in source order (a join's left side first).  ``streams`` are the
+    named streams the part produces; ``sinks`` are (kind, name) pairs,
+    kind topic or collection.  For an aggregate part, ``aggregate`` is
+    its full type ``<app>-<type>``: the part reads the
+    ``<app>-<type>-command`` topic and produces and sinks one
+    ``<app>-<type>-<purpose>`` stream per purpose, in ``PURPOSES`` order
+    (App.java:532-549 ``addStreams``)."""
+
+    part: dict
+    name: str
+    reads: tuple[tuple[str, str], ...]
+    streams: tuple[str, ...]
+    sinks: tuple[tuple[str, str], ...]
+    aggregate: str | None = None
+
+
+def _single_source(p: dict) -> tuple[str, str] | None:
+    srcs = [(kind, p[key]) for kind, key in _FROM.items() if key in p]
+    return srcs[0] if len(srcs) == 1 else None
+
+
+def _wire(p: dict, application: str) -> Wiring:
+    t = p.get("type")
+    if t not in _PART_TYPES:
+        raise SpecError(f"part type must be one of {_PART_TYPES}: {p}")
+    if t == "aggregate":
+        agg_type = p.get("aggregateType", p.get("name"))
+        if not agg_type:
+            raise SpecError(f"aggregate part missing 'aggregateType': {p}")
+        full = agg_type if "-" in agg_type else \
+            f"{p.get('application') or application}-{agg_type}"
+        streams = tuple(f"{full}-{purpose}" for purpose in PURPOSES)
+        return Wiring(p, p.get("name") or agg_type,
+                      (("topic", f"{full}-command"),), streams,
+                      tuple(("topic", s) for s in streams), full)
+    if not p.get("name"):
+        raise SpecError(f"part missing 'name': {p}")
+    if t == "stream":
+        src = _single_source(p)
+        if src is None:
+            raise SpecError(
+                f"stream part needs exactly one of {tuple(_FROM.values())}: "
+                f"{p}")
+        reads = (src,)
+    elif t == "merge":
+        kinds = [kind for kind, key in _FROM_LIST.items() if key in p]
+        reads = tuple((kind, n) for kind in kinds
+                      for n in p[_FROM_LIST[kind]])
+        if len(kinds) != 1 or not reads:
+            raise SpecError(
+                f"merge part needs exactly one non-empty source list: {p}")
+    else:
+        reads = ()
+        for side in ("left", "right"):
+            s = p.get(side)
+            src = _single_source(s) if isinstance(s, dict) else None
+            if src is None or "on" not in s:
+                raise SpecError(
+                    f"join side {side!r} needs exactly one source and 'on'")
+            reads += (src,)
+    sinks = tuple((kind, p[key]) for kind, key in _TO.items() if key in p)
+    return Wiring(p, p["name"], reads, (p["name"],), sinks)
+
+
+def validate_application(app: dict) -> list[Wiring]:
+    """Check ``app`` and decide its wiring: one :class:`Wiring` per part,
+    each part after the producers of the streams it reads and in spec
+    order otherwise.  A malformed part, an unresolved stream reference
+    or a cycle of ``fromStream`` references raises ``SpecError``."""
     if "application" not in app:
         raise SpecError("missing 'application' field")
     parts = app.get("parts")
     if not isinstance(parts, list) or not parts:
         raise SpecError("missing or empty 'parts'")
-    names = set()
-    stream_names = set()
-    for p in parts:
-        t = p.get("type")
-        if t not in _PART_TYPES:
-            raise SpecError(f"part type must be one of {_PART_TYPES}: {p}")
-        name = p.get("name") or p.get("aggregateType")
-        if t != "aggregate" and not p.get("name"):
-            raise SpecError(f"part missing 'name': {p}")
-        if name in names:
-            raise SpecError(f"duplicate part name {name!r}")
-        names.add(name)
-        if t == "stream":
-            srcs = [s for s in _SOURCES if s in p]
-            if len(srcs) != 1:
-                raise SpecError(
-                    f"stream part needs exactly one of {_SOURCES}: {p}"
-                )
-            stream_names.add(p["name"])
-        elif t == "merge":
-            srcs = [s for s in
-                    ("fromTopics", "fromStreams", "fromCollections")
-                    if s in p]
-            if len(srcs) != 1:
-                raise SpecError(f"merge part needs exactly one source list")
-            stream_names.add(p["name"])
-        elif t == "join":
-            for side in ("left", "right"):
-                s = p.get(side)
-                if not s or "on" not in s or not any(
-                    k in s for k in _SOURCES
-                ):
-                    raise SpecError(
-                        f"join side {side!r} needs a source and 'on'"
-                    )
-            stream_names.add(p["name"])
+    wirings = [_wire(p, app["application"]) for p in parts]
+    names: set[str] = set()
+    producer: dict[str, Wiring] = {}
+    for w in wirings:
+        if w.name in names:
+            raise SpecError(f"duplicate part name {w.name!r}")
+        names.add(w.name)
+        for s in w.streams:
+            if s in producer:
+                raise SpecError(f"stream {s!r} produced by parts "
+                                f"{producer[s].name!r} and {w.name!r}")
+            producer[s] = w
     # stream references must resolve (Validate.java:102-121)
-    for p in parts:
-        refs = []
-        if "fromStream" in p:
-            refs.append(p["fromStream"])
-        if "fromStreams" in p:
-            refs.extend(p["fromStreams"])
-        for side in ("left", "right"):
-            if isinstance(p.get(side), dict) and "fromStream" in p[side]:
-                refs.append(p[side]["fromStream"])
-        for r in refs:
-            if r not in stream_names:
-                raise SpecError(f"unresolved stream reference {r!r}")
+    for w in wirings:
+        for kind, name in w.reads:
+            if kind == "stream" and name not in producer:
+                raise SpecError(f"unresolved stream reference {name!r}")
+
+    order: list[Wiring] = []
+    done: set[str] = set()
+
+    def visit(w: Wiring, path: list[str]) -> None:
+        if w.name in done:
+            return
+        if w.name in path:
+            cycle = path[path.index(w.name):] + [w.name]
+            raise SpecError("fromStream cycle: " + " -> ".join(cycle))
+        for kind, name in w.reads:
+            if kind == "stream":
+                visit(producer[name], path + [w.name])
+        done.add(w.name)
+        order.append(w)
+
+    for w in wirings:
+        visit(w, [])
+    return order

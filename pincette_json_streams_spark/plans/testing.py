@@ -171,11 +171,7 @@ def run_app_test(
         pctx.resolve_hrefs = _fixtures_use_hrefs(test_dir)
     outputs: dict[str, DataFrame] = {}
     for spec in specs:
-        app = Application(spec, catalog, pctx)
-        outputs.update(app.run_batch())
-        # aggregate purpose streams are addressable as sinks too
-        outputs.update({k: v for k, v in app.streams.items()
-                        if k not in outputs})
+        outputs.update(Application(spec, catalog, pctx).run_batch())
 
     diffs: dict[str, str] = {}
     for kind in ("topics", "collections"):

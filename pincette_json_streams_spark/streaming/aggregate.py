@@ -307,7 +307,6 @@ def attach_resolved_maps(
     return ordered.join(resolved, "__key", "left")
 
 
-PURPOSES = ("aggregate", "command", "event", "event-full", "reply")
 FOLD_SCHEMA = "purpose string, value string, _id string"
 
 
@@ -322,14 +321,15 @@ def fold_frame(recs: list[dict]):
     }, columns=["purpose", "value", "_id"])
 
 
-def compile_aggregate(part: dict, app) -> dict[str, DataFrame]:
-    """Compile an aggregate part over the `<app>-<type>-command` source,
-    batch or streaming alike.
+def compile_aggregate(wiring, source: DataFrame,
+                      pctx) -> dict[str, DataFrame]:
+    """Compile an aggregate part over ``source``, its
+    `<app>-<type>-command` topic, batch or streaming alike.
 
-    Returns one DataFrame per purpose stream, named
-    `<app>-<type>-{aggregate,command,event,event-full,reply}`
-    (docs/state.md:97-127).  Values are JSON strings (the schemaless
-    message payload); downstream pipelines parse what they need.
+    Returns one DataFrame per purpose stream, keyed by the stream names
+    of ``wiring`` (``plans.spec.Wiring``; docs/state.md:97-127).  Values
+    are JSON strings (the schemaless message payload); downstream
+    pipelines parse what they need.
 
     Both modes share everything but the fold operator (``applyInPandas``
     in batch, ``streaming.runtime.streaming_aggregate`` on a stream).
@@ -343,15 +343,9 @@ def compile_aggregate(part: dict, app) -> dict[str, DataFrame]:
     from pincette_json_streams_spark.operators.stages import (
         compile_pipeline,
     )
-    from pincette_json_streams_spark.plans.spec import SpecError
+    from pincette_json_streams_spark.plans.spec import PURPOSES, SpecError
 
-    app_name = part.get("application") or app.spec["application"]
-    agg_type = part.get("aggregateType", part.get("name"))
-    full = f"{app_name}-{agg_type}" if "-" not in agg_type else agg_type
-    cmd_topic = f"{full}-command"
-    source = app.catalog.get(cmd_topic)
-    if source is None:
-        raise KeyError(f"aggregate command topic {cmd_topic!r} not in catalog")
+    part, pname, full = wiring.part, wiring.name, wiring.aggregate
     streaming = source.isStreaming
 
     # jes href resolution (streaming/hrefs.py): batch joins against a
@@ -359,12 +353,12 @@ def compile_aggregate(part: dict, app) -> dict[str, DataFrame]:
     # stateful fold and reads each link through ``pctx.href_lookup``
     # instead (providing the lookup opts a streaming part in)
     resolve_hrefs = bool(part.get("resolveHrefs")) or bool(
-        getattr(app.pctx, "resolve_hrefs", False)
+        getattr(pctx, "resolve_hrefs", False)
     )
-    href_lookup = getattr(app.pctx, "href_lookup", None)
+    href_lookup = getattr(pctx, "href_lookup", None)
     if streaming and resolve_hrefs and href_lookup is None:
         raise SpecError(
-            f"aggregate part {part.get('name', agg_type)!r} resolves hrefs "
+            f"aggregate part {pname!r} resolves hrefs "
             "on a stream: set PipelineContext.href_lookup")
 
     reducer = None
@@ -388,7 +382,7 @@ def compile_aggregate(part: dict, app) -> dict[str, DataFrame]:
                     preprocessors[cname] = cspec["preprocessor"]
     if part.get("orderBy"):
         warnings.warn(
-            f"aggregate part {part.get('name', agg_type)!r}: orderBy is "
+            f"aggregate part {pname!r}: orderBy is "
             "ignored, commands fold in arrival order", stacklevel=2)
     # arrival is numbered ahead of the preprocessors, whose stages may
     # shuffle, and before any other operator: file metadata resolves only
@@ -401,9 +395,8 @@ def compile_aggregate(part: dict, app) -> dict[str, DataFrame]:
         from pincette_json_streams_spark.streaming.effects import (
             emit_event_traces,
         )
-        pname = part.get("name", agg_type)
         source = emit_event_traces(
-            source, f"{pname}.command", app.pctx, part=pname,
+            source, f"{pname}.command", pctx, part=pname,
             name_expr=F.concat(
                 F.lit(f"{pname}.command."),
                 F.coalesce(F.col("_command").cast("string"),
@@ -415,10 +408,10 @@ def compile_aggregate(part: dict, app) -> dict[str, DataFrame]:
     # with that command name (app35's put-deduplicate).  A command they
     # drop never reaches the fold, so it is not echoed as a command.
     if part.get("preprocessor"):
-        source = compile_pipeline(source, part["preprocessor"], app.pctx)
+        source = compile_pipeline(source, part["preprocessor"], pctx)
     for cname, pp in preprocessors.items():
         sub = compile_pipeline(
-            source.filter(F.col("_command") == cname), pp, app.pctx
+            source.filter(F.col("_command") == cname), pp, pctx
         )
         source = source.filter(
             (F.col("_command") != cname) | F.col("_command").isNull()
@@ -470,10 +463,9 @@ def compile_aggregate(part: dict, app) -> dict[str, DataFrame]:
     else:
         folded = _batch_fold(keyed, fold, full, resolve_hrefs)
     return {
-        f"{full}-{purpose}": folded.filter(
-            F.col("purpose") == purpose
-        ).select("_id", "value")
-        for purpose in PURPOSES
+        name: folded.filter(F.col("purpose") == purpose).select("_id",
+                                                                 "value")
+        for name, purpose in zip(wiring.streams, PURPOSES)
     }
 
 

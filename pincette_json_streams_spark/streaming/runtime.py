@@ -381,7 +381,8 @@ class StreamingApp:
     """Run an application's parts as streaming queries.
 
     ``catalog`` maps topic names to *streaming* DataFrames (kafka_source /
-    file_stream_catalog).  Each ``toTopic``/``toCollection`` sink becomes
+    file_stream_catalog).  Each sink of ``Application.run_batch`` —
+    toTopic, toCollection and an aggregate's purpose streams — becomes
     one streaming query via ``sink_factory(name, df) -> DataStreamWriter``
     (tests use memory sinks; production uses kafka_sink/foreachBatch-Delta).
     """
@@ -397,11 +398,10 @@ class StreamingApp:
 
         self.spark = spark
         self.pctx = pctx or PipelineContext(catalog=dict(catalog))
-        # the planner compiles identically on streaming DataFrames; an
-        # aggregate part's five purpose streams are sinks of their own
+        # the planner compiles identically on streaming DataFrames and
+        # returns the same sink set in both modes
         self.app = Application(spec, catalog, self.pctx)
         self.sinks = dict(self.app.run_batch())
-        self.sinks.update(self.app.aggregates)
         self.streams = dict(self.app.streams)
 
     def start(

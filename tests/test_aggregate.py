@@ -524,7 +524,7 @@ class TestBatchStreamingParity:
             topic: spark.read.schema(schema).format(fmt).load(d)})
         app = StreamingApp(spark, spec, {
             topic: spark.readStream.schema(schema).format(fmt).load(d)})
-        assert set(app.sinks) == set(batch.aggregates)
+        assert set(app.sinks) == set(batch.run_batch())
         run = tmp_path.name.replace("-", "_")
 
         def memory(name, df):
@@ -538,7 +538,7 @@ class TestBatchStreamingParity:
         def values(df):
             return sorted(r["value"] for r in df.collect())
 
-        return ({n: values(df) for n, df in batch.aggregates.items()},
+        return ({n: values(df) for n, df in batch.run_batch().items()},
                 {n: values(spark.table(f"{run}_{n.replace('-', '_')}"))
                  for n in app.sinks})
 
@@ -592,6 +592,30 @@ class TestBatchStreamingParity:
         states = sorted((json.loads(v) for v in out["shop-acct-aggregate"]),
                         key=lambda d: d["_seq"])
         assert [d["v"] for d in states] == list(range(100))
+
+    def test_one_sink_set(self, spark, tmp_path):
+        """Batch and streaming sink the same set: the aggregate's five
+        purpose streams and the toTopic of a part reading one of them."""
+        from pincette_json_streams_spark.streaming.runtime import (
+            StreamingApp,
+        )
+
+        spec = {"application": "shop", "parts": [
+            {"type": "stream", "name": "s", "toTopic": "out",
+             "fromStream": "shop-acct-event"},
+            {"type": "aggregate", "aggregateType": "acct"}]}
+        d = str(tmp_path / "commands")
+        spark.createDataFrame(self.PUTS[:1], self.PUT_SCHEMA) \
+            .write.parquet(d)
+        topic = "shop-acct-command"
+        batch = Application(spec, {
+            topic: spark.read.schema(self.PUT_SCHEMA).parquet(d)})
+        app = StreamingApp(spark, spec, {
+            topic: spark.readStream.schema(self.PUT_SCHEMA).parquet(d)})
+        assert set(app.sinks) == set(batch.run_batch()) == {
+            "out", *(f"shop-acct-{p}" for p in
+                     ("aggregate", "command", "event", "event-full",
+                      "reply"))}
 
     def test_order_by_is_ignored(self, spark, tmp_path):
         """``orderBy`` does not reorder: a stream cannot fold a command

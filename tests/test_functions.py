@@ -1558,6 +1558,21 @@ class TestIncrementalDedup:
         (row,) = incremental_dedup(batch, existing).collect()
         assert row["is_dup"] and row["dup_of"] == 1
 
+    def test_string_band_key_index_is_refused(self, spark):
+        """An index persisted with string band keys (the format before
+        64-bit band hashes) would match nothing: it is refused with a
+        rebuild hint instead."""
+        from pincette_json_streams_spark.functions.dedup import (
+            incremental_dedup, minhash_index,
+        )
+        docs = spark.createDataFrame(
+            [(1, "an old index built before the band keys were hashed")],
+            "doc_id long, text string")
+        old = minhash_index(docs).withColumn(
+            "bks", F.col("bks").cast("array<string>"))
+        with pytest.raises(ValueError, match="rebuild it with minhash_index"):
+            incremental_dedup(docs, old)
+
 
 class TestTokenDrift:
     def test_top_movers_and_finiteness(self, spark):

@@ -151,6 +151,30 @@ class TestCli:
         dot = capsys.readouterr().out
         assert 'digraph "routing"' in dot and '"part_zeroes"' in dot
 
+    def test_run_writes_aggregate_purposes(self, spark, tmp_path, capsys):
+        from pincette_json_streams_spark.__main__ import main
+
+        (tmp_path / "app.yaml").write_text(
+            "application: shop\n"
+            "parts:\n"
+            "  - type: aggregate\n"
+            "    aggregateType: order\n")
+        spark.createDataFrame(
+            [("o1", "put", 3, {"sub": "system"})],
+            "_id string, _command string, n int, _jwt map<string,string>",
+        ).write.parquet(str(tmp_path / "data" / "shop-order-command.parquet"))
+        assert main(["run", str(tmp_path / "app.yaml"),
+                     "--data", str(tmp_path / "data"),
+                     "--out", str(tmp_path / "out")]) == 0
+        printed = capsys.readouterr().out
+        for purpose in ("aggregate", "command", "event", "event-full",
+                        "reply"):
+            assert f"shop/shop-order-{purpose}: " in printed
+        (state,) = spark.read.parquet(
+            str(tmp_path / "out" / "shop" / "shop-order-aggregate")
+        ).collect()
+        assert json.loads(state["value"])["n"] == 3
+
 
 class TestRegistry:
     """list/delete/restart registry verbs (Delete.java, ListApps.java,

@@ -1,6 +1,6 @@
 """Package-wide checks: every public name a module exports resolves, the
-pandas UDFs use one idiom (typed ``pandas_udf``), and per-row Python maps
-use one helper (``map_rows``)."""
+pandas UDFs use one idiom (typed ``pandas_udf``), per-row Python maps
+use one helper (``map_rows``), and one module reads the part wiring."""
 
 import importlib
 import pathlib
@@ -36,3 +36,15 @@ def test_per_row_maps_go_through_map_rows():
     offenders = [str(p.relative_to(ROOT)) for p in sorted(ROOT.rglob("*.py"))
                  if ".mapInPandas(" in p.read_text(encoding="utf-8")]
     assert offenders == ["functions/similarity.py"]
+
+
+def test_part_wiring_keys_only_in_spec():
+    # what each part reads and writes is decided once, in plans/spec.py
+    # (validate_application); other modules use its Wiring
+    keys = ("fromTopic", "fromStream", "fromCollection", "fromTopics",
+            "fromStreams", "fromCollections", "toTopic", "toCollection")
+    offenders = sorted(
+        {str(p.relative_to(ROOT)) for p in ROOT.rglob("*.py")
+         for key in keys for q in "\"'"
+         if f"{q}{key}{q}" in p.read_text(encoding="utf-8")})
+    assert offenders == ["plans/spec.py"]

@@ -85,6 +85,29 @@ class TestValidation:
                  "parts": [{"type": "stream", "name": "a",
                             "fromStream": "ghost"}]})
 
+    def test_aggregate_purpose_stream_reference(self):
+        # an aggregate part produces its five <app>-<type>-<purpose>
+        # streams; a later part may read one of them by name
+        order = validate_application(
+            {"application": "shop",
+             "parts": [{"type": "stream", "name": "s",
+                        "fromStream": "shop-order-event"},
+                       {"type": "aggregate", "aggregateType": "order"}]})
+        assert [w.name for w in order] == ["order", "s"]
+        assert order[0].reads == (("topic", "shop-order-command"),)
+        assert order[0].streams == tuple(
+            f"shop-order-{p}" for p in
+            ("aggregate", "command", "event", "event-full", "reply"))
+
+    def test_stream_cycle(self):
+        with pytest.raises(SpecError, match="cycle: a -> b -> a"):
+            validate_application(
+                {"application": "x",
+                 "parts": [{"type": "stream", "name": "a",
+                            "fromStream": "b"},
+                           {"type": "stream", "name": "b",
+                            "fromStream": "a"}]})
+
     def test_duplicate_names(self):
         with pytest.raises(SpecError):
             validate_application(
@@ -122,6 +145,22 @@ class TestApplication:
             {"people": people},
         )
         assert app.run_batch()["out"].collect()[0]["n"] == 4
+
+    def test_reads_aggregate_purpose_stream(self, spark):
+        commands = spark.createDataFrame(
+            [("o1", "put", 3, {"sub": "system"}),
+             ("o2", "put", 4, {"sub": "system"})],
+            "_id string, _command string, n int, _jwt map<string,string>")
+        app = Application(
+            {"application": "shop", "parts": [
+                {"type": "stream", "name": "events", "toTopic": "out",
+                 "fromStream": "shop-order-event",
+                 "pipeline": [{"$count": "n"}]},
+                {"type": "aggregate", "aggregateType": "order"},
+            ]},
+            {"shop-order-command": commands},
+        )
+        assert app.run_batch()["out"].collect()[0]["n"] == 2
 
     def test_merge_part(self, spark, people):
         app = Application(
