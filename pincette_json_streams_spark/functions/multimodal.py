@@ -458,7 +458,6 @@ def audio_fingerprint(
     df: DataFrame,
     media_col: str = "media",
     out_col: str = "afp",
-    base64: bool = False,
 ) -> DataFrame:
     """REAL audio perceptual fingerprint for PCM WAV payloads: one
     int64 sketch lane per row (NULL for undecodable/empty), computed
@@ -471,21 +470,16 @@ def audio_fingerprint(
 
     Integer-exact by construction, so a SQL oracle replays the
     fingerprint bit-for-bit from the raw samples (driver query
-    ``audio_fingerprint``).  ``base64=True`` decodes a base64 string
-    column first (JSON-transported media).
+    ``audio_fingerprint``).
 
     Scale shape: per-row map over Arrow batches — zero shuffle; bytes
     never leave the executor."""
-    src = df.withColumn(
-        "__wav", F.unbase64(F.col(media_col))) if base64 else df
-    wav_col = "__wav" if base64 else media_col
-
     def kernel(wavs):
         samples = [_wav_mono16(b) for b in wavs]
         it = iter(_audio_fp_batch([x for x in samples if x is not None]))
         return [[None if x is None else next(it) for x in samples]]
 
-    return map_rows(src, kernel, [wav_col], [(out_col, "bigint")],
+    return map_rows(df, kernel, [media_col], [(out_col, "bigint")],
                     keep=df.columns)
 
 
@@ -501,7 +495,6 @@ def audio_fingerprint_windows(
     id_col: str = "clip_id",
     out_col: str = "afp",
     hop: int = _AFP_WINDOW // 2,
-    base64: bool = False,
 ) -> DataFrame:
     """Per-WINDOW audio perceptual fingerprints: one int64
     Haitsma-Kalker lane (the exact :func:`_audio_fp_int` math) per
@@ -535,10 +528,6 @@ def audio_fingerprint_windows(
     if hop <= 0:
         raise ValueError(f"audio_fingerprint_windows: hop={hop} "
                          "must be positive")
-    src = df.withColumn(
-        "__wav", F.unbase64(F.col(media_col))) if base64 else df
-    wav_col = "__wav" if base64 else media_col
-
     def kernel(wavs):
         index, idxs, windows = [], [], []
         for i, b in enumerate(wavs):
@@ -552,7 +541,7 @@ def audio_fingerprint_windows(
                 windows.append(x[j * hop:j * hop + _AFP_WINDOW])
         return [index, idxs, _audio_fp_batch(windows)]
 
-    return map_rows(src, kernel, [wav_col],
+    return map_rows(df, kernel, [media_col],
                     [("window_idx", "int"), (out_col, "bigint")],
                     keep=[id_col])
 

@@ -12,6 +12,8 @@
 
 from __future__ import annotations
 
+from typing import Sequence
+
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -442,7 +444,7 @@ def _checked_lane(c: str, lane_bits: int, op: str):
 def hamming_near_pairs(
     df: DataFrame,
     id_col: str = "vec_id",
-    lane_cols: "Sequence[str]" = ("sig_0", "sig_1"),
+    lane_cols: Sequence[str] = ("sig_0", "sig_1"),
     max_hamming: int = 7,
     band_bits: int = 8,
     lane_bits: int = 32,
@@ -529,7 +531,7 @@ def hamming_probe(
     index: DataFrame,
     id_col: str = "vec_id",
     index_id_col: str = "vec_id",
-    lane_cols: "Sequence[str]" = ("sig_0", "sig_1"),
+    lane_cols: Sequence[str] = ("sig_0", "sig_1"),
     max_hamming: int = 7,
     band_bits: int = 8,
     lane_bits: int = 32,

@@ -14,12 +14,27 @@ mode in streaming; $deduplicate maps to dropDuplicates[WithinWatermark]).
 
 Side-effect stages ($http, $s3*, $send, $delay, $log, $probe, $signJwt)
 live in ``pincette_json_streams_spark.streaming.effects``.
+
+The function-backed extension stages ($chunk ... $ivfProbe,
+docs/extension_stages.md) are one table, ``EXTENSIONS``: per stage its
+``functions/`` operators, the spec key -> parameter map, the key a
+scalar spec stands for, the base64 field and the batch-only reason.
+One handler binds every spec to its entry: unknown keys and missing
+required keys fail the build, omitted keys take the signature's
+default, given values are coerced by the default's type.  A stage with
+logic of its own (``run``) gets the bound spec and calls its functions
+through it.
 """
 
 from __future__ import annotations
 
+import functools
 import hashlib
+import importlib
+import inspect
 import json
+import types
+import typing
 from dataclasses import dataclass, field
 from typing import Any, Callable, Optional
 
@@ -35,7 +50,8 @@ from pincette_json_streams_spark.operators.expressions import (
 )
 from pincette_json_streams_spark.operators.match import compile_query
 
-__all__ = ["compile_pipeline", "PipelineContext", "STAGES"]
+__all__ = ["compile_pipeline", "PipelineContext", "STAGES", "EXTENSIONS",
+           "Extension"]
 
 
 @dataclass
@@ -1551,453 +1567,6 @@ def _stage_throttle(df, spec, pctx):
     return df.mapInArrow(pace, df.schema)
 
 
-def _stage_chunk_ext(df, spec, pctx):
-    # {"text": col, "size": n, "overlap": n} — context-window chunking
-    # (functions/text.py chunk_documents)
-    from pincette_json_streams_spark.functions.text import chunk_documents
-
-    spec = spec if isinstance(spec, dict) else {}
-    return chunk_documents(
-        df,
-        text_col=spec.get("text", "text"),
-        size=int(spec.get("size", 128)),
-        overlap=int(spec.get("overlap", 16)),
-    )
-
-
-def _stage_bpe_train_ext(df, spec, pctx):
-    """{"text": col, "merges": n, "maxWords": n, "_collection": name} —
-    BPE vocabulary induction (functions/bpe.py train_bpe).  The merge
-    table registers in the catalog as (rank, left, right) so later
-    parts ($bpeEncode or $lookup) can consume it; the stage passes the
-    input through unchanged, like $merge."""
-    _batch_only(df, "$bpeTrain", "global vocabulary induction")
-    from pincette_json_streams_spark.functions.bpe import (
-        train_bpe, word_frequencies,
-    )
-
-    spec = spec if isinstance(spec, dict) else {}
-    merges = train_bpe(
-        word_frequencies(df, text_col=spec.get("text", "text")),
-        n_merges=int(spec.get("merges", 256)),
-        max_words=int(spec.get("maxWords", 65536)),
-    )
-    table = df.sparkSession.createDataFrame(
-        [(i, a, b) for i, (a, b) in enumerate(merges)],
-        "rank long, left string, right string",
-    )
-    name = spec.get("_collection", "bpe_merges")
-    pctx.catalog[name] = table
-    pctx.outputs[name] = table
-    return df
-
-
-def _stage_bpe_encode_ext(df, spec, pctx):
-    """{"text": col, "as": out, "from": merge-collection} — apply a
-    trained merge table (functions/bpe.py bpe_encode).  The merge
-    table is read from the catalog ($bpeTrain's output or any
-    (rank, left, right) collection) with a bounded collect — merge
-    tables are vocabulary-sized by construction."""
-    from pincette_json_streams_spark.functions.bpe import bpe_encode
-
-    spec = spec if isinstance(spec, dict) else {}
-    src = pctx.collection(spec.get("from", "bpe_merges"))
-    merges = [
-        (r["left"], r["right"])
-        for r in src.orderBy("rank").collect()
-    ]
-    return bpe_encode(df, merges, text_col=spec.get("text", "text"),
-                      out_col=spec.get("as", "tokens"))
-
-
-def _stage_sessionize_ext(df, spec, pctx):
-    # {"by": col, "ts": col, "gap": n, "tiebreak": [cols], "as": name}
-    from pincette_json_streams_spark.functions.timeseries import sessionize
-
-    if df.isStreaming:
-        # running-sum windows don't exist on streams; the native
-        # session_window path has a different (windowed-agg) shape
-        raise UnsupportedExpression(
-            "$sessionize is batch-only; use "
-            "functions.timeseries.sessionize_stream for streams"
-        )
-    return sessionize(
-        df,
-        by=spec["by"],
-        ts=spec["ts"],
-        gap=int(spec["gap"]),
-        tiebreak=spec.get("tiebreak"),
-        out=spec.get("as", "session_id"),
-        bucket_span=spec.get("bucketSpan"),
-    )
-
-
-def _stage_asof_lookup_ext(df, spec, pctx):
-    # {"from": collection, "on": col, "by": col, "rightOn": col,
-    #  "rightBy": col, "as": field, "tiebreak": col} — backward as-of
-    # match against a catalog collection (functions/timeseries.py)
-    from pincette_json_streams_spark.functions.timeseries import asof_join
-
-    right = pctx.collection(spec["from"])
-    return asof_join(
-        df,
-        right,
-        on=spec["on"],
-        by=spec["by"],
-        right_on=spec.get("rightOn"),
-        right_by=spec.get("rightBy"),
-        as_field=spec.get("as", "matched"),
-        tiebreak=spec.get("tiebreak"),
-        bucket_span=spec.get("bucketSpan"),
-    )
-
-
-def _stage_scrub_pii_ext(df, spec, pctx):
-    # {"field": col} or {"field": col, "as": out} — typed-placeholder
-    # PII redaction (functions/text.py scrub_pii)
-    from pincette_json_streams_spark.functions.text import scrub_pii
-
-    field = spec.get("field", "text") if isinstance(spec, dict) else spec
-    out = spec.get("as", field) if isinstance(spec, dict) else field
-    return df.withColumn(out, scrub_pii(F.col(field)))
-
-
-def _stage_probe_media_ext(df, spec, pctx):
-    # {"field": binary col, "as": out} — REAL container-header probe
-    # (functions/multimodal.py probe_media)
-    from pincette_json_streams_spark.functions.multimodal import probe_media
-
-    spec = spec if isinstance(spec, dict) else {}
-    return probe_media(df, media_col=spec.get("field", "media"),
-                       out_col=spec.get("as", "probe"))
-
-
-def _stage_decode_audio_ext(df, spec, pctx):
-    # {"field": binary col, "as": out, "bins": n} — REAL PCM WAV decode
-    from pincette_json_streams_spark.functions.multimodal import (
-        decode_audio,
-    )
-
-    spec = spec if isinstance(spec, dict) else {}
-    return decode_audio(df, media_col=spec.get("field", "media"),
-                        out_col=spec.get("as", "audio"),
-                        waveform_bins=int(spec.get("bins", 64)))
-
-
-def _stage_decode_image_ext(df, spec, pctx):
-    # {"field": binary col, "as": out, "bins": n} — REAL PNG/BMP decode
-    from pincette_json_streams_spark.functions.multimodal import (
-        decode_image,
-    )
-
-    spec = spec if isinstance(spec, dict) else {}
-    return decode_image(df, media_col=spec.get("field", "media"),
-                        out_col=spec.get("as", "image"),
-                        hist_bins=int(spec.get("bins", 16)))
-
-
-def _stage_sitemap_urls_ext(df, spec, pctx):
-    # {"field": col?, "base64": bool?, "keep": [col]?} — explode
-    # sitemap documents (string XML or binary, plain or gzip) into
-    # one message per <url>/<sitemap> entry (functions/crawl.py
-    # sitemap_urls): kind/loc/lastmod/changefreq/priority columns;
-    # "sitemap"-kind rows are index entries the fetcher follows.
-    # Stateless Arrow flat-map like $warcRecords — streaming-legal,
-    # zero shuffle.
-    from pincette_json_streams_spark.functions.crawl import (
-        sitemap_urls,
-    )
-
-    spec = spec if isinstance(spec, dict) else {}
-    field = spec.get("field", "sitemap")
-    src = df
-    if bool(spec.get("base64", False)):
-        src = df.withColumn(field, F.unbase64(F.col(field)))
-    return sitemap_urls(src, xml_col=field,
-                        keep_cols=spec.get("keep"))
-
-
-def _stage_robots_filter_ext(df, spec, pctx):
-    # {"robots": collection, "field": col?, "agent": str?,
-    #  "as": col?, "keep": bool?} — RFC 9309 politeness gate
-    # (functions/robots.py): the static "robots" collection holds
-    # (host, robots) rows; robots_rules parses them once (per-row
-    # Arrow map) and url_allowed decides each message's URL with
-    # native expressions only (broadcast host equi-join +
-    # regexp_like + max_by longest-match; Allow wins ties; no rules
-    # = allowed).  Default drops disallowed messages; "keep": true
-    # instead annotates every message with the boolean ("as", default
-    # "allowed").  Stream-static join of the same class as
-    # $hammingProbe — streaming-legal.
-    from pincette_json_streams_spark.functions.robots import (
-        robots_rules, url_allowed,
-    )
-
-    rules = robots_rules(
-        pctx.collection(spec["robots"]),
-        robots_col=spec.get("robotsField", "robots"),
-        host_col=spec.get("hostField", "host"))
-    out_col = spec.get("as", "allowed")
-    res = url_allowed(
-        df, rules,
-        url_col=spec.get("field", "url"),
-        agent=str(spec.get("agent", "*")),
-        out_col=out_col)
-    if bool(spec.get("keep", False)):
-        return res
-    return res.filter(F.col(out_col)).drop(out_col)
-
-
-def _stage_text_features_ext(df, spec, pctx):
-    # {"field": col?, "as": col?, "score": col?, "lang": col?} — one
-    # Arrow pass attaches the integer text-signal struct
-    # (functions/text.py with_text_features: n_words, n_distinct,
-    # n_punct, stripped_len, has_stop, ... + the marker-word language
-    # guess).  "score" / "lang" additionally surface the 6dp quality
-    # score (quality_score_from — same float math as quality_score,
-    # signals computed once) and the language as top-level fields.
-    # Until round 12 this family was Python-API-only — a YAML-first
-    # user could not reach the text-quality tier at all.
-    from pincette_json_streams_spark.functions.text import (
-        quality_score_from, with_text_features,
-    )
-
-    spec = spec if isinstance(spec, dict) else {}
-    field = spec.get("field", "text")
-    out = spec.get("as", "tf")
-    res = with_text_features(df, text_col=field, out=out)
-    if spec.get("lang"):
-        res = res.withColumn(spec["lang"], F.col(out)["lang"])
-    if spec.get("score"):
-        res = res.withColumn(
-            spec["score"],
-            quality_score_from(F.col(out),
-                               F.length(F.col(field))))
-    return res
-
-
-def _stage_quality_gate_ext(df, spec, pctx):
-    # {"field": col?, "num": n?, "den": n?, "tf": col?} — keep only
-    # messages whose quality score is >= num/den (default 4/5),
-    # evaluated in EXACT int64 arithmetic (functions/text.py
-    # quality_gate_from) so the surviving set is bit-identical across
-    # engines — the set-defining form, vs the reported 6dp float
-    # score.  "tf" reuses an existing $textFeatures struct; without
-    # it the signals are computed here and dropped again.
-    from pincette_json_streams_spark.functions.text import (
-        quality_gate_from, with_text_features,
-    )
-
-    spec = spec if isinstance(spec, dict) else {}
-    field = spec.get("field", "text")
-    num = int(spec.get("num", 4))
-    den = int(spec.get("den", 5))
-    tf = spec.get("tf")
-    if tf:
-        return df.filter(
-            quality_gate_from(F.col(tf), F.length(F.col(field)),
-                              num=num, den=den))
-    tmp = "__qgate_tf"
-    res = with_text_features(df, text_col=field, out=tmp)
-    return res.filter(
-        quality_gate_from(F.col(tmp), F.length(F.col(field)),
-                          num=num, den=den)).drop(tmp)
-
-
-def _stage_warc_records_ext(df, spec, pctx):
-    # {"field": col?, "base64": bool?, "keep": [col]?} — demux WARC
-    # archive files (one binary per message, plain or gzip) into one
-    # message per record (functions/crawl.py warc_records): WARC
-    # headers as columns, HTTP envelope split off for
-    # request/response records (http_status + body payload).
-    # Stateless Arrow flat-map: streaming-legal, zero shuffle; at
-    # crawl scale parallelism is the archive-file grain (~1 GB
-    # segments, millions of them).  base64: true decodes
-    # JSON-transported archive bytes first.
-    from pincette_json_streams_spark.functions.crawl import (
-        warc_records,
-    )
-
-    field = spec.get("field", "warc") if isinstance(spec, dict) else \
-        "warc"
-    spec = spec if isinstance(spec, dict) else {}
-    src = df
-    if bool(spec.get("base64", False)):
-        src = df.withColumn(field, F.unbase64(F.col(field)))
-    return warc_records(src, data_col=field,
-                        keep_cols=spec.get("keep"))
-
-
-def _stage_html_extract_ext(df, spec, pctx):
-    # {"field": col?, "title": col?, "text": col?, "blocks": col?,
-    #  "minBlockChars": n?, "maxLinkDensity": f?,
-    #  "contentType": col?} — boilerplate
-    # removal (functions/crawl.py html_extract): page <title>, the
-    # main text (Arc90-style block filter: script/style subtrees
-    # dropped, short or link-dominated blocks dropped) and the
-    # surviving block count appended to every message.  Binary
-    # payloads (e.g. straight from $warcRecords) decode through the
-    # charset ladder: BOM, the HTTP Content-Type charset param (the
-    # "contentType" column — defaults to $warcRecords'
-    # http_content_type when present), <meta charset>, UTF-8,
-    # latin-1 (which never fails: a mojibake page still flows to the
-    # dedup/quality gates, a dropped page does not).
-    # Per-row Arrow map: streaming-legal, zero shuffle.
-    from pincette_json_streams_spark.functions.crawl import (
-        html_extract,
-    )
-
-    spec = spec if isinstance(spec, dict) else {}
-    field = spec.get("field", "html")
-    # binary payloads decode through the charset ladder (BOM ->
-    # Content-Type charset -> <meta charset> -> UTF-8 -> latin-1);
-    # straight after $warcRecords the HTTP header column rides along
-    # automatically unless overridden
-    ct = spec.get("contentType",
-                  "http_content_type"
-                  if "http_content_type" in df.columns else None)
-    return html_extract(
-        df, html_col=field,
-        title_col=spec.get("title", "title"),
-        text_col=spec.get("text", "text"),
-        blocks_col=spec.get("blocks", "n_blocks"),
-        min_block_chars=int(spec.get("minBlockChars", 15)),
-        max_link_density=float(spec.get("maxLinkDensity", 0.4)),
-        content_type_col=ct,
-    )
-
-
-def _stage_audio_fingerprint_ext(df, spec, pctx):
-    # {"field": col, "as": col?, "base64": bool?} — REAL PCM WAV
-    # perceptual fingerprint (functions/multimodal.py
-    # audio_fingerprint): one int64 Haitsma-Kalker-style sketch lane
-    # per row from integer dyadic-lag band energies; feeds
-    # $hammingPairs with laneBits: 64 unchanged, putting audio on the
-    # same near-dup index family as text/embeddings/images.  Per-row
-    # Arrow map, zero shuffle; base64: true decodes JSON-transported
-    # media first.
-    from pincette_json_streams_spark.functions.multimodal import (
-        audio_fingerprint,
-    )
-
-    return audio_fingerprint(
-        df,
-        media_col=spec.get("field", "media"),
-        out_col=spec.get("as", "afp"),
-        base64=bool(spec.get("base64", False)),
-    )
-
-
-def _stage_audio_fingerprint_windows_ext(df, spec, pctx):
-    # {"field": col, "id": col?, "as": col?, "hop": n?,
-    #  "base64": bool?} — per-WINDOW audio fingerprints
-    # (functions/multimodal.py audio_fingerprint_windows): one int64
-    # HK lane per full 1024-sample window at the given hop, the audio
-    # twin of $videoFingerprint's per-frame lanes.  Unlike the single
-    # whole-clip $audioFingerprint lane, window lanes survive time
-    # shifts and clipping; feed $audioNearDups or $hammingPairs /
-    # $hammingProbe with laneBits: 64.
-    from pincette_json_streams_spark.functions.multimodal import (
-        audio_fingerprint_windows,
-    )
-
-    return audio_fingerprint_windows(
-        df,
-        media_col=spec.get("field", "media"),
-        id_col=spec.get("id", "clip_id"),
-        out_col=spec.get("as", "afp"),
-        hop=int(spec.get("hop", 512)),
-        base64=bool(spec.get("base64", False)),
-    )
-
-
-def _stage_audio_near_dups_ext(df, spec, pctx):
-    # {"field": col, "id": col?, "hop": n?, "maxHamming": n?,
-    #  "minWindows": n?, "base64": bool?} — shift/clip-robust audio
-    # near-duplicates on the shared banded Hamming index
-    # (functions/multimodal.py audio_near_pairs): per-window HK lanes
-    # -> band-collision pairs -> per-clip rollup, the audio twin of
-    # $videoNearDups.
-    _batch_only(df, "$audioNearDups", "corpus-wide window self-join")
-    from pincette_json_streams_spark.functions.multimodal import (
-        audio_near_pairs,
-    )
-
-    field = spec.get("field", "media")
-    if spec.get("base64"):
-        df = df.withColumn(field, F.unbase64(F.col(field)))
-    return audio_near_pairs(
-        df,
-        media_col=field,
-        id_col=spec.get("id", "clip_id"),
-        hop=int(spec.get("hop", 512)),
-        max_hamming=int(spec.get("maxHamming", 7)),
-        min_matching_windows=int(spec.get("minWindows", 1)),
-    )
-
-
-def _stage_video_fingerprint_ext(df, spec, pctx):
-    # {"field": col, "id": col?, "frames": n?, "base64": bool?} —
-    # per-frame perceptual fingerprints (functions/multimodal.py
-    # video_fingerprint): sample_frames ∘ dHash, one row per sampled
-    # frame with a 64-bit lane for $hammingPairs/$hammingProbe
-    # (laneBits: 64).  REAL for MJPEG-AVI / animated GIF / registered
-    # codecs; other containers emit no rows (honest absence).
-    from pincette_json_streams_spark.functions.multimodal import (
-        video_fingerprint,
-    )
-
-    field = spec.get("field", "media")
-    if spec.get("base64"):
-        df = df.withColumn(field, F.unbase64(F.col(field)))
-    return video_fingerprint(
-        df,
-        media_col=field,
-        id_col=spec.get("id", "vid"),
-        n_frames=int(spec.get("frames", 8)),
-    )
-
-
-def _stage_video_near_dups_ext(df, spec, pctx):
-    # {"field": col, "id": col?, "frames": n?, "maxHamming": n?,
-    #  "minFrames": n?, "base64": bool?} — video near-duplicates on
-    # the shared banded Hamming index (functions/multimodal.py
-    # video_near_pairs): frame dHash lanes -> band-collision pairs ->
-    # per-video-pair rollup.
-    _batch_only(df, "$videoNearDups", "corpus-wide frame self-join")
-    from pincette_json_streams_spark.functions.multimodal import (
-        video_near_pairs,
-    )
-
-    field = spec.get("field", "media")
-    if spec.get("base64"):
-        df = df.withColumn(field, F.unbase64(F.col(field)))
-    return video_near_pairs(
-        df,
-        media_col=field,
-        id_col=spec.get("id", "vid"),
-        n_frames=int(spec.get("frames", 8)),
-        max_hamming=int(spec.get("maxHamming", 7)),
-        min_matching_frames=int(spec.get("minFrames", 1)),
-    )
-
-
-def _stage_resize_image_ext(df, spec, pctx):
-    # {"field": binary col, "as": out, "width": n, "height": n} —
-    # REAL integer box-resize + dHash perceptual fingerprint over the
-    # real decoders (functions/multimodal.py resize_image); the dhash
-    # long feeds XOR/popcount Hamming near-dup directly
-    from pincette_json_streams_spark.functions.multimodal import (
-        resize_image,
-    )
-
-    spec = spec if isinstance(spec, dict) else {}
-    return resize_image(df, media_col=spec.get("field", "media"),
-                        out_col=spec.get("as", "thumb"),
-                        width=int(spec.get("width", 8)),
-                        height=int(spec.get("height", 8)))
-
-
 def _batch_only(df, stage: str, why: str) -> None:
     # A clear spec-level error beats the AnalysisException Spark would
     # throw at sink start for an unstreamable plan.
@@ -2338,593 +1907,6 @@ def _stage_window_fields_ext(df, spec, pctx):
     return out
 
 
-def _stage_cdc_chunks_ext(df, spec, pctx):
-    # {"field": binary col, "id": col, "min": n, "avg": n, "max": n} —
-    # content-defined chunking (functions/multimodal.py cdc_chunks)
-    from pincette_json_streams_spark.functions.multimodal import (
-        cdc_chunks,
-    )
-
-    spec = spec if isinstance(spec, dict) else {}
-    return cdc_chunks(
-        df,
-        data_col=spec.get("field", "media"),
-        id_col=spec.get("id", "media_id"),
-        min_size=int(spec.get("min", 256)),
-        avg_size=int(spec.get("avg", 1024)),
-        max_size=int(spec.get("max", 4096)),
-    )
-
-
-def _stage_sample_frames_ext(df, spec, pctx):
-    # {"field": binary col, "as": out, "n": frames} — REAL for
-    # MJPEG-in-AVI (functions/multimodal.py sample_frames)
-    from pincette_json_streams_spark.functions.multimodal import (
-        sample_frames,
-    )
-
-    spec = spec if isinstance(spec, dict) else {}
-    return sample_frames(df, media_col=spec.get("field", "media"),
-                         out_col=spec.get("as", "frames"),
-                         n_frames=int(spec.get("n", 4)))
-
-
-def _stage_dedup_spans_ext(df, spec, pctx):
-    # {"text": col, "id": col, "width": n, "action": "mark"|"strip"} —
-    # exact-substring dedup (functions/text.py duplicate_spans /
-    # strip_duplicate_spans)
-    _batch_only(df, "$dedupSpans", "corpus-wide window counts")
-    from pincette_json_streams_spark.functions.text import (
-        duplicate_spans, strip_duplicate_spans,
-    )
-
-    spec = spec if isinstance(spec, dict) else {}
-    text = spec.get("text", "text")
-    id_col = spec.get("id", "doc_id")
-    width = int(spec.get("width", 8))
-    if spec.get("action", "mark") == "strip":
-        return strip_duplicate_spans(
-            df, text_col=text, id_col=id_col, width=width
-        )
-    return duplicate_spans(
-        df, text_col=text, id_col=id_col, width=width,
-        min_docs=int(spec.get("minDocs", 2)),
-    )
-
-
-def _stage_normalize_url_ext(df, spec, pctx):
-    # {"field": col, "as": out, "stripWww": bool, "dedup": bool,
-    #  "id": col} — URL canonicalization (+ optional keyed dedup)
-    from pincette_json_streams_spark.functions.web import (
-        normalize_url, url_dedup,
-    )
-
-    spec = spec if isinstance(spec, dict) else {"field": spec}
-    field = spec.get("field", "url")
-    if spec.get("dedup"):
-        return url_dedup(
-            df, url_col=field, id_col=spec.get("id", "doc_id"),
-            strip_www=bool(spec.get("stripWww", False)),
-        )
-    out = spec.get("as", "canonical_url")
-    return df.withColumn(
-        out,
-        normalize_url(
-            F.col(field), strip_www=bool(spec.get("stripWww", False))
-        ),
-    )
-
-
-def _stage_zorder_ext(df, spec, pctx):
-    # {"columns": [..], "bits": n, "partitions": n?} — Morton layout
-    # key (functions/layout.py); with "partitions" the stream is also
-    # range-clustered for the write
-    _batch_only(df, "$zorder", "write layout needs global stats")
-    from pincette_json_streams_spark.functions.layout import (
-        cluster_by_zorder, zorder_key,
-    )
-
-    cols = spec["columns"]
-    bits = int(spec.get("bits", 16))
-    if spec.get("partitions"):
-        return cluster_by_zorder(
-            df, cols, int(spec["partitions"]), bits=bits, keep_key=True
-        )
-    return zorder_key(df, cols, bits=bits)
-
-
-def _stage_weighted_sample_ext(df, spec, pctx):
-    # {"weight": col, "k": n, "by": col?, "id": col} — deterministic
-    # A-ES weighted sampling (functions/sampling.py)
-    _batch_only(df, "$weightedSample", "global top-k by sample key")
-    from pincette_json_streams_spark.functions.sampling import (
-        weighted_sample,
-    )
-
-    return weighted_sample(
-        df,
-        spec.get("weight", "weight"),
-        int(spec.get("k", 10)),
-        group_col=spec.get("by"),
-        id_col=spec.get("id", "doc_id"),
-        salt=spec.get("salt", "ws"),
-    )
-
-
-def _stage_near_dups_ext(df, spec, pctx):
-    # {"text": col, "id": col, "threshold": x, "numHashes": n,
-    #  "bands": n, "k": n, "verify": {"cap": n, "minSim": x}?} —
-    # MinHash-LSH near-dup pairs over the stream's documents, with an
-    # optional exact edit-distance precision stage (functions/dedup.py
-    # minhash_lsh_pairs + verify_pairs_editdist).  Returns (id_a, id_b,
-    # jaccard[, sim]).
-    _batch_only(df, "$nearDups", "corpus-wide LSH self-join")
-    from pincette_json_streams_spark.functions.dedup import (
-        minhash_lsh_pairs, verify_pairs_editdist,
-    )
-
-    text = spec.get("text", "text")
-    doc_id = spec.get("id", "doc_id")
-    pairs = minhash_lsh_pairs(
-        df, text_col=text, id_col=doc_id,
-        num_hashes=int(spec.get("numHashes", 32)),
-        bands=int(spec.get("bands", 8)),
-        k=int(spec.get("k", 9)),
-        threshold=float(spec.get("threshold", 0.5)),
-    )
-    v = spec.get("verify")
-    if not v:
-        return pairs
-    # jaccard rides through the verify melt/regroup so the expensive
-    # LSH self-join plan is evaluated exactly once (no re-join of pairs)
-    return verify_pairs_editdist(
-        pairs, df, text_col=text, id_col=doc_id,
-        cap=int(v.get("cap", 400)),
-        min_sim=float(v.get("minSim", 0.0)),
-        carry_cols=["jaccard"],
-    )
-
-
-def _stage_ewma_ext(df, spec, pctx):
-    # {"value": col, "by": col, "orderBy": [cols], "window": n,
-    #  "scale": n?} — integer-exact EWMA with half-life decay over a
-    # bounded trailing frame (functions/timeseries.py ewma_halflife)
-    _batch_only(df, "$ewma", "keyed window over an ordered frame")
-    from pincette_json_streams_spark.functions.timeseries import (
-        ewma_halflife,
-    )
-
-    return ewma_halflife(
-        df,
-        order_by=list(spec.get("orderBy", ["ts_nanos"])),
-        value_col=spec.get("value", "value"),
-        group_col=spec.get("by", "user_id"),
-        window=int(spec.get("window", 8)),
-        scale=int(spec.get("scale", 10 ** 6)),
-    )
-
-
-def _stage_prefix_jaccard_ext(df, spec, pctx):
-    # {"text": col, "id": col, "thresholdPct": n, "n": n} — EXACT
-    # Jaccard similarity join with prefix filtering (PPJoin family;
-    # functions/dedup.py prefix_filter_pairs).  The exact,
-    # zero-false-negative sibling of $nearDups.
-    _batch_only(df, "$prefixJaccard", "corpus-wide posting self-join")
-    from pincette_json_streams_spark.functions.dedup import (
-        prefix_filter_pairs,
-    )
-
-    return prefix_filter_pairs(
-        df,
-        text_col=spec.get("text", "text"),
-        id_col=spec.get("id", "doc_id"),
-        threshold_pct=int(spec.get("thresholdPct", 60)),
-        n=int(spec.get("n", 3)),
-    )
-
-
-def _stage_hard_negatives_ext(df, spec, pctx):
-    # {"vector": col, "id": col, "label": col, "k": n,
-    #  "queries": {"mod": m}?} — hard-negative mining
-    # (functions/similarity.py hard_negative_topk): per query, the
-    # top-k most-similar corpus vectors with a DIFFERENT label; the
-    # label filter rides the scoring join.  Batch-only: per-query
-    # rank window.
-    _batch_only(df, "$hardNegatives", "per-query rank window")
-    from pincette_json_streams_spark.functions.similarity import (
-        hard_negative_topk,
-    )
-
-    vec = spec.get("vector", "embedding")
-    idc = spec.get("id", "vec_id")
-    lab = spec.get("label", "label")
-    mod = int((spec.get("queries") or {}).get("mod", 100))
-    qs = df.filter(F.col(idc) % mod == 0).select(
-        F.col(idc).alias("query_id"), F.col(vec), F.col(lab))
-    return hard_negative_topk(df, qs, k=int(spec.get("k", 10)),
-                              vec_col=vec, id_col=idc, label_col=lab)
-
-
-def _stage_balanced_sample_ext(df, spec, pctx):
-    # {"by": col, "n": count, "key": col, "salt": s?} — exact-count
-    # class rebalancing (functions/sampling.py balanced_topn_sample):
-    # the n lowest-md5-ranked rows of every stratum survive.
-    # Batch-only: per-stratum rank window.
-    _batch_only(df, "$balancedSample", "per-stratum rank window")
-    from pincette_json_streams_spark.functions.sampling import (
-        balanced_topn_sample,
-    )
-
-    return balanced_topn_sample(
-        df,
-        strata_col=spec.get("by", "label"),
-        n_per_stratum=int(spec.get("n", 100)),
-        key_col=spec.get("key", "doc_id"),
-        salt=str(spec.get("salt", "")),
-    )
-
-
-def _stage_containment_ext(df, spec, pctx):
-    # {"text": col, "id": col, "thresholdPct": n, "n": n, "dfCap": n?}
-    # — exact n-gram CONTAINMENT join (functions/dedup.py
-    # containment_pairs): pairs where the smaller n-gram set is >= pct
-    # inside the other — the asymmetric sibling of
-    # $prefixJaccard/$nearDups that catches boilerplate wrappers and
-    # quoted passages symmetric Jaccard cannot see.  dfCap (the 100 TB
-    # skew guard): grams in more than dfCap distinct sets become
-    # corpus stopwords and candidate generation switches to the
-    # bounded in-array posting expansion — no posting self-join.
-    _batch_only(df, "$containment", "corpus-wide posting self-join")
-    from pincette_json_streams_spark.functions.dedup import (
-        containment_pairs,
-    )
-
-    df_cap = spec.get("dfCap")
-    return containment_pairs(
-        df,
-        text_col=spec.get("text", "text"),
-        id_col=spec.get("id", "doc_id"),
-        n=int(spec.get("n", 3)),
-        threshold_pct=int(spec.get("thresholdPct", 80)),
-        df_cap=int(df_cap) if df_cap is not None else None,
-    )
-
-
-def _stage_ngram_pairs_ext(df, spec, pctx):
-    # {"text": col, "id": col, "threshold": f, "n": n, "dfCap": n?}
-    # — exact n-gram JACCARD pairs (functions/dedup.py
-    # ngram_jaccard_pairs), the symmetric sibling of $containment.
-    # dfCap (the 100 TB skew guard) was Python-API-only until round
-    # 11: grams in more than dfCap distinct sets become corpus
-    # stopwords and candidate generation switches to the bounded
-    # in-array posting expansion — no posting self-join, pair output
-    # <= dfCap^2 per gram.  The reported value is the exact Jaccard
-    # over the capped gram universe.
-    _batch_only(df, "$ngramPairs", "corpus-wide posting self-join")
-    from pincette_json_streams_spark.functions.dedup import (
-        ngram_jaccard_pairs,
-    )
-
-    df_cap = spec.get("dfCap")
-    return ngram_jaccard_pairs(
-        df,
-        text_col=spec.get("text", "text"),
-        id_col=spec.get("id", "doc_id"),
-        n=int(spec.get("n", 3)),
-        threshold=float(spec.get("threshold", 0.2)),
-        df_cap=int(df_cap) if df_cap is not None else None,
-    )
-
-
-def _stage_robust_z_ext(df, spec, pctx):
-    # {"value": col, "by": col, "id": col, "scale": n?} — median/MAD
-    # robust z-scores (functions/profiling.py robust_zscores): the
-    # outlier gauge one corrupt spike cannot drag
-    _batch_only(df, "$robustZ", "group-wide rank medians")
-    from pincette_json_streams_spark.functions.profiling import (
-        robust_zscores,
-    )
-
-    return robust_zscores(
-        df,
-        value_col=spec.get("value", "value"),
-        group_col=spec.get("by", "event_type"),
-        id_col=spec.get("id", "event_id"),
-        scale=int(spec.get("scale", 10 ** 6)),
-    )
-
-
-def _stage_hdr_quantiles_ext(df, spec, pctx):
-    # {"value": col, "by": col?, "sigBits": n, "q": [..],
-    #  "_collection": name?} — HDR-histogram quantile sketch (the
-    # mergeable-quantile member of the sketch family; with _collection
-    # the SKETCH registers in the catalog for later hdr_merge)
-    _batch_only(df, "$hdrQuantiles", "window cum-sum over the sketch")
-    from pincette_json_streams_spark.functions.profiling import (
-        hdr_quantiles, hdr_sketch,
-    )
-
-    group = spec.get("by")
-    sketch = hdr_sketch(
-        df, spec.get("value", "value"), group_col=group,
-        sig_bits=int(spec.get("sigBits", 5)),
-    )
-    if isinstance(spec.get("_collection"), str):
-        pctx.catalog[spec["_collection"]] = sketch
-    qs = [float(x) for x in spec.get("q", [0.5, 0.9, 0.99])]
-    return hdr_quantiles(sketch, qs, group_col=group)
-
-
-def _stage_cms_sketch_ext(df, spec, pctx):
-    # {"field": col, "depth": n, "width": n, "_collection": name?} —
-    # count-min sketch build; with _collection the sketch registers in
-    # the catalog (mergeable state, same pattern as $group state)
-    from pincette_json_streams_spark.functions.profiling import (
-        cms_sketch,
-    )
-
-    sketch = cms_sketch(
-        df,
-        spec.get("field", "token"),
-        depth=int(spec.get("depth", 4)),
-        width=int(spec.get("width", 512)),
-    )
-    if isinstance(spec.get("_collection"), str):
-        pctx.catalog[spec["_collection"]] = sketch
-    return sketch
-
-
-def _stage_hll_sketch_ext(df, spec, pctx):
-    # {"value": col, "by": col?, "p": n, "_collection": name?} — HLL
-    # register table: the distinct-count sibling of $cmsSketch.  Max
-    # per (group, register) is a streaming-legal update-mode
-    # aggregation; registers merge later with hll_merge/hll_estimate
-    # (mergeable state, same pattern as the cms cells).
-    from pincette_json_streams_spark.functions.profiling import (
-        hll_sketch,
-    )
-
-    group = spec.get("by")
-    src = df
-    if group is None:
-        group = "__all"
-        src = df.withColumn("__all", F.lit("all"))
-    sketch = hll_sketch(src, group, spec.get("value", "value"),
-                        p=int(spec.get("p", 9)))
-    if isinstance(spec.get("_collection"), str):
-        pctx.catalog[spec["_collection"]] = sketch
-    return sketch
-
-
-def _stage_kmv_sketch_ext(df, spec, pctx):
-    # {"value": col, "by": col?, "k": n, "estimate": bool?,
-    #  "_collection": name?} — deterministic KMV distinct-count sketch
-    # (functions/profiling.py kmv_sketch): the k smallest md5 hashes
-    # per group, the mergeable/oracle-checkable cardinality state.
-    # Batch-only: the k-minimum selection is a rank window.  With
-    # estimate=true the stage emits (group, est_distinct, sketch_k)
-    # instead of the sketch rows; _collection always registers the
-    # sketch for later kmv_merge / kmv_overlap.
-    _batch_only(df, "$kmvSketch", "group-wide k-minimum rank window")
-    from pincette_json_streams_spark.functions.profiling import (
-        kmv_estimate, kmv_sketch,
-    )
-
-    group = spec.get("by")
-    src = df
-    if group is None:
-        group = "__all"
-        src = df.withColumn("__all", F.lit("all"))
-    k = int(spec.get("k", 64))
-    sketch = kmv_sketch(src, group, spec.get("value", "value"), k=k)
-    if isinstance(spec.get("_collection"), str):
-        pctx.catalog[spec["_collection"]] = sketch
-    if spec.get("estimate"):
-        return kmv_estimate(sketch, group, k=k)
-    return sketch
-
-
-def _stage_kmv_overlap_ext(df, spec, pctx):
-    # {"value": col, "by": col, "k": n} — pairwise set-operation
-    # estimates between every two groups (functions/profiling.py
-    # kmv_overlap, Beyer et al. SIGMOD 2007): estimated distinct
-    # union, intersection and Jaccard per (group_a < group_b) pair,
-    # from O(k) sketch state — the corpus-overlap question without a
-    # distinct-join over the raw stream.
-    _batch_only(df, "$kmvOverlap", "group-wide k-minimum rank window")
-    from pincette_json_streams_spark.functions.profiling import (
-        kmv_overlap, kmv_sketch,
-    )
-
-    group = spec.get("by", "lang")
-    k = int(spec.get("k", 64))
-    sketch = kmv_sketch(df, group, spec.get("value", "value"), k=k)
-    return kmv_overlap(sketch, group, k=k)
-
-
-def _stage_hamming_topk_ext(df, spec, pctx):
-    # {"vector": col, "id": col, "k": n, "queries": {"mod": m}?} —
-    # binary-sketch ANN (functions/similarity.py hamming_topk): sign
-    # lanes + XOR/popcount ranking, the memory-bound ANN path.  The
-    # query set is the id-mod slice (bounded, broadcast); batch-only:
-    # the per-query top-k is a rank window.
-    _batch_only(df, "$hammingTopk", "per-query rank window")
-    from pincette_json_streams_spark.functions.similarity import (
-        hamming_topk,
-    )
-
-    vec = spec.get("vector", "embedding")
-    idc = spec.get("id", "vec_id")
-    mod = int((spec.get("queries") or {}).get("mod", 100))
-    qs = df.filter(F.col(idc) % mod == 0).select(
-        F.col(idc).alias("query_id"), F.col(vec))
-    return hamming_topk(df, qs, k=int(spec.get("k", 10)),
-                        vec_col=vec, id_col=idc)
-
-
-def _stage_hamming_pairs_ext(df, spec, pctx):
-    # {"id": col, "lanes": [cols], "maxHamming": n, "bandBits": n?,
-    #  "laneBits": n?} — all-pairs Hamming near-duplicates over
-    # precomputed sketch lanes (functions/similarity.py
-    # hamming_near_pairs): band-collision candidates, exact
-    # XOR/popcount verify; zero false negatives for maxHamming <=
-    # n_bands - 1.  Works on sign-lane sketches AND image dHashes.
-    _batch_only(df, "$hammingPairs", "corpus-wide band self-join")
-    from pincette_json_streams_spark.functions.similarity import (
-        hamming_near_pairs,
-    )
-
-    lanes = spec.get("lanes", ["sig_0", "sig_1"])
-    if not isinstance(lanes, list) or not lanes:
-        raise UnsupportedExpression(
-            "$hammingPairs: 'lanes' must be a non-empty list of "
-            "sketch columns")
-    return hamming_near_pairs(
-        df, id_col=spec.get("id", "vec_id"), lane_cols=lanes,
-        max_hamming=int(spec.get("maxHamming", 7)),
-        band_bits=int(spec.get("bandBits", 8)),
-        lane_bits=int(spec.get("laneBits", 32)))
-
-
-def _stage_hamming_lsh_topk_ext(df, spec, pctx):
-    # {"vector": col, "id": col, "k": n, "bandBits": n?, "probeBits":
-    #  0|1?, "queries": {"mod": m}?} — sub-linear Hamming ANN
-    # (functions/similarity.py hamming_lsh_topk): byte-band LSH index
-    # over the sign-lane sketches, multi-probe 1-bit flips, candidates
-    # from the band equi-join against the broadcast probe set,
-    # XOR/popcount re-rank.  Batch-only: per-query top-k rank window.
-    _batch_only(df, "$hammingLshTopk", "per-query rank window")
-    from pincette_json_streams_spark.functions.similarity import (
-        hamming_lsh_topk,
-    )
-
-    vec = spec.get("vector", "embedding")
-    idc = spec.get("id", "vec_id")
-    mod = int((spec.get("queries") or {}).get("mod", 100))
-    qs = df.filter(F.col(idc) % mod == 0).select(
-        F.col(idc).alias("query_id"), F.col(vec))
-    return hamming_lsh_topk(
-        df, qs, k=int(spec.get("k", 10)),
-        band_bits=int(spec.get("bandBits", 8)),
-        probe_bits=int(spec.get("probeBits", 1)),
-        vec_col=vec, id_col=idc)
-
-
-def _stage_binary_signatures_ext(df, spec, pctx):
-    # {"vector": col, "id": col?, "laneBits": n?, "dims": n?} —
-    # sign-bit binary sketch of an embedding column
-    # (functions/similarity.py binary_signatures): one projection, no
-    # shuffle, no UDF — streaming-legal, which is what lets an
-    # embedding stream build its lanes in YAML before $hammingProbe.
-    # dims is REQUIRED on a streaming frame (inference needs a probe
-    # job batch mode runs at plan build).
-    from pincette_json_streams_spark.functions.similarity import (
-        binary_signatures,
-    )
-
-    dims = spec.get("dims")
-    if dims is None and df.isStreaming:
-        raise UnsupportedExpression(
-            "$binarySignatures: 'dims' is required on a streaming "
-            "input (width inference needs a batch probe job)")
-    return binary_signatures(
-        df,
-        vec_col=spec.get("vector", "embedding"),
-        id_col=spec.get("id", "vec_id"),
-        lane_bits=int(spec.get("laneBits", 32)),
-        dims=int(dims) if dims is not None else None,
-    )
-
-
-def _stage_hamming_probe_ext(df, spec, pctx):
-    # {"index": collection, "id": col?, "indexId": col?,
-    #  "lanes": [cols]?, "maxHamming": n?, "bandBits": n?,
-    #  "laneBits": n?} — STREAM-STATIC near-dup probe against the
-    # banded Hamming index (functions/similarity.py hamming_probe):
-    # the streaming face of $hammingPairs/$hammingLshTopk.  Each
-    # message's sketch lanes probe the static index collection's band
-    # postings via an equi-join; multi-band duplicates are removed by
-    # the first-colliding-band EXPRESSION (no aggregation, no state),
-    # so the stage is append-mode streaming-legal.  NOT _batch_only —
-    # that is the point.
-    from pincette_json_streams_spark.functions.similarity import (
-        hamming_probe,
-    )
-
-    lanes = spec.get("lanes", ["sig_0", "sig_1"])
-    if not isinstance(lanes, list) or not lanes:
-        raise UnsupportedExpression(
-            "$hammingProbe: 'lanes' must be a non-empty list of "
-            "sketch columns")
-    return hamming_probe(
-        df,
-        pctx.collection(spec["index"]),
-        id_col=spec.get("id", "vec_id"),
-        index_id_col=spec.get("indexId", spec.get("id", "vec_id")),
-        lane_cols=lanes,
-        max_hamming=int(spec.get("maxHamming", 7)),
-        band_bits=int(spec.get("bandBits", 8)),
-        lane_bits=int(spec.get("laneBits", 32)),
-    )
-
-
-def _stage_ivf_probe_ext(df, spec, pctx):
-    # {"index": collection, "centroids": collection,
-    #  "centroidVector": col?, "centroidId": col?, "vector": col?,
-    #  "indexVector": col?, "indexId": col?, "minCosine": x?,
-    #  "nprobe": n?} — STREAM-STATIC cosine radius lookup
-    # (functions/similarity.py ivf_probe), the dense sibling of
-    # $hammingProbe: probe rows assign to nprobe nearest centroids
-    # (broadcast Arrow map), candidates come from the equi-join on
-    # list id against the static index, exact rounded cosine filters.
-    # Zero state — streaming-legal.  The centroid collection is
-    # collected ORDERED BY centroidId at plan build (bounded: it is a
-    # centroid set, not a corpus).
-    from pincette_json_streams_spark.functions.similarity import (
-        ivf_probe,
-    )
-
-    cvec = spec.get("centroidVector", "embedding")
-    cid = spec.get("centroidId", "vec_id")
-    cents = [list(r[0]) for r in pctx.collection(spec["centroids"])
-             .orderBy(cid).select(cvec).collect()]
-    if not cents:
-        raise UnsupportedExpression(
-            "$ivfProbe: empty centroids collection "
-            f"{spec['centroids']!r}")
-    return ivf_probe(
-        df,
-        pctx.collection(spec["index"]),
-        cents,
-        min_cosine=float(spec.get("minCosine", 0.8)),
-        nprobe=int(spec.get("nprobe", 2)),
-        vec_col=spec.get("vector", "embedding"),
-        index_vec_col=spec.get("indexVector"),
-        index_id_col=spec.get("indexId", "vec_id"),
-    )
-
-
-def _stage_changepoints_ext(df, spec, pctx):
-    # {"by": col, "ts": col, "value": col, "id": col, "window": n,
-    #  "top": n} — sliding two-sample mean-shift changepoint scan
-    # (functions/timeseries.py mean_shift_changepoints); integer sum
-    # difference over full equal windows, one keyed exchange.
-    _batch_only(df, "$changepoints", "keyed window over ordered frames")
-    from pincette_json_streams_spark.functions.timeseries import (
-        mean_shift_changepoints,
-    )
-
-    return mean_shift_changepoints(
-        df,
-        by=spec.get("by", "event_type"),
-        ts=spec.get("ts", "ts_nanos"),
-        value_col=spec.get("value", "value"),
-        id_col=spec.get("id", "event_id"),
-        window=int(spec.get("window", 50)),
-        top=int(spec.get("top", 5)),
-    )
-
-
 def _stage_facet_ext(df, spec, pctx):
     """$facet batch extension (MongoDB shape): run several sub-pipelines
     over the SAME input and emit ONE row with an array column per facet.
@@ -3181,6 +2163,608 @@ def _stage_fill_ext(df, spec, pctx):
     return out
 
 
+# --------------------------------------------------------------------------
+# function-backed extension stages (docs/extension_stages.md)
+# --------------------------------------------------------------------------
+
+# an extra key without a default: the spec must give it
+_REQUIRED = object()
+
+_SCALARS = (int, float, bool, str)
+
+
+@dataclass(frozen=True)
+class Extension:
+    """One function-backed extension stage.
+
+    ``fns`` are ``"module.attribute"`` names under ``functions/``,
+    looked up when the stage compiles (the benchmark's tracer rebinds
+    those module attributes).  ``keys`` maps each spec key onto a
+    parameter of one of them (``"verify.cap"`` is ``cap`` inside a
+    ``verify`` object); the first function taking a parameter gives
+    its type and default.  ``defaults`` holds the stage's own default
+    only where it differs from that or the signature has none.
+    ``extra`` lists the keys the stage's ``run`` reads itself, with
+    their defaults.  ``scalar`` is the key a scalar spec stands for;
+    ``base64`` is the parameter naming the binary field that
+    ``base64: true`` decodes in place first; ``batch_only`` says why
+    the stage cannot run on a stream.  Without ``run`` the stage is the
+    first function applied to the input."""
+
+    fns: tuple[str, ...]
+    keys: dict[str, str]
+    defaults: dict[str, Any] = field(default_factory=dict)
+    extra: dict[str, Any] = field(default_factory=dict)
+    scalar: Optional[str] = None
+    base64: Optional[str] = None
+    batch_only: Optional[str] = None
+    run: Optional[Callable] = None
+
+    @property
+    def accepted(self) -> set[str]:
+        """Every spec key the stage takes, nested ones dotted."""
+        keys = {*self.keys, *self.extra} | ({"base64"} if self.base64
+                                            else set())
+        return keys | {k.split(".")[0] for k in keys}
+
+
+@functools.lru_cache(maxsize=None)
+def _parameters(fn: Callable) -> dict[str, tuple[inspect.Parameter, Any]]:
+    """Each parameter of ``fn`` with the scalar type its annotation
+    names (``int``, ``Optional[int]``, ``int | None``), else None."""
+    hints = typing.get_type_hints(fn)
+    out = {}
+    for p in inspect.signature(fn).parameters.values():
+        hint = hints.get(p.name)
+        if typing.get_origin(hint) in (typing.Union, types.UnionType):
+            args = [a for a in typing.get_args(hint) if a is not type(None)]
+            hint = args[0] if len(args) == 1 else None
+        out[p.name] = (p, hint if hint in _SCALARS else None)
+    return out
+
+
+def _coerce(stage: str, key: str, value: Any, kind) -> Any:
+    if value is None or kind is None:
+        return value
+    if kind in (list, tuple):
+        if isinstance(value, list) and value:
+            return value
+        raise UnsupportedExpression(
+            f"{stage}: {key!r} must be a non-empty list, not {value!r}")
+    if not isinstance(value, (dict, list)):
+        try:
+            return kind(value)
+        except (TypeError, ValueError):
+            pass
+    raise UnsupportedExpression(
+        f"{stage}: {key!r} must be {kind.__name__}, not {value!r}")
+
+
+class _Bound:
+    """A stage spec checked against its ``Extension``: ``call`` runs
+    one of the stage's functions with the parameters the spec gave,
+    ``arg`` reads a parameter's value and ``s[key]`` an extra key's."""
+
+    def __init__(self, stage: str, ext: Extension, spec: Any):
+        if spec is None:
+            spec = {}
+        elif not isinstance(spec, dict):
+            if ext.scalar is None:
+                raise UnsupportedExpression(
+                    f"{stage} takes an object spec, not {spec!r}")
+            spec = {ext.scalar: spec}
+        accepted = ext.accepted
+        given = {}
+        for key, value in spec.items():
+            given[key] = value
+            if isinstance(key, str) and value is not None and any(
+                    k.startswith(f"{key}.") for k in accepted):
+                if not isinstance(value, dict):
+                    raise UnsupportedExpression(
+                        f"{stage}: {key!r} takes an object, not {value!r}")
+                given.update({f"{key}.{k}": v for k, v in value.items()})
+        for key in given:
+            if key not in accepted:
+                raise UnsupportedExpression(
+                    f"{stage}: unknown key {key!r} (accepted: "
+                    f"{', '.join(sorted(accepted))})")
+        self.stage, self.ext, self.given = stage, ext, given
+        # attribute -> (function, its parameters), in table order
+        self.fns = {}
+        for name in ext.fns:
+            mod, attr = name.rsplit(".", 1)
+            fn = getattr(importlib.import_module(
+                f"pincette_json_streams_spark.functions.{mod}"), attr)
+            self.fns[attr] = (fn, _parameters(fn))
+        self.args = {}
+        for key, param in ext.keys.items():
+            if key in given:
+                p, kind = self._param(param)
+                default = ext.defaults.get(param, p.default)
+                if default is not None and default is not p.empty:
+                    kind = type(default)
+                self.args[param] = _coerce(stage, key, given[key], kind)
+
+    def _param(self, param: str) -> tuple[inspect.Parameter, Any]:
+        return next(params[param] for _, params in self.fns.values()
+                    if param in params)
+
+    def __getitem__(self, key: str) -> Any:
+        default = self.ext.extra.get(key, False if key == "base64" else None)
+        if key not in self.given:
+            if default is _REQUIRED:
+                raise UnsupportedExpression(
+                    f"{self.stage}: missing required key {key!r}")
+            return default
+        if default is _REQUIRED or default is None:
+            return self.given[key]
+        return _coerce(self.stage, key, self.given[key], type(default))
+
+    def arg(self, param: str) -> Any:
+        if param in self.args:
+            return self.args[param]
+        if param in self.ext.defaults:
+            return self.ext.defaults[param]
+        default = self._param(param)[0].default
+        return None if default is inspect.Parameter.empty else default
+
+    def call(self, name: str, *args, **kw) -> Any:
+        fn, params = self.fns[name]
+        var_kw = any(p.kind is p.VAR_KEYWORD for p, _ in params.values())
+        taken = set(list(params)[:len(args)])
+        given = {p: v for p, v in {**self.ext.defaults, **self.args}.items()
+                 if (p in params or var_kw) and p not in taken}
+        given.update(kw)
+        for p, _ in params.values():
+            if p.default is p.empty and p.name not in given \
+                    and p.name not in taken \
+                    and p.kind in (p.POSITIONAL_OR_KEYWORD, p.KEYWORD_ONLY):
+                key = next((k for k, v in self.ext.keys.items()
+                            if v == p.name), p.name)
+                raise UnsupportedExpression(
+                    f"{self.stage}: missing required key {key!r}")
+        return fn(*args, **given)
+
+
+def _run_extension(stage: str, df: DataFrame, spec: Any,
+                   pctx: PipelineContext) -> DataFrame:
+    ext = EXTENSIONS[stage]
+    s = _Bound(stage, ext, spec)
+    if ext.batch_only:
+        _batch_only(df, stage, ext.batch_only)
+    if ext.base64 and s["base64"]:
+        f = s.arg(ext.base64)
+        df = df.withColumn(f, F.unbase64(F.col(f)))
+    if ext.run is not None:
+        return ext.run(df, s, pctx)
+    return s.call(ext.fns[0].rsplit(".", 1)[1], df)
+
+
+def _register(pctx: PipelineContext, name: Any, table: DataFrame):
+    """Register a stage's state table under ``_collection``."""
+    if isinstance(name, str):
+        pctx.catalog[name] = table
+    return table
+
+
+def _grouped(df: DataFrame, s: _Bound) -> tuple[DataFrame, str]:
+    """The sketch group column: ``by``, else one ``__all`` group."""
+    group = s.arg("group_col")
+    if group is None:
+        return df.withColumn("__all", F.lit("all")), "__all"
+    return df, group
+
+
+def _query_set(df: DataFrame, s: _Bound, *cols: str) -> DataFrame:
+    """The probe set of the ANN stages: the rows whose id is 0 modulo
+    ``queries.mod`` (bounded, broadcast)."""
+    idc = s.arg("id_col")
+    return df.filter(F.col(idc) % s["queries.mod"] == 0).select(
+        F.col(idc).alias("query_id"), F.col(s.arg("vec_col")),
+        *map(F.col, cols))
+
+
+def _bpe_train(df, s, pctx):
+    # the merge table registers as (rank, left, right) for $bpeEncode
+    # or $lookup; the input passes through unchanged, like $merge
+    merges = s.call("train_bpe", s.call("word_frequencies", df))
+    table = df.sparkSession.createDataFrame(
+        [(i, a, b) for i, (a, b) in enumerate(merges)],
+        "rank long, left string, right string")
+    pctx.outputs[s["_collection"]] = _register(pctx, s["_collection"],
+                                               table)
+    return df
+
+
+def _bpe_encode(df, s, pctx):
+    # merge tables are vocabulary-sized by construction: bounded collect
+    src = pctx.collection(s["from"])
+    merges = [(r["left"], r["right"])
+              for r in src.orderBy("rank").collect()]
+    return s.call("bpe_encode", df, merges)
+
+
+def _asof_lookup(df, s, pctx):
+    return s.call("asof_join", df, pctx.collection(s["from"]))
+
+
+def _scrub_pii(df, s, pctx):
+    return df.withColumn(s["as"] or s["field"],
+                         s.call("scrub_pii", F.col(s["field"])))
+
+
+def _robots_filter(df, s, pctx):
+    rules = s.call("robots_rules", pctx.collection(s["robots"]))
+    res = s.call("url_allowed", df, rules)
+    if s["keep"]:
+        return res
+    out = s.arg("out_col")
+    return res.filter(F.col(out)).drop(out)
+
+
+def _text_features(df, s, pctx):
+    res = s.call("with_text_features", df)
+    tf = F.col(s.arg("out"))
+    if s["lang"]:
+        res = res.withColumn(s["lang"], tf["lang"])
+    if s["score"]:
+        res = res.withColumn(s["score"], s.call(
+            "quality_score_from", tf, F.length(F.col(s.arg("text_col")))))
+    return res
+
+
+def _quality_gate(df, s, pctx):
+    n_chars = F.length(F.col(s.arg("text_col")))
+    if s["tf"]:
+        return df.filter(s.call("quality_gate_from", F.col(s["tf"]),
+                                n_chars))
+    tmp = "__qgate_tf"
+    res = s.call("with_text_features", df, out=tmp)
+    return res.filter(s.call("quality_gate_from", F.col(tmp),
+                             n_chars)).drop(tmp)
+
+
+def _html_extract(df, s, pctx):
+    # straight after $warcRecords the HTTP header column feeds the
+    # charset ladder unless "contentType" names another
+    if "contentType" not in s.given and "http_content_type" in df.columns:
+        return s.call("html_extract", df,
+                      content_type_col="http_content_type")
+    return s.call("html_extract", df)
+
+
+def _dedup_spans(df, s, pctx):
+    fns = {"mark": "duplicate_spans", "strip": "strip_duplicate_spans"}
+    if s["action"] not in fns:
+        raise UnsupportedExpression(
+            f"$dedupSpans: action must be mark or strip, not "
+            f"{s['action']!r}")
+    return s.call(fns[s["action"]], df)
+
+
+def _normalize_url(df, s, pctx):
+    if s["dedup"]:
+        return s.call("url_dedup", df)
+    return df.withColumn(s["as"], s.call(
+        "normalize_url", F.col(s.arg("url_col"))))
+
+
+def _zorder(df, s, pctx):
+    if s.arg("num_partitions"):
+        return s.call("cluster_by_zorder", df, keep_key=True)
+    return s.call("zorder_key", df)
+
+
+def _near_dups(df, s, pctx):
+    pairs = s.call("minhash_lsh_pairs", df)
+    if not s["verify"]:
+        return pairs
+    # jaccard rides through the verify melt/regroup so the expensive
+    # LSH self-join plan is evaluated exactly once (no re-join of pairs)
+    return s.call("verify_pairs_editdist", pairs, df,
+                  carry_cols=["jaccard"])
+
+
+def _hard_negatives(df, s, pctx):
+    return s.call("hard_negative_topk", df,
+                  _query_set(df, s, s.arg("label_col")))
+
+
+def _hamming_topk(df, s, pctx):
+    return s.call("hamming_topk", df, _query_set(df, s))
+
+
+def _hamming_lsh_topk(df, s, pctx):
+    return s.call("hamming_lsh_topk", df, _query_set(df, s))
+
+
+def _hdr_quantiles(df, s, pctx):
+    sketch = _register(pctx, s["_collection"], s.call("hdr_sketch", df))
+    return s.call("hdr_quantiles", sketch)
+
+
+def _cms_sketch(df, s, pctx):
+    return _register(pctx, s["_collection"], s.call("cms_sketch", df))
+
+
+def _hll_sketch(df, s, pctx):
+    df, group = _grouped(df, s)
+    return _register(pctx, s["_collection"],
+                     s.call("hll_sketch", df, group_col=group))
+
+
+def _kmv_sketch(df, s, pctx):
+    df, group = _grouped(df, s)
+    sketch = _register(pctx, s["_collection"],
+                       s.call("kmv_sketch", df, group_col=group))
+    if s["estimate"]:
+        return s.call("kmv_estimate", sketch, group_col=group)
+    return sketch
+
+
+def _kmv_overlap(df, s, pctx):
+    return s.call("kmv_overlap", s.call("kmv_sketch", df))
+
+
+def _binary_signatures(df, s, pctx):
+    if s.arg("dims") is None and df.isStreaming:
+        # width inference needs a batch probe job
+        raise UnsupportedExpression(
+            "$binarySignatures: 'dims' is required on a streaming input")
+    return s.call("binary_signatures", df)
+
+
+def _hamming_probe(df, s, pctx):
+    # not batch-only, and that is the point: a stream-static equi-join
+    # on band postings whose multi-band duplicates drop by expression
+    # (no aggregation, no state) is append-mode streaming-legal
+    index_id = s.arg("index_id_col" if "indexId" in s.given else "id_col")
+    return s.call("hamming_probe", df, pctx.collection(s["index"]),
+                  index_id_col=index_id)
+
+
+def _ivf_probe(df, s, pctx):
+    # the centroid set is collected ordered by id at plan build: it is
+    # bounded by construction, not a corpus
+    cents = [list(r[0]) for r in pctx.collection(s["centroids"])
+             .orderBy(s["centroidId"]).select(s["centroidVector"])
+             .collect()]
+    if not cents:
+        raise UnsupportedExpression(
+            f"$ivfProbe: empty centroids collection {s['centroids']!r}")
+    return s.call("ivf_probe", df, pctx.collection(s["index"]), cents)
+
+
+_QUERIES = {"queries.mod": 100}
+_SKETCH = {"_collection": None}
+
+EXTENSIONS: dict[str, Extension] = {
+    "$chunk": Extension(
+        ("text.chunk_documents",),
+        {"text": "text_col", "size": "size", "overlap": "overlap"}),
+    "$bpeTrain": Extension(
+        ("bpe.train_bpe", "bpe.word_frequencies"),
+        {"text": "text_col", "merges": "n_merges", "maxWords": "max_words"},
+        extra={"_collection": "bpe_merges"},
+        batch_only="global vocabulary induction", run=_bpe_train),
+    "$bpeEncode": Extension(
+        ("bpe.bpe_encode",), {"text": "text_col", "as": "out_col"},
+        extra={"from": "bpe_merges"}, run=_bpe_encode),
+    "$sessionize": Extension(
+        ("timeseries.sessionize",),
+        {"by": "by", "ts": "ts", "gap": "gap", "tiebreak": "tiebreak",
+         "as": "out", "bucketSpan": "bucket_span"},
+        batch_only="running-sum windows; streams use "
+                   "functions.timeseries.sessionize_stream"),
+    "$asofLookup": Extension(
+        ("timeseries.asof_join",),
+        {"on": "on", "by": "by", "rightOn": "right_on",
+         "rightBy": "right_by", "as": "as_field", "tiebreak": "tiebreak",
+         "bucketSpan": "bucket_span"},
+        extra={"from": _REQUIRED},
+        batch_only="running window over both sides", run=_asof_lookup),
+    "$scrubPii": Extension(
+        ("text.scrub_pii",), {}, extra={"field": "text", "as": None},
+        scalar="field", run=_scrub_pii),
+    "$probeMedia": Extension(
+        ("multimodal.probe_media",), {"field": "media_col", "as": "out_col"}),
+    "$decodeAudio": Extension(
+        ("multimodal.decode_audio",),
+        {"field": "media_col", "as": "out_col", "bins": "waveform_bins"}),
+    "$decodeImage": Extension(
+        ("multimodal.decode_image",),
+        {"field": "media_col", "as": "out_col", "bins": "hist_bins"}),
+    "$resizeImage": Extension(
+        ("multimodal.resize_image",),
+        {"field": "media_col", "as": "out_col", "width": "width",
+         "height": "height"}),
+    "$sampleFrames": Extension(
+        ("multimodal.sample_frames",),
+        {"field": "media_col", "as": "out_col", "n": "n_frames"}),
+    "$cdcChunks": Extension(
+        ("multimodal.cdc_chunks",),
+        {"field": "data_col", "id": "id_col", "min": "min_size",
+         "avg": "avg_size", "max": "max_size"}),
+    "$audioFingerprint": Extension(
+        ("multimodal.audio_fingerprint",),
+        {"field": "media_col", "as": "out_col"}, base64="media_col"),
+    "$audioFingerprintWindows": Extension(
+        ("multimodal.audio_fingerprint_windows",),
+        {"field": "media_col", "id": "id_col", "as": "out_col",
+         "hop": "hop"}, base64="media_col"),
+    "$audioNearDups": Extension(
+        ("multimodal.audio_near_pairs",),
+        {"field": "media_col", "id": "id_col", "hop": "hop",
+         "maxHamming": "max_hamming", "minWindows": "min_matching_windows"},
+        base64="media_col", batch_only="corpus-wide window self-join"),
+    "$videoFingerprint": Extension(
+        ("multimodal.video_fingerprint",),
+        {"field": "media_col", "id": "id_col", "frames": "n_frames"},
+        base64="media_col"),
+    "$videoNearDups": Extension(
+        ("multimodal.video_near_pairs",),
+        {"field": "media_col", "id": "id_col", "frames": "n_frames",
+         "maxHamming": "max_hamming", "minFrames": "min_matching_frames"},
+        base64="media_col", batch_only="corpus-wide frame self-join"),
+    "$warcRecords": Extension(
+        ("crawl.warc_records",), {"field": "data_col", "keep": "keep_cols"},
+        base64="data_col"),
+    "$sitemapUrls": Extension(
+        ("crawl.sitemap_urls",), {"field": "xml_col", "keep": "keep_cols"},
+        base64="xml_col"),
+    "$htmlExtract": Extension(
+        ("crawl.html_extract",),
+        {"field": "html_col", "title": "title_col", "text": "text_col",
+         "blocks": "blocks_col", "minBlockChars": "min_block_chars",
+         "maxLinkDensity": "max_link_density",
+         "contentType": "content_type_col"}, run=_html_extract),
+    "$robotsFilter": Extension(
+        ("robots.url_allowed", "robots.robots_rules"),
+        {"field": "url_col", "agent": "agent", "as": "out_col",
+         "robotsField": "robots_col", "hostField": "host_col"},
+        extra={"robots": _REQUIRED, "keep": False}, run=_robots_filter),
+    "$textFeatures": Extension(
+        ("text.with_text_features", "text.quality_score_from"),
+        {"field": "text_col", "as": "out"}, defaults={"out": "tf"},
+        extra={"score": None, "lang": None}, run=_text_features),
+    "$qualityGate": Extension(
+        ("text.quality_gate_from", "text.with_text_features"),
+        {"field": "text_col", "num": "num", "den": "den"},
+        extra={"tf": None}, run=_quality_gate),
+    "$dedupSpans": Extension(
+        ("text.duplicate_spans", "text.strip_duplicate_spans"),
+        {"text": "text_col", "id": "id_col", "width": "width",
+         "minDocs": "min_docs"},
+        extra={"action": "mark"},
+        batch_only="corpus-wide window counts", run=_dedup_spans),
+    "$normalizeUrl": Extension(
+        ("web.url_dedup", "web.normalize_url"),
+        {"field": "url_col", "id": "id_col", "stripWww": "strip_www"},
+        extra={"as": "canonical_url", "dedup": False}, scalar="field",
+        run=_normalize_url),
+    "$zorder": Extension(
+        ("layout.zorder_key", "layout.cluster_by_zorder"),
+        {"columns": "cols", "bits": "bits", "partitions": "num_partitions"},
+        batch_only="write layout needs global stats", run=_zorder),
+    "$weightedSample": Extension(
+        ("sampling.weighted_sample",),
+        {"weight": "weight_col", "k": "k", "by": "group_col",
+         "id": "id_col", "salt": "salt"},
+        defaults={"weight_col": "weight", "k": 10},
+        batch_only="global top-k by sample key"),
+    "$balancedSample": Extension(
+        ("sampling.balanced_topn_sample",),
+        {"by": "strata_col", "n": "n_per_stratum", "key": "key_col",
+         "salt": "salt"},
+        defaults={"strata_col": "label", "n_per_stratum": 100},
+        batch_only="per-stratum rank window"),
+    "$nearDups": Extension(
+        ("dedup.minhash_lsh_pairs", "dedup.verify_pairs_editdist"),
+        {"text": "text_col", "id": "id_col", "threshold": "threshold",
+         "numHashes": "num_hashes", "bands": "bands", "k": "k",
+         "verify.cap": "cap", "verify.minSim": "min_sim"},
+        extra={"verify": None},
+        batch_only="corpus-wide LSH self-join", run=_near_dups),
+    "$prefixJaccard": Extension(
+        ("dedup.prefix_filter_pairs",),
+        {"text": "text_col", "id": "id_col", "thresholdPct": "threshold_pct",
+         "n": "n"},
+        batch_only="corpus-wide posting self-join"),
+    "$containment": Extension(
+        ("dedup.containment_pairs",),
+        {"text": "text_col", "id": "id_col", "thresholdPct": "threshold_pct",
+         "n": "n", "dfCap": "df_cap"},
+        batch_only="corpus-wide posting self-join"),
+    "$ngramPairs": Extension(
+        ("dedup.ngram_jaccard_pairs",),
+        {"text": "text_col", "id": "id_col", "threshold": "threshold",
+         "n": "n", "dfCap": "df_cap"},
+        batch_only="corpus-wide posting self-join"),
+    "$ewma": Extension(
+        ("timeseries.ewma_halflife",),
+        {"value": "value_col", "by": "group_col", "orderBy": "order_by",
+         "window": "window", "scale": "scale"},
+        defaults={"order_by": ["ts_nanos"]},
+        batch_only="keyed window over an ordered frame"),
+    "$changepoints": Extension(
+        ("timeseries.mean_shift_changepoints",),
+        {"by": "by", "ts": "ts", "value": "value_col", "id": "id_col",
+         "window": "window", "top": "top"},
+        batch_only="keyed window over ordered frames"),
+    "$robustZ": Extension(
+        ("profiling.robust_zscores",),
+        {"value": "value_col", "by": "group_col", "id": "id_col",
+         "scale": "scale"},
+        batch_only="group-wide rank medians"),
+    "$hdrQuantiles": Extension(
+        ("profiling.hdr_sketch", "profiling.hdr_quantiles"),
+        {"value": "value_col", "by": "group_col", "sigBits": "sig_bits",
+         "q": "qs"},
+        defaults={"value_col": "value", "qs": [0.5, 0.9, 0.99]},
+        extra=_SKETCH, batch_only="window cum-sum over the sketch",
+        run=_hdr_quantiles),
+    "$cmsSketch": Extension(
+        ("profiling.cms_sketch",),
+        {"field": "value_col", "depth": "depth", "width": "width"},
+        defaults={"value_col": "token"}, extra=_SKETCH, run=_cms_sketch),
+    "$hllSketch": Extension(
+        ("profiling.hll_sketch",),
+        {"value": "value_col", "by": "group_col", "p": "p"},
+        defaults={"value_col": "value"}, extra=_SKETCH, run=_hll_sketch),
+    "$kmvSketch": Extension(
+        ("profiling.kmv_sketch", "profiling.kmv_estimate"),
+        {"value": "value_col", "by": "group_col", "k": "k"},
+        defaults={"value_col": "value"},
+        extra={**_SKETCH, "estimate": False},
+        batch_only="group-wide k-minimum rank window", run=_kmv_sketch),
+    "$kmvOverlap": Extension(
+        ("profiling.kmv_sketch", "profiling.kmv_overlap"),
+        {"value": "value_col", "by": "group_col", "k": "k"},
+        defaults={"value_col": "value", "group_col": "lang"},
+        batch_only="group-wide k-minimum rank window", run=_kmv_overlap),
+    "$binarySignatures": Extension(
+        ("similarity.binary_signatures",),
+        {"vector": "vec_col", "id": "id_col", "laneBits": "lane_bits",
+         "dims": "dims"}, run=_binary_signatures),
+    "$hammingTopk": Extension(
+        ("similarity.hamming_topk",),
+        {"vector": "vec_col", "id": "id_col", "k": "k"},
+        extra=_QUERIES, batch_only="per-query rank window",
+        run=_hamming_topk),
+    "$hammingLshTopk": Extension(
+        ("similarity.hamming_lsh_topk",),
+        {"vector": "vec_col", "id": "id_col", "k": "k",
+         "bandBits": "band_bits", "probeBits": "probe_bits"},
+        extra=_QUERIES, batch_only="per-query rank window",
+        run=_hamming_lsh_topk),
+    "$hardNegatives": Extension(
+        ("similarity.hard_negative_topk",),
+        {"vector": "vec_col", "id": "id_col", "label": "label_col",
+         "k": "k"},
+        extra=_QUERIES, batch_only="per-query rank window",
+        run=_hard_negatives),
+    "$hammingPairs": Extension(
+        ("similarity.hamming_near_pairs",),
+        {"id": "id_col", "lanes": "lane_cols", "maxHamming": "max_hamming",
+         "bandBits": "band_bits", "laneBits": "lane_bits"},
+        batch_only="corpus-wide band self-join"),
+    "$hammingProbe": Extension(
+        ("similarity.hamming_probe",),
+        {"id": "id_col", "indexId": "index_id_col", "lanes": "lane_cols",
+         "maxHamming": "max_hamming", "bandBits": "band_bits",
+         "laneBits": "lane_bits"},
+        extra={"index": _REQUIRED}, run=_hamming_probe),
+    "$ivfProbe": Extension(
+        ("similarity.ivf_probe",),
+        {"vector": "vec_col", "indexVector": "index_vec_col",
+         "indexId": "index_id_col", "minCosine": "min_cosine",
+         "nprobe": "nprobe"},
+        extra={"index": _REQUIRED, "centroids": _REQUIRED,
+               "centroidVector": "embedding", "centroidId": "vec_id"},
+        run=_ivf_probe),
+}
+
+
 def _effect(name: str):
     # lazy import: effects pull in transports/crypto only when used
     def h(df, spec, pctx):
@@ -3238,60 +2822,16 @@ STAGES: dict[str, Callable[[DataFrame, Any, PipelineContext], DataFrame]] = {
     "$rollup": _stage_rollup_cube("$rollup"),
     "$cube": _stage_rollup_cube("$cube"),
     "$geoNear": _stage_geo_near,
-    "$chunk": _stage_chunk_ext,
-    "$bpeTrain": _stage_bpe_train_ext,
-    "$bpeEncode": _stage_bpe_encode_ext,
-    "$sessionize": _stage_sessionize_ext,
-    "$asofLookup": _stage_asof_lookup_ext,
-    "$scrubPii": _stage_scrub_pii_ext,
-    "$probeMedia": _stage_probe_media_ext,
-    "$audioFingerprint": _stage_audio_fingerprint_ext,
-    "$warcRecords": _stage_warc_records_ext,
-    "$sitemapUrls": _stage_sitemap_urls_ext,
-    "$robotsFilter": _stage_robots_filter_ext,
-    "$textFeatures": _stage_text_features_ext,
-    "$qualityGate": _stage_quality_gate_ext,
-    "$htmlExtract": _stage_html_extract_ext,
-    "$audioFingerprintWindows": _stage_audio_fingerprint_windows_ext,
-    "$audioNearDups": _stage_audio_near_dups_ext,
-    "$decodeAudio": _stage_decode_audio_ext,
-    "$decodeImage": _stage_decode_image_ext,
-    "$resizeImage": _stage_resize_image_ext,
-    "$videoFingerprint": _stage_video_fingerprint_ext,
-    "$videoNearDups": _stage_video_near_dups_ext,
     "$windowFields": _stage_window_fields_ext,
     # MongoDB's canonical name — real Mongo pipelines run unchanged
     "$setWindowFields": _stage_window_fields_ext,
     "$densify": _stage_densify_ext,
     "$fill": _stage_fill_ext,
     "$facet": _stage_facet_ext,
-    "$dedupSpans": _stage_dedup_spans_ext,
-    "$normalizeUrl": _stage_normalize_url_ext,
-    "$zorder": _stage_zorder_ext,
-    "$weightedSample": _stage_weighted_sample_ext,
-    "$cmsSketch": _stage_cms_sketch_ext,
-    "$hllSketch": _stage_hll_sketch_ext,
-    "$kmvSketch": _stage_kmv_sketch_ext,
-    "$kmvOverlap": _stage_kmv_overlap_ext,
-    "$binarySignatures": _stage_binary_signatures_ext,
-    "$hammingTopk": _stage_hamming_topk_ext,
-    "$hammingLshTopk": _stage_hamming_lsh_topk_ext,
-    "$hammingPairs": _stage_hamming_pairs_ext,
-    "$hammingProbe": _stage_hamming_probe_ext,
-    "$ivfProbe": _stage_ivf_probe_ext,
-    "$changepoints": _stage_changepoints_ext,
-    "$ewma": _stage_ewma_ext,
-    "$hdrQuantiles": _stage_hdr_quantiles_ext,
-    "$nearDups": _stage_near_dups_ext,
-    "$prefixJaccard": _stage_prefix_jaccard_ext,
-    "$containment": _stage_containment_ext,
-    "$ngramPairs": _stage_ngram_pairs_ext,
-    "$hardNegatives": _stage_hard_negatives_ext,
-    "$balancedSample": _stage_balanced_sample_ext,
-    "$robustZ": _stage_robust_z_ext,
-    "$sampleFrames": _stage_sample_frames_ext,
-    "$cdcChunks": _stage_cdc_chunks_ext,
     "$bucketAuto": _stage_bucket_auto,
     "$unionWith": _stage_union_with,
     "$documents": _stage_documents,
+    # function-backed extension stages, one table
+    **{name: functools.partial(_run_extension, name)
+       for name in EXTENSIONS},
 }

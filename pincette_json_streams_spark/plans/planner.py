@@ -201,9 +201,9 @@ class Application:
 
     def run_batch(self) -> dict[str, DataFrame]:
         """-> {sink name: DataFrame}: every part's sinks (toTopic,
-        toCollection and an aggregate's five purpose streams) plus the
-        $out/$merge targets captured during stage compilation.  A stream
-        runs the same set (``streaming.runtime.StreamingApp``)."""
+        toCollection and an aggregate's purpose streams but ``command``)
+        plus the $out/$merge targets captured during stage compilation.
+        A stream runs the same set (``streaming.runtime.StreamingApp``)."""
         out = dict(self.pctx.outputs)
         out.update(self.sinks)
         return out

@@ -295,9 +295,12 @@ class Wiring:
     named streams the part produces; ``sinks`` are (kind, name) pairs,
     kind topic or collection.  For an aggregate part, ``aggregate`` is
     its full type ``<app>-<type>``: the part reads the
-    ``<app>-<type>-command`` topic and produces and sinks one
+    ``<app>-<type>-command`` topic and produces one
     ``<app>-<type>-<purpose>`` stream per purpose, in ``PURPOSES`` order
-    (App.java:532-549 ``addStreams``)."""
+    (App.java:532-549 ``addStreams``).  It sinks every purpose but
+    ``command``: that stream has the name of the topic the part reads,
+    so writing it there would fold every admitted command again; a
+    ``fromStream`` consumer still reads it."""
 
     part: dict
     name: str
@@ -323,9 +326,10 @@ def _wire(p: dict, application: str) -> Wiring:
         full = agg_type if "-" in agg_type else \
             f"{p.get('application') or application}-{agg_type}"
         streams = tuple(f"{full}-{purpose}" for purpose in PURPOSES)
-        return Wiring(p, p.get("name") or agg_type,
-                      (("topic", f"{full}-command"),), streams,
-                      tuple(("topic", s) for s in streams), full)
+        command = ("topic", f"{full}-command")
+        return Wiring(p, p.get("name") or agg_type, (command,), streams,
+                      tuple(("topic", s) for s in streams
+                            if ("topic", s) != command), full)
     if not p.get("name"):
         raise SpecError(f"part missing 'name': {p}")
     if t == "stream":

@@ -166,7 +166,11 @@ class ChangeLogCollection:
         into the log (foreachBatch — the standard Spark pattern for
         transactional table sinks).  Downstream ``change_stream``
         readers then see the writes as replace/insert events — the full
-        collection round-trip the reference gets from Mongo."""
+        collection round-trip the reference gets from Mongo.
+        At-least-once: an epoch replayed from the checkpoint is logged
+        again under a new ``__commit``.  The snapshot is unchanged (the
+        same documents win), but ``change_stream`` readers see the
+        replayed events."""
 
         def write_batch(batch_df, _epoch):
             if not batch_df.isEmpty():

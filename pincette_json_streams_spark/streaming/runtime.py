@@ -23,8 +23,9 @@ differs: ``streaming_aggregate`` runs it as ``applyInPandasWithState``
 keyed by instance.  The reference serializes commands per aggregate
 instance via Kafka key partitioning (docs/state.md:114-127); grouped
 state processing is the faithful distributed analogue (parallel across
-keys, ordered within one).  ``StreamingApp`` exposes each aggregate
-part's five purpose streams as sinks.
+keys, ordered within one).  ``StreamingApp`` sinks each aggregate
+part's purpose streams but ``command``, which shares its name with the
+topic the part reads (``plans.spec.Wiring``).
 """
 
 from __future__ import annotations
@@ -311,7 +312,9 @@ def redelivery_sink(
 ):
     """Writer that appends released messages into their target topic's
     directory (the file-source analogue of producing back to Kafka) —
-    the topic's normal streaming source then re-ingests them."""
+    the topic's normal streaming source then re-ingests them.
+    At-least-once: an epoch replayed from the checkpoint is appended
+    again."""
 
     def write_batch(batch_df, _epoch):
         for topic, d in topic_dirs.items():
@@ -490,9 +493,13 @@ class StreamingApp:
         """availableNow run with restart-on-error: a failed query is
         restarted from its checkpoint up to ``max_restarts`` times —
         the reference's Run loop keeps apps alive the same way
-        (restart-on-error with the resume token); Spark's checkpoint
-        makes the retry exactly-once-per-source-offset.  Raises the
-        last error when a query keeps failing."""
+        (restart-on-error with the resume token).  The checkpoint
+        replays the epoch that failed, so delivery is at-least-once: a
+        sink that writes an epoch twice shows the replay
+        (``redelivery_sink`` appends it again,
+        ``ChangeLogCollection.streaming_sink`` re-logs it under a new
+        ``__commit``).  Raises the last error when a query keeps
+        failing."""
         from pyspark.errors import StreamingQueryException
 
         attempts = 0

@@ -534,13 +534,18 @@ class TestBatchStreamingParity:
                             str(tmp_path / "ckpt" / name)))
 
         app.run_until_drained(memory)
+        # the command purpose is a stream, not a sink: its name is the
+        # topic the part reads
+        memory(topic, app.app.stream(topic)).trigger(
+            availableNow=True).start().awaitTermination(120)
 
         def values(df):
             return sorted(r["value"] for r in df.collect())
 
-        return ({n: values(df) for n, df in batch.run_batch().items()},
+        return ({n: values(df) for n, df in
+                 {**batch.run_batch(), topic: batch.stream(topic)}.items()},
                 {n: values(spark.table(f"{run}_{n.replace('-', '_')}"))
-                 for n in app.sinks})
+                 for n in [*app.sinks, topic]})
 
     def _assert_same(self, spark, tmp_path, spec, rows, schema,
                      files=None, fmt="parquet"):
@@ -594,8 +599,9 @@ class TestBatchStreamingParity:
         assert [d["v"] for d in states] == list(range(100))
 
     def test_one_sink_set(self, spark, tmp_path):
-        """Batch and streaming sink the same set: the aggregate's five
-        purpose streams and the toTopic of a part reading one of them."""
+        """Batch and streaming sink the same set: the aggregate's
+        purpose streams but ``command`` (the topic it reads) and the
+        toTopic of a part reading one of them."""
         from pincette_json_streams_spark.streaming.runtime import (
             StreamingApp,
         )
@@ -614,8 +620,7 @@ class TestBatchStreamingParity:
             topic: spark.readStream.schema(self.PUT_SCHEMA).parquet(d)})
         assert set(app.sinks) == set(batch.run_batch()) == {
             "out", *(f"shop-acct-{p}" for p in
-                     ("aggregate", "command", "event", "event-full",
-                      "reply"))}
+                     ("aggregate", "event", "event-full", "reply"))}
 
     def test_order_by_is_ignored(self, spark, tmp_path):
         """``orderBy`` does not reorder: a stream cannot fold a command

@@ -27,12 +27,16 @@ def test_aggregate_topics_and_purpose_stream_consumer():
     md = to_markdown(spec)
     assert "`shop-order-command`" in _row(md, "order").split("|")[3]
     produces = _row(md, "order").split("|")[4]
-    assert all(f"`shop-order-{p}`" in produces for p in PURPOSES)
+    sunk = [p for p in PURPOSES if p != "command"]
+    assert all(f"`shop-order-{p}`" in produces for p in sunk)
+    assert "`shop-order-command`" not in produces
     assert _row(md, "s") == "| s | stream | `shop-order-event` | `out` |"
 
     edges = _edges(to_dot(spec))
     assert ("ext_shop-order-command", "part_order") in edges
-    assert {("part_order", f"ext_shop-order-{p}") for p in PURPOSES} <= edges
+    # the command topic is the part's input, never its output
+    assert ("part_order", "ext_shop-order-command") not in edges
+    assert {("part_order", f"ext_shop-order-{p}") for p in sunk} <= edges
     assert ("part_order", "part_s") in edges
     # every edge ends on a declared node
     nodes = {line.split('"')[1] for line in to_dot(spec).splitlines()

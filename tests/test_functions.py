@@ -1262,10 +1262,14 @@ class TestMultimodal:
         ham_ac = bin((got[1] ^ got[3]) & (2 ** 64 - 1)).count("1")
         assert ham_ac > 7              # unrelated clips stay apart
         # base64 transport (the JSON-message path of $audioFingerprint)
+        from pincette_json_streams_spark.operators.stages import (
+            compile_pipeline,
+        )
         b64 = spark.createDataFrame(
             [(1, base64.b64encode(self._wav_bytes(a)).decode())],
             "clip_id long, media string")
-        got64 = audio_fingerprint(b64, base64=True).collect()
+        got64 = compile_pipeline(b64, [{"$audioFingerprint": {
+            "field": "media", "base64": True}}]).collect()
         assert got64[0]["afp"] == got[1]
         assert "media" in got64[0].asDict()  # payload column survives
         # composition: the afp lane feeds the shared Hamming index

@@ -167,9 +167,10 @@ class TestCli:
                      "--data", str(tmp_path / "data"),
                      "--out", str(tmp_path / "out")]) == 0
         printed = capsys.readouterr().out
-        for purpose in ("aggregate", "command", "event", "event-full",
-                        "reply"):
+        for purpose in ("aggregate", "event", "event-full", "reply"):
             assert f"shop/shop-order-{purpose}: " in printed
+        # the command stream is not written back into the command topic
+        assert "shop/shop-order-command: " not in printed
         (state,) = spark.read.parquet(
             str(tmp_path / "out" / "shop" / "shop-order-aggregate")
         ).collect()

@@ -1,10 +1,13 @@
 """Package-wide checks: every public name a module exports resolves, the
 pandas UDFs use one idiom (typed ``pandas_udf``), per-row Python maps
-use one helper (``map_rows``), and one module reads the part wiring."""
+use one helper (``map_rows``), one module reads the part wiring, and the
+extension-stage table agrees with its functions and its doc."""
 
 import importlib
+import inspect
 import pathlib
 import pkgutil
+import re
 
 import pincette_json_streams_spark as pkg
 
@@ -48,3 +51,52 @@ def test_part_wiring_keys_only_in_spec():
          for key in keys for q in "\"'"
          if f"{q}{key}{q}" in p.read_text(encoding="utf-8")})
     assert offenders == ["plans/spec.py"]
+
+
+def _doc_rows() -> dict[str, tuple[str, set[str]]]:
+    """docs/extension_stages.md rows naming one stage -> (its
+    "Streaming?" cell, the quoted keys of its spec object, nested ones
+    dotted)."""
+    rows = {}
+    doc = ROOT.parent / "docs" / "extension_stages.md"
+    for line in doc.read_text(encoding="utf-8").splitlines():
+        cells = [c.strip() for c in re.split(r"(?<!\\)\|", line)[1:-1]]
+        stage = re.fullmatch(r"`(\$\w+)`", cells[0]) if cells else None
+        if stage is None or len(cells) != 3:
+            continue
+        obj = re.search(r"`(\{[^`]*)`", cells[2])
+        keys, path, last = set(), [], None
+        for m in re.finditer(r'"(\w+)"\s*:|([{}])',
+                             obj.group(1) if obj else ""):
+            if m.group(1):
+                last = ".".join(path + [m.group(1)])
+                keys.add(last)
+            elif m.group(2) == "{":
+                path = last.split(".") if last else path
+            else:
+                path = path[:-1]
+        assert stage.group(1) not in rows, f"two rows for {stage.group(1)}"
+        rows[stage.group(1)] = (cells[1], keys)
+    return rows
+
+
+def test_extension_table_matches_functions_and_doc():
+    # each extension stage's spec keys map onto real parameters, and
+    # docs/extension_stages.md lists exactly those keys and says
+    # "no"/"batch-only" exactly for the stages that refuse streams
+    from pincette_json_streams_spark.operators.stages import EXTENSIONS
+
+    rows = _doc_rows()
+    for stage, ext in sorted(EXTENSIONS.items()):
+        params = set()
+        for name in ext.fns:
+            mod, attr = name.rsplit(".", 1)
+            fn = getattr(importlib.import_module(f"{pkg.__name__}.functions."
+                                                 f"{mod}"), attr)
+            params |= set(inspect.signature(fn).parameters)
+        assert set(ext.keys.values()) | set(ext.defaults) <= params, stage
+        assert stage in rows, f"{stage} has no row of its own"
+        streaming, keys = rows[stage]
+        assert keys == ext.accepted, (stage, keys ^ ext.accepted)
+        batch_only = streaming.lower().startswith(("no", "batch-only"))
+        assert batch_only == bool(ext.batch_only), (stage, streaming)

@@ -162,6 +162,30 @@ class TestApplication:
         )
         assert app.run_batch()["out"].collect()[0]["n"] == 2
 
+    def test_command_purpose_is_read_not_sunk(self, spark):
+        """The aggregate reads ``<app>-<type>-command``; sinking its
+        command purpose under that name would feed every admitted
+        command back into the fold.  It stays a stream a part can
+        read."""
+        commands = spark.createDataFrame(
+            [("o1", "put", 3, {"sub": "system"})],
+            "_id string, _command string, n int, _jwt map<string,string>")
+        spec = {"application": "shop", "parts": [
+            {"type": "stream", "name": "echo", "toTopic": "out",
+             "fromStream": "shop-order-command",
+             "pipeline": [{"$count": "n"}]},
+            {"type": "aggregate", "aggregateType": "order"}]}
+        (wiring,) = [w for w in validate_application(spec)
+                     if w.name == "order"]
+        assert ("topic", "shop-order-command") in wiring.reads
+        assert "shop-order-command" in wiring.streams
+        assert ("topic", "shop-order-command") not in wiring.sinks
+        app = Application(spec, {"shop-order-command": commands})
+        sinks = app.run_batch()
+        assert "shop-order-command" not in sinks
+        assert {"shop-order-aggregate", "shop-order-reply"} <= set(sinks)
+        assert sinks["out"].collect()[0]["n"] == 1
+
     def test_merge_part(self, spark, people):
         app = Application(
             {"application": "t", "parts": [

@@ -4,6 +4,7 @@ reference spec /root/reference/docs/aggregation_stages.md)."""
 import pytest
 
 from pincette_json_streams_spark.operators.stages import (
+    EXTENSIONS,
     PipelineContext,
     compile_pipeline,
 )
@@ -2179,3 +2180,119 @@ class TestRobotsFilterStage:
             catalog={"robots": robots})
         assert {r["uid"]: r["ok"] for r in kept.collect()} \
             == {1: False, 2: True, 3: True}
+
+
+class TestExtensionTable:
+    """The function-backed extension stages are one table
+    (``stages.EXTENSIONS``): each spec key maps onto a parameter of the
+    stage's function, and a key the stage does not take fails the
+    build instead of being ignored."""
+
+    @pytest.mark.parametrize("stage", sorted(EXTENSIONS))
+    def test_unknown_key_is_named(self, spark, stage):
+        from pincette_json_streams_spark.operators.expressions import (
+            UnsupportedExpression,
+        )
+        df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+        with pytest.raises(UnsupportedExpression,
+                           match=rf"\{stage}: unknown key 'threshhold'"):
+            run(df, [{stage: {"threshhold": 0.5}}])
+
+    @pytest.mark.parametrize("stage, spec, key", [
+        ("$asofLookup", {"on": "t", "by": "u"}, "from"),
+        ("$sessionize", {"by": "u", "ts": "t"}, "gap"),
+        ("$zorder", {"bits": 8}, "columns"),
+        ("$robotsFilter", {}, "robots"),
+        ("$nearDups", {"verify": {"minSim": 0.9, "cutoff": 3}},
+         "verify.cutoff"),
+    ])
+    def test_missing_or_nested_key_is_named(self, spark, stage, spec, key):
+        from pincette_json_streams_spark.operators.expressions import (
+            UnsupportedExpression,
+        )
+        df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+        with pytest.raises(UnsupportedExpression, match=f"'{key}'"):
+            run(df, [{stage: spec}])
+
+    def test_values_are_coerced_or_refused(self, spark):
+        from pincette_json_streams_spark.operators.expressions import (
+            UnsupportedExpression,
+        )
+        df = spark.createDataFrame([(1, "a b c d e")],
+                                   "doc_id long, text string")
+        got = run(df, [{"$chunk": {"size": "2", "overlap": 0}}])
+        assert [r["chunk"] for r in got.orderBy("chunk_idx").collect()] \
+            == ["a b", "c d", "e"]
+        with pytest.raises(UnsupportedExpression, match="'size' must be int"):
+            run(df, [{"$chunk": {"size": [2]}}])
+        with pytest.raises(UnsupportedExpression, match="non-empty list"):
+            run(df, [{"$ewma": {"orderBy": "doc_id"}}])
+        with pytest.raises(UnsupportedExpression, match="object spec"):
+            run(df, [{"$chunk": "text"}])
+        # a scalar spec stands for the stage's field key
+        got = run(df, [{"$scrubPii": "text"}])
+        assert got.columns == ["doc_id", "text"]
+
+    @pytest.mark.parametrize("stage, field, binary", [
+        ("$warcRecords", "warc", "warc"),
+        ("$sitemapUrls", "sitemap", "sitemap"),
+        ("$audioFingerprint", "media", "wav"),
+    ])
+    def test_base64_decodes_the_field_in_place(self, spark, stage, field,
+                                               binary):
+        """``base64: true`` decodes the field in place: the output equals
+        the binary input's, so a flat-map does not copy the archive's
+        base64 text onto each record row."""
+        import base64
+
+        from tests.test_functions import TestCrawl as TC
+        from tests.test_functions import TestMultimodal as TM
+
+        payload = {
+            "warc": TC._WARCINFO + TC._warc_response(
+                "https://x.example/1", b"<p>hi</p>"),
+            "sitemap": (b"<urlset><url><loc>https://x.example/a</loc>"
+                        b"</url></urlset>"),
+            "wav": TM._wav_bytes(list(range(0, 3000, 3))),
+        }[binary]
+        text = base64.b64encode(payload).decode()
+        b64 = spark.createDataFrame([(7, text)], f"fid long, {field} string")
+        raw = spark.createDataFrame([(7, bytearray(payload))],
+                                    f"fid long, {field} binary")
+        got = run(b64, [{stage: {"field": field, "base64": True}}])
+        want = run(raw, [{stage: {"field": field}}])
+        assert got.columns == want.columns
+        assert (field in got.columns) == (stage == "$audioFingerprint")
+        rows = got.collect()
+        assert rows and rows == want.collect()
+
+    def test_video_base64_matches_binary(self, spark):
+        """$videoFingerprint's output carries only (id, frame_idx,
+        dhash); base64 transport gives the binary input's lanes."""
+        import base64
+
+        import numpy as np
+
+        from tests.test_functions import TestAviFrames, _JpegTestEncoder
+
+        enc = _JpegTestEncoder()
+        avi = TestAviFrames._avi([enc.encode(np.roll(np.tile(
+            np.arange(0, 256, 16, dtype=np.uint8), (16, 1))[:, :16],
+            k * 3, axis=1)) for k in range(2)])
+        b64 = spark.createDataFrame(
+            [(7, base64.b64encode(avi).decode())], "vid long, media string")
+        raw = spark.createDataFrame([(7, bytearray(avi))],
+                                    "vid long, media binary")
+        spec = {"field": "media", "id": "vid", "frames": 2}
+        got = run(b64, [{"$videoFingerprint": {**spec, "base64": True}}])
+        want = run(raw, [{"$videoFingerprint": spec}])
+        assert sorted(got.collect()) == sorted(want.collect())
+        assert len(want.collect()) == 2
+
+    def test_dedup_spans_action_is_checked(self, spark):
+        from pincette_json_streams_spark.operators.expressions import (
+            UnsupportedExpression,
+        )
+        df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+        with pytest.raises(UnsupportedExpression, match="mark or strip"):
+            run(df, [{"$dedupSpans": {"action": "strp"}}])
