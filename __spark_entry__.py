@@ -2079,11 +2079,12 @@ def q_hamming_pairs(spark, sf_dir):
     """All-pairs Hamming near-duplicates over sign-lane sketches
     (functions/similarity.py hamming_near_pairs): band-collision
     candidates (one byte-band posting per row, equi-join, id_a <
-    id_b), exact XOR+popcount verify, min-agg dedup.  The self-join
-    sibling of ann_hamming_lsh — and the SAME operator that pairs
-    image dHashes (multimodal.resize_image) for perceptual image
-    dedup.  max_hamming=18 exceeds the guaranteed radius (7 = bands-1)
-    on purpose: this corpus's closest sketches sit at distance 15+,
+    id_b), one row per pair from its first colliding band, exact
+    XOR+popcount verify.  The self-join sibling of ann_hamming_lsh —
+    and the SAME operator that pairs image dHashes
+    (multimodal.resize_image) for perceptual image dedup.
+    max_hamming=18 exceeds the guaranteed radius (7 = bands-1) on
+    purpose: this corpus's closest sketches sit at distance 15+,
     and BOTH engines replay the identical band-collision candidate
     rule, so the output is deterministic even where recall is
     probabilistic."""

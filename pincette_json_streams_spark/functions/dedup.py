@@ -10,7 +10,8 @@
   O(n^2).  ``minhash_index``/``incremental_dedup`` reuse the same pass
   for a growing corpus.
 - simhash_pairs        — 60-bit SimHash over word tokens (one Arrow pass),
-  near-dup = small Hamming distance, candidates via LSH on bit bands.
+  near-dup = small Hamming distance, candidates from the banded Hamming
+  index of ``functions/similarity.py``.
 - ngram_jaccard_pairs /
   containment_pairs    — word-ngram inverted-index join; exact Jaccard or
   containment on the group pairs sharing >= 1 n-gram, with an optional
@@ -57,7 +58,7 @@ from pincette_json_streams_spark.functions.text import (
 __all__ = [
     "connected_components", "connected_components_star", "exact_dedup",
     "minhash_lsh_pairs", "simhash_pairs", "ngram_jaccard_pairs",
-    "embedding_cosine", "cosine_vec", "embedding_pairs", "hyperplane_bucket",
+    "cosine_vec", "embedding_pairs", "hyperplane_bucket",
     "minhash_index", "incremental_dedup", "verify_pairs_editdist",
 ]
 
@@ -542,10 +543,15 @@ def simhash_pairs(
     bits: int = 60,
     bands: int = 6,
 ) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance, candidates via LSH on
-    signature bit-bands (pigeonhole: distance<=max_hamming implies an equal
-    band when bands > max_hamming ... approximate for smaller band counts)."""
-    band_width = bits // bands
+    """Near-dup pairs by SimHash Hamming distance, candidates from the
+    banded Hamming index (``similarity._band_pairs``) over ``bands``
+    bands of ``bits // bands`` bits each (pigeonhole: every pair within
+    ``bands - 1`` shares a band; larger ``max_hamming`` is
+    approximate)."""
+    from pincette_json_streams_spark.functions.similarity import (
+        _band_pairs,
+    )
+
     base = (
         _spread(df, by=id_col)
         .select(
@@ -556,41 +562,18 @@ def simhash_pairs(
     # cluster compression: docs sharing a signature pair at Hamming 0
     # without any join — the LSH self-join runs over distinct signatures
     groups = _digest_groups(base, "sig")
-    banded = groups.select(
-        "sig", "ids",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright(F.col("sig"), b * band_width)
-                        .bitwiseAND(F.lit((1 << band_width) - 1))
-                        .alias("key"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("sig", "ids", "bk.band", "bk.key")
-    l, r = banded.alias("l"), banded.alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.key") == F.col("r.key"))
-            & (F.col("l.sig") < F.col("r.sig")),
-        )
-        .select(
-            F.col("l.sig").alias("sig_a"), F.col("r.sig").alias("sig_b"),
-            F.col("l.ids").alias("ids_a"), F.col("r.ids").alias("ids_b"),
-        )
-        .dropDuplicates(["sig_a", "sig_b"])
-    )
-    ham = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
+    band_bits = bits // bands
     verified = (
-        cand.withColumn("hamming", ham)
-        .filter(F.col("hamming") <= max_hamming)
-        .select("ids_a", "ids_b", "hamming")
+        _band_pairs(
+            groups.select(F.col("sig").alias("sig_a"),
+                          F.col("ids").alias("ids_a")), ["sig_a"],
+            groups.select(F.col("sig").alias("sig_b"),
+                          F.col("ids").alias("ids_b")), ["sig_b"],
+            band_bits, bands * band_bits)
+        .filter((F.col("sig_a") < F.col("sig_b"))
+                & (F.col("hamming") <= max_hamming))
+        .select("ids_a", "ids_b",
+                F.col("hamming").cast("int").alias("hamming"))
     )
     return _expand_pairs(verified, groups.select("ids"), ["hamming"],
                          [F.lit(0).cast("int").alias("hamming")])
@@ -891,21 +874,6 @@ def containment_pairs(
 # --------------------------------------------------------------------------
 # embedding near-dup / similarity
 # --------------------------------------------------------------------------
-
-def embedding_cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity of two array<float> columns — native zip_with +
-    aggregate.  NOTE: Catalyst evaluates HOF lambdas *interpreted*, per
-    element; fine for a handful of pairs, but pair-expanded joins should
-    score with :func:`cosine_vec` (Arrow-vectorized numpy) instead."""
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
-    nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, v: acc + v * v))
-    return dot / (na * nb)
-
 
 def _cosine_kernel(va: pd.Series, vb: pd.Series) -> pd.Series:
     import numpy as np

@@ -1,13 +1,36 @@
-"""Similarity search over embedding columns.
+"""Similarity search over embedding columns and integer sketches.
 
-- brute_force_topk: exact cosine top-k — the correctness baseline.  Query
-  set broadcast against the corpus; one scan, one shuffle for the top-k
-  (window by query).  Right answer for bounded query sets even at 100 TB
-  corpus scale (cost = corpus scan * |Q| vector ops).
-- lsh_topk: hyperplane-LSH bucketed search — the latency path.  Corpus is
-  bucketed once (materialized at scale); queries probe only their bucket
-  (optionally multi-probe neighbors).  Deterministic bucketing (md5-based
-  hyperplanes) so the oracle can replay it.
+Top-k search, ``(query_id, rank, vec_id, ...)`` per query:
+
+- brute_force_topk / hard_negative_topk: exact cosine, the bounded query
+  set broadcast against the corpus scan;
+- ivf_topk: IVF candidates (nearest-centroid lists), exact cosine
+  re-rank;
+- hamming_topk: exact Hamming distance between the sign-bit sketches of
+  binary_signatures;
+- hamming_lsh_topk: candidates from the banded Hamming index below,
+  re-ranked by Hamming distance.
+
+All five rank through ``_top_k``: ``rank`` is a bigint ``row_number``
+per query, ordered by the score, ties broken by ``vec_id``.
+
+The banded Hamming index (``_band_pairs``) serves hamming_lsh_topk,
+hamming_near_pairs, hamming_probe and ``dedup.simhash_pairs``:
+
+- bands: each sketch lane splits into ``lane_bits // band_bits``
+  contiguous ``band_bits``-wide values counted from its low bit, and
+  bands are numbered lane by lane; high remainder bits are in no band;
+- postings: one ``(band, bv)`` row per band; with ``flips=1`` the probe
+  side also posts each band value with one bit flipped;
+- candidates: the equi-join on ``(band, bv)``.  A pair that collides in
+  several bands keeps only the row of its lowest band whose values
+  differ in at most ``flips`` bits.  The check reads the lanes both rows
+  carry, so it needs no aggregation and runs unchanged on streams;
+- distance: XOR and popcount, summed over the lanes.
+
+Pigeonhole: with ``n`` bands, a pair at distance ``d`` has a band with
+at most ``floor(d / n)`` differing bits, so every pair within
+``(flips + 1) * n - 1`` is a candidate.
 """
 
 from __future__ import annotations
@@ -15,24 +38,37 @@ from __future__ import annotations
 from typing import Sequence
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from pincette_json_streams_spark.functions.dedup import (
-    cosine_vec,
-    hyperplane_bucket,
-)
+from pincette_json_streams_spark.functions.dedup import cosine_vec
 
 __all__ = [
     "binary_signatures", "brute_force_topk", "embedding_moments",
     "embedding_outliers", "hamming_probe", "hamming_topk",
     "ivf_probe", "ivf_topk",
-    "lsh_topk", "pca_components", "pca_project", "pq_adc_topk",
+    "pca_components", "pca_project", "pq_adc_topk",
     "pq_codebooks", "pq_encode", "pq_refine_codebooks",
     "quantize_embeddings", "rrf_fuse", "semantic_dedup",
     "train_kmeans_centroids",
 ]
+
+
+def _top_k(scored: DataFrame, k: int, score: Column,
+           cols: Sequence[str]) -> DataFrame:
+    """The rank tail of every top-k search: per ``query_id``, number
+    the rows by ``score`` (a sort order), ties by ``vec_id``, as a
+    bigint ``rank``, and keep ranks ``<= k``.  The window's exchange
+    is the only shuffle the tail adds.
+
+    -> (query_id, rank, vec_id, *cols)."""
+    w = Window.partitionBy("query_id").orderBy(score, F.col("vec_id").asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "rank", "vec_id", *cols)
+    )
 
 
 def quantize_embeddings(
@@ -95,14 +131,7 @@ def brute_force_topk(
         F.round(cosine_vec(F.col("qv"), F.col("cv")), 6)
         .alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "cosine")
-    )
+    return _top_k(scored, k, F.col("cosine").desc(), ["cosine"])
 
 
 def hard_negative_topk(
@@ -144,49 +173,8 @@ def hard_negative_topk(
                 F.round(cosine_vec(F.col("qv"), F.col("cv")), 6)
                 .alias("cosine"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "neg_label", "cosine")
-    )
-
-
-def lsh_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    planes: int = 6,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    query_id_col: str = "query_id",
-) -> DataFrame:
-    """Approximate top-k: candidates limited to the query's hyperplane
-    bucket.  Recall grows with fewer planes / multi-probing; determinism
-    is exact (md5 hyperplanes), so results are reproducible and
-    oracle-checkable."""
-    c = corpus.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cv"),
-        hyperplane_bucket(F.col(vec_col), planes).alias("bucket"),
-    )
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("qv"),
-        hyperplane_bucket(F.col(vec_col), planes).alias("bucket"),
-    )
-    scored = c.join(F.broadcast(q), "bucket").select(
-        "query_id", "vec_id",
-        F.round(cosine_vec(F.col("qv"), F.col("cv")), 6)
-        .alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "cosine")
-    )
+    return _top_k(scored, k, F.col("cosine").desc(),
+                  ["neg_label", "cosine"])
 
 
 def binary_signatures(
@@ -246,6 +234,102 @@ def binary_signatures(
     return df.select(F.col(id_col), *[lane(i) for i in range(lanes)])
 
 
+def _sketch_sides(corpus, queries, vec_col, id_col, query_id_col,
+                  lane_bits, op):
+    """Sign-bit sketches of the corpus and the query set for the
+    Hamming top-k operators: ``(sigs, qs, lanes)`` with ``sigs`` keyed
+    ``vec_id`` carrying ``lanes`` and ``qs`` keyed ``query_id``
+    carrying the same lanes as ``q_<lane>``.
+
+    The width is probed ONCE, from the bounded query side (one tiny
+    job), and both sketches are pinned to it, so a corpus/query dim
+    mismatch raises instead of silently mis-aligning lanes."""
+    qrow = queries.select(F.size(vec_col).alias("d")).first()
+    if qrow is None or qrow["d"] is None:
+        raise ValueError(f"{op}: empty query set (or null "
+                         f"{vec_col!r}); nothing to score")
+    dims = qrow["d"]
+    sigs = binary_signatures(corpus, vec_col, id_col, lane_bits, dims)
+    lanes = [c for c in sigs.columns if c.startswith("sig_")]
+    qs = binary_signatures(
+        queries.withColumnRenamed(query_id_col, "query_id"),
+        vec_col, "query_id", lane_bits, dims,
+    ).select("query_id", *[F.col(c).alias(f"q_{c}") for c in lanes])
+    return sigs.withColumnRenamed(id_col, "vec_id"), qs, lanes
+
+
+def _xor_popcount(a: Column, b: Column) -> Column:
+    """Number of differing bits of two integer columns: XOR, then
+    popcount.  Pure integer math, so any SQL engine replays it
+    bit-for-bit."""
+    return F.bit_count(a.bitwiseXOR(b))
+
+
+def _hamming(lanes_a: Sequence[str], lanes_b: Sequence[str]) -> Column:
+    """Hamming distance (bigint) between the sketches held in two
+    lists of integer lane columns."""
+    return sum(_xor_popcount(F.col(a), F.col(b))
+               for a, b in zip(lanes_a, lanes_b)).cast("long")
+
+
+def _band_values(lanes: Sequence[str], band_bits: int,
+                 lane_bits: int) -> list:
+    """The bands of a sketch held in ``lanes``, in band order: each
+    lane's ``lane_bits // band_bits`` contiguous ``band_bits``-wide
+    values counted from its low bit.  High remainder bits are in no
+    band."""
+    mask = F.lit((1 << band_bits) - 1)
+    return [F.shiftright(F.col(c), s).bitwiseAND(mask)
+            for c in lanes
+            for s in range(0, lane_bits - band_bits + 1, band_bits)]
+
+
+def _band_pairs(
+    left: DataFrame,
+    l_lanes: Sequence[str],
+    right: DataFrame,
+    r_lanes: Sequence[str],
+    band_bits: int,
+    lane_bits: int,
+    flips: int = 0,
+) -> DataFrame:
+    """The banded Hamming index's candidate builder (rules in the
+    module docstring): one row per (left, right) pair that collides in
+    some band, with ``hamming``, the distance over all lanes.
+
+    ``left`` and ``right`` carry their sketches in the lane columns
+    ``l_lanes`` / ``r_lanes`` (same order, distinct names); every
+    other column of both sides rides along.  Each side explodes one
+    ``(band, bv)`` posting per band; the right side also posts every
+    band value with one bit flipped when ``flips=1``.  A join hint on
+    ``right`` (``F.broadcast``) carries through to the join, and a
+    filter on the result (a self-join's ``id < id_r``) joins the join
+    condition.  A pair colliding in several bands keeps only the row
+    of its first band whose values differ in at most ``flips`` bits —
+    both rows' lanes ride the join, so the check is a row-local
+    filter: no aggregation, no streaming state."""
+    def postings(df, lanes, flips):
+        keys = []
+        for b, bv in enumerate(_band_values(lanes, band_bits, lane_bits)):
+            band = F.lit(b).cast("int").alias("band")
+            keys += [F.struct(band, v.alias("bv")) for v in
+                     [bv] + [bv.bitwiseXOR(F.lit(1 << j))
+                             for j in range(band_bits if flips else 0)]]
+        return df.select("*", F.explode(F.array(*keys)).alias("p")) \
+            .select(*df.columns, "p.band", "p.bv")
+
+    joined = postings(left, l_lanes, 0).join(
+        postings(right, r_lanes, flips), ["band", "bv"])
+    collide = F.array(*[
+        _xor_popcount(a, b) <= flips for a, b in zip(
+            _band_values(l_lanes, band_bits, lane_bits),
+            _band_values(r_lanes, band_bits, lane_bits))])
+    return (
+        joined.filter(F.col("band") == F.array_position(collide, True) - 1)
+        .withColumn("hamming", _hamming(l_lanes, r_lanes))
+    )
+
+
 def hamming_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -267,37 +351,12 @@ def hamming_topk(
     scoring kernel of that index.
 
     -> (query_id, rank, vec_id, hamming)."""
-    # probe dims ONCE (from the bounded query side — one tiny job) and
-    # pin both sketch widths to it, so a corpus/query dim mismatch
-    # raises instead of silently mis-aligning lanes
-    qrow = queries.select(F.size(vec_col).alias("d")).first()
-    if qrow is None or qrow["d"] is None:
-        raise ValueError("hamming_topk: empty query set (or null "
-                         f"{vec_col!r}); nothing to score")
-    dims = qrow["d"]
-    sigs = binary_signatures(corpus, vec_col, id_col, lane_bits, dims)
-    lanes = [c for c in sigs.columns if c.startswith("sig_")]
-    qs = binary_signatures(
-        queries.withColumnRenamed(query_id_col, "query_id"),
-        vec_col, "query_id", lane_bits, dims,
-    ).select("query_id",
-             *[F.col(c).alias(f"q_{c}") for c in lanes])
-    ham = sum(
-        F.bit_count(F.expr(f"{c} ^ q_{c}")) for c in lanes
-    ).cast("long")
-    scored = (
-        sigs.withColumnRenamed(id_col, "vec_id")
-        .crossJoin(F.broadcast(qs))
-        .select("query_id", "vec_id", ham.alias("hamming"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("hamming").asc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank",
-                          F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "hamming")
-    )
+    sigs, qs, lanes = _sketch_sides(corpus, queries, vec_col, id_col,
+                                    query_id_col, lane_bits, "hamming_topk")
+    scored = sigs.crossJoin(F.broadcast(qs)).select(
+        "query_id", "vec_id",
+        _hamming(lanes, [f"q_{c}" for c in lanes]).alias("hamming"))
+    return _top_k(scored, k, F.col("hamming").asc(), ["hamming"])
 
 
 def hamming_lsh_topk(
@@ -311,37 +370,38 @@ def hamming_lsh_topk(
     query_id_col: str = "query_id",
     lane_bits: int = 32,
 ) -> DataFrame:
-    """Sub-linear Hamming ANN: the banded-LSH index over the sign-lane
-    sketches of :func:`binary_signatures`, with :func:`hamming_topk`'s
-    XOR+popcount scoring as the re-rank kernel — the composition that
-    turns the round-8 scoring kernel into an index (same band-bucket
-    equi-join shape as the MinHash star-edge plan in
-    ``functions/dedup.py:252``).
+    """Sub-linear Hamming ANN: the banded Hamming index over the
+    sign-lane sketches of :func:`binary_signatures`, with
+    :func:`hamming_topk`'s XOR+popcount scoring as the re-rank kernel
+    (same band-bucket equi-join shape as the MinHash star-edge plan in
+    ``functions/dedup.py``).
 
-    Index build: each sketch splits into ``n_lanes * lane_bits /
-    band_bits`` byte-bands; every corpus row posts one (band, value)
-    key per band — a fixed small-integer explode of the 32x-compressed
-    sketch, never of the float vectors.  Probe: each query posts, per
-    band, the exact band value plus (``probe_bits=1``) every 1-bit
-    flip — ``band_bits + 1`` probes per band.  Candidates come from the
-    (band, value) EQUI-JOIN of postings against the broadcast probe
-    set; there is NO crossJoin against the corpus, so candidate work is
-    proportional to bucket collisions, not corpus size.
+    Index build: each sketch splits into ``n_bands = n_lanes *
+    lane_bits / band_bits`` bands; every corpus row posts one (band,
+    value) key per band — a fixed small-integer explode of the
+    32x-compressed sketch, never of the float vectors.  Probe: each
+    query posts, per band, the exact band value plus (``probe_bits=1``)
+    every 1-bit flip — ``band_bits + 1`` probes per band.  Candidates
+    come from the (band, value) EQUI-JOIN of postings against the
+    broadcast probe set; there is NO crossJoin against the corpus, so
+    candidate work is proportional to bucket collisions, not corpus
+    size.
 
-    Determinism / recall contract (pigeonhole): a corpus vector at
-    total Hamming distance ``d`` from the query has some band with at
-    most ``floor(d / n_bands)`` differing bits, so every neighbour with
-    ``d <= n_bands * probe_bits`` (d <= 8 for 64-dim sketches) is
-    GUARANTEED a candidate, and the whole plan is integer-exact — an
+    Recall contract (pigeonhole): a corpus vector at total Hamming
+    distance ``d`` from the query has some band with at most
+    ``floor(d / n_bands)`` differing bits, so every neighbour with
+    ``d <= (probe_bits + 1) * n_bands - 1`` is GUARANTEED a candidate
+    (15 for 64-dim sketches in 8 byte-bands; ``n_bands - 1`` with
+    ``probe_bits=0``), and the whole plan is integer-exact — an
     ANSI-SQL oracle replays it bit-for-bit.  Recall beyond that radius
     is probabilistic; gauge it against :func:`hamming_topk` like
     ``ann_recall`` does against brute force.
 
     100 TB shape: postings are (band:int, value:int, id, lanes) — one
     narrow shuffle-free projection + explode; the probe side is the
-    bounded query set (broadcast); dedup of multi-band hits is one
-    hash agg keyed (query_id, vec_id) over candidates only; the final
-    top-k window is per-query over candidates only.
+    bounded query set (broadcast); multi-band hits keep their first
+    colliding band (a row-local filter); the final top-k window is
+    per-query over candidates only.
 
     -> (query_id, rank, vec_id, hamming)."""
     if lane_bits % band_bits != 0:
@@ -350,74 +410,15 @@ def hamming_lsh_topk(
             f"lane_bits={lane_bits}")
     if probe_bits not in (0, 1):
         raise ValueError("hamming_lsh_topk: probe_bits must be 0 or 1")
-    qrow = queries.select(F.size(vec_col).alias("d")).first()
-    if qrow is None or qrow["d"] is None:
-        raise ValueError("hamming_lsh_topk: empty query set (or null "
-                         f"{vec_col!r}); nothing to score")
-    dims = qrow["d"]
-    sigs = binary_signatures(corpus, vec_col, id_col, lane_bits, dims)
-    lanes = [c for c in sigs.columns if c.startswith("sig_")]
-    per_lane = lane_bits // band_bits
-    n_bands = len(lanes) * per_lane
-    mask = (1 << band_bits) - 1
-
-    def band_val(b):
-        # big-endian within the lane: band 0 is the lane's high byte
-        lane = F.col(lanes[b // per_lane])
-        shift = (per_lane - 1 - (b % per_lane)) * band_bits
-        return F.shiftright(lane, shift).bitwiseAND(F.lit(mask))
-
-    postings = sigs.select(
-        F.col(id_col).alias("vec_id"), *lanes,
-        F.explode(F.array(*[
-            F.struct(F.lit(b).cast("int").alias("band"),
-                     band_val(b).alias("bv"))
-            for b in range(n_bands)
-        ])).alias("p"),
-    ).select("vec_id", *lanes, "p.band", "p.bv")
-
-    qs = binary_signatures(
-        queries.withColumnRenamed(query_id_col, "query_id"),
-        vec_col, "query_id", lane_bits, dims,
-    ).select("query_id", *[F.col(c).alias(f"q_{c}") for c in lanes])
-
-    def q_band_val(b):
-        lane = F.col(f"q_{lanes[b // per_lane]}")
-        shift = (per_lane - 1 - (b % per_lane)) * band_bits
-        return F.shiftright(lane, shift).bitwiseAND(F.lit(mask))
-
-    probe_structs = []
-    for b in range(n_bands):
-        bv = q_band_val(b)
-        probe_structs.append(F.struct(
-            F.lit(b).cast("int").alias("band"), bv.alias("bv")))
-        if probe_bits:
-            for j in range(band_bits):
-                probe_structs.append(F.struct(
-                    F.lit(b).cast("int").alias("band"),
-                    bv.bitwiseXOR(F.lit(1 << j)).alias("bv")))
-    probes = qs.select(
-        "query_id", *[f"q_{c}" for c in lanes],
-        F.explode(F.array(*probe_structs)).alias("p"),
-    ).select("query_id", *[f"q_{c}" for c in lanes], "p.band", "p.bv")
-
-    ham = sum(
-        F.bit_count(F.expr(f"{c} ^ q_{c}")) for c in lanes
-    ).cast("long")
+    sigs, qs, lanes = _sketch_sides(corpus, queries, vec_col, id_col,
+                                    query_id_col, lane_bits,
+                                    "hamming_lsh_topk")
     # lanes ride along both sides, so the candidate row already has
     # everything the re-rank needs — no second join back to the corpus
-    cand = postings.join(F.broadcast(probes), ["band", "bv"]).select(
-        "query_id", "vec_id", ham.alias("hamming"))
-    dedup = cand.groupBy("query_id", "vec_id").agg(
-        F.min("hamming").alias("hamming"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("hamming").asc(), F.col("vec_id").asc())
-    return (
-        dedup.withColumn("rank",
-                         F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "hamming")
-    )
+    cand = _band_pairs(sigs, lanes, F.broadcast(qs),
+                       [f"q_{c}" for c in lanes], band_bits, lane_bits,
+                       flips=probe_bits)
+    return _top_k(cand, k, F.col("hamming").asc(), ["hamming"])
 
 
 def _checked_lane(c: str, lane_bits: int, op: str):
@@ -465,17 +466,17 @@ def hamming_near_pairs(
     radius from 7 to 3 — that misuse now raises instead of silently
     losing recall).
 
-    Index shape: each row posts one (band, value) key per byte-band;
-    candidates are band COLLISIONS (the equi-join on the exact band
-    value, id_a < id_b), then the exact integer distance verifies.
-    Pigeonhole guarantee: a pair at distance d has some band with
-    ZERO flips whenever ``d < n_bands``, so ``max_hamming <=
-    n_bands - 1`` (the default 7 for a 64-bit sketch in 8 byte-bands)
-    has ZERO false negatives — exact, not probabilistic, and the SQL
-    oracle replays it bit-for-bit.  Larger ``max_hamming`` degrades
-    honestly: candidates still come from band collisions, so recall
-    beyond the radius is probabilistic (raise ``band_bits`` coverage
-    by lowering it, the standard LSH trade).
+    Index shape: the banded Hamming index's self-join — candidates are
+    exact band COLLISIONS (the equi-join on band value, id_a < id_b),
+    each pair on the row of its first colliding band, then the exact
+    integer distance verifies.  Pigeonhole guarantee: a pair at
+    distance d has some band with ZERO flips whenever ``d < n_bands``,
+    so ``max_hamming <= n_bands - 1`` (the default 7 for a 64-bit
+    sketch in 8 byte-bands) has ZERO false negatives — exact, not
+    probabilistic, and the SQL oracle replays it bit-for-bit.  Larger
+    ``max_hamming`` degrades honestly: candidates still come from band
+    collisions, so recall beyond the radius is probabilistic (raise
+    ``band_bits`` coverage by lowering it, the standard LSH trade).
 
     -> (id_a, id_b, hamming)."""
     lanes = list(lane_cols)
@@ -486,43 +487,19 @@ def hamming_near_pairs(
             f"hamming_near_pairs: max_hamming={max_hamming} exceeds "
             f"the guaranteed radius {n_bands - 1} (= n_bands - 1); "
             "recall beyond it is probabilistic")
-    per_lane = lane_bits // band_bits
-    mask = (1 << band_bits) - 1
-
-    def band_val(b):
-        lane = F.col(lanes[b // per_lane])
-        shift = (per_lane - 1 - (b % per_lane)) * band_bits
-        return F.shiftright(lane, shift).bitwiseAND(F.lit(mask))
-
-    lane_guard = [
-        _checked_lane(c, lane_bits, "hamming_near_pairs")
-        for c in lanes]
-
-    postings = df.select(
-        F.col(id_col).alias("id"), *lane_guard,
-        F.explode(F.array(*[
-            F.struct(F.lit(b).cast("int").alias("band"),
-                     band_val(b).alias("bv"))
-            for b in range(n_bands)
-        ])).alias("p"),
-    ).select("id", *lanes, "p.band", "p.bv")
-    l = postings.alias("l")
-    r = postings.select(
-        F.col("id").alias("id_r"), "band", "bv",
-        *[F.col(c).alias(f"r_{c}") for c in lanes]).alias("r")
-    ham = sum(
-        F.bit_count(F.expr(f"l.{c} ^ r_{c}")) for c in lanes
-    ).cast("long")
+    side = df.select(
+        F.col(id_col).alias("id"),
+        *[_checked_lane(c, lane_bits, "hamming_near_pairs")
+          for c in lanes])
+    r_lanes = [f"r_{c}" for c in lanes]
+    right = side.select(F.col("id").alias("id_r"), *[
+        F.col(c).alias(r) for c, r in zip(lanes, r_lanes)])
     return (
-        l.join(r, (F.col("l.band") == F.col("r.band"))
-               & (F.col("l.bv") == F.col("r.bv"))
-               & (F.col("l.id") < F.col("id_r")))
-        .select(F.col("l.id").alias("id_a"),
-                F.col("id_r").alias("id_b"),
-                ham.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-        .groupBy("id_a", "id_b")
-        .agg(F.min("hamming").alias("hamming"))
+        _band_pairs(side, lanes, right, r_lanes, band_bits, lane_bits)
+        .filter((F.col("id") < F.col("id_r"))
+                & (F.col("hamming") <= max_hamming))
+        .select(F.col("id").alias("id_a"), F.col("id_r").alias("id_b"),
+                "hamming")
     )
 
 
@@ -547,11 +524,12 @@ def hamming_probe(
     candidates come from a stream-static INNER equi-join.  The usual
     multi-band duplicate (a pair colliding in 3 bands emits 3 join
     rows) is removed WITHOUT an aggregation — streaming dedup would
-    need state — by the FIRST-COLLIDING-BAND filter: both sides' lanes
-    ride the join, so "is this the lowest band where the two sketches
-    agree?" is a row-local expression, and exactly one row per
-    matching pair survives.  Same pigeonhole contract as the batch
-    operators: zero false negatives for ``max_hamming <= n_bands - 1``.
+    need state — by the index's FIRST-COLLIDING-BAND filter: both
+    sides' lanes ride the join, so "is this the lowest band where the
+    two sketches agree?" is a row-local expression, and exactly one
+    row per matching pair survives.  Same pigeonhole contract as the
+    batch operators: zero false negatives for ``max_hamming <=
+    n_bands - 1``.
 
     Scale shape: the index side is a plain DataFrame (collection) —
     Catalyst broadcasts it when small, otherwise the stream shuffles
@@ -564,56 +542,24 @@ def hamming_probe(
         raise ValueError(
             f"hamming_probe: band_bits={band_bits} must divide "
             f"lane_bits={lane_bits}")
-    per_lane = lane_bits // band_bits
-    n_bands = len(lanes) * per_lane
+    n_bands = len(lanes) * (lane_bits // band_bits)
     if max_hamming > n_bands - 1:
         import warnings
         warnings.warn(
             f"hamming_probe: max_hamming={max_hamming} exceeds the "
             f"guaranteed radius {n_bands - 1}; recall beyond it is "
             "probabilistic")
-    mask = (1 << band_bits) - 1
-
-    def band_val(col_of, b):
-        lane = F.col(col_of(b // per_lane))
-        shift = (per_lane - 1 - (b % per_lane)) * band_bits
-        return F.shiftright(lane, shift).bitwiseAND(F.lit(mask))
-
     keep = [c for c in df.columns if c not in lanes]
     probe = df.select(
         *keep,
-        *[_checked_lane(c, lane_bits, "hamming_probe") for c in lanes],
-        F.explode(F.array(*[
-            F.struct(F.lit(b).cast("int").alias("band"),
-                     band_val(lambda i: lanes[i], b).alias("bv"))
-            for b in range(n_bands)
-        ])).alias("p"),
-    ).select(*keep, *lanes, "p.band", "p.bv")
+        *[_checked_lane(c, lane_bits, "hamming_probe") for c in lanes])
+    x_lanes = [f"x_{c}" for c in lanes]
     post = index.select(
         F.col(index_id_col).alias("match_id"),
-        *[_checked_lane(c, lane_bits, "hamming_probe")
-          .alias(f"x_{c}") for c in lanes],
-        # band values computed from the ORIGINAL lane columns — the
-        # x_ aliases would be lateral column references in this select
-        F.explode(F.array(*[
-            F.struct(F.lit(b).cast("int").alias("band"),
-                     band_val(lambda i: lanes[i], b).alias("bv"))
-            for b in range(n_bands)
-        ])).alias("p"),
-    ).select("match_id", *[f"x_{c}" for c in lanes], "p.band", "p.bv")
-    joined = probe.join(post, ["band", "bv"])
-    collide = F.array(*[
-        band_val(lambda i: lanes[i], b)
-        == band_val(lambda i: f"x_{lanes[i]}", b)
-        for b in range(n_bands)
-    ])
-    first_band = F.array_position(collide, True) - 1
-    ham = sum(
-        F.bit_count(F.expr(f"{c} ^ x_{c}")) for c in lanes
-    ).cast("long")
+        *[_checked_lane(c, lane_bits, "hamming_probe").alias(x)
+          for c, x in zip(lanes, x_lanes)])
     return (
-        joined.filter(F.col("band") == first_band)
-        .withColumn("hamming", ham)
+        _band_pairs(probe, lanes, post, x_lanes, band_bits, lane_bits)
         .filter(F.col("hamming") <= max_hamming)
         .select(*keep, "match_id", "hamming")
     )
@@ -741,9 +687,8 @@ def ivf_topk(
          ONE equi-join on list id with the tiny query side broadcast;
       4. exact cosine re-rank of candidates only (window per query).
 
-    Compared to `lsh_topk`, IVF adapts to the data distribution (with
-    trained centroids) and `nprobe` is a recall dial that doesn't change
-    the index."""
+    IVF adapts to the data distribution (with trained centroids), and
+    `nprobe` is a recall dial that doesn't change the index."""
     import numpy as np
 
     c = corpus.select(F.col(id_col).alias("vec_id"),
@@ -777,14 +722,7 @@ def ivf_topk(
         "query_id", "vec_id",
         F.round(cosine_vec(F.col("qv"), F.col("cv")), 6).alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "cosine")
-    )
+    return _top_k(scored, k, F.col("cosine").desc(), ["cosine"])
 
 
 def ivf_probe(

@@ -5642,18 +5642,24 @@ class TestBinarySketchAnn:
 
     def test_lsh_guaranteed_radius(self, spark):
         """Pigeonhole contract: with 8 byte-bands and 1-bit probes,
-        every neighbour within Hamming 8 MUST be a candidate — plant
-        vectors at distance 0, 8 (one flip per band: guaranteed) and
-        check they rank exactly as the exact kernel would."""
+        every neighbour within Hamming (1 + 1) * 8 - 1 = 15 MUST be a
+        candidate — plant vectors at distance 0, 8 (one flip per band)
+        and 15 (two flips in seven bands, one in the eighth: the
+        farthest the guarantee covers) and check they rank exactly as
+        the exact kernel would."""
         from pincette_json_streams_spark.functions.similarity import (
             hamming_lsh_topk,
         )
         base = [1.0] * 64
         # one sign flip inside EVERY byte-band -> per-band distance 1,
-        # total 8: the worst case the guarantee still covers
+        # total 8
         spread8 = [(-1.0 if i % 8 == 0 else 1.0) for i in range(64)]
+        # bands 0-6 differ in two bits, band 7 in one: only band 7 is
+        # within a 1-bit probe
+        spread15 = [(-1.0 if i % 8 < 2 and i < 56 or i == 56 else 1.0)
+                    for i in range(64)]
         df = spark.createDataFrame(
-            [(0, base), (1, spread8)],
+            [(0, base), (1, spread8), (2, spread15)],
             "vec_id long, embedding array<float>")
         q = df.filter("vec_id = 0") \
             .selectExpr("vec_id AS query_id", "embedding")
@@ -5661,6 +5667,84 @@ class TestBinarySketchAnn:
                 for r in hamming_lsh_topk(df, q, k=3).collect()}
         assert rows[1] == (0, 0)
         assert rows[2] == (1, 8)
+        assert rows[3] == (2, 15)
+
+    def test_one_row_per_pair_across_colliding_bands(self, spark):
+        """A pair whose sketches collide in several bands (identical
+        sketches collide in all of them) is ONE output row in every
+        banded operator: the first-colliding-band filter keeps one
+        join row per pair.  Rows are compared as sorted lists, so a
+        duplicate cannot hide behind a dict key."""
+        from pincette_json_streams_spark.functions.dedup import (
+            _hash_str_py, _normalize_py, simhash_pairs,
+        )
+        from pincette_json_streams_spark.functions.similarity import (
+            binary_signatures, hamming_lsh_topk, hamming_near_pairs,
+            hamming_probe,
+        )
+        base = [1.0] * 64
+        one = [-1.0] + [1.0] * 63   # one bit off: 7 of 8 bands collide
+        df = spark.createDataFrame(
+            [(0, base), (1, base), (2, one)],
+            "vec_id long, embedding array<float>")
+        sigs = binary_signatures(df, dims=64)
+        dist = {(0, 1): 0, (0, 2): 1, (1, 2): 1}
+
+        def d(i, j):
+            return 0 if i == j else dist[min(i, j), max(i, j)]
+
+        pairs = sorted((r["id_a"], r["id_b"], r["hamming"])
+                       for r in hamming_near_pairs(sigs).collect())
+        assert pairs == [(0, 1, 0), (0, 2, 1), (1, 2, 1)]
+        probed = sorted((r["vec_id"], r["match_id"], r["hamming"])
+                        for r in hamming_probe(sigs, sigs).collect())
+        assert probed == [(i, j, d(i, j)) for i in range(3)
+                          for j in range(3)]
+        q = df.selectExpr("vec_id AS query_id", "embedding")
+        ranked = sorted((r["query_id"], r["vec_id"], r["hamming"])
+                        for r in hamming_lsh_topk(df, q, k=10).collect())
+        assert ranked == [(i, j, d(i, j)) for i in range(3)
+                          for j in range(3)]
+
+        # SimHash: identical texts share a signature (the digest-group
+        # path); the third text's signature differs but collides with
+        # theirs in at least two 10-bit bands
+        texts = ["the quick brown fox", "the quick brown fox",
+                 "the quick brown cat"]
+
+        def simhash(t):
+            hs = [_hash_str_py(w)
+                  for w in dict.fromkeys(_normalize_py(t).split(" "))]
+            return sum(1 << b for b in range(60)
+                       if 2 * sum(h >> b & 1 for h in hs) > len(hs))
+
+        a, c = simhash(texts[0]), simhash(texts[2])
+        assert a != c
+        assert sum((a >> s & 1023) == (c >> s & 1023)
+                   for s in range(0, 60, 10)) >= 2
+        docs = spark.createDataFrame(
+            list(enumerate(texts, 1)), "doc_id long, text string")
+        got = sorted((r["id_a"], r["id_b"])
+                     for r in simhash_pairs(docs, max_hamming=60)
+                     .collect())
+        assert got == [(1, 2), (1, 3), (2, 3)]
+
+    def test_rank_is_bigint_on_every_topk(self, spark):
+        """Every top-k search ranks through one tail: ``rank`` is a
+        bigint on the cosine and the Hamming operators alike."""
+        from pincette_json_streams_spark.functions.similarity import (
+            brute_force_topk, hamming_lsh_topk, hamming_topk,
+            hard_negative_topk, ivf_topk,
+        )
+        df = spark.createDataFrame(
+            [(0, [1.0] * 64, 1), (1, [-1.0] * 64, 2)],
+            "vec_id long, embedding array<float>, label int")
+        q = df.selectExpr("vec_id AS query_id", "embedding", "label")
+        outs = [brute_force_topk(df, q), hard_negative_topk(df, q),
+                ivf_topk(df, q, centroids=[[1.0] * 64]),
+                hamming_topk(df, q), hamming_lsh_topk(df, q)]
+        assert [o.schema["rank"].dataType.simpleString()
+                for o in outs] == ["bigint"] * 5
 
     def test_lsh_mirror_and_recall(self, spark):
         """Pure-Python mirror of the full banded plan on deterministic

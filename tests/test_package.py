@@ -1,7 +1,9 @@
 """Package-wide checks: every public name a module exports resolves, the
 pandas UDFs use one idiom (typed ``pandas_udf``), per-row Python maps
-use one helper (``map_rows``), one module reads the part wiring, and the
-extension-stage table agrees with its functions and its doc."""
+use one helper (``map_rows``), one module reads the part wiring, the
+sketch search family builds its band postings, XOR/popcount and rank
+tail in one place each, and the extension-stage table agrees with its
+functions and its doc."""
 
 import importlib
 import inspect
@@ -51,6 +53,23 @@ def test_part_wiring_keys_only_in_spec():
          for key in keys for q in "\"'"
          if f"{q}{key}{q}" in p.read_text(encoding="utf-8")})
     assert offenders == ["plans/spec.py"]
+
+
+def test_sketch_search_pieces_only_in_shared_helpers():
+    # the vector/sketch search family has one band-posting explode
+    # (similarity._band_pairs), one XOR/popcount (_xor_popcount) and
+    # one per-query rank tail (_top_k); no operator builds its own
+    from pincette_json_streams_spark.functions import similarity as sim
+
+    helpers = {'alias("band")': sim._band_pairs,
+               'alias("bv")': sim._band_pairs,
+               "bit_count(": sim._xor_popcount,
+               'Window.partitionBy("query_id")': sim._top_k}
+    for pattern, helper in helpers.items():
+        hits = {str(p.relative_to(ROOT)): n for p in sorted(ROOT.rglob("*.py"))
+                if (n := p.read_text(encoding="utf-8").count(pattern))}
+        assert hits == {"functions/similarity.py":
+                        inspect.getsource(helper).count(pattern)}, pattern
 
 
 def _doc_rows() -> dict[str, tuple[str, set[str]]]:
