@@ -8027,62 +8027,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # Ordering contract: the driver samples a 50-query prefix of this
     # dict, so the least-recently-driver-checked queries must come
     # first.  GENERATED by scripts/rotate_queries.py from the committed
-    # CORRECTNESS_r*.json files (r9..r12 at derivation time):
+    # CORRECTNESS_r*.json files (r10..r13 at derivation time):
     # never-sampled newcomers first, then cohorts by latest checked
     # round ascending, relative order preserved inside each cohort.
     return {
-        # -- latest driver check r9 (19 queries) --
-        "union_buckets": q_union_buckets,
-        "linear_fill": q_linear_fill,
-        "cms_merge": q_cms_merge,
-        "domain_mix": q_domain_mix,
-        "pack_sequences": q_pack_sequences,
-        "dedup_incremental": q_dedup_incremental,
-        "token_drift": q_token_drift,
-        "salted_revenue": q_salted_revenue,
-        "kmv_distinct": q_kmv_distinct,
-        "retention_cohorts": q_retention_cohorts,
-        "asof_join": q_asof_join,
-        "sessionize_events": q_sessionize_events,
-        "contamination": q_contamination,
-        "lm_score": q_lm_score,
-        "ann_ivf": q_ann_ivf,
-        "ann_recall": q_ann_recall,
-        "events_gapfill": q_events_gapfill,
-        "profile_table": q_profile_table,
-        "tfidf_terms": q_tfidf_terms,
-        # -- latest driver check r10 (50 queries) --
-        "dedup_ngram_capped": q_dedup_ngram_capped,
-        "dup_containment_capped": q_dup_containment_capped,
-        "audio_fingerprint": q_audio_fingerprint,
-        "hamming_probe": q_hamming_probe,
-        "ivf_probe": q_ivf_probe,
-        "graph_lookup": q_graph_lookup,
-        "window_modern": q_window_modern,
-        "lookup_topn": q_lookup_topn,
-        "facet_summary": q_facet,
-        "topn_accumulators": q_topn_accumulators,
-        "kmv_overlap": q_kmv_overlap,
-        "modern_ops": q_modern_ops,
-        "bpe_encode": q_bpe_encode,
-        "emb_pca": q_emb_pca,
-        "aggregate_fold": q_aggregate_fold,
-        "per_batching": q_per_batching,
-        "merge_modes": q_merge_modes,
-        "tz_gallery": q_tz_gallery,
-        "window_timerange": q_window_timerange,
-        "corpus_stats": q_corpus_stats,
-        "sample_split": q_sample_split,
-        "chunk_docs": q_chunk_docs,
-        "passage_dedup": q_passage_dedup,
-        "quantize_embeddings": q_quantize_embeddings,
-        "quality_trim": q_quality_trim,
-        "dedup_clusters": q_dedup_clusters,
-        "dedup_clusters_star": q_dedup_clusters_star,
-        "dedup_canonical": q_dedup_canonical,
-        "split_leakfree": q_split_leakfree,
-        "repetition_stats": q_repetition_stats,
-        "aggregate_acl": q_aggregate_acl,
+        # -- latest driver check r10 (19 queries) --
         "dedup_exact": q_dedup_exact,
         "dedup_minhash": q_dedup_minhash,
         "dedup_ngram": q_dedup_ngram,
@@ -8204,6 +8153,57 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "decontaminate": q_decontaminate,
         "date_arith": q_date_arith,
         "percentile_accum": q_percentile_accum,
+        # -- latest driver check r13 (50 queries) --
+        "union_buckets": q_union_buckets,
+        "linear_fill": q_linear_fill,
+        "cms_merge": q_cms_merge,
+        "domain_mix": q_domain_mix,
+        "pack_sequences": q_pack_sequences,
+        "dedup_incremental": q_dedup_incremental,
+        "token_drift": q_token_drift,
+        "salted_revenue": q_salted_revenue,
+        "kmv_distinct": q_kmv_distinct,
+        "retention_cohorts": q_retention_cohorts,
+        "asof_join": q_asof_join,
+        "sessionize_events": q_sessionize_events,
+        "contamination": q_contamination,
+        "lm_score": q_lm_score,
+        "ann_ivf": q_ann_ivf,
+        "ann_recall": q_ann_recall,
+        "events_gapfill": q_events_gapfill,
+        "profile_table": q_profile_table,
+        "tfidf_terms": q_tfidf_terms,
+        "dedup_ngram_capped": q_dedup_ngram_capped,
+        "dup_containment_capped": q_dup_containment_capped,
+        "audio_fingerprint": q_audio_fingerprint,
+        "hamming_probe": q_hamming_probe,
+        "ivf_probe": q_ivf_probe,
+        "graph_lookup": q_graph_lookup,
+        "window_modern": q_window_modern,
+        "lookup_topn": q_lookup_topn,
+        "facet_summary": q_facet,
+        "topn_accumulators": q_topn_accumulators,
+        "kmv_overlap": q_kmv_overlap,
+        "modern_ops": q_modern_ops,
+        "bpe_encode": q_bpe_encode,
+        "emb_pca": q_emb_pca,
+        "aggregate_fold": q_aggregate_fold,
+        "per_batching": q_per_batching,
+        "merge_modes": q_merge_modes,
+        "tz_gallery": q_tz_gallery,
+        "window_timerange": q_window_timerange,
+        "corpus_stats": q_corpus_stats,
+        "sample_split": q_sample_split,
+        "chunk_docs": q_chunk_docs,
+        "passage_dedup": q_passage_dedup,
+        "quantize_embeddings": q_quantize_embeddings,
+        "quality_trim": q_quality_trim,
+        "dedup_clusters": q_dedup_clusters,
+        "dedup_clusters_star": q_dedup_clusters_star,
+        "dedup_canonical": q_dedup_canonical,
+        "split_leakfree": q_split_leakfree,
+        "repetition_stats": q_repetition_stats,
+        "aggregate_acl": q_aggregate_acl,
     }
 
 

@@ -33,6 +33,14 @@ def test_reference_app_strict(spark, app):
     assert report.ok, f"{app}: {report}"
 
 
+S3_PATHS = [os.path.join(BASE, d) for d in
+            ("s3csv", "s3csv-resumable", "s3attachments", "s3out", "files")]
+S3_MISSING = [p for p in S3_PATHS if not os.path.isdir(p)]
+
+
+@pytest.mark.skipif(
+    bool(S3_MISSING),
+    reason=f"reference corpus absent: {', '.join(S3_MISSING)} not found")
 class TestS3Apps:
     """The s3* corpus apps run against an injected LocalObjectStore
     preloaded the way the reference's Java test uploads to S3
