@@ -39,11 +39,7 @@ from pincette_json_streams_spark.plans.planner import Application
 from pincette_json_streams_spark.sources.changelog import (
     ChangeLogCollection,
 )
-from pincette_json_streams_spark.sources.collections import (
-    CollectionStore,
-    DeltaCollection,
-    open_collection,
-)
+from pincette_json_streams_spark.sources.collections import CollectionStore
 
 __all__ = [
     "compile_expr",
@@ -54,7 +50,5 @@ __all__ = [
     "PipelineContext",
     "ChangeLogCollection",
     "CollectionStore",
-    "DeltaCollection",
-    "open_collection",
     "plugins",
 ]

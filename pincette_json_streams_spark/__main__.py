@@ -7,6 +7,7 @@
   dot      spec -> Graphviz topology graph
   test     run an application folder's golden test (docs/testing.md)
   run      batch-run an app over parquet-backed topics, write sinks
+           (epoch 0 of each sink; a second run replaces the outputs)
            (--register also stores the built spec in the registry)
   list     print registered applications (name + version)
   delete   remove an application from the registry (stops it)
@@ -91,6 +92,7 @@ def cmd_test(args) -> int:
 
 def cmd_run(args) -> int:
     from pincette_json_streams_spark.plans.planner import Application
+    from pincette_json_streams_spark.streaming.sinks import DirectorySink
 
     spark = _session(args.cpus)
     data = Path(args.data)
@@ -107,7 +109,7 @@ def cmd_run(args) -> int:
         app = Application(spec, catalog)
         for name, df in app.run_batch().items():
             target = out_dir / spec["application"] / name
-            df.write.mode("overwrite").parquet(str(target))
+            DirectorySink(str(target)).write(df, 0)
             print(f"{spec['application']}/{name}: "
                   f"{spark.read.parquet(str(target)).count()} rows "
                   f"-> {target}")

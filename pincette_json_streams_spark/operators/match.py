@@ -94,10 +94,8 @@ def _value_op(col: Column, op: str, arg: Any, ctx: Ctx) -> Column:
         return col < F.lit(arg)
     if op == "$lte":
         return col <= F.lit(arg)
-    if op == "$in":
-        return col.isin(*arg)
-    if op == "$nin":
-        return ~F.coalesce(col.isin(*arg), F.lit(False))
+    if op in ("$in", "$nin"):
+        return _in_list(col, arg, op == "$nin")
     if op == "$regex":
         return col.rlike(_regex_pattern(arg))
     if op == "$mod":
@@ -108,6 +106,16 @@ def _value_op(col: Column, op: str, arg: Any, ctx: Ctx) -> Column:
     if op == "$not":
         return ~F.coalesce(compile_value_query(arg, col, ctx), F.lit(False))
     raise UnsupportedExpression(f"unknown value-query operator {op}")
+
+
+def _in_list(col: Column, values: list, negate: bool) -> Column:
+    """``$in`` (``negate``: ``$nin``) as a non-null boolean: a null in
+    the list matches a null field, as in MongoDB."""
+    hit = F.coalesce(col.isin(*[v for v in values if v is not None]),
+                     F.lit(False))
+    if None in values:
+        hit = hit | col.isNull()
+    return ~hit if negate else hit
 
 
 def _field_condition(path: str, value: Any, ctx: Ctx) -> Column:
@@ -144,8 +152,11 @@ def _field_op_inner(path: str, op: str, arg: Any, ctx: Ctx) -> Column:
         return present if arg else ~present
 
     if not ctx.has_field(path):
-        # comparisons with an absent field never match; $ne/$nin match.
-        return F.lit(op in ("$ne", "$nin", "$not"))
+        # comparisons with an absent field never match; $ne/$nin match,
+        # but an $in list holding null matches and a $nin one does not
+        if op in ("$in", "$nin"):
+            return F.lit((None in arg) == (op == "$in"))
+        return F.lit(op in ("$ne", "$not"))
 
     col = ctx.field(path)
     if op == "$eq":
@@ -160,10 +171,8 @@ def _field_op_inner(path: str, op: str, arg: Any, ctx: Ctx) -> Column:
         return col < F.lit(arg)
     if op == "$lte":
         return col <= F.lit(arg)
-    if op == "$in":
-        return col.isin(*arg)
-    if op == "$nin":
-        return ~F.coalesce(col.isin(*arg), F.lit(False))
+    if op in ("$in", "$nin"):
+        return _in_list(col, arg, op == "$nin")
     if op == "$not":
         return ~F.coalesce(_field_condition(path, arg, ctx), F.lit(False))
     if op == "$expr":

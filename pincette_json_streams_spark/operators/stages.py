@@ -1339,7 +1339,7 @@ def _stage_merge(df, spec, pctx):
 
     if df.isStreaming or (target is not None and target.isStreaming):
         # streaming: capture only — upsert-by-key is the sink layer's
-        # contract (toCollection / Delta MERGE in foreachBatch); the
+        # contract (toCollection through streaming.sinks); the
         # batch full-outer join below is an illegal streaming plan.
         # Streaming frames are NEVER registered in the catalog: a
         # later part's $lookup/$graphLookup of the entry would be a

@@ -11,6 +11,10 @@ module is the dependency-free analogue on plain parquet):
   document, a monotonic ``__commit`` stamp, and a ``__deleted``
   tombstone flag.  Appends are atomic at file granularity — exactly the
   contract Spark's file-stream source needs.
+- **The collection is a ``streaming.sinks.Sink``**: ``write(df,
+  epoch_id)`` is ``upsert``, so ``start_sink(collection, df,
+  checkpoint)`` is the streaming ``toCollection`` sink and logs each
+  epoch once.
 - **The change feed is a stream over the log**: ``readStream`` over
   ``data/`` (the file-source checkpoint IS the resume token — processed
   files are never re-read across restarts), then a per-``_id``
@@ -34,12 +38,13 @@ from __future__ import annotations
 
 import os
 import time
-import uuid
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from pincette_json_streams_spark.streaming.sinks import publish
 
 __all__ = ["ChangeLogCollection"]
 
@@ -73,7 +78,12 @@ class ChangeLogCollection:
     def upsert(self, df: DataFrame) -> None:
         """Append full-document versions (Mongo replace-upsert shape —
         the reference's ``toCollection`` sink semantics)."""
-        self._stamp(df, False).write.mode("append").parquet(self.data_dir)
+        publish({self.data_dir: self._stamp(df, False)})
+
+    def write(self, df: DataFrame, epoch_id: int) -> None:
+        """``Sink`` form of ``upsert``: downstream ``change_stream``
+        readers see the epoch's documents as insert/replace events."""
+        self.upsert(df)
 
     def delete(self, df: DataFrame) -> None:
         """Append tombstones for the ``_id`` values in ``df``."""
@@ -89,7 +99,7 @@ class ChangeLogCollection:
                 tomb = tomb.withColumn(
                     field.name, F.lit(None).cast(field.dataType)
                 )
-        self._stamp(tomb, True).write.mode("append").parquet(self.data_dir)
+        publish({self.data_dir: self._stamp(tomb, True)})
 
     # -- reads -------------------------------------------------------------
 
@@ -161,39 +171,10 @@ class ChangeLogCollection:
             )
         )
 
-    def streaming_sink(self, df: DataFrame, checkpoint: str):
-        """``toCollection`` streaming sink: each micro-batch upserts
-        into the log (foreachBatch — the standard Spark pattern for
-        transactional table sinks).  Downstream ``change_stream``
-        readers then see the writes as replace/insert events — the full
-        collection round-trip the reference gets from Mongo.
-        At-least-once: an epoch replayed from the checkpoint is logged
-        again under a new ``__commit``.  The snapshot is unchanged (the
-        same documents win), but ``change_stream`` readers see the
-        replayed events."""
-
-        def write_batch(batch_df, _epoch):
-            if not batch_df.isEmpty():
-                self.upsert(batch_df)
-
-        return (
-            df.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint)
-        )
-
     def compact(self, spark: SparkSession) -> None:
         """Log compaction: rewrite the log as one snapshot commit.  The
         change feed's file checkpoint must be fresh after a compaction
         (same contract as vacuuming a Delta table past a reader's
         horizon); run it between stream deployments."""
-        snap = self.snapshot(spark)
-        tmp = os.path.join(self.root, f"_compact-{uuid.uuid4().hex}")
-        self._stamp(snap, False).write.mode("overwrite").parquet(tmp)
-        import shutil
-
-        for f in os.listdir(self.data_dir):
-            p = os.path.join(self.data_dir, f)
-            (shutil.rmtree if os.path.isdir(p) else os.remove)(p)
-        for f in os.listdir(tmp):
-            shutil.move(os.path.join(tmp, f), os.path.join(self.data_dir, f))
-        shutil.rmtree(tmp, ignore_errors=True)
+        publish({self.data_dir: self._stamp(self.snapshot(spark), False)},
+                "overwrite")

@@ -125,14 +125,21 @@ def reduce_commands(
     ``resolver`` (href -> state dict or None) enables jes href
     resolution around the validator+reducer, mirroring the reference's
     resolve -> validate -> reduce -> unresolve pipe (App.java:808-811;
-    streaming/hrefs.py).  ``lenient`` swallows reducer exceptions as
-    no-ops — used by the phase-1 resolution-source fold, where reducers
-    that need resolution would otherwise crash on unexpanded links."""
+    streaming/hrefs.py).  A validator or reducer that raises on a
+    command answers it with an ``_error`` reply carrying ``message``, so
+    no message can fail the fold.  ``lenient`` instead swallows reducer
+    exceptions as no-ops — used by the phase-1 resolution-source fold,
+    where reducers that need resolution would otherwise fail on
+    unexpanded links."""
     from pincette_json_streams_spark.operators.validator import validate_doc
 
     out: list[dict] = []
     seq = (state or {}).get("_seq", -1)
     cur = dict(state or {})
+
+    def reply_error(cmd: dict, **fields) -> None:
+        out.append({"purpose": "reply",
+                    "doc": {**cmd, "_error": True, **fields}})
 
     for cmd in commands:
         out.append({"purpose": "command", "doc": cmd})
@@ -145,11 +152,7 @@ def reduce_commands(
         # roles fail the _acl gate — 403 reply, the reference's shape
         # (app8 fixture 3_error.json -> reply: _statusCode 403 Forbidden)
         if "_jwt" not in cmd or not acl_allows(cur, cmd):
-            denied = dict(cmd)
-            denied["_error"] = True
-            denied["_statusCode"] = 403
-            denied["message"] = "Forbidden"
-            out.append({"purpose": "reply", "doc": denied})
+            reply_error(cmd, _statusCode=403, message="Forbidden")
             continue
         # href links expand for the validator and reducer only; stored
         # state and built-in fallbacks stay unresolved
@@ -162,14 +165,15 @@ def reduce_commands(
         else:
             cmd_eff, cur_eff = cmd, cur
         vspec = (validators or {}).get(command)
-        if vspec:
-            errs = validate_doc(vspec, {**cmd_eff, "_state": cur_eff or {}})
-            if errs:
-                invalid = dict(cmd)
-                invalid["_error"] = True
-                invalid["errors"] = errs
-                out.append({"purpose": "reply", "doc": invalid})
-                continue
+        try:
+            errs = vspec and validate_doc(
+                vspec, {**cmd_eff, "_state": cur_eff or {}})
+        except Exception as e:
+            reply_error(cmd, message=f"{type(e).__name__}: {e}")
+            continue
+        if errs:
+            reply_error(cmd, errors=errs)
+            continue
         # a custom reducer for the command name overrides the built-ins
         # (the reference's corpus ships its own put reducers, e.g.
         # src/test/resources/app8/reducers/put.jslt); reducer -> None
@@ -177,9 +181,10 @@ def reduce_commands(
         if reducer is not None:
             try:
                 new = reducer(cur_eff, cmd_eff)
-            except Exception:
+            except Exception as e:
                 if not lenient:
-                    raise
+                    reply_error(cmd, message=f"{type(e).__name__}: {e}")
+                    continue
                 new = None
             if new is not None and resolver is not None:
                 new = unresolve_doc(new)

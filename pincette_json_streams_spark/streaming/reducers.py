@@ -16,6 +16,7 @@ expressions); unknown operators raise so gaps surface in tests.
 
 from __future__ import annotations
 
+import operator
 from typing import Any, Callable
 
 __all__ = ["eval_expr", "run_pipeline_doc", "pipeline_reducer"]
@@ -227,6 +228,24 @@ def _eval_op(op: str, args: Any, doc: dict, v: dict) -> Any:
     raise ValueError(f"row interpreter: unsupported operator {op}")
 
 
+def _bracket(x: Any) -> int | None:
+    # MongoDB's type brackets for query comparisons; bool is tested
+    # before int, which it subclasses
+    for k, types in enumerate((bool, (int, float), str)):
+        if isinstance(x, types):
+            return k
+    return None
+
+
+def _compare(cmp: Callable[[Any, Any], bool], a: Any, b: Any) -> bool:
+    """``$gt``/``$gte``/``$lt``/``$lte`` of a query: values compare only
+    within one type bracket (numbers, strings, booleans); across
+    brackets, or with null or a missing field, nothing matches and
+    nothing raises."""
+    k = _bracket(a)
+    return k is not None and k == _bracket(b) and cmp(a, b)
+
+
 def _match_doc(query: dict, doc: dict, v: dict | None = None) -> bool:
     v = v or {}
     for key, value in query.items():
@@ -251,10 +270,10 @@ def _match_doc(query: dict, doc: dict, v: dict | None = None) -> bool:
                 ok = {
                     "$eq": lambda: cur == arg,
                     "$ne": lambda: cur != arg,
-                    "$gt": lambda: present and cur is not None and cur > arg,
-                    "$gte": lambda: present and cur is not None and cur >= arg,
-                    "$lt": lambda: present and cur is not None and cur < arg,
-                    "$lte": lambda: present and cur is not None and cur <= arg,
+                    "$gt": lambda: _compare(operator.gt, cur, arg),
+                    "$gte": lambda: _compare(operator.ge, cur, arg),
+                    "$lt": lambda: _compare(operator.lt, cur, arg),
+                    "$lte": lambda: _compare(operator.le, cur, arg),
                     "$in": lambda: cur in arg,
                     "$nin": lambda: cur not in arg,
                     "$exists": lambda: present == bool(arg),

@@ -11,11 +11,15 @@ per sink:
     -> compiled pipeline (operators/stages.py — stateless stages are
        mode-agnostic; $group runs in update output mode; $deduplicate maps
        to dropDuplicates[WithinWatermark])
-    -> sink (Kafka / memory / foreachBatch)
+    -> sink (Kafka / memory / ``streaming.sinks.start_sink``)
 
-Delivery: at-least-once with checkpointing, matching the reference's
-contract (docs/index.md:3).  Kafka offsets ⇄ checkpoint state; the
-reference's resume tokens (App.java:1056-1081) ⇄ checkpoint metadata.
+Delivery: file sinks write each epoch once.  ``streaming.sinks`` stages
+an epoch, moves it into its target and marks it in the query's
+checkpoint, so an epoch replayed after a restart is skipped (its
+docstring names the crash window left); ``delay_spool_sink`` is Spark's
+file sink, which logs its epochs itself.  ``kafka_sink`` stays at-least-once, the reference's contract
+(docs/index.md:3).  Kafka offsets ⇄ checkpoint state; the reference's
+resume tokens (App.java:1056-1081) ⇄ checkpoint metadata.
 
 Aggregate parts compile through the same compiler as in batch
 (``streaming.aggregate.compile_aggregate``); only the fold operator
@@ -37,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pincette_json_streams_spark.operators.stages import PipelineContext
+from pincette_json_streams_spark.streaming.sinks import publish, start_sink
 
 __all__ = [
     "kafka_source", "kafka_sink", "kafka_client_options",
@@ -149,7 +154,11 @@ def kafka_sink(
     produces plain JSON strings instead — the stream-part ``toString``
     flag (docs/serialisation.md).  A per-row ``topic`` column (from
     $send/$delay) takes precedence over the fixed topic — Kafka sinks
-    route on it natively."""
+    route on it natively.
+
+    At-least-once: Kafka output cannot be staged, so an epoch replayed
+    from the checkpoint is produced again (the reference's contract,
+    docs/index.md:3)."""
     cols = [c for c in df.columns if c not in ("topic",)]
     value_json = F.to_json(F.struct(*[F.col(c) for c in cols]))
     if to_string:
@@ -241,7 +250,9 @@ def collection_change_stream(
 
 def delay_spool_sink(routed: DataFrame, spool_dir: str, checkpoint: str):
     """Writer that spools $delay-routed rows (topic + deliver_after +
-    payload) as JSON values."""
+    payload) as JSON values.  It stays Spark's file sink rather than a
+    ``streaming.sinks.Sink``: that sink already logs each epoch once in
+    ``_spark_metadata``."""
     payload = [c for c in routed.columns
                if c not in ("topic", "deliver_after")]
     rows = routed.select(
@@ -304,6 +315,22 @@ def delay_release_stream(
     return out.select("topic", "value")
 
 
+class _Redelivery:
+    """``Sink`` that appends each released message, parsed, into its
+    target topic's directory in one ``publish``."""
+
+    def __init__(self, topic_dirs: dict[str, str], schemas: dict[str, str]):
+        self.topic_dirs, self.schemas = topic_dirs, schemas
+
+    def write(self, df: DataFrame, epoch_id: int) -> None:
+        publish({
+            d: df.filter(F.col("topic") == topic)
+            .select(F.from_json("value", self.schemas[topic]).alias("v"))
+            .select("v.*")
+            for topic, d in self.topic_dirs.items()
+        })
+
+
 def redelivery_sink(
     released: DataFrame,
     topic_dirs: dict[str, str],
@@ -312,24 +339,9 @@ def redelivery_sink(
 ):
     """Writer that appends released messages into their target topic's
     directory (the file-source analogue of producing back to Kafka) —
-    the topic's normal streaming source then re-ingests them.
-    At-least-once: an epoch replayed from the checkpoint is appended
-    again."""
-
-    def write_batch(batch_df, _epoch):
-        for topic, d in topic_dirs.items():
-            part = batch_df.filter(F.col("topic") == topic)
-            if part.isEmpty():
-                continue  # no empty files polluting the topic listing
-            parsed = part.select(
-                F.from_json("value", schemas[topic]).alias("v")
-            ).select("v.*")
-            parsed.write.mode("append").parquet(d)
-
-    return (
-        released.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-    )
+    the topic's normal streaming source then re-ingests them.  Each
+    epoch is appended once (``streaming.sinks.start_sink``)."""
+    return start_sink(_Redelivery(topic_dirs, schemas), released, checkpoint)
 
 
 # --------------------------------------------------------------------------
@@ -387,7 +399,9 @@ class StreamingApp:
     file_stream_catalog).  Each sink of ``Application.run_batch`` —
     toTopic, toCollection and an aggregate's purpose streams — becomes
     one streaming query via ``sink_factory(name, df) -> DataStreamWriter``
-    (tests use memory sinks; production uses kafka_sink/foreachBatch-Delta).
+    (tests use memory sinks; production uses ``kafka_sink`` or
+    ``streaming.sinks.start_sink`` with a ``Sink``, such as a
+    ``ChangeLogCollection``).
     """
 
     def __init__(
@@ -494,11 +508,10 @@ class StreamingApp:
         restarted from its checkpoint up to ``max_restarts`` times —
         the reference's Run loop keeps apps alive the same way
         (restart-on-error with the resume token).  The checkpoint
-        replays the epoch that failed, so delivery is at-least-once: a
-        sink that writes an epoch twice shows the replay
-        (``redelivery_sink`` appends it again,
-        ``ChangeLogCollection.streaming_sink`` re-logs it under a new
-        ``__commit``).  Raises the last error when a query keeps
+        replays the epoch that failed.  Sinks started through
+        ``streaming.sinks.start_sink`` skip an epoch they already wrote,
+        so their rows appear once; ``kafka_sink`` produces the epoch
+        again (at-least-once).  Raises the last error when a query keeps
         failing."""
         from pyspark.errors import StreamingQueryException
 

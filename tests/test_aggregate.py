@@ -174,6 +174,43 @@ class TestAdmission:
         aggs = [r["doc"] for r in out if r["purpose"] == "aggregate"]
         assert [a["v"] for a in aggs] == [10, 20]
 
+    def test_mistyped_command_gets_error_reply(self):
+        # a string where the validator compares with a number is outside
+        # the number bracket: a failed condition, not a TypeError
+        out = reduce_commands(
+            None,
+            [{**JWT, "_id": "a1", "_command": "put", "amount": "x"},
+             {**JWT, "_id": "a1", "_command": "put", "amount": 5}],
+            None, "t",
+            validators={"put": {"conditions": [{"amount": {"$gte": 0}}]}},
+        )
+        replies = [r["doc"] for r in out if r["purpose"] == "reply"]
+        assert replies[0]["_error"] is True
+        assert replies[0]["errors"] == [{"location": "/amount",
+                                         "code": None}]
+        aggs = [r["doc"] for r in out if r["purpose"] == "aggregate"]
+        assert [a["amount"] for a in aggs] == [5]
+
+    def test_reducer_exception_gets_error_reply(self):
+        def reducer(state, cmd):
+            if cmd.get("bad"):
+                raise ValueError("cannot fold")
+            return {**state, "n": state.get("n", 0) + 1}
+
+        cmds = [{**JWT, "_id": "a1", "_command": "bump", "bad": True},
+                {**JWT, "_id": "a1", "_command": "bump"}]
+        out = reduce_commands(None, cmds, reducer, "t")
+        replies = [r["doc"] for r in out if r["purpose"] == "reply"]
+        assert replies[0]["_error"] is True
+        assert replies[0]["message"] == "ValueError: cannot fold"
+        aggs = [r["doc"] for r in out if r["purpose"] == "aggregate"]
+        assert [a["n"] for a in aggs] == [1]
+        # lenient: the failing reducer is a no-op, not an error
+        out = reduce_commands(None, cmds, reducer, "t", lenient=True)
+        assert not any(r["doc"].get("_error") for r in out)
+        assert [r["doc"]["n"] for r in out
+                if r["purpose"] == "aggregate"] == [1]
+
     def test_jslt_script_reducer(self):
         from pincette_json_streams_spark.streaming.reducers import (
             pipeline_reducer,
@@ -381,6 +418,28 @@ class TestAggregatePart:
         events = app.streams["shop-cart-event"].collect()
         assert all("_ops" in json.loads(r["value"]) for r in events)
 
+    def test_mistyped_command_in_batch_part(self, spark):
+        commands = spark.createDataFrame(
+            [("a1", "put", "x", {"sub": "system"}),
+             ("a1", "put", None, {"sub": "system"})],
+            "_id string, _command string, amount string, "
+            "_jwt map<string,string>",
+        ).coalesce(1)
+        app = Application(
+            {"application": "shop", "parts": [
+                {"type": "aggregate", "aggregateType": "cart",
+                 "commands": {"put": {"validator": {"conditions": [
+                     {"amount": {"$gte": 0}}]}}}},
+            ]},
+            {"shop-cart-command": commands},
+        )
+        errors = [json.loads(r["value"]) for r in
+                  app.streams["shop-cart-reply"].collect()
+                  if json.loads(r["value"]).get("_error")]
+        assert [e["errors"] for e in errors] == [
+            [{"location": "/amount", "code": None}]]
+        assert app.streams["shop-cart-aggregate"].count() == 1
+
     def test_unique_expression_converges_instances(self, spark):
         """Distinct _ids sharing a business key fold into ONE instance
         whose _id is the first command's (docs/state.md:176-197)."""
@@ -586,6 +645,33 @@ class TestBatchStreamingParity:
                                 self.PUT_SCHEMA)
         assert len(out["shop-acct-aggregate"]) == 10
         assert len(out["shop-acct-command"]) == 10
+
+    def test_bad_commands_keep_the_stream_folding(self, spark, tmp_path):
+        """A mistyped command and a reducer that raises each get an
+        ``_error`` reply in both modes; the stream keeps running and the
+        command after them folds."""
+        spec = {"application": "shop", "parts": [
+            {"type": "aggregate", "aggregateType": "acct", "commands": {
+                "put": {"validator": {"conditions": [
+                    {"amount": {"$gte": 0}}]}},
+                "add": '.state + {"v": (.state.v + (.command.n | '
+                       'tonumber))}'}}]}
+        rows = [("a1", "put", None, None, 0, {"sub": "system"}),
+                ("a1", "put", "x", None, 1, {"sub": "system"}),
+                ("a1", "add", None, "y", 2, {"sub": "system"}),
+                ("a1", "add", None, "3", 3, {"sub": "system"})]
+        out = self._assert_same(
+            spark, tmp_path, spec, rows,
+            "_id string, _command string, amount string, n string, "
+            "seq_in int, _jwt map<string,string>")
+        errors = sorted(
+            (d["_command"], "errors" in d, "message" in d)
+            for d in map(json.loads, out["shop-acct-reply"])
+            if d.get("_error"))
+        assert errors == [("add", False, True), ("put", True, False)]
+        states = sorted((json.loads(v) for v in out["shop-acct-aggregate"]),
+                        key=lambda d: d["_seq"])
+        assert [d.get("v") for d in states] == [None, 3]
 
     def test_arrival_order_without_order_by(self, spark, tmp_path):
         """100 puts on one instance, no ``orderBy``: both modes fold in

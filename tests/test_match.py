@@ -30,6 +30,34 @@ class TestComparison:
             ["p1", "p2", "p4"]
 
 
+class TestInWithNull:
+    """MongoDB's null rule for ``$in``/``$nin``: a null in the list
+    matches a null or absent field under ``$in`` and excludes it under
+    ``$nin``; the result is never NULL, so ``$nor`` sees it too."""
+
+    ALL = ["r1", "r2", "r3"]
+
+    def test_null_absent_and_present_rows(self, spark):
+        df = spark.createDataFrame(
+            [("r1", None, ["a", None]), ("r2", "x", ["b"]),
+             ("r3", "y", [])], "_id string, b string, t array<string>")
+        assert ids(df, {"b": {"$in": [None, "x"]}}) == ["r1", "r2"]
+        assert ids(df, {"b": {"$nin": [None, "x"]}}) == ["r3"]
+        assert ids(df, {"b": {"$in": ["x"]}}) == ["r2"]
+        assert ids(df, {"b": {"$nin": ["x"]}}) == ["r1", "r3"]
+        assert ids(df, {"b": {"$in": [None]}}) == ["r1"]
+        assert ids(df, {"$nor": [{"b": {"$in": ["x"]}}]}) == ["r1", "r3"]
+        # absent field: null in the list decides
+        assert ids(df, {"nosuch": {"$in": [None, "x"]}}) == self.ALL
+        assert ids(df, {"nosuch": {"$nin": [None, "x"]}}) == []
+        assert ids(df, {"nosuch": {"$in": ["x"]}}) == []
+        assert ids(df, {"nosuch": {"$nin": ["x"]}}) == self.ALL
+        # the value-query form ($elemMatch) builds the same condition
+        assert ids(df, {"t": {"$elemMatch": {"$in": [None]}}}) == ["r1"]
+        assert ids(df, {"t": {"$elemMatch": {"$nin": [None, "a"]}}}) == \
+            ["r2"]
+
+
 class TestLogical:
     def test_and_or_nor(self, people):
         assert ids(people, {"$and": [{"age": {"$gt": 25}},

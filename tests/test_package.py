@@ -2,8 +2,9 @@
 pandas UDFs use one idiom (typed ``pandas_udf``), per-row Python maps
 use one helper (``map_rows``), one module reads the part wiring, the
 sketch search family builds its band postings, XOR/popcount and rank
-tail in one place each, and the extension-stage table agrees with its
-functions and its doc."""
+tail in one place each, micro-batch writers start only in the sink
+layer, and the extension-stage table agrees with its functions and its
+doc."""
 
 import importlib
 import inspect
@@ -70,6 +71,17 @@ def test_sketch_search_pieces_only_in_shared_helpers():
                 if (n := p.read_text(encoding="utf-8").count(pattern))}
         assert hits == {"functions/similarity.py":
                         inspect.getsource(helper).count(pattern)}, pattern
+
+
+def test_foreach_batch_only_in_sink_layer():
+    # every micro-batch writer goes through streaming.sinks.start_sink,
+    # the one place that skips an epoch already written
+    from pincette_json_streams_spark.streaming import sinks
+
+    hits = {str(p.relative_to(ROOT)): n for p in sorted(ROOT.rglob("*.py"))
+            if (n := p.read_text(encoding="utf-8").count("foreachBatch("))}
+    starter = inspect.getsource(sinks.start_sink)
+    assert hits == {"streaming/sinks.py": starter.count("foreachBatch(")}
 
 
 def _doc_rows() -> dict[str, tuple[str, set[str]]]:

@@ -24,6 +24,8 @@ BASE = "/root/reference/src/test/resources"
 REFERENCE_APPS = [f"app{i}" for i in range(1, 41)]
 
 
+@pytest.mark.skipif(not os.path.isdir(BASE),
+                    reason=f"reference corpus absent: {BASE} not found")
 @pytest.mark.parametrize("app", REFERENCE_APPS)
 def test_reference_app_strict(spark, app):
     d = os.path.join(BASE, app)

@@ -407,11 +407,12 @@ class TestStreamingEdges:
 
     def test_changelog_round_trip_as_sink(self, spark, tmp_path):
         """toCollection round-trip: a stream part's output upserts into
-        a ChangeLogCollection via streaming_sink; a change_stream reader
-        over the same collection sees insert then replace."""
+        a ChangeLogCollection through the sink layer; a change_stream
+        reader over the same collection sees insert then replace."""
         from pincette_json_streams_spark.sources.changelog import (
             ChangeLogCollection,
         )
+        from pincette_json_streams_spark.streaming.sinks import start_sink
 
         src_dir = str(tmp_path / "topic")
         spark.createDataFrame([("a", 1)], "_id string, v int") \
@@ -423,8 +424,8 @@ class TestStreamingEdges:
             src = spark.readStream.schema("_id string, v int") \
                 .format("parquet").load(src_dir)
             out = src.selectExpr("_id", "v * 10 AS vv")
-            q = coll.streaming_sink(
-                out, str(tmp_path / "ck-sink")
+            q = start_sink(
+                coll, out, str(tmp_path / "ck-sink")
             ).trigger(availableNow=True).start()
             q.awaitTermination(120)
 
@@ -1011,9 +1012,9 @@ class TestKafkaOptionPrecedence:
 
 
 class TestCollectionBackends:
-    """R5: the collection surface is a swappable protocol (SURVEY §1.3
-    maps collections to Delta + CDF; the sandbox default is the parquet
-    commit log)."""
+    """The collection surface is a protocol, kept for another backend
+    (SURVEY §1.3 maps collections to Delta + CDF); the backend here is
+    the parquet commit log."""
 
     def test_changelog_satisfies_protocol(self, tmp_path):
         from pincette_json_streams_spark.sources.changelog import (
@@ -1024,64 +1025,6 @@ class TestCollectionBackends:
         )
         coll = ChangeLogCollection(str(tmp_path / "c"), "_id string, v int")
         assert isinstance(coll, CollectionStore)
-
-    def test_delta_class_satisfies_protocol_structurally(self):
-        # DeltaCollection can't instantiate here (no delta jars), but
-        # its surface must match the protocol method-for-method
-        import inspect
-
-        from pincette_json_streams_spark.sources.collections import (
-            CollectionStore, DeltaCollection,
-        )
-        for name in ("upsert", "delete", "snapshot", "change_stream",
-                     "streaming_sink", "compact"):
-            proto = inspect.signature(getattr(CollectionStore, name))
-            impl = inspect.signature(getattr(DeltaCollection, name))
-            assert list(proto.parameters)[1:] == \
-                list(impl.parameters)[1:], name
-
-    def test_open_collection_auto_falls_back(self, tmp_path, spark):
-        from pincette_json_streams_spark.sources.changelog import (
-            ChangeLogCollection,
-        )
-        from pincette_json_streams_spark.sources.collections import (
-            delta_available, open_collection,
-        )
-        coll = open_collection(str(tmp_path / "c"), "_id string, v int",
-                               spark=spark, backend="auto")
-        if not delta_available():
-            assert isinstance(coll, ChangeLogCollection)
-
-    def test_delta_backend_errors_clearly_without_jars(
-            self, tmp_path, spark):
-        from pincette_json_streams_spark.sources.collections import (
-            delta_available, open_collection,
-        )
-        if delta_available():
-            pytest.skip("delta present: error path not reachable")
-        with pytest.raises(ImportError, match="delta-spark"):
-            open_collection(str(tmp_path / "c"), "_id string, v int",
-                            spark=spark, backend="delta")
-        with pytest.raises(ValueError, match="unknown"):
-            open_collection(str(tmp_path / "c"), "_id string, v int",
-                            backend="mongo")
-
-    def test_roundtrip_through_factory(self, tmp_path, spark):
-        # upsert -> snapshot -> delete -> snapshot through the protocol
-        from pincette_json_streams_spark.sources.collections import (
-            open_collection,
-        )
-        coll = open_collection(str(tmp_path / "c"), "_id string, v int",
-                               spark=spark)
-        coll.upsert(spark.createDataFrame(
-            [("a", 1), ("b", 2)], "_id string, v int"))
-        coll.upsert(spark.createDataFrame(
-            [("a", 10)], "_id string, v int"))
-        snap = {r["_id"]: r["v"] for r in coll.snapshot(spark).collect()}
-        assert snap == {"a": 10, "b": 2}
-        coll.delete(spark.createDataFrame([("b",)], "_id string"))
-        snap2 = {r["_id"]: r["v"] for r in coll.snapshot(spark).collect()}
-        assert snap2 == {"a": 10}
 
 
 class TestMetricsListener:
