@@ -11,6 +11,13 @@ through pandas, where a nullable bigint becomes float64 (9007199254740993
 comes back as 9007199254740992) and a nested NaN is indistinguishable
 from NULL.  Output schemas are ``StructType``s, so column names that
 need quoting (``my id``, ``content-type``) never meet a DDL parser.
+
+Adjacent per-row stages run as one Arrow pass: ``map_rows`` applied
+directly to another ``map_rows`` output composes the two batch
+functions into one ``mapInArrow`` over the first one's input, so a run
+of stages is one Python node, one worker round trip per batch.  Any
+other operator in between (even ``select("*")``) or a ``persist`` of
+the intermediate frame keeps them apart.
 """
 
 from __future__ import annotations
@@ -29,6 +36,7 @@ def map_rows(
     inputs: Sequence[str],
     outputs: Sequence[tuple],
     keep: Sequence[str] | None = None,
+    spread: bool = False,
 ) -> DataFrame:
     """Run ``kernel`` over each Arrow batch of ``df``.
 
@@ -48,6 +56,11 @@ def map_rows(
     Each task unpickles its own copy of ``kernel``, so state the
     kernel builds lazily in its closure (a compiled script, a snapshot)
     is set up once per task.
+
+    ``spread`` repartitions the input round-robin to the session's
+    default parallelism first, for CPU-heavy kernels over inputs that
+    arrive as few splits.  In a run of adjacent stages the spread
+    happens once, in front of the run's first kernel.
     """
     out_fields = [
         T.StructField(name, T.DataType.fromDDL(t) if isinstance(t, str)
@@ -82,4 +95,14 @@ def map_rows(
                         for c, t in zip(cols, types)],
                 names=names)
 
-    return df.mapInArrow(run, schema)
+    # a run of adjacent stages: (its input, its batch function, spread)
+    src, prev, spread_done = df.__dict__.get("_row_run", (df, None, False))
+    if df.is_cached:
+        src, prev, spread_done = df, None, False
+    if spread and not spread_done:
+        src = src.repartition(src.sparkSession.sparkContext
+                              .defaultParallelism)
+    fn = run if prev is None else (lambda batches: run(prev(batches)))
+    out = src.mapInArrow(fn, schema)
+    out._row_run = (src, fn, spread or spread_done)
+    return out

@@ -210,9 +210,8 @@ def with_text_features(
     def kernel(texts):
         return [[_feature_tuple(t, stop_set, markers) for t in texts]]
 
-    spread = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-    return map_rows(spread, kernel, [text_col],
-                    [(out, f"struct<{_TF_SCHEMA}>")])
+    return map_rows(df, kernel, [text_col],
+                    [(out, f"struct<{_TF_SCHEMA}>")], spread=True)
 
 
 def quality_score_from(tf: Column, n_chars: Column) -> Column:
@@ -390,9 +389,8 @@ def with_repetition_features(
     def kernel(texts):
         return [[_rep_tuple(t) for t in texts]]
 
-    spread = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-    return map_rows(spread, kernel, [text_col],
-                    [(out, f"struct<{_REP_SCHEMA}>")])
+    return map_rows(df, kernel, [text_col],
+                    [(out, f"struct<{_REP_SCHEMA}>")], spread=True)
 
 
 def benchmark_overlap(

@@ -11,7 +11,12 @@ a later part's stream.  The same compiled parts and the same sink set
 
   - batch  — catalog maps topic/collection names to static DataFrames
     (parquet/Delta); `run_batch` returns the sink outputs.  This is the
-    mode the golden tests and the driver's DuckDB oracle exercise.
+    mode the golden tests and the driver's DuckDB oracle exercise.  A
+    stream that two or more consumers read (`fromStream` reads plus
+    sinks) is persisted when its part compiles, so one run computes it
+    once; the cache serves that run only and is released when the
+    `Application` and every frame `run_batch` returned are garbage
+    (`functions.caching`).
   - stream — catalog maps names to streaming DataFrames (Kafka/Delta CDF);
     the streaming runtime starts one query per sink
     (pincette_json_streams_spark.streaming.runtime).
@@ -24,12 +29,17 @@ bounded data joins exactly; streaming adds watermarks per the window.
 
 from __future__ import annotations
 
+from collections import Counter
 from functools import reduce
 from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pincette_json_streams_spark.functions.caching import (
+    run_scope,
+    tracked_persist,
+)
 from pincette_json_streams_spark.operators.context import ctx_for
 from pincette_json_streams_spark.operators.expressions import compile_expr
 from pincette_json_streams_spark.operators.stages import (
@@ -43,6 +53,16 @@ from pincette_json_streams_spark.plans.spec import (
 )
 
 __all__ = ["Application"]
+
+
+def _consumers(topology: list[Wiring]) -> Counter:
+    """How many `fromStream` reads and sinks each stream has."""
+    n: Counter = Counter()
+    for w in topology:
+        n.update(name for kind, name in w.reads if kind == "stream")
+        n.update(name if name in w.streams else w.name
+                 for _, name in w.sinks)
+    return n
 
 
 class Application:
@@ -64,8 +84,13 @@ class Application:
             self.pctx.app_name = spec.get("application")
         self.streams: dict[str, DataFrame] = {}
         self.sinks: dict[str, DataFrame] = {}
-        for wiring in self.topology:
-            self._compile_part(wiring)
+        self._consumers = _consumers(self.topology)
+        with run_scope() as self._caches:
+            for wiring in self.topology:
+                self._compile_part(wiring)
+        # every frame handed out keeps this run's caches alive
+        for df in (*self.streams.values(), *self.run_batch().values()):
+            df._run_caches = self._caches
 
     def _read(self, kind: str, name: str) -> DataFrame:
         if kind == "stream":
@@ -112,6 +137,10 @@ class Application:
                 out = emit_event_traces(out, f"{wiring.name}{suffix}",
                                         self.pctx, part=wiring.name)
             outs = {wiring.name: out}
+        for name, df in outs.items():
+            if self._consumers[name] > 1 and not df.isStreaming:
+                # lazy: no job runs until the first consumer does
+                outs[name] = tracked_persist(df)
         self.streams.update(outs)
         for kind, name in wiring.sinks:
             # an aggregate sinks each purpose stream under its own name;

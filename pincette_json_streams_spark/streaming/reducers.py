@@ -246,6 +246,48 @@ def _compare(cmp: Callable[[Any, Any], bool], a: Any, b: Any) -> bool:
     return k is not None and k == _bracket(b) and cmp(a, b)
 
 
+def _elements(cur: Any) -> list:
+    """The values a query condition is tested against: an array field
+    matches when the array itself or any of its elements does."""
+    return [cur, *cur] if isinstance(cur, list) else [cur]
+
+
+def _match_field(cur: Any, present: bool, ops: dict, doc: dict,
+                 v: dict) -> bool:
+    """One field's operator document, MongoDB's way: ``$ne``, ``$nin``
+    and ``$not`` are the negations of ``$eq``, ``$in`` and the operator
+    document they wrap, so an array field fails them when any element
+    matches."""
+    for o, arg in ops.items():
+        if o == "$not":
+            if not isinstance(arg, dict):
+                raise ValueError("row matcher: $not takes an operator "
+                                 "document")
+            ok = not _match_field(cur, present, arg, doc, v)
+        elif o in ("$ne", "$nin"):
+            ok = not _match_field(
+                cur, present, {"$eq" if o == "$ne" else "$in": arg}, doc, v)
+        elif o == "$exists":
+            ok = present == bool(arg)
+        elif o == "$expr":
+            ok = bool(eval_expr(arg, doc, v))
+        else:
+            test = {
+                "$eq": lambda x: x == arg,
+                "$gt": lambda x: _compare(operator.gt, x, arg),
+                "$gte": lambda x: _compare(operator.ge, x, arg),
+                "$lt": lambda x: _compare(operator.lt, x, arg),
+                "$lte": lambda x: _compare(operator.le, x, arg),
+                "$in": lambda x: x in arg,
+            }.get(o)
+            if test is None:
+                raise ValueError(f"row matcher: unsupported {o}")
+            ok = any(test(x) for x in _elements(cur))
+        if not ok:
+            return False
+    return True
+
+
 def _match_doc(query: dict, doc: dict, v: dict | None = None) -> bool:
     v = v or {}
     for key, value in query.items():
@@ -261,30 +303,12 @@ def _match_doc(query: dict, doc: dict, v: dict | None = None) -> bool:
         elif key == "$expr":
             if not bool(eval_expr(value, doc, v)):
                 return False
-        elif isinstance(value, dict) and any(
-            k.startswith("$") for k in value
-        ):
-            cur = _get_path(doc, key)
-            present = _has_path(doc, key)
-            for o, arg in value.items():
-                ok = {
-                    "$eq": lambda: cur == arg,
-                    "$ne": lambda: cur != arg,
-                    "$gt": lambda: _compare(operator.gt, cur, arg),
-                    "$gte": lambda: _compare(operator.ge, cur, arg),
-                    "$lt": lambda: _compare(operator.lt, cur, arg),
-                    "$lte": lambda: _compare(operator.le, cur, arg),
-                    "$in": lambda: cur in arg,
-                    "$nin": lambda: cur not in arg,
-                    "$exists": lambda: present == bool(arg),
-                    "$expr": lambda: bool(eval_expr(arg, doc, v)),
-                }.get(o)
-                if ok is None:
-                    raise ValueError(f"row matcher: unsupported {o}")
-                if not ok():
-                    return False
         else:
-            if _get_path(doc, key) != value:
+            if not (isinstance(value, dict)
+                    and any(k.startswith("$") for k in value)):
+                value = {"$eq": value}
+            if not _match_field(_get_path(doc, key), _has_path(doc, key),
+                                value, doc, v):
                 return False
     return True
 

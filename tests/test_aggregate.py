@@ -467,6 +467,69 @@ class TestAggregatePart:
         assert by_user["bob"][0]["_seq"] == 0
 
 
+# MongoDB's answers for array fields and $not; the row matcher
+# (streaming/reducers._match_doc) runs inside the aggregate fold
+MATCHER_CASES = [
+    ({"a": {"$in": [2, 3]}}, {"a": [1, 2]}, True),
+    ({"a": 2}, {"a": [1, 2]}, True),
+    ({"a": {"$nin": [2]}}, {"a": [1, 2]}, False),
+    ({"a": {"$not": {"$gt": 0}}}, {"a": -1}, True),
+    ({"a": {"$not": {"$gt": 0}}}, {"a": 1}, False),
+    ({"a": {"$ne": 2}}, {"a": [1, 2]}, False),
+    ({"a": {"$gt": 4}}, {"a": [1, 5]}, True),
+    ({"a": [1, 2]}, {"a": [1, 2]}, True),
+]
+
+# Where the Column compiler (operators/match.py) answers differently
+# from the row matcher, and why.  A typed array column cannot be
+# compared with a scalar, so these queries fail to bind instead of
+# matching element-wise.
+KNOWN_DIFFERENCES = [
+    ({"a": {"$in": [2, 3]}}, "array<bigint>", "raises: IN of an array "
+     "column and scalars does not bind"),
+    ({"a": 2}, "array<bigint>", "raises: <=> of an array column and a "
+     "scalar does not bind"),
+    ({"a": {"$nin": [2]}}, "array<bigint>", "raises: as $in"),
+]
+
+
+class TestRowMatcher:
+    @pytest.mark.parametrize("query,doc,want", MATCHER_CASES)
+    def test_mongo_semantics(self, query, doc, want):
+        from pincette_json_streams_spark.streaming.reducers import (
+            _match_doc,
+        )
+        assert _match_doc(query, doc) is want
+
+    @pytest.mark.parametrize("query,doc,want", MATCHER_CASES[:4])
+    def test_batch_validator(self, spark, query, doc, want):
+        (field, crit), = query.items()
+        dtype = "array<bigint>" if isinstance(doc["a"], list) else "bigint"
+        commands = spark.createDataFrame(
+            [("a1", "put", doc["a"], {"sub": "system"})],
+            f"_id string, _command string, a {dtype}, "
+            "_jwt map<string,string>")
+        app = Application(
+            {"application": "shop", "parts": [
+                {"type": "aggregate", "aggregateType": "cart",
+                 "commands": {"put": {"validator": {"conditions": [
+                     {field: crit}]}}}}]},
+            {"shop-cart-command": commands})
+        assert (app.streams["shop-cart-aggregate"].count() == 1) is want
+
+    @pytest.mark.parametrize("query,dtype,why", KNOWN_DIFFERENCES)
+    def test_known_column_differences(self, spark, query, dtype, why):
+        from pincette_json_streams_spark.operators.expressions import (
+            UnsupportedExpression,
+        )
+        from pincette_json_streams_spark.operators.stages import (
+            PipelineContext, compile_pipeline,
+        )
+        df = spark.createDataFrame([([1, 2],)], f"a {dtype}")
+        with pytest.raises(UnsupportedExpression):
+            compile_pipeline(df, [{"$match": query}], PipelineContext())
+
+
 class TestHrefs:
     def test_resolve_and_unresolve_walkers(self):
         from pincette_json_streams_spark.streaming.hrefs import (

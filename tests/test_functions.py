@@ -6484,6 +6484,72 @@ class TestReleaseCaches:
         assert release_caches() >= 1
 
 
+class TestRunScopedCaches:
+    """An internal cache serves only the run that made it: a rewritten
+    input is read afresh in the same session, by a direct function call
+    and by an Application, and an Application's caches are released
+    once it and its outputs are garbage."""
+
+    NEAR_DUPS = {"application": "dups", "parts": [
+        {"type": "stream", "name": "pairs", "fromTopic": "docs",
+         "toTopic": "pairs", "pipeline": [
+             {"$nearDups": {"text": "text", "id": "id",
+                            "threshold": 0.5}}]}]}
+
+    @staticmethod
+    def _write(path, texts):
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        pq.write_table(pa.table({"id": list(range(1, len(texts) + 1)),
+                                 "text": texts}), path)
+
+    def _pairs(self, spark, path):
+        from pincette_json_streams_spark import Application
+        from pincette_json_streams_spark.functions.dedup import (
+            minhash_lsh_pairs,
+        )
+        direct = minhash_lsh_pairs(spark.read.parquet(path), "text", "id")
+        app = Application(self.NEAR_DUPS,
+                          {"docs": spark.read.parquet(path)})
+        return ({(r["id_a"], r["id_b"]) for r in direct.collect()},
+                {(r["id_a"], r["id_b"])
+                 for r in app.run_batch()["pairs"].collect()})
+
+    def test_rewritten_input_is_read_afresh(self, spark, tmp_path):
+        path = str(tmp_path / "docs.parquet")
+        words = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+        self._write(path, [words, words + " lambda",
+                           "one two three four five six seven eight"])
+        assert self._pairs(spark, path) == ({(1, 2)}, {(1, 2)})
+        self._write(path, [words, "red green blue cyan magenta yellow",
+                           "one two three four five six seven eight"])
+        assert self._pairs(spark, path) == (set(), set())
+
+    def test_application_releases_its_caches(self, spark):
+        import gc
+
+        from pincette_json_streams_spark import Application
+        from pincette_json_streams_spark.functions import release_caches
+        release_caches()  # other tests' leftovers are not ours
+        cm = spark._jsparkSession.sharedState().cacheManager()
+        docs = spark.createDataFrame(
+            [(1, "a b c d e f g h i j"), (2, "a b c d e f g h i j")],
+            "id long, text string")
+        spec = {"application": "a", "parts": [
+            {"type": "stream", "name": "s", "fromTopic": "docs",
+             "toTopic": "out", "pipeline": []},
+            {"type": "stream", "name": "t", "fromStream": "s",
+             "toTopic": "pairs", "pipeline": [
+                 {"$nearDups": {"text": "text", "id": "id"}}]}]}
+        pairs = Application(spec, {"docs": docs}).run_batch()["pairs"]
+        assert not cm.isEmpty()
+        assert [tuple(r) for r in pairs.select("id_a", "id_b")
+                .collect()] == [(1, 2)]
+        del pairs
+        gc.collect()
+        assert cm.isEmpty()
+
+
 class TestCodecSeam:
     """The register_codec extension seam, driven end-to-end with the
     shipped worked example (functions/codecs.py: uncompressed

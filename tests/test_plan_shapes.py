@@ -716,3 +716,114 @@ class TestRound12PlanShapes:
         maps = len(re.findall(r"^\(\d+\) MapInArrow", plan,
                               re.MULTILINE))
         assert maps == 1, maps
+
+
+PERFBENCH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench")
+
+
+def _own_nodes(plan):
+    """The physical plan's nodes, not descending into cached plans."""
+    todo = [plan]
+    while todo:
+        node = todo.pop()
+        yield node
+        if node.nodeName() == "InMemoryTableScan":
+            continue
+        if node.nodeName() == "AdaptiveSparkPlan":
+            todo.append(node.executedPlan())
+        children = node.children()
+        todo.extend(children.apply(i) for i in range(children.size()))
+
+
+def _map_in_arrow_rows(spark, first_execution):
+    """``MapInArrow`` output rows over the SQL executions from
+    ``first_execution`` on, from the SQL status store."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    rows = 0
+    for i in range(execs.size()):
+        eid = execs.apply(i).executionId()
+        if eid < first_execution:
+            continue
+        values = store.executionMetrics(eid)
+        nodes = store.planGraph(eid).allNodes()
+        for j in range(nodes.size()):
+            node = nodes.apply(j)
+            if node.name() != "MapInArrow":
+                continue
+            metrics = node.metrics()
+            for k in range(metrics.size()):
+                m = metrics.apply(k)
+                value = values.get(m.accumulatorId())
+                if m.name() == "number of output rows" and \
+                        value.isDefined():
+                    rows += int(value.get().replace(",", ""))
+    return rows
+
+
+def _next_execution(spark):
+    execs = spark._jsparkSession.sharedState().statusStore() \
+        .executionsList()
+    return max((execs.apply(i).executionId()
+                for i in range(execs.size())), default=-1) + 1
+
+
+class TestCurationRun:
+    """The ``curation_batch`` application over its 240 seeded pages:
+    adjacent per-row stages run as one Arrow pass, the ``clean`` stream
+    (two consumers: its sink and ``dups``) is computed once per run,
+    and a run's caches serve no other run."""
+
+    @pytest.fixture(scope="class")
+    def curation(self, tmp_path_factory):
+        sys.path.insert(0, PERFBENCH)
+        import batch
+        import gen
+        d = str(tmp_path_factory.mktemp("curation"))
+        pages = gen.corpus(201, docs=batch.DOCS)[0]
+        gen.write_table(pages, os.path.join(d, "docs.parquet"))
+        return batch.CURATION_SPEC, d
+
+    def _app(self, spark, curation):
+        from pincette_json_streams_spark import Application
+        spec, d = curation
+        return Application(spec, {
+            "docs": spark.read.parquet(os.path.join(d, "docs.parquet"))})
+
+    def test_clean_plan_has_one_map_in_arrow(self, spark, curation):
+        clean = self._app(spark, curation).run_batch()["clean"]
+        plan = clean._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("MapInArrow") == 1, plan
+        assert plan.startswith("InMemoryRelation")
+
+    def test_pairs_reads_clean_from_memory(self, spark, curation):
+        pairs = self._app(spark, curation).run_batch()["pairs"]
+        nodes = list(_own_nodes(pairs._jdf.queryExecution().executedPlan()))
+        assert not [n for n in nodes if n.nodeName() == "MapInArrow"]
+        cached = [n.relation().cachedPlan().toString() for n in nodes
+                  if n.nodeName() == "InMemoryTableScan"]
+        assert any("MapInArrow" in p for p in cached), cached
+
+    def test_each_run_executes_the_clean_chain_once(self, spark, curation,
+                                                    tmp_path):
+        for k in range(2):  # a second Application computes afresh
+            sinks = self._app(spark, curation).run_batch()
+            first = _next_execution(spark)
+            for name in ("clean", "pairs"):
+                sinks[name].write.parquet(str(tmp_path / f"{name}{k}"))
+            assert _map_in_arrow_rows(spark, first) == 240
+
+    def test_compile_runs_no_job(self, spark, curation):
+        from pincette_json_streams_spark import Application
+        spec, d = curation
+        docs = spark.read.parquet(os.path.join(d, "docs.parquet"))
+        sc = spark.sparkContext
+        sc.setJobGroup("curation-compile", "compile only")
+        try:
+            Application(spec, {"docs": docs})
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(
+            "curation-compile")) == []

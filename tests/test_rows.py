@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pincette_json_streams_spark.functions import crawl, multimodal, text
+from pincette_json_streams_spark.functions.rows import map_rows
 from pincette_json_streams_spark.operators.stages import (
     PipelineContext,
     compile_pipeline,
@@ -117,3 +118,99 @@ def test_pass_through_columns_are_exact(messages, tmp_path, case):
                   .collect())
     want = Counter(tuple(r) for r in messages.collect())
     assert got == want
+
+
+def _kernels():
+    """The chain's kernels, built inside a function so the workers
+    unpickle them by value (a test module is not importable there)."""
+    def twice_unless_odd(ids, types):
+        # flat-map: each odd or NULL id twice (copy 0 and 1), even ids
+        # dropped
+        rows = [(i, c) for i, m in enumerate(ids)
+                if m is None or m % 2 == 1 for c in (0, 1)]
+        return [r[0] for r in rows], [r[1] for r in rows]
+
+    def score(ids, copies):
+        # copy 1 scores NaN, which map_rows writes as NULL
+        return [[float("nan") if c else (m or 0) % 7 * 0.5
+                 for m, c in zip(ids, copies)]]
+
+    def double(xs):
+        return [[None if x is None else x * 2 for x in xs]]
+
+    def drop_all(xs):
+        return [], []
+
+    return twice_unless_odd, score, double, drop_all
+
+
+def _chain(df, gap):
+    twice_unless_odd, score, double, _ = _kernels()
+    a = map_rows(df, twice_unless_odd, ["my id", "content-type"],
+                 [("copy", "bigint")])
+    b = map_rows(gap(a), score, ["my id", "copy"], [("score", "double")])
+    return map_rows(gap(b), double, ["score"], [("twice", "double")])
+
+
+def _drop_chain(df, gap):
+    _, _, double, drop_all = _kernels()
+    a = map_rows(df, double, ["my id"], [("id2", "bigint")])
+    b = map_rows(gap(a), drop_all, ["id2"], [("n", "bigint")])
+    return map_rows(gap(b), double, ["n"], [("twice", "double")])
+
+
+def _map_count(df):
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.count("MapInArrow")
+
+
+@pytest.fixture(scope="module")
+def sparse_messages(spark):
+    # 12 slices over 24 rows after a filter: several partitions hold no
+    # row, so some tasks see no Arrow batch at all
+    ids = [None if i % 3 == 1 else BIG + i for i in range(24)]
+    rdd = spark.sparkContext.parallelize([(i, "text/html") for i in ids], 12)
+    df = spark.createDataFrame(rdd, "`my id` bigint, `content-type` string")
+    return df.filter(F.col("`my id`").isNull()
+                     | (F.col("`my id`") % 4 != 3))
+
+
+@pytest.mark.parametrize("chain", [_chain, _drop_chain])
+def test_fused_stages_equal_unfused(sparse_messages, chain):
+    fused = chain(sparse_messages, lambda df: df)
+    apart = chain(sparse_messages, lambda df: df.select("*"))
+    assert (_map_count(fused), _map_count(apart)) == (1, 3)
+    assert fused.schema == apart.schema
+    got = fused.collect()
+    assert Counter(map(tuple, got)) == Counter(map(tuple, apart.collect()))
+    if chain is _chain:
+        assert got and all(
+            (r["score"] is None) == (r["copy"] == 1) for r in got)
+        assert BIG in {r["my id"] for r in got}
+        assert None in {r["my id"] for r in got}
+    else:
+        assert got == []
+
+
+def test_spread_moves_to_the_front_of_a_run(messages):
+    # the second stage asks for the spread: it happens once, below the
+    # one fused Arrow node
+    double = _kernels()[2]
+    a = map_rows(messages, double, ["my id"], [("id2", "bigint")])
+    b = map_rows(a, double, ["id2"], [("twice", "double")], spread=True)
+    plan = b._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 1
+    assert plan.count("RoundRobinPartitioning") == 1
+    assert plan.index("MapInArrow") < plan.index("RoundRobinPartitioning")
+
+
+def test_persisted_stage_output_is_not_fused(messages):
+    double = _kernels()[2]
+    a = map_rows(messages, double, ["my id"], [("id2", "bigint")])
+    a.persist()
+    try:
+        b = map_rows(a, double, ["id2"], [("twice", "double")])
+        assert "InMemoryTableScan" in \
+            b._jdf.queryExecution().executedPlan().toString()
+    finally:
+        a.unpersist()
