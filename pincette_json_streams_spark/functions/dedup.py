@@ -49,6 +49,7 @@ from pincette_json_streams_spark.functions.graph import (
     checkpoint_edges,
     edge_arrays,
 )
+from pincette_json_streams_spark.functions.groups import map_groups
 from pincette_json_streams_spark.functions.text import (
     _sorted_pairs,
     fingerprint,
@@ -985,7 +986,7 @@ def embedding_pairs(
     Plan shape (LSH): scan -> Arrow bucket assignment (numpy matmul
     against the cached deterministic sign matrix) -> ONE shuffle on
     bucket id -> per-bucket all-pairs via a numpy gram matrix inside
-    applyInPandas.  Everything CPU-heavy is a vectorized batch kernel;
+    one grouped call (``groups.map_groups``).  Everything CPU-heavy is a vectorized batch kernel;
     the interpreted-HOF formulation cost 8x64 md5 evals per row per join
     side.  Bucket population is controlled by `planes` (2^planes
     buckets); skewed buckets are the caller's recall/cost dial."""
@@ -1026,8 +1027,8 @@ def embedding_pairs(
         return pd.DataFrame({"id_a": ids[ia[keep]], "id_b": ids[ib[keep]],
                              "cosine": C[ia[keep], ib[keep]]})
 
-    pairs = bucketed.groupBy("bucket").applyInPandas(
-        pair_gen, f"id_a {id_type}, id_b {id_type}, cosine double")
+    pairs = map_groups(bucketed, ["bucket"], pair_gen,
+                       f"id_a {id_type}, id_b {id_type}, cosine double")
     return pairs.select(
         "id_a", "id_b", F.round("cosine", 6).alias("cosine")
     ).filter(F.col("cosine") >= threshold)

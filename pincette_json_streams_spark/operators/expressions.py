@@ -380,9 +380,31 @@ def _sort_arr(args, ctx):
 # comparison / boolean / conditional
 # --------------------------------------------------------------------------
 
+# MongoDB orders null below every value.  Written so that a literal
+# operand folds away its null test, leaving a predicate a scan can push.
+def _gt(a, b):
+    return a.isNotNull() & (b.isNull() | (a > b))
+
+
+def _gte(a, b):
+    return b.isNull() | (a.isNotNull() & (a >= b))
+
+
 def _cmp(args, ctx):
     a, b = _nary(args, ctx, 2)
-    return F.when(a < b, F.lit(-1)).when(a > b, F.lit(1)).otherwise(F.lit(0))
+    return F.when(a.eqNullSafe(b), F.lit(0)) \
+        .when(_gt(a, b), F.lit(1)).otherwise(F.lit(-1))
+
+
+def _extremum(pick, pick_in_array):
+    # $max/$min: nulls are ignored, and the result is null only when
+    # every operand is; a single operand is an array of them
+    def h(args, ctx):
+        cols = _nary(args, ctx)
+        if not cols:
+            raise UnsupportedExpression("$max/$min need an operand")
+        return pick_in_array(cols[0]) if len(cols) == 1 else pick(*cols)
+    return h
 
 
 def _binop(fn):
@@ -1331,10 +1353,12 @@ OPERATORS: dict[str, Callable[[Any, Ctx], Column]] = {
     # comparison
     "$cmp": _cmp,
     "$eq": _binop(lambda a, b: a.eqNullSafe(b)),
-    "$gt": _binop(lambda a, b: a > b),
-    "$gte": _binop(lambda a, b: a >= b),
-    "$lt": _binop(lambda a, b: a < b),
-    "$lte": _binop(lambda a, b: a <= b),
+    "$gt": _binop(_gt),
+    "$gte": _binop(_gte),
+    "$lt": _binop(lambda a, b: _gt(b, a)),
+    "$lte": _binop(lambda a, b: _gte(b, a)),
+    "$max": _extremum(F.greatest, F.array_max),
+    "$min": _extremum(F.least, F.array_min),
     "$ne": _binop(lambda a, b: ~a.eqNullSafe(b)),
     # conditional
     "$cond": _cond,

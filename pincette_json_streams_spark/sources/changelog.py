@@ -17,13 +17,15 @@ module is the dependency-free analogue on plain parquet):
   epoch once.
 - **The change feed is a stream over the log**: ``readStream`` over
   ``data/`` (the file-source checkpoint IS the resume token — processed
-  files are never re-read across restarts), then a per-``_id``
-  ``applyInPandasWithState`` derives the Mongo change-stream
-  ``operationType``: the first version of a key is an ``insert``, later
-  versions are ``replace``, tombstones are ``delete``.  The existence
-  flag lives in the checkpointed state store, so kinds stay correct
-  across restarts too (an upsert after a restart yields ``replace``,
-  not ``insert``).
+  files are never re-read across restarts), then a per-``_id`` state
+  call (``functions.groups.map_groups``) derives the Mongo
+  change-stream ``operationType``: the first version of a key is an
+  ``insert``, later versions are ``replace``, tombstones are
+  ``delete``.  The existence flag lives in the checkpointed state
+  store, so kinds stay correct across restarts too (an upsert after a
+  restart yields ``replace``, not ``insert``).  The document columns
+  pass through that call packed, so every event carries its values
+  exactly as ``snapshot`` does, timestamps to the microsecond.
 - **The batch view is last-writer-wins**: ``snapshot`` resolves the
   latest version per key and drops tombstones — one window shuffle at
   any scale; at 100 TB this is the standard log-compaction read, and
@@ -44,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from pincette_json_streams_spark.functions.groups import PACKED, map_groups
 from pincette_json_streams_spark.streaming.sinks import publish
 
 __all__ = ["ChangeLogCollection"]
@@ -125,8 +128,6 @@ class ChangeLogCollection:
         File-source checkpoint = resume token; per-key existence state
         (checkpointed) turns versions into kinds.  Within a micro-batch
         a key's versions replay in ``__commit`` order."""
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
         src = (
             spark.readStream.schema(self.log_schema).format("parquet")
         )
@@ -135,41 +136,26 @@ class ChangeLogCollection:
                              str(max_files_per_trigger))
         log = src.load(self.data_dir)
 
-        doc_cols = [c for c in log.columns
-                    if c not in ("__commit", "__deleted")]
-        out_ddl = f"operationType string, {self.schema}"
-
-        def kinds(key, pdf_iter, state):
+        def kinds(key, pdfs, state):
             import pandas as pd
 
             exists = bool(state.get[0]) if state.exists else False
-            rows = []
-            for pdf in pdf_iter:
-                for rec in pdf.sort_values("__commit").to_dict("records"):
-                    if rec["__deleted"]:
-                        op = "delete"
-                        exists = False
-                    else:
-                        op = "replace" if exists else "insert"
-                        exists = True
-                    rows.append({
-                        "operationType": op,
-                        **{c: rec[c] for c in doc_cols},
-                    })
+            ops = []
+            pdf = pd.concat(list(pdfs)).sort_values("__commit",
+                                                    kind="stable")
+            for deleted in pdf["__deleted"].tolist():
+                ops.append("delete" if deleted else
+                           "replace" if exists else "insert")
+                exists = not deleted
             state.update((exists,))
-            yield pd.DataFrame(rows,
-                               columns=["operationType"] + doc_cols)
+            yield pd.DataFrame({"operationType": ops,
+                                PACKED: pdf[PACKED].tolist()})
 
-        return (
-            log.groupBy(F.col("_id"))
-            .applyInPandasWithState(
-                kinds,
-                outputStructType=out_ddl,
-                stateStructType="exists boolean",
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-        )
+        return map_groups(
+            log, ["_id"], kinds, "operationType string",
+            payload=[c for c in log.columns
+                     if c not in ("__commit", "__deleted")],
+            state="exists boolean")
 
     def compact(self, spark: SparkSession) -> None:
         """Log compaction: rewrite the log as one snapshot commit.  The

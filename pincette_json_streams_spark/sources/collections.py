@@ -20,6 +20,14 @@ change_stream()    file stream + keyed state    each commit once per
                                                 checkpoint
 compact()          log rewrite                  staged overwrite
 =================  ==========================  =========================
+
+Values: ``change_stream`` carries every document type exactly as
+``snapshot`` returns it (bigints beside NULL, NaN, ±inf, decimals,
+binary, nested types, timestamps to the microsecond): the document
+columns pass its grouped state call packed (``functions.groups``).
+``$delay`` redelivery into a topic keeps them the same way.  Kafka's
+wire JSON (``streaming.runtime.kafka_sink``) is an external format and
+stays at Spark's default, timestamps to the millisecond.
 """
 
 from __future__ import annotations

@@ -7,12 +7,13 @@ each accepted command emits ``aggregate``, ``command``, ``event``,
 
 Spark mapping — one compiler, ``compile_aggregate``, for both modes; a
 query gives the same outputs in batch and streaming:
-  - batch: ``applyInPandas`` over key groups — the fold is per-key
-    sequential by definition (the reference serializes commands per
-    aggregate instance through Kafka key partitioning), so grouped Pandas
-    execution is the faithful distributed analogue: parallel across keys,
-    ordered within a key.
-  - streaming: ``applyInPandasWithState`` keyed the same way, with the
+  - batch: one grouped call over key groups
+    (``functions.groups.map_groups``) — the fold is per-key sequential
+    by definition (the reference serializes commands per aggregate
+    instance through Kafka key partitioning), so grouped Pandas
+    execution is the faithful distributed analogue: parallel across
+    keys, ordered within a key.
+  - streaming: the same call with state, keyed the same way, with the
     instance's latest aggregate as checkpointed state
     (``streaming.runtime.streaming_aggregate``).
 
@@ -336,7 +337,7 @@ def compile_aggregate(wiring, source: DataFrame,
     are JSON strings (the schemaless message payload); downstream
     pipelines parse what they need.
 
-    Both modes share everything but the fold operator (``applyInPandas``
+    Both modes share everything but the fold operator (``map_groups``
     in batch, ``streaming.runtime.streaming_aggregate`` on a stream).
     Commands fold per key in arrival order (``_with_arrival``), numbered
     ahead of the preprocessors, whose stages may shuffle.  There is no
@@ -526,7 +527,7 @@ def _with_arrival(df: DataFrame) -> tuple[DataFrame, list[str]]:
 
 def _batch_fold(keyed: DataFrame, fold, full: str,
                 resolve_hrefs: bool) -> DataFrame:
-    """``applyInPandas`` over the ``__key`` groups of ``keyed``.
+    """The fold over the ``__key`` groups of ``keyed`` (``map_groups``).
 
     With ``resolve_hrefs`` it costs a second fold: the resolution SOURCE
     is the phase-1 (lenient, resolution-free) fold of the same commands,
@@ -534,14 +535,15 @@ def _batch_fold(keyed: DataFrame, fold, full: str,
     from the command JSON, equi-join them against the phase-1 final
     states, and ship each key's resolved map into the phase-2 fold as a
     column.  No driver collect at any size."""
+    from pincette_json_streams_spark.functions.groups import map_groups
+
     if not resolve_hrefs:
-        return keyed.groupBy("__key").applyInPandas(
-            lambda pdf: fold_frame(fold(None, pdf)), schema=FOLD_SCHEMA
-        )
-    phase1 = keyed.groupBy("__key").applyInPandas(
-        lambda pdf: fold_frame(fold(None, pdf, lenient=True)),
-        schema=FOLD_SCHEMA,
-    )
+        return map_groups(keyed, ["__key"],
+                          lambda pdf: fold_frame(fold(None, pdf)),
+                          FOLD_SCHEMA)
+    phase1 = map_groups(
+        keyed, ["__key"],
+        lambda pdf: fold_frame(fold(None, pdf, lenient=True)), FOLD_SCHEMA)
     seq = F.get_json_object("value", "$._seq").cast("long")
     w = Window.partitionBy("_id").orderBy(F.desc("__seq"))
     finals = (
@@ -563,5 +565,5 @@ def _batch_fold(keyed: DataFrame, fold, full: str,
             resolver = states.get
         return fold_frame(fold(None, pdf, resolver))
 
-    return attach_resolved_maps(keyed, finals, full).groupBy(
-        "__key").applyInPandas(resolved_fold, schema=FOLD_SCHEMA)
+    return map_groups(attach_resolved_maps(keyed, finals, full), ["__key"],
+                      resolved_fold, FOLD_SCHEMA)

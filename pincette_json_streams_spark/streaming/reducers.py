@@ -17,6 +17,9 @@ expressions); unknown operators raise so gaps surface in tests.
 from __future__ import annotations
 
 import operator
+from datetime import date
+from decimal import Decimal
+from functools import cmp_to_key
 from typing import Any, Callable
 
 __all__ = ["eval_expr", "run_pipeline_doc", "pipeline_reducer"]
@@ -142,21 +145,18 @@ def _eval_op(op: str, args: Any, doc: dict, v: dict) -> Any:
     if op == "$toDouble":
         (a,) = _nums(args, doc, v)
         return None if a is None else float(a)
-    if op == "$eq":
-        a, b = _nums(args, doc, v)
-        return a == b
-    if op == "$ne":
-        a, b = _nums(args, doc, v)
-        return a != b
-    if op in ("$gt", "$gte", "$lt", "$lte"):
-        a, b = _nums(args, doc, v)
-        if a is None or b is None:
-            return False
-        return {"$gt": a > b, "$gte": a >= b, "$lt": a < b,
-                "$lte": a <= b}[op]
-    if op == "$cmp":
-        a, b = _nums(args, doc, v)
-        return -1 if a < b else (1 if a > b else 0)
+    if op in _COMPARISONS:
+        a, b = (_operand(e, doc, v) for e in args)
+        c = _bson_cmp(a, b)
+        return c if op == "$cmp" else _COMPARISONS[op](c, 0)
+    if op in ("$max", "$min"):
+        # one operand that is an array: its elements; nulls are ignored
+        vals = _nums(args, doc, v)
+        if len(vals) == 1 and isinstance(vals[0], list):
+            vals = vals[0]
+        vals = [x for x in vals if x is not None]
+        pick = max if op == "$max" else min
+        return pick(vals, key=cmp_to_key(_bson_cmp)) if vals else None
     if op == "$and":
         return all(bool(ev(a)) for a in args)
     if op == "$or":
@@ -226,6 +226,67 @@ def _eval_op(op: str, args: Any, doc: dict, v: dict) -> Any:
             acc = eval_expr(args["in"], doc, {**v, "value": acc, "this": e})
         return acc
     raise ValueError(f"row interpreter: unsupported operator {op}")
+
+
+_COMPARISONS = {"$cmp": None, "$eq": operator.eq, "$ne": operator.ne,
+                "$gt": operator.gt, "$gte": operator.ge,
+                "$lt": operator.lt, "$lte": operator.le}
+
+# MongoDB's order of types when expression values compare
+# (canonicalizeBSONType); bool is tested before int, which it subclasses
+_TYPE_ORDER = ((bool, 40), ((int, float, Decimal), 10), (str, 15),
+               (dict, 20), ((list, tuple), 25), ((bytes, bytearray), 30),
+               (date, 45))
+
+
+def _operand(expr: Any, doc: dict, v: dict) -> Any:
+    """A comparison operand: a field path that reaches no value is
+    ``_MISSING``, which MongoDB orders below null."""
+    if isinstance(expr, str) and expr.startswith("$") \
+            and not expr.startswith("$$"):
+        cur = doc
+        for seg in expr[1:].split("."):
+            if not (isinstance(cur, dict) and seg in cur):
+                return _MISSING
+            cur = cur[seg]
+        return cur
+    return eval_expr(expr, doc, v)
+
+
+def _type_rank(x: Any) -> int:
+    if x is _MISSING:
+        return 0
+    if x is None:
+        return 5
+    return next((rank for types, rank in _TYPE_ORDER
+                 if isinstance(x, types)), 50)
+
+
+def _sign(a: Any, b: Any) -> int:
+    return (a > b) - (a < b)
+
+
+def _bson_cmp(a: Any, b: Any) -> int:
+    """MongoDB's comparison of two expression values, as -1, 0 or 1:
+    missing < null < numbers < strings < objects < arrays < binary <
+    booleans < dates.  A NaN sorts below every other number and equals
+    itself; objects compare field by field (value type, name, value),
+    arrays element by element, and then by length."""
+    ra, rb = _type_rank(a), _type_rank(b)
+    if ra != rb:
+        return _sign(ra, rb)
+    if ra == 10 and (a != a or b != b):
+        return _sign(b != b, a != a)
+    if ra in (20, 25):
+        pairs = zip(a.items(), b.items()) if ra == 20 else \
+            (((0, x), (0, y)) for x, y in zip(a, b))
+        for (ka, va), (kb, vb) in pairs:
+            c = (_sign(_type_rank(va), _type_rank(vb)) or _sign(ka, kb)
+                 or _bson_cmp(va, vb))
+            if c:
+                return c
+        return _sign(len(a), len(b))
+    return 0 if ra <= 5 else _sign(a, b)
 
 
 def _bracket(x: Any) -> int | None:

@@ -23,8 +23,8 @@ resume tokens (App.java:1056-1081) ⇄ checkpoint metadata.
 
 Aggregate parts compile through the same compiler as in batch
 (``streaming.aggregate.compile_aggregate``); only the fold operator
-differs: ``streaming_aggregate`` runs it as ``applyInPandasWithState``
-keyed by instance.  The reference serializes commands per aggregate
+differs: ``streaming_aggregate`` runs it with grouped state
+(``functions.groups.map_groups``) keyed by instance.  The reference serializes commands per aggregate
 instance via Kafka key partitioning (docs/state.md:114-127); grouped
 state processing is the faithful distributed analogue (parallel across
 keys, ordered within one).  ``StreamingApp`` sinks each aggregate
@@ -40,6 +40,9 @@ from typing import Callable, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pincette_json_streams_spark.functions.groups import (
+    PACKED, map_groups, pack, unpack,
+)
 from pincette_json_streams_spark.operators.stages import PipelineContext
 from pincette_json_streams_spark.streaming.sinks import publish, start_sink
 
@@ -158,7 +161,12 @@ def kafka_sink(
 
     At-least-once: Kafka output cannot be staged, so an epoch replayed
     from the checkpoint is produced again (the reference's contract,
-    docs/index.md:3)."""
+    docs/index.md:3).
+
+    The document is Spark's default JSON, so timestamps go on the wire
+    to the millisecond (``kafka_source`` reads the same format).  That
+    is an external format other Kafka clients read; the exact packing
+    of ``functions.groups`` is for data that stays inside the engine."""
     cols = [c for c in df.columns if c not in ("topic",)]
     value_json = F.to_json(F.struct(*[F.col(c) for c in cols]))
     if to_string:
@@ -239,8 +247,8 @@ def collection_change_stream(
 #
 #   $delay stage (effects.py) tags rows with topic + deliver_after
 #     -> delay_spool_sink: spool the routed rows (parquet append)
-#     -> delay_release_stream: stateful hold (applyInPandasWithState with
-#        a processing-time timeout) that emits each message once
+#     -> delay_release_stream: stateful hold (``map_groups`` with a
+#        processing-time timeout) that emits each message once
 #        now >= deliver_after — state is O(in-flight delayed messages)
 #     -> redelivery_sink: append released messages back into the target
 #        topic's directory, where the normal source re-ingests them.
@@ -250,15 +258,15 @@ def collection_change_stream(
 
 def delay_spool_sink(routed: DataFrame, spool_dir: str, checkpoint: str):
     """Writer that spools $delay-routed rows (topic + deliver_after +
-    payload) as JSON values.  It stays Spark's file sink rather than a
-    ``streaming.sinks.Sink``: that sink already logs each epoch once in
-    ``_spark_metadata``."""
+    payload), the payload packed exactly (``functions.groups.pack``).
+    It stays Spark's file sink rather than a ``streaming.sinks.Sink``:
+    that sink already logs each epoch once in ``_spark_metadata``."""
     payload = [c for c in routed.columns
                if c not in ("topic", "deliver_after")]
     rows = routed.select(
         F.col("topic").cast("string"),
         F.col("deliver_after").cast("long"),
-        F.to_json(F.struct(*[F.col(c) for c in payload])).alias("value"),
+        pack(*[F.col(c) for c in payload]).alias("value"),
     )
     return (
         rows.writeStream.format("parquet")
@@ -273,7 +281,9 @@ def delay_release_stream(
 ) -> DataFrame:
     """Spool -> held messages released when due.  Keys spread over
     ``buckets`` so the hold state parallelizes; each key sets a
-    processing-time timeout at its earliest pending deliver_after."""
+    processing-time timeout at its earliest pending deliver_after.
+    The state holds each pending message as ``[deliver_after, packed
+    topic and value]``."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     src = spark.readStream.schema(
@@ -283,36 +293,29 @@ def delay_release_stream(
         "__k", (F.crc32(F.col("value")) % buckets).cast("string")
     )
 
-    def hold(key, pdf_iter, state):
+    def hold(key, pdfs, state):
         import time
 
         import pandas as pd
 
         pending = json.loads(state.get[0]) if state.exists else []
-        for pdf in pdf_iter:
-            pending.extend(
-                pdf[["topic", "deliver_after", "value"]].to_dict("records")
-            )
+        for pdf in pdfs:
+            pending.extend(zip(pdf["deliver_after"].tolist(),
+                               pdf[PACKED].tolist()))
         now_ms = int(time.time() * 1000)
-        due = [p for p in pending if p["deliver_after"] <= now_ms]
-        rest = [p for p in pending if p["deliver_after"] > now_ms]
+        due = [row for at, row in pending if at <= now_ms]
+        rest = [(at, row) for at, row in pending if at > now_ms]
         state.update((json.dumps(rest),))
         if rest:
             state.setTimeoutDuration(max(
-                min(p["deliver_after"] for p in rest) - now_ms, 50
+                min(at for at, _ in rest) - now_ms, 50
             ))
-        yield pd.DataFrame(
-            due, columns=["topic", "deliver_after", "value"]
-        )
+        yield pd.DataFrame({PACKED: due}, dtype=object)
 
-    out = keyed.groupBy("__k").applyInPandasWithState(
-        hold,
-        outputStructType="topic string, deliver_after long, value string",
-        stateStructType="pending string",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
-    return out.select("topic", "value")
+    return map_groups(
+        keyed, ["__k"], hold, "", payload=["topic", "value"],
+        state="pending string",
+        timeout=GroupStateTimeout.ProcessingTimeTimeout)
 
 
 class _Redelivery:
@@ -325,7 +328,7 @@ class _Redelivery:
     def write(self, df: DataFrame, epoch_id: int) -> None:
         publish({
             d: df.filter(F.col("topic") == topic)
-            .select(F.from_json("value", self.schemas[topic]).alias("v"))
+            .select(unpack("value", self.schemas[topic]).alias("v"))
             .select("v.*")
             for topic, d in self.topic_dirs.items()
         })
@@ -357,13 +360,11 @@ def streaming_aggregate(
     ``keyed`` carries one row per command: the instance key ``__key``,
     the command JSON and its arrival columns
     (``streaming.aggregate.compile_aggregate`` builds it, with ``fold``).
-    ``applyInPandasWithState`` groups by ``__key``; the state carries the
-    instance's latest aggregate JSON, and ``fold(state, pdf)`` returns
+    ``functions.groups.map_groups`` groups it by ``__key`` with state:
+    the instance's latest aggregate JSON.  ``fold(state, pdf)`` returns
     the ``reduce_commands`` records for a micro-batch's rows of one key.
     Emits one row per output message with a ``purpose`` discriminator,
     which the compiler fans out to the five purpose streams."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     from pincette_json_streams_spark.streaming.aggregate import (
         FOLD_SCHEMA, fold_frame,
     )
@@ -379,13 +380,8 @@ def streaming_aggregate(
         state.update((json.dumps(cur or {}),))
         yield fold_frame(recs)
 
-    return keyed.groupBy("__key").applyInPandasWithState(
-        stateful,
-        outputStructType=FOLD_SCHEMA,
-        stateStructType="state string",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return map_groups(keyed, ["__key"], stateful, FOLD_SCHEMA,
+                      state="state string")
 
 
 # --------------------------------------------------------------------------

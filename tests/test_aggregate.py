@@ -2,6 +2,7 @@
 reference spec /root/reference/docs/state.md)."""
 
 import json
+import math
 
 import pytest
 
@@ -480,17 +481,59 @@ MATCHER_CASES = [
     ({"a": [1, 2]}, {"a": [1, 2]}, True),
 ]
 
-# Where the Column compiler (operators/match.py) answers differently
-# from the row matcher, and why.  A typed array column cannot be
-# compared with a scalar, so these queries fail to bind instead of
-# matching element-wise.
+# Where the Column compiler (operators/match.py, expressions.py)
+# answers differently from the row interpreter, and why.  A typed array
+# column cannot be compared with a scalar, so those queries fail to bind
+# instead of matching element-wise.  A typed column holds a missing
+# field as NULL, a column of one type cannot order values of two, and
+# Spark orders NaN above every number, where MongoDB orders it below.
 KNOWN_DIFFERENCES = [
     ({"a": {"$in": [2, 3]}}, "array<bigint>", "raises: IN of an array "
      "column and scalars does not bind"),
     ({"a": 2}, "array<bigint>", "raises: <=> of an array column and a "
      "scalar does not bind"),
     ({"a": {"$nin": [2]}}, "array<bigint>", "raises: as $in"),
+    ({"$expr": {"$gte": ["$a", None]}}, "bigint", "missing is NULL: "
+     "MongoDB orders a missing field below null"),
+    ({"$expr": {"$eq": ["$a", None]}}, "bigint", "missing is NULL: "
+     "as $gte"),
+    ({"$expr": {"$gt": ["$a", 1]}}, "string", "fails at run time: the "
+     "comparison casts the string to a number; MongoDB orders strings "
+     "above numbers"),
+    ({"$expr": {"$lt": ["$a", 1]}}, "double", "NaN: Spark orders it "
+     "above every double"),
+    ({"$expr": {"$eq": [{"$max": ["$a", 1]}, 1]}}, "double", "NaN: "
+     "greatest() picks it"),
 ]
+
+# the value of ``a`` each known difference is checked on, by its type;
+# None is a field the row side's document does not hold
+KNOWN_VALUES = {"array<bigint>": [1, 2], "bigint": None,
+                "double": math.nan, "string": "x"}
+
+# MongoDB's values for expression comparisons and $max/$min where an
+# operand is null or missing, checked on both sides
+EXPR_CASES = [
+    ({"$gt": ["$a", None]}, {"a": 5}, True),
+    ({"$gt": ["$a", None]}, {"a": None}, False),
+    ({"$gte": ["$a", None]}, {"a": None}, True),
+    ({"$lt": ["$a", 1]}, {"a": None}, True),
+    ({"$lte": [1, "$a"]}, {"a": None}, False),
+    ({"$gt": ["$a", "$n"]}, {"a": 2, "n": 1}, True),
+    ({"$cmp": ["$a", 1]}, {"a": None}, -1),
+    ({"$cmp": ["$a", 1]}, {}, -1),
+    ({"$cmp": [1, "$a"]}, {}, 1),
+    ({"$cmp": ["$a", "$n"]}, {"a": None, "n": None}, 0),
+    ({"$eq": ["$a", "$n"]}, {"a": None, "n": None}, True),
+    ({"$ne": ["$a", None]}, {"a": 0}, True),
+    ({"$max": ["$a", "$n"]}, {"a": 3, "n": None}, 3),
+    ({"$min": ["$a", "$n"]}, {"a": None, "n": 4}, 4),
+    ({"$max": ["$a", "$n"]}, {}, None),
+    ({"$min": ["$a", "$n", 2]}, {"a": 5, "n": 1}, 1),
+    ({"$max": "$xs"}, {"xs": [1, None, 7]}, 7),
+    ({"$min": ["$xs"]}, {"xs": [4, None, 2]}, 2),
+]
+EXPR_COLUMNS = "a bigint, n bigint, xs array<bigint>"
 
 
 class TestRowMatcher:
@@ -525,9 +568,52 @@ class TestRowMatcher:
         from pincette_json_streams_spark.operators.stages import (
             PipelineContext, compile_pipeline,
         )
-        df = spark.createDataFrame([([1, 2],)], f"a {dtype}")
-        with pytest.raises(UnsupportedExpression):
-            compile_pipeline(df, [{"$match": query}], PipelineContext())
+        from pincette_json_streams_spark.streaming.reducers import (
+            _match_doc,
+        )
+        value = KNOWN_VALUES[dtype]
+        df = spark.createDataFrame([(value,)], f"a {dtype}")
+        if why.startswith("raises:"):
+            with pytest.raises(UnsupportedExpression):
+                compile_pipeline(df, [{"$match": query}], PipelineContext())
+            return
+        matched = compile_pipeline(df, [{"$match": query}],
+                                   PipelineContext())
+        if why.startswith("fails at run time:"):
+            with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
+                matched.count()
+            return
+        doc = {} if value is None else {"a": value}
+        assert (matched.count() == 1) is not _match_doc(query, doc)
+
+
+class TestExpressionOrder:
+    """Expression comparisons follow MongoDB's order on both sides:
+    null (and missing) below every value; ``$max``/``$min`` ignore
+    nulls."""
+
+    @pytest.mark.parametrize("expr,doc,want", EXPR_CASES)
+    def test_row_side(self, expr, doc, want):
+        from pincette_json_streams_spark.streaming.reducers import (
+            eval_expr,
+        )
+        got = eval_expr(expr, doc)
+        assert (got, type(got)) == (want, type(want))
+
+    def test_column_side(self, spark):
+        from pincette_json_streams_spark.operators.context import ctx_for
+        from pincette_json_streams_spark.operators.expressions import (
+            compile_expr,
+        )
+        names = [f.split()[0] for f in EXPR_COLUMNS.split(", ")]
+        df = spark.createDataFrame(
+            [tuple(doc.get(n) for n in names) for _, doc, _ in EXPR_CASES],
+            EXPR_COLUMNS).coalesce(1)
+        rows = df.select(*(compile_expr(e, ctx_for(df)).alias(f"c{i}")
+                           for i, (e, _, _) in enumerate(EXPR_CASES))
+                         ).collect()
+        got = [rows[i][i] for i in range(len(EXPR_CASES))]
+        assert got == [want for _, _, want in EXPR_CASES]
 
 
 class TestHrefs:

@@ -3,7 +3,8 @@ pandas UDFs use one idiom (typed ``pandas_udf``), per-row Python maps
 use one helper (``map_rows``), one module reads the part wiring, the
 sketch search family builds its band postings, XOR/popcount and rank
 tail in one place each, micro-batch writers start only in the sink
-layer, and the extension-stage table agrees with its functions and its
+layer, grouped Python calls go through one helper (``map_groups``),
+and the extension-stage table agrees with its functions and its
 doc."""
 
 import importlib
@@ -82,6 +83,22 @@ def test_foreach_batch_only_in_sink_layer():
             if (n := p.read_text(encoding="utf-8").count("foreachBatch("))}
     starter = inspect.getsource(sinks.start_sink)
     assert hits == {"streaming/sinks.py": starter.count("foreachBatch(")}
+
+
+def test_grouped_calls_only_in_map_groups():
+    # every grouped Python operator goes through functions.groups.
+    # map_groups, which packs the columns it passes through, so no typed
+    # payload column is read back from pandas record by record
+    from pincette_json_streams_spark.functions import groups
+
+    texts = {str(p.relative_to(ROOT)): p.read_text(encoding="utf-8")
+             for p in sorted(ROOT.rglob("*.py"))}
+    hits = {path: n for path, text in texts.items()
+            if (n := text.count(".applyInPandas"))}
+    caller = inspect.getsource(groups.map_groups)
+    assert hits == {"functions/groups.py": caller.count(".applyInPandas")}
+    assert [p for p, text in texts.items()
+            if 'to_dict("records")' in text] == []
 
 
 def _doc_rows() -> dict[str, tuple[str, set[str]]]:
